@@ -22,6 +22,10 @@ layers are added on top:
    a streaming ``SELECT`` starts a console query and *blocks* (like
    Flink's blocking ``print()``); at script end all active queries are
    awaited.
+
+A statement naming a table (bare, backquoted, ``catalog.db.t``, or by
+its path) first awaits a streaming INSERT still writing it. A sink with
+no data at its DDL is sink-only until the first statement that reads it.
 """
 
 from __future__ import annotations
@@ -92,7 +96,7 @@ class SqlSubmitAction(Action):
         self._rewrites: list[tuple[re.Pattern[str], str]] = []
         self._started_queries: list = []
         self._sink_queries: dict[str, object] = {}   # table name → StreamingQuery
-        self._pending_sources: list[str] = []        # specs that failed to build
+        self._pending_sources: set[str] = set()      # specs that failed to build
         self._ckpt_root: str | None = None
         # Flink-style module registry; core + flinkcommons preloaded
         self.modules: dict[str, bool] = {"core": True, "flinkcommons": True}
@@ -111,9 +115,9 @@ class SqlSubmitAction(Action):
             statements = load_statements_from_text(self.sql_text, self.variables, self.strict_compat)
 
         spark = self._get_spark()
-        from flink_commons_spark.functions.registry import register_all
+        from flink_commons_spark.functions.registry import ensure_registered
 
-        register_all(spark)  # fcs_* SQL UDFs available to every script
+        ensure_registered(spark)  # fcs_* SQL UDFs available to every script
         for stype, stmt in statements:
             log.info("Executing [%s]: %s", stype.type_name, stmt)
             try:
@@ -139,10 +143,9 @@ class SqlSubmitAction(Action):
             # Flink's executeSql(INSERT) is async; a later statement
             # reading a table an earlier streaming INSERT is still
             # writing must see its (bounded) result — await that query,
-            # then retry any source registration that was deferred
-            # because its backing data didn't exist yet.
+            # then retry the deferred source registrations it reads.
             self._await_referenced_sinks(stmt)
-            self._materialize_pending(spark)
+            self._materialize_pending(spark, stmt)
         if stype is StatementType.SET:
             key, value = parse_set_statement(stmt)
             apply_set(self.config, spark, key, value)
@@ -274,29 +277,30 @@ class SqlSubmitAction(Action):
 
     # ------------------------------------------------------------------ DDL
 
+    def _referenced_tables(self, stmt: str, *, reads: bool = False) -> set[str]:
+        """Registered tables ``stmt`` names — bare, backquoted, or as the
+        tail of a ``catalog.db.t`` identifier — or whose storage path it
+        contains. With ``reads``, an INSERT target counts only when the
+        query part names it too."""
+        if reads and (m := _INSERT_RE.match(stmt)):
+            stmt = m.group("query")
+        return {
+            name for name, spec in self.tables.items()
+            if re.search(rf"(?<![\w`]){re.escape(name)}(?![\w`])|`{re.escape(name)}`",
+                         stmt, re.IGNORECASE)
+            or ((path := spec.options.get("path")) and path in stmt)
+        }
+
     def _await_referenced_sinks(self, stmt: str) -> None:
         """Await active streaming queries whose TARGET this statement
-        references — by table name, or by storage path (a second table
-        registered over the same path, the read-side twin of a sink) —
-        bounded by the configured timeout."""
+        references, or a table over the same storage path (the read-side
+        twin of a sink), bounded by the configured timeout."""
         timeout = self._timeout()
-        referenced = {
-            n for n in self.tables
-            if re.search(rf"(?<![\w`]){re.escape(n)}(?![\w`])", stmt)
-        }
-        ref_paths = {
-            p for n in referenced
-            if (p := self.tables[n].options.get("path"))
-        }
+        referenced = self._referenced_tables(stmt)
+        ref_paths = {self.tables[n].options.get("path") for n in referenced} - {None}
         for name, query in list(self._sink_queries.items()):
             spec = self.tables.get(name)
-            path = spec.options.get("path") if spec else None
-            hit = (
-                name in referenced
-                or (path and path in ref_paths)
-                or (path and path in stmt)
-            )
-            if not hit:
+            if name not in referenced and not (spec and spec.options.get("path") in ref_paths):
                 continue
             if query.isActive:
                 query.awaitTermination(timeout)
@@ -304,23 +308,23 @@ class SqlSubmitAction(Action):
                     query.stop()
             del self._sink_queries[name]
 
-    def _materialize_pending(self, spark) -> None:
-        """Retry source registrations deferred because the backing data
-        didn't exist yet (e.g. a sink another statement has since
-        filled)."""
-        for name in list(self._pending_sources):
-            spec = self.tables.get(name)
-            if spec is None:
-                self._pending_sources.remove(name)
-                continue
+    def _materialize_pending(self, spark, stmt: str) -> None:
+        """Retry the deferred source registrations ``stmt`` reads (e.g. a
+        sink an earlier statement has since filled)."""
+        for name in self._pending_sources & self._referenced_tables(stmt, reads=True):
             try:
-                df = connectors.build_source(
-                    spark, spec, streaming=self.config.is_streaming
-                )
-                df.createOrReplaceTempView(spec.name)
-                self._pending_sources.remove(name)
+                self._register_source(spark, self.tables[name])
+                self._pending_sources.discard(name)
             except Exception:
                 pass  # still not readable; a later statement may fill it
+
+    def _register_source(self, spark, spec: TableSpec) -> None:
+        """Build ``spec``'s source as its view; a path that does not exist
+        yet fails here, without a Spark read."""
+        if missing := connectors.missing_source_path(spark, spec):
+            raise FileNotFoundError(f"path does not exist: {missing}")
+        df = connectors.build_source(spark, spec, streaming=self.config.is_streaming)
+        df.createOrReplaceTempView(spec.name)
 
     _LIKE_RE = re.compile(
         r"\bLIKE\s+(?P<base>(?:`[^`]+`|[\w.])+)\s*(?:\((?P<mods>[^)]*)\))?\s*$",
@@ -384,8 +388,7 @@ class SqlSubmitAction(Action):
         self._register_rewrites(spec)
         if connectors.is_source_connector(spec):
             try:
-                df = connectors.build_source(spark, spec, streaming=self.config.is_streaming)
-                df.createOrReplaceTempView(spec.name)
+                self._register_source(spark, spec)
             except connectors.PermanentConnectorError:
                 # failures no retry can heal (bad options, kafka package
                 # absent) surface at the DDL, not as a confusing
@@ -395,13 +398,13 @@ class SqlSubmitAction(Action):
             except Exception as exc:
                 if spec.connector in connectors.SINK_CONNECTORS:
                     # e.g. a filesystem sink whose path doesn't exist yet;
-                    # retried before each later statement (_materialize_pending)
+                    # retried at the first statement that reads it
                     log.warning(
                         "Table %s registered as sink-only for now; source "
                         "read failed (will retry): %s",
                         spec.name, exc,
                     )
-                    self._pending_sources.append(spec.name)
+                    self._pending_sources.add(spec.name)
                 else:
                     raise
 
@@ -430,14 +433,10 @@ class SqlSubmitAction(Action):
         spec.connector = spec.options.get("connector", spec.connector)
         if connectors.is_source_connector(spec):
             try:
-                df = connectors.build_source(
-                    spark, spec, streaming=self.config.is_streaming
-                )
-                df.createOrReplaceTempView(spec.name)
+                self._register_source(spark, spec)
             except Exception as exc:
                 log.warning("ALTER applied; source rebuild deferred: %s", exc)
-                if spec.name not in self._pending_sources:
-                    self._pending_sources.append(spec.name)
+                self._pending_sources.add(spec.name)
         return True
 
     # -------------------------------------------------------------- modules

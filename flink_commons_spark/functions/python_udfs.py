@@ -73,9 +73,13 @@ class fcs_chunks:
             yield i, len(window), " ".join(window)
 
 
+#: the names :func:`register_python_functions` registers
+PYTHON_FUNCTIONS = ("fcs_norm_l2", "fcs_median", "fcs_chunks")
+
+
 def register_python_functions(spark: SparkSession) -> list[str]:
     """Register the Python UDF/UDAF/UDTF set; returns the names."""
     spark.udf.register("fcs_norm_l2", fcs_norm_l2)
     spark.udf.register("fcs_median", fcs_median)
     spark.udtf.register("fcs_chunks", fcs_chunks)
-    return ["fcs_norm_l2", "fcs_median", "fcs_chunks"]
+    return list(PYTHON_FUNCTIONS)

@@ -66,6 +66,33 @@ def is_sink_connector(spec: TableSpec) -> bool:
     return spec.connector in SINK_CONNECTORS
 
 
+def missing_source_path(spark: SparkSession, spec: TableSpec) -> str | None:
+    """The ``path`` of a ``filesystem`` / ``upsert-filesystem`` table
+    when nothing exists there yet (a read that can only fail), else None.
+
+    Asks Hadoop's ``FileSystem.exists`` through the session's Hadoop
+    conf, one code path for ``file:`` and ``hdfs:``. Glob paths and
+    filesystems Hadoop cannot open answer None, leaving the decision to
+    the read itself. The format is resolved first, so a declaration no
+    retry can heal still raises :class:`PermanentConnectorError`.
+    """
+    path = spec.options.get("path")
+    if spec.connector not in ("filesystem", "upsert-filesystem") or not path:
+        return None
+    if spec.connector == "filesystem":
+        _resolve_format(spec)
+    if any(c in path for c in "{}[]*?\\"):  # Hadoop glob characters
+        return None
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        exists = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+    except Py4JJavaError:  # e.g. no FileSystem for the path's scheme
+        return None
+    return None if exists else path
+
+
 def _apply_schema_extras(df: DataFrame, spec: TableSpec) -> DataFrame:
     """Computed columns (``test.sql:18``) then watermark (``test.sql:19``)."""
     for name, expr in spec.computed:

@@ -308,3 +308,112 @@ def test_streaming_select_without_trigger_conf(spark, tmp_path):
     action = SqlSubmitAction(sql_text=script, spark=spark)
     action.run()
     assert action._started_queries and not action._started_queries[0].isActive
+
+
+def _action_with_tables(*ddls):
+    """A runner whose registry holds ``ddls`` — no Spark session needed."""
+    from flink_commons_spark.plans.ddl import parse_create_table
+
+    action = SqlSubmitAction(sql_text="")
+    for ddl in ddls:
+        spec = parse_create_table(ddl)
+        action.tables[spec.name] = spec
+    return action
+
+
+def test_referenced_tables_scanner():
+    action = _action_with_tables(
+        "CREATE TABLE orders (a BIGINT) WITH ('connector'='filesystem','path'='/d/orders')",
+        "CREATE TABLE orders_agg (a BIGINT) WITH ('connector'='filesystem','path'='/d/agg')",
+        "CREATE TABLE `default_catalog`.`default_database`.`sink` (a BIGINT) "
+        "WITH ('connector'='filesystem','path'='/d/sink')",
+    )
+    scan = action._referenced_tables
+    assert scan("SELECT * FROM orders") == {"orders"}
+    assert scan("SELECT * FROM `orders`") == {"orders"}
+    assert scan("SELECT * FROM ORDERS") == {"orders"}
+    # a name that is a prefix of another only matches itself
+    assert scan("SELECT * FROM orders_agg") == {"orders_agg"}
+    assert scan("SELECT * FROM `orders_agg`") == {"orders_agg"}
+    assert scan("SELECT * FROM default_catalog.default_database.sink") == {"sink"}
+    assert scan("SELECT * FROM `default_catalog`.`default_database`.`sink`") == {"sink"}
+    assert scan("SELECT * FROM parquet.`/d/sink`") == {"sink"}
+    assert scan("SELECT 1") == set()
+
+    # an INSERT's target is referenced (awaited) but is no read ...
+    insert = "INSERT INTO orders_agg SELECT a FROM orders"
+    assert scan(insert) == {"orders", "orders_agg"}
+    assert scan(insert, reads=True) == {"orders"}
+    quoted = "INSERT INTO `default_catalog`.`default_database`.`sink` SELECT a FROM orders"
+    assert scan(quoted, reads=True) == {"orders"}
+    # ... unless the query part reads it too
+    assert scan("INSERT INTO orders SELECT a + 1 FROM orders", reads=True) == {"orders"}
+    assert scan("INSERT INTO sink (a) SELECT a FROM sink", reads=True) == {"sink"}
+
+
+def test_sink_read_resolves_with_linear_build_source_calls(spark, tmp_path, monkeypatch):
+    """Source builds grow with the tables a script reads, not with
+    statements × pending sinks: 3 sources, 4 filesystem sinks, 4 INSERTs,
+    the 3rd reading the 1st sink."""
+    from flink_commons_spark.sources import registry as connectors
+
+    calls = []
+    build = connectors.build_source
+
+    def counting(spark_, spec, streaming):
+        calls.append(spec.name)
+        return build(spark_, spec, streaming)
+
+    monkeypatch.setattr(connectors, "build_source", counting)
+    for name, n in (("a", 10), ("b", 20), ("c", 30)):
+        spark.range(n).selectExpr("id", "id % 3 AS k").write.parquet(f"{tmp_path}/{name}")
+    sources = "".join(
+        f"CREATE TABLE {t} WITH ('connector'='filesystem','path'='{tmp_path}/{t}',"
+        "'format'='parquet');\n"
+        for t in "abc"
+    )
+    sinks = "".join(
+        f"CREATE TABLE s{i} (k BIGINT, n BIGINT) WITH ('connector'='filesystem',"
+        f"'path'='{tmp_path}/out/s{i}','format'='parquet');\n"
+        for i in range(1, 5)
+    )
+    script = f"""
+    SET 'execution.runtime-mode' = 'batch';
+    {sources}{sinks}
+    INSERT INTO s1 SELECT k, count(*) FROM a GROUP BY k;
+    INSERT INTO s2 SELECT k, count(*) FROM b GROUP BY k;
+    INSERT INTO s3 SELECT k, sum(n) FROM s1 GROUP BY k;
+    INSERT INTO s4 SELECT k, count(*) FROM c GROUP BY k;
+    """
+    SqlSubmitAction(sql_text=script, spark=spark).run()
+    assert len(calls) <= 3 + 4 + 1, calls
+    assert calls.count("s1") == 1 and not {"s2", "s3", "s4"} & set(calls), calls
+    got = {r.k: r.n for r in spark.read.parquet(f"{tmp_path}/out/s3").collect()}
+    assert got == {0: 4, 1: 3, 2: 3}
+
+
+def test_fcs_functions_register_once_per_session(spark, monkeypatch):
+    """run() registers the fcs_* functions only when the session lacks
+    them; a new session (temporary functions are per session) gets them."""
+    from flink_commons_spark.functions import registry
+    from flink_commons_spark.functions.python_udfs import PYTHON_FUNCTIONS
+
+    calls = []
+    register_all = registry.register_all
+
+    def counting(spark_):
+        calls.append(spark_)
+        return register_all(spark_)
+
+    monkeypatch.setattr(registry, "register_all", counting)
+    session = spark.newSession()
+    for _ in range(2):
+        SqlSubmitAction(sql_text="SELECT fcs_token_count('a b') AS n;", spark=session).run()
+    assert calls == [session]
+
+    fresh = session.newSession()
+    SqlSubmitAction(sql_text="SELECT fcs_split('7') AS s;", spark=fresh).run()
+    assert calls == [session, fresh]
+    names = [*registry.definitions(), *PYTHON_FUNCTIONS]
+    assert len(names) == 15
+    assert all(fresh.catalog.functionExists(n) for n in names)

@@ -91,6 +91,33 @@ def test_raw_format_rejects_multi_column(spark, tmp_path):
     assert "exactly one" in str(exc_info.value.__cause__)
 
 
+def test_missing_source_path(spark, tmp_path):
+    """Only a plain path with nothing behind it is reported missing:
+    globs and non-path connectors leave the decision to the read, and a
+    bad declaration still fails permanently."""
+    from flink_commons_spark.plans.ddl import parse_create_table
+    from flink_commons_spark.sources.registry import (
+        PermanentConnectorError,
+        missing_source_path,
+    )
+
+    def spec(connector, path, cols="a BIGINT", fmt="parquet"):
+        return parse_create_table(
+            f"CREATE TABLE t ({cols}) WITH ('connector' = '{connector}', "
+            f"'path' = '{path}', 'format' = '{fmt}', 'key' = 'a')"
+        )
+
+    (tmp_path / "there").mkdir()
+    gone = f"{tmp_path}/gone"
+    assert missing_source_path(spark, spec("filesystem", tmp_path / "there")) is None
+    assert missing_source_path(spark, spec("filesystem", gone)) == gone
+    assert missing_source_path(spark, spec("upsert-filesystem", f"file:{gone}")) == f"file:{gone}"
+    assert missing_source_path(spark, spec("filesystem", f"{gone}/*")) is None
+    assert missing_source_path(spark, spec("print", gone)) is None
+    with pytest.raises(PermanentConnectorError, match="exactly one"):
+        missing_source_path(spark, spec("filesystem", gone, "a BIGINT, s STRING", "raw"))
+
+
 def test_avro_format_round_trip(spark, tmp_path, capsys):
     """Flink's avro format bridges to the fully-qualified Avro format
     class (the 'avro' short name needs the external spark-avro

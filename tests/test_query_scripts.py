@@ -758,3 +758,33 @@ SELECT * FROM events MATCH_RECOGNIZE (
         chain.append(str(exc))
         exc = exc.__cause__
     assert "unsupported PATTERN token" in "\n".join(chain)
+
+
+def test_read_of_streaming_sink_through_quoted_3part_name(spark, tmp_path):
+    """A statement reading a streaming sink by its quoted 3-part name
+    awaits the INSERT still writing it, then reads every row."""
+    src = tmp_path / "src"
+    for i in range(4):
+        spark.range(i * 250, (i + 1) * 250, numPartitions=1).selectExpr(
+            "id", "id % 7 AS k"
+        ).write.mode("append").parquet(str(src))
+    script = f"""
+    SET 'execution.runtime-mode' = 'streaming';
+    SET 'flinkcommons.trigger' = 'availableNow';
+    SET 'flinkcommons.stream.timeout' = '60s';
+    CREATE TABLE src (id BIGINT, k BIGINT) WITH (
+        'connector' = 'filesystem', 'path' = '{src}', 'format' = 'parquet'
+    );
+    CREATE TABLE `default_catalog`.`default_database`.`sink` (id BIGINT, k BIGINT) WITH (
+        'connector' = 'filesystem', 'path' = '{tmp_path}/sink', 'format' = 'parquet'
+    );
+    CREATE TABLE copy (id BIGINT, k BIGINT) WITH (
+        'connector' = 'filesystem', 'path' = '{tmp_path}/copy', 'format' = 'parquet'
+    );
+    INSERT INTO `default_catalog`.`default_database`.`sink` SELECT id, k FROM src;
+    SET 'execution.runtime-mode' = 'batch';
+    INSERT INTO copy SELECT id, k FROM `default_catalog`.`default_database`.`sink`;
+    """
+    SqlSubmitAction(sql_text=script, spark=spark).run()
+    ids = sorted(r.id for r in spark.read.parquet(str(tmp_path / "copy")).collect())
+    assert ids == list(range(1000))
