@@ -2630,48 +2630,18 @@ WHERE (end_us + 14400000000 + 999) // 1000 <= max_us // 1000
 @_with_stream_shuffle(16)
 def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CEP — Flink's event-time MATCH_RECOGNIZE
-    (``streaming/cep_stream.py``): per-key buffers hold out-of-order
-    events until the watermark closes them, then the same greedy
-    backtracking NFA the batch operator uses emits completed
-    ``view click+ purchase`` matches. Emission is watermark-gated
-    exactly like the timer-session query: a key fires once the
-    watermark passes its events — including the closed prefix of a
-    key that also holds a still-open (final-watermark-ms) event; the
-    decided/undecided line is the watermark on the integer ms grid,
-    which the oracle states as a row-level closed filter."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import stream_match_conversions
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cep-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",  # the watermarked column must survive the projection
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
+    (``streaming/cep_stream.py:stream_match_pattern``): per-key
+    buffers hold out-of-order events until the watermark closes them,
+    then the same greedy backtracking NFA the batch operator uses
+    emits completed ``view click+ purchase`` matches. Emission is
+    watermark-gated exactly like the timer-session query: a key fires
+    once the watermark passes its events — including the closed
+    prefix of a key that also holds a still-open (final-watermark-ms)
+    event; the decided/undecided line is the watermark on the integer
+    ms grid, which the oracle states as a row-level closed filter."""
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_cep", _STREAM_MR_FUNNEL_SQL
     )
-    name = "fcs_stream_cep"
-    query = (
-        stream_match_conversions(sdf)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cep-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
 
 
 @_with_stream_shuffle(16)
@@ -2684,40 +2654,8 @@ def stream_match_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the unmatched history (``streaming/cep_stream.py``, Flink's
     partial-match pruning). Oracle = the unbounded islands
     formulation plus the window predicate."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import stream_match_conversions
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepw-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
-    )
-    name = "fcs_stream_cep_within"
-    query = (
-        stream_match_conversions(sdf, within_us=86_400_000_000)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepw-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name).select(
-        "user_id", "start_us", "end_us", "n_clicks"
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_cep_within", _STREAM_MR_WITHIN_SQL
     )
 
 
@@ -2761,48 +2699,23 @@ def stream_match_skip_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     over every key's watermark-closed row prefix, partially-closed
     keys included — excludes runs ending on the key's last closed
     row."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepn-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
-    )
-    name = "fcs_stream_cep_next"
-    query = (
-        stream_match_conversions(
-            sdf,
-            pattern=[("click", 2, None)],
-            count_idx=0,
-            after_match="to_next_row",
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepn-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name).select(
-        "user_id", "start_us", "end_us", "n_clicks"
-    )
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_cep_next", """
+        SELECT user_id, start_us, end_us, n_clicks
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(c.ts_us) AS start_us,
+              LAST(c.ts_us) AS end_us,
+              COUNT(c.*) AS n_clicks
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP TO NEXT ROW
+            PATTERN (c{2,})
+            DEFINE
+              c AS c.event_type = 'click'
+          )
+    """)
 
 
 # (streak, start-offset) pairs over each key's watermark-CLOSED row
@@ -2847,44 +2760,25 @@ def stream_match_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the other streaming CEP queries: matches emit once the watermark
     closes their rows, so the oracle runs the islands formulation
     over every key's watermark-closed row prefix."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        QUANTIFIED_PATTERN,
-        stream_match_conversions,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepq-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
-    )
-    name = "fcs_stream_cep_quant"
-    query = (
-        stream_match_conversions(sdf, pattern=QUANTIFIED_PATTERN)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepq-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name).select(
-        "user_id", "start_us", "end_us", "n_clicks"
-    )
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_cep_quant", """
+        SELECT user_id, start_us, end_us, n_clicks
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(v.ts_us) AS start_us,
+              LAST(p.ts_us) AS end_us,
+              COUNT(c.*) AS n_clicks
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (v c* p)
+            DEFINE
+              v AS v.event_type = 'view',
+              c AS c.event_type = 'click',
+              p AS p.event_type = 'purchase'
+          )
+    """)
 
 
 # the batch star-quantifier oracle (islands + zero-click adjacency)
@@ -2957,57 +2851,32 @@ JOIN seq p ON p.user_id = r.user_id AND p.rn = r.ern + 1
 def stream_match_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ``AFTER MATCH SKIP TO LAST <var>`` — the streaming
     twin of :func:`q_match_skip_to_last`: pattern ``v e{2}`` (view +
-    next two rows of any type, ``"*"`` wildcard variable) with the
-    scan resuming AT the match's last row, run by the watermark-gated
-    keyed NFA (``streaming/cep_stream.py`` — the resume row stays
-    buffered, since it may start the next overlapping match). The
-    ``e{2}`` tail is at its upper bound when a match completes, so a
-    match ending on the key's newest closed row still emits; a view
-    with fewer than two closed successors is undecided and waits. The
-    oracle is the batch recursive-CTE scan over each key's
-    watermark-closed row prefix."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepl-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
-    )
-    name = "fcs_stream_cep_last"
-    query = (
-        stream_match_conversions(
-            sdf,
-            pattern=[("view", 1, 1), ("*", 2, 2)],
-            count_idx=1,
-            after_match=("to_last", "*"),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepl-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name).select(
-        "user_id", "start_us", "end_us", "n_clicks"
-    )
+    next two rows of any type, ``e`` undefined) with the scan resuming
+    AT the match's last row, run by the watermark-gated keyed NFA
+    (``streaming/cep_stream.py`` — the resume row stays buffered,
+    since it may start the next overlapping match). The ``e{2}`` tail
+    is at its upper bound when a match completes, so a match ending on
+    the key's newest closed row still emits; a view with fewer than
+    two closed successors is undecided and waits. The oracle is the
+    batch recursive-CTE scan over each key's watermark-closed row
+    prefix."""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_cep_last", """
+        SELECT user_id, start_us, end_us, n_clicks
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(v.ts_us) AS start_us,
+              LAST(e.ts_us) AS end_us,
+              COUNT(e.*) AS n_clicks
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP TO LAST e
+            PATTERN (v e{2})
+            DEFINE
+              v AS v.event_type = 'view'
+          )
+    """)
 
 
 # the recursive skip-to-last scan over each key's watermark-closed
@@ -7399,52 +7268,29 @@ JOIN seq s2 ON s2.user_id = sc.user_id AND s2.rn = sc.p + 2
 def stream_match_skip_to_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ``AFTER MATCH SKIP TO FIRST <var>`` — the streaming
     twin of :func:`q_match_skip_to_first` on the watermark-gated keyed
-    NFA: pattern ``* * view`` resuming AT the view row (kept buffered,
-    it may anchor the next match's wildcard leg). The final variable
-    is at its upper bound when a match completes, so a match ending on
-    the key's newest closed row emits; a start with fewer than three
-    closed rows is undecided and waits. Oracle = the batch recursive
-    scan over each key's watermark-closed row prefix."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepf-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-        )
-    )
-    name = "fcs_stream_cep_first"
-    query = (
-        stream_match_conversions(
-            sdf,
-            pattern=[("*", 1, 1), ("*", 1, 1), ("view", 1, 1)],
-            count_idx=2,
-            after_match=("to_first", "view"),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepf-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name).select("user_id", "start_us", "end_us")
+    NFA: pattern ``a b v`` (``a``, ``b`` undefined) resuming AT the
+    view row (kept buffered, it may anchor the next match's leading
+    legs). The final variable is at its upper bound when a match
+    completes, so a match ending on the key's newest closed row emits;
+    a start with fewer than three closed rows is undecided and waits.
+    Oracle = the batch recursive scan over each key's watermark-closed
+    row prefix."""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_cep_first", """
+        SELECT user_id, start_us, end_us
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(a.ts_us) AS start_us,
+              LAST(v.ts_us) AS end_us
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP TO FIRST v
+            PATTERN (a b v)
+            DEFINE
+              v AS v.event_type = 'view'
+          )
+    """)
 
 
 _STREAM_MATCH_SKIP_TO_FIRST_ORACLE = """
@@ -7480,72 +7326,18 @@ JOIN seq s2 ON s2.user_id = sc.user_id AND s2.rn = sc.p + 2
 def stream_match_vshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CEP with row-navigating DEFINE predicates — the
     streaming twin of :func:`q_match_vshape`: Flink's canonical price
-    V-shape ``STRT DOWN+ UP+`` with ``DOWN AS price < PREV(price)``,
-    previously inexpressible in the streaming NFA (its masks were
-    event-type equality only). The predicates compile to backward
-    shifts over the buffered frame, and the buffer keeps one CONTEXT
-    row after each consumed match so PREV still sees its true
-    predecessor (Flink's PREV navigates the input stream, not the
-    retained buffer) — see ``streaming/cep_stream.py``. Oracle = the
-    batch recursive-cursor scan over each key's watermark-closed
-    prefix, minus matches whose greedy trailing ``up+`` ends on the
-    key's last closed row (still open — future rows could extend
-    them)."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
+    V-shape ``STRT DOWN+ UP+`` with ``DOWN AS price < PREV(price)``.
+    The predicates compile to backward shifts over the buffered frame,
+    and the buffer keeps one CONTEXT row after each consumed match so
+    PREV still sees its true predecessor (Flink's PREV navigates the
+    input stream, not the retained buffer) — see
+    ``streaming/cep_stream.py``. Oracle = the batch recursive-cursor
+    scan over each key's watermark-closed prefix, minus matches whose
+    greedy trailing ``up+`` ends on the key's last closed row (still
+    open — future rows could extend them)."""
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_cep_vshape", _STREAM_MR_VSHAPE_SQL
     )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepv-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-            F.round(F.col("value") * 100).cast("double").alias("cents"),
-        )
-    )
-    name = "fcs_stream_cep_vshape"
-    query = (
-        stream_match_conversions(
-            sdf,
-            pattern=[("*", 1, 1), ("down", 1, None), ("up", 1, None)],
-            defines={
-                "down": lambda p: p["val"] < p["val"].shift(1),
-                "up": lambda p: p["val"] > p["val"].shift(1),
-            },
-            value_col="cents",
-            emit=lambda k, rows, hit: (
-                k,
-                rows[hit[0][0]][0],
-                rows[hit[2][-1]][0],
-                len(hit[1]),
-                len(hit[2]),
-            ),
-            output_schema=(
-                "user_id bigint, start_us bigint, end_us bigint, "
-                "n_down bigint, n_up bigint"
-            ),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepv-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
 
 
 # the batch V-shape cursor oracle over the watermark-closed prefix;
@@ -7622,59 +7414,29 @@ def stream_match_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion. Same watermark-gated keyed NFA; oracle = the batch
     islands-plus-aggregates formulation over each key's closed
     prefix."""
-    import os
-
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cepm-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir)
-        .transform(_norm_ts)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            "user_id",
-            "ts",
-            "event_type",
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-            F.round(F.col("value") * 100).cast("double").alias("cents"),
-        )
-    )
-    name = "fcs_stream_cep_measures"
-    query = (
-        stream_match_conversions(
-            sdf,
-            value_col="cents",
-            emit=lambda k, rows, hit: (
-                k,
-                rows[hit[0][0]][0],
-                int(rows[hit[0][0]][3]),
-                int(sum(rows[j][3] for j in hit[1])),
-                int(max(rows[j][3] for j in hit[1])),
-                int(rows[hit[1][-1]][3]),
-                len(hit[1]),
-            ),
-            output_schema=(
-                "user_id bigint, start_us bigint, view_cents bigint, "
-                "click_cents bigint, max_click_cents bigint, "
-                "last_click_cents bigint, n_clicks bigint"
-            ),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-cepm-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_cep_measures", """
+        SELECT user_id, start_us, view_cents, click_cents,
+               max_click_cents, last_click_cents, n_clicks
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(v.ts_us) AS start_us,
+              v.cents AS view_cents,
+              SUM(c.cents) AS click_cents,
+              MAX(c.cents) AS max_click_cents,
+              LAST(c.cents) AS last_click_cents,
+              COUNT(c.*) AS n_clicks
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (v c+ p)
+            DEFINE
+              v AS v.event_type = 'view',
+              c AS c.event_type = 'click',
+              p AS p.event_type = 'purchase'
+          )
+    """)
 
 
 # islands + per-run aggregates over each key's watermark-closed prefix
@@ -7791,23 +7553,36 @@ def _mr_stream_events_view(spark: SparkSession, sf_dir: str, name: str) -> None:
     )
 
 
-@_with_stream_shuffle(16)
-def stream_match_recognize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ``MATCH_RECOGNIZE`` as SQL TEXT — the statement a
-    Flink CEP user actually writes, over a STREAMING source: the SQL
-    front door routes it to the watermark-gated buffered NFA
-    (``streaming/cep_stream.py:stream_match_pattern``), Flink's
-    event-time CEP semantics. Same funnel and same watermark-closed-
-    prefix oracle as the DataFrame twin :func:`stream_match_recognize`
-    — the SQL text and the operator call are interchangeable
-    formulations, which is the parity claim."""
+def _stream_mr_sql(
+    spark: SparkSession, sf_dir: str, name: str, sql: str
+) -> DataFrame:
+    """Run one streaming ``MATCH_RECOGNIZE`` statement through the SQL
+    front door: ``sql`` reads the ``mr_stream_events_src`` view
+    (:func:`_mr_stream_events_view`), its result drains with
+    ``availableNow`` into the memory sink ``name``, and the sink
+    table is returned."""
     from flink_commons_spark.plans.dialect import adapt_sql
     from flink_commons_spark.plans.match_recognize import (
         execute_match_recognize,
     )
 
     _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    out = execute_match_recognize(spark, adapt_sql(sql))
+    query = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", _scratch_dir(prefix=f"fcs-ckpt-{name}-"))
+        .start()
+    )
+    _await_stream(query)
+    return spark.table(name)
+
+
+#: the conversion funnel ``v c+ p`` over the events stream — shared by
+#: :func:`stream_match_recognize` and :func:`stream_match_recognize_sql`
+_STREAM_MR_FUNNEL_SQL = """
         SELECT user_id, start_us, end_us, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -7825,82 +7600,11 @@ def stream_match_recognize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_sql"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrsql-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """
 
-
-@_with_stream_shuffle(16)
-def stream_match_vshape_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING MATCH_RECOGNIZE as SQL with ROW-NAVIGATING DEFINE —
-    Flink's canonical streaming CEP statement end-to-end: the price
-    V-shape with ``PREV`` predicates compiled by the SQL front door
-    into the buffered streaming NFA's mask callables (context-row
-    rule included). Shares :func:`stream_match_vshape`'s closed-prefix
-    cursor oracle."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
-        SELECT user_id, start_us, end_us, n_down, n_up
-        FROM mr_stream_events_src
-          MATCH_RECOGNIZE (
-            PARTITION BY user_id
-            ORDER BY ts, event_id
-            MEASURES
-              FIRST(strt.ts_us) AS start_us,
-              LAST(up.ts_us) AS end_us,
-              COUNT(down.*) AS n_down,
-              COUNT(up.*) AS n_up
-            ONE ROW PER MATCH
-            AFTER MATCH SKIP PAST LAST ROW
-            PATTERN (strt down+ up+)
-            DEFINE
-              down AS down.cents < PREV(down.cents),
-              up AS up.cents > PREV(up.cents)
-          )
-    """))
-    name = "fcs_stream_mr_vshape_sql"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrvsql-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
-
-
-@_with_stream_shuffle(16)
-def stream_match_within_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ``PATTERN ... WITHIN`` as SQL text — exercises the
-    generic streaming matcher's within leg end-to-end: the parser's
-    interval lands in ``stream_match_pattern(within_us=...)``, which
-    both bounds each attempt's scan at the (exclusive) window edge AND
-    expires buffered rows whose pattern window has passed the
-    watermark — the state bound that makes unbounded streams safe.
-    Shares :func:`stream_match_within`'s oracle."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+#: the funnel bounded by ``WITHIN INTERVAL '24' HOUR`` — shared by
+#: :func:`stream_match_within` and :func:`stream_match_within_sql`
+_STREAM_MR_WITHIN_SQL = """
         SELECT user_id, start_us, end_us, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -7918,18 +7622,71 @@ def stream_match_within_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_within_sql"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrwsql-"))
-        .start()
+    """
+
+#: the price V-shape ``strt down+ up+`` with PREV predicates — shared by
+#: :func:`stream_match_vshape` and :func:`stream_match_vshape_sql`
+_STREAM_MR_VSHAPE_SQL = """
+        SELECT user_id, start_us, end_us, n_down, n_up
+        FROM mr_stream_events_src
+          MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            MEASURES
+              FIRST(strt.ts_us) AS start_us,
+              LAST(up.ts_us) AS end_us,
+              COUNT(down.*) AS n_down,
+              COUNT(up.*) AS n_up
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (strt down+ up+)
+            DEFINE
+              down AS down.cents < PREV(down.cents),
+              up AS up.cents > PREV(up.cents)
+          )
+    """
+
+
+@_with_stream_shuffle(16)
+def stream_match_recognize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING ``MATCH_RECOGNIZE`` as SQL TEXT — the statement a
+    Flink CEP user actually writes, over a STREAMING source: the SQL
+    front door routes it to the watermark-gated buffered NFA
+    (``streaming/cep_stream.py:stream_match_pattern``), Flink's
+    event-time CEP semantics. Runs the same statement, and shares the
+    watermark-closed-prefix oracle, with :func:`stream_match_recognize`
+    — only the memory sink differs."""
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_mr_sql", _STREAM_MR_FUNNEL_SQL
     )
-    _await_stream(query)
-    return spark.table(name)
+
+
+@_with_stream_shuffle(16)
+def stream_match_vshape_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING MATCH_RECOGNIZE as SQL with ROW-NAVIGATING DEFINE —
+    Flink's canonical streaming CEP statement end-to-end: the price
+    V-shape with ``PREV`` predicates compiled by the SQL front door
+    into the buffered streaming NFA's mask callables (context-row
+    rule included). Runs the same statement as, and shares the
+    closed-prefix cursor oracle of, :func:`stream_match_vshape`."""
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_mr_vshape_sql", _STREAM_MR_VSHAPE_SQL
+    )
+
+
+@_with_stream_shuffle(16)
+def stream_match_within_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING ``PATTERN ... WITHIN`` as SQL text — exercises the
+    generic streaming matcher's within leg end-to-end: the parser's
+    interval lands in ``stream_match_pattern(within_us=...)``, which
+    both bounds each attempt's scan at the (exclusive) window edge AND
+    expires buffered rows whose pattern window has passed the
+    watermark — the state bound that makes unbounded streams safe.
+    Runs the same statement as, and shares the oracle of,
+    :func:`stream_match_within`."""
+    return _stream_mr_sql(
+        spark, sf_dir, "fcs_stream_mr_within_sql", _STREAM_MR_WITHIN_SQL
+    )
 
 
 def q_match_recognize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8506,13 +8263,7 @@ def stream_match_define_xvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's closed prefix, requiring a CLOSED violating row to end the
     run — a run still touching the buffer tail is deferred (the greedy
     final variable could grow), exactly the matcher's rule."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_dxvar", """
         SELECT user_id, start_us, a_cents, n_b, sum_b
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8530,18 +8281,7 @@ def stream_match_define_xvar(spark: SparkSession, sf_dir: str) -> DataFrame:
               a AS a.event_type = 'view',
               b AS b.event_type = 'click' AND b.cents > a.cents
           )
-    """))
-    name = "fcs_stream_mr_dxvar"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrdx-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # closed prefix (global final watermark); a view's match emits only if
@@ -8581,13 +8321,7 @@ def stream_match_define_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     click run still touching the tail defers (the purchase may not
     have arrived). Oracle = closed-prefix islands + the average
     filter; the purchase row must itself be closed."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_dagg", """
         SELECT user_id, start_us, end_us, n_clicks, p_cents, sum_click_cents
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8607,18 +8341,7 @@ def stream_match_define_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase' AND p.cents > AVG(c.cents)
           )
-    """))
-    name = "fcs_stream_mr_dagg"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrda-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_DEFINE_AGG_ORACLE = """
@@ -8670,13 +8393,7 @@ def stream_match_next_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     successor here is the first click — inside the match — so the
     oracle is exactly the closed-prefix islands plus the lead-gap
     filter, no extra tail rule."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_next", """
         SELECT user_id, start_us, end_us, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8695,18 +8412,7 @@ def stream_match_next_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_next"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrnx-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # closed-prefix islands + the NEXT-gap filter on the view (lead over
@@ -8800,13 +8506,7 @@ def stream_match_prev2(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row pattern completes at its own row (hi reached), so matches
     emit even at the buffer tail — the oracle is the closed-prefix
     lag(2) filter with no tail rule."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_prev2", """
         SELECT user_id, m_us, m_cents
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8821,18 +8521,7 @@ def stream_match_prev2(spark: SparkSession, sf_dir: str) -> DataFrame:
             DEFINE
               m AS m.cents > PREV(m.cents, 2)
           )
-    """))
-    name = "fcs_stream_mr_prev2"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrp2-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_PREV2_ORACLE = """
@@ -8859,13 +8548,7 @@ def stream_match_define_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy unbounded ``d+`` defers when its run touches the buffer
     tail, so the oracle requires a CLOSED violating row to terminate
     the run (the same rule as the xvar streaming twin)."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_dnav", """
         SELECT user_id, start_us, n_d, last_d_cents
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8884,18 +8567,7 @@ def stream_match_define_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ((LAST(d.cents, 1) IS NULL AND d.cents < s.cents)
                    OR d.cents < LAST(d.cents, 1))
           )
-    """))
-    name = "fcs_stream_mr_dnav"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrdn-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_DEFINE_NAV_ORACLE = """
@@ -8947,13 +8619,7 @@ def stream_match_next_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase exists to be blocked), and a window edge falling inside
     the click run excludes exactly the matches whose purchase misses
     the window predicate."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_nxtw", """
         SELECT user_id, start_us, end_us, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -8972,18 +8638,7 @@ def stream_match_next_within(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_nxtw"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrnw-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_NEXT_WITHIN_ORACLE = """
@@ -9081,13 +8736,7 @@ def stream_match_prev_xvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches never touch an undecided boundary; a view on the key's
     last closed row defers, and the oracle's lead() over the closed
     prefix is NULL exactly there — no extra tail rule."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_pxv", """
         SELECT user_id, a_us, b_cents
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -9103,18 +8752,7 @@ def stream_match_prev_xvar(spark: SparkSession, sf_dir: str) -> DataFrame:
               a AS a.event_type = 'view',
               b AS b.event_type <> 'view' AND b.cents > PREV(a.cents)
           )
-    """))
-    name = "fcs_stream_mr_pxv"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrpxv-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 def q_match_subquery_src(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9186,13 +8824,7 @@ def stream_match_subquery_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame; the executor then watermarks the first ORDER BY key). The
     watermark closes over the FILTERED stream, so the oracle's closed
     prefix and row numbering both exclude signups."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_subq", """
         SELECT user_id, start_us, end_us, n_clicks
         FROM (SELECT user_id, event_id, event_type, ts, ts_us
               FROM mr_stream_events_src WHERE event_type <> 'signup')
@@ -9211,18 +8843,7 @@ def stream_match_subquery_src(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_subq"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrsq-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 def q_match_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9506,13 +9127,7 @@ def stream_match_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel ends in an exactly-one purchase, so matches at the
     closed-prefix tail are decided and the availableNow run converges
     to the batch expansion oracle over the watermark-closed prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_allrows", """
         SELECT user_id, event_id, ts_us, cls, match_no, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -9530,18 +9145,7 @@ def stream_match_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_allrows"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrar-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # the batch per-row expansion over the watermark-CLOSED prefix (keys
@@ -9597,13 +9201,7 @@ def stream_match_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-prefix tail is DECIDED (no greedy trailing quantifier) and
     the availableNow run converges to the batch islands oracle over
     the watermark-closed prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_alt", """
         SELECT user_id, start_us, end_us, n_clicks, n_errors, n_rows
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -9624,18 +9222,7 @@ def stream_match_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
               e AS e.event_type = 'error',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_alt"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mralt-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # the batch islands formulation over the watermark-CLOSED prefix (keys
@@ -9787,13 +9374,7 @@ def stream_match_nested_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     only once a closed row decides no further (click purchase) pair
     can extend it — the oracle mirrors both deferral rules (match at
     the key's closed tail; trailing click at the closed tail)."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_group", """
         SELECT user_id, start_us, end_us, n_pairs, click_cents
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -9812,18 +9393,7 @@ def stream_match_nested_group(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_group"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrgrp-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # the batch chain formulation over the watermark-CLOSED prefix, minus
@@ -9970,13 +9540,7 @@ def stream_match_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase, so tail matches are decided and the availableNow run
     converges to the filtered expansion over the watermark-closed
     prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_excl", """
         SELECT user_id, event_id, ts_us, cls, match_no, run_rows, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -9995,18 +9559,7 @@ def stream_match_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_excl"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrexc-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # the filtered expansion over the watermark-CLOSED prefix (keys whose
@@ -10129,13 +9682,7 @@ def stream_match_permute(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase, so a completed match at the closed-prefix tail is
     DECIDED and the availableNow run converges to the batch
     formulation over the watermark-closed prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_perm", """
         SELECT user_id, start_us, click_us, error_us, end_us
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -10155,18 +9702,7 @@ def stream_match_permute(spark: SparkSession, sf_dir: str) -> DataFrame:
               e AS e.event_type = 'error',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_perm"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrperm-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 # the batch formulation over the watermark-CLOSED prefix (every
@@ -10290,13 +9826,7 @@ def stream_match_permute_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn+3 which, if present IN the prefix, makes the repetition attempt
     a DECIDED mask failure (the purchase row satisfies neither member
     predicate), so the match emits."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_permq", """
         SELECT user_id, start_us, n_c, last_c_us, end_us
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -10316,18 +9846,7 @@ def stream_match_permute_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
               e AS e.event_type = 'error',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_permq"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrpermq-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_PERMUTE_QUANT_ORACLE = f"""
@@ -10469,14 +9988,10 @@ def stream_match_permute_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``view`` directly at the tail waits for its successor. The
     closed-prefix oracle agrees leg by leg: each emitted row's
     deciding successors are all inside the prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
-        SELECT user_id, start_us, click_us, error_us, end_us
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_perme", """
+        SELECT user_id, start_us,
+               COALESCE(click_us, -1) AS click_us,
+               COALESCE(error_us, -1) AS error_us, end_us
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
             PARTITION BY user_id
@@ -10495,24 +10010,7 @@ def stream_match_permute_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
               e AS e.event_type = 'error',
               p AS p.event_type = 'purchase'
           )
-    """))
-    out = out.select(
-        "user_id", "start_us",
-        F.coalesce("click_us", F.lit(-1)).alias("click_us"),
-        F.coalesce("error_us", F.lit(-1)).alias("error_us"),
-        "end_us",
-    )
-    name = "fcs_stream_mr_perme"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrperme-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_PERMUTE_EMPTY_ORACLE = f"""
@@ -10619,13 +10117,7 @@ def stream_match_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEFINE reads resolve through the per-attempt Step.dyn protocol,
     so the closed-prefix oracle is the batch oracle filtered to rows
     below the final watermark."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_subset", """
         SELECT user_id, start_us, end_us, ends_cents, n_ends,
                min_end_cents, n_clicks
         FROM mr_stream_events_src
@@ -10648,18 +10140,7 @@ def stream_match_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase' AND SUM(vp.cents) > 9000
           )
-    """))
-    name = "fcs_stream_mr_subset"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrsub-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_SUBSET_ORACLE = f"""
@@ -10758,13 +10239,7 @@ def stream_match_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints keep their layout). Matches settle in scan order per
     key, so ordinals equal the batch executor's; the oracle is the
     batch formulation over the watermark-closed prefix."""
-    from flink_commons_spark.plans.dialect import adapt_sql
-    from flink_commons_spark.plans.match_recognize import (
-        execute_match_recognize,
-    )
-
-    _mr_stream_events_view(spark, sf_dir, "mr_stream_events_src")
-    out = execute_match_recognize(spark, adapt_sql("""
+    return _stream_mr_sql(spark, sf_dir, "fcs_stream_mr_matchno", """
         SELECT user_id, mno, start_us, end_us, n_clicks
         FROM mr_stream_events_src
           MATCH_RECOGNIZE (
@@ -10783,18 +10258,7 @@ def stream_match_number(spark: SparkSession, sf_dir: str) -> DataFrame:
               c AS c.event_type = 'click',
               p AS p.event_type = 'purchase'
           )
-    """))
-    name = "fcs_stream_mr_matchno"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch_dir(prefix="fcs-ckpt-mrmno-"))
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(name)
+    """)
 
 
 _STREAM_MATCH_NUMBER_ORACLE = f"""

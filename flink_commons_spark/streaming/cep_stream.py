@@ -1,19 +1,23 @@
-"""STREAMING pattern matching — Flink CEP's event-time semantics.
+"""STREAMING MATCH_RECOGNIZE — Flink CEP's event-time semantics.
 
 Flink's CEP operator (``CEP.pattern`` / SQL ``MATCH_RECOGNIZE`` on a
 stream) buffers each key's out-of-order events, sorts them as the
 watermark closes their timestamps, runs the NFA over the closed
-prefix, and emits completed matches. The batch twin of the NFA lives
-in :mod:`flink_commons_spark.operators.cep`; this module adds the
-streaming harness on ``applyInPandasWithState``:
+prefix, and emits completed matches. The batch matcher lives in
+:mod:`flink_commons_spark.operators.cep`; this module holds its one
+streaming harness, :func:`stream_match_pattern`, on
+``applyInPandasWithState`` — the operator the SQL front door
+(``plans/match_recognize.py``) routes every streaming
+MATCH_RECOGNIZE statement to:
 
 - per key, arriving rows are BUFFERED in state (the same buffering
   Flink's CEP operator does for event time — matching must not run on
   an unsorted open prefix);
 - a timer is registered just past the key's newest event; when the
-  watermark passes it, the key's data is provably complete up to the
-  watermark: the buffer is sorted, the greedy backtracking NFA runs
-  (``AFTER MATCH SKIP PAST LAST ROW``), and completed matches emit;
+  watermark passes it, the buffer is sorted and
+  :func:`_scan_closed_prefix` runs the batch backtracker over the
+  closed prefix (all four AFTER MATCH SKIP modes), emitting completed
+  matches;
 - rows at or beyond the watermark stay buffered for the next firing
   (here: keys whose newest event sits ON the final watermark never
   close — the same "still open" rule the inactivity-session timer
@@ -21,209 +25,36 @@ streaming harness on ``applyInPandasWithState``:
 
 State per key is its unmatched buffer (bounded by the watermark
 horizon at steady state — emitted/consumed prefixes are dropped);
-the shuffle is the one keyed exchange Flink's CEP also does.
-
-The pattern here is the conversion funnel the batch contract query
-uses (``view click+ purchase`` with all-integer measures) so the two
-formulations are directly comparable; the NFA itself is the shared
-:func:`operators.cep._match_at` backtracker.
+by default one state row holds the buffers of every key in a hash
+bucket (:func:`resolve_key_buckets`). The shuffle is the one keyed
+exchange Flink's CEP also does.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
-
-#: output: one row per completed match
-MATCH_SCHEMA = "user_id bigint, start_us bigint, end_us bigint, n_clicks bigint"
-#: state: the key's buffered (ts, event_type, event_id, value) columns
-#: plus the count of leading CONTEXT rows — already-consumed rows kept
-#: only so row-navigating DEFINE predicates (PREV) see their true
-#: predecessor after a match consumes the prefix; never matched again.
-#: Numeric buffers are PACKED binary blobs (``tobytes``/``frombuffer``,
-#: the same repacking ``_BUF_TYPES`` documents for the generic
-#: harness): an ``array<long>`` state value pays per-element boxing on
-#: the Python side plus per-element catalyst array encoding in the
-#: state-store commit. Strings stay ``array<string>``. NOTE: a state-
-#: SCHEMA change — checkpoints from earlier builds do not restore.
-BUFFER_STATE_SCHEMA = (
-    "ts binary, et array<string>, eid binary, "
-    "val binary, nctx int, presorted int"
-)
-#: the BUCKETED twin (r15): one state row per KEY BUCKET — every
-#: member key's buffers concatenated in key order (same per-column
-#: packing), plus the per-key key ids / row offsets / context counts /
-#: sorted flags, all little-endian int64 blobs. See
-#: :func:`stream_match_pattern`'s ``key_buckets`` docstring for the
-#: rationale (per-key-group Arrow framing + state-store row cost
-#: dominates the micro-batch at high key cardinality).
-BUCKET_BUFFER_STATE_SCHEMA = (
-    "ts binary, et array<string>, eid binary, val binary, "
-    "bkeys binary, boffs binary, bnctx binary, bsrt binary"
-)
+#: session conf holding the keyed-state bucket count shared by the
+#: bucketed streaming operators (this module and ``stateful.py``)
+BUCKETS_CONF = "spark.flinkcommons.stream.match.buckets"
 
 
-def _pack_i64(vals) -> bytes:
-    import numpy as np
-
-    # explicit little-endian ('<i8'): ndarray.tobytes() is otherwise
-    # platform-native, which would make checkpoints silently corrupt
-    # on a different-endian resume host (ADVICE r14)
-    return np.asarray(vals, dtype="<i8").tobytes()
-
-
-def _pack_f64(vals) -> bytes:
-    import numpy as np
-
-    return np.asarray(vals, dtype="<f8").tobytes()
-
-
-def _unpack(val, dtype: str) -> list:
-    import numpy as np
-
-    return np.frombuffer(val if val is not None else b"", dtype=dtype).tolist()
-_COLS = ["user_id", "start_us", "end_us", "n_clicks"]
-
-
-#: the conversion-funnel pattern the batch contract query uses
-FUNNEL_PATTERN: "list[tuple[str, int, int | None]]" = [
-    ("view", 1, 1), ("click", 1, None), ("purchase", 1, 1),
-]
-#: the QUANTIFIED variant: zero-or-more clicks (greedy ``*``)
-QUANTIFIED_PATTERN: "list[tuple[str, int, int | None]]" = [
-    ("view", 1, 1), ("click", 0, None), ("purchase", 1, 1),
-]
-
-
-def _run_pattern_nfa(
-    key_id: int,
-    rows: "list[tuple]",
-    pattern: "list[tuple[str, int, int | None]]",
-    count_idx: int = 1,
-    within_us: "int | None" = None,
-    open_end_wm_ms: "int | None" = None,
-    after_match: "str | tuple[str, str]" = "past_last",
-    defines: "dict[str, Any] | None" = None,
-    ctx_n: int = 0,
-    emit: "Any | None" = None,
-):
-    """Greedy pattern matching over sorted rows via the shared batch
-    backtracker; returns (matches, consumed_count). ``pattern`` is a
-    list of ``(event_type, lo, hi)`` quantified variables (``hi=None``
-    unbounded; event_type ``"*"`` matches ANY row) matched
-    contiguously, ``AFTER MATCH SKIP PAST LAST ROW``; ``count_idx``
-    names the variable whose row count lands in the output's
-    ``n_clicks`` measure.
-
-    With ``within_us`` set (Flink's ``PATTERN ... WITHIN interval``),
-    a match starting at row ``i`` may only extend over rows whose
-    event time is at most ``rows[i].ts + within_us`` — matches are
-    contiguous here, so bounding the scan end enforces exactly "the
-    match completes within the interval".
-
-    ``open_end_wm_ms`` marks ``rows`` as a CLOSED PREFIX of a live
-    stream (value = current watermark ms). Two kinds of attempt are
-    then NOT-YET-DECIDED and stop the scan with everything from their
-    start kept buffered (emitting or discarding now would diverge
-    from the batch semantics once future rows arrive):
-
-    - a COMPLETED match whose greedy final variable ends on the last
-      row while still below its upper bound — future rows could
-      extend it (Flink likewise holds a greedy trailing quantifier
-      open until a non-matching row or the WITHIN window closes);
-    - a FAILED attempt that ran out of rows mid-pattern rather than
-      failing a predicate (``_match_at_ex``'s touched_end) — future
-      rows could complete it, and under the sequential-scan contract
-      no later start may resolve before an earlier undecided one.
-
-    Both deferrals are waived once the WITHIN window (if any) is
-    closed by the watermark — no admissible future row exists.
-
-    ``after_match`` is the resume strategy — all four of Flink's
-    AFTER MATCH SKIP modes: ``"past_last"`` (the default),
-    ``"to_next_row"`` (overlapping matches), or
-    ``("to_first", var)`` / ``("to_last", var)`` — resume AT the
-    first/last row the named pattern variable matched (that row stays
-    buffered: it may start the next match). Like the batch matcher
-    (and Flink), a skip-to that would not advance the scan, or whose
-    variable matched no row, raises. Consumed rows are always those
-    strictly before the final scan position, since every future match
-    starts at or after it.
-
-    ``defines`` generalizes the masks beyond event-type equality: a
-    dict of variable name → ``where(pdf) → boolean Series`` callables
-    (the batch :class:`operators.cep.Step` surface) evaluated over a
-    pandas frame of the buffered rows (columns ``ts_us, event_type,
-    event_id, val``). Predicates must be BACKWARD-looking — the
-    current row and ``shift(k>0)`` forms (Flink's PREV): a closed
-    row's mask then only reads closed rows, so masks are final the
-    moment the watermark closes them. Forward navigation (NEXT) would
-    read rows that may not have arrived and is rejected by the SQL
-    compiler for streaming use.
-
-    ``ctx_n`` marks the first ``ctx_n`` rows as CONTEXT: already
-    consumed, present only so shifts see their true predecessor — the
-    scan starts past them and they are never matched again. ``emit``
-    overrides the output row builder (``emit(key_id, rows, hit) →
-    tuple``; default = the funnel's 4-tuple with ``count_idx``).
-    """
-    import numpy as np
-
-    from flink_commons_spark.operators.cep import Step
-
-    steps = [
-        Step(et, None, quant=(lo, hi)) for et, lo, hi in pattern
-    ]
-    types = np.array([r[1] for r in rows])
-    ts_list = [r[0] for r in rows]
-    n = len(rows)
-    pdf = None
-    if defines:
-        import pandas as pd
-
-        pdf = pd.DataFrame({
-            "ts_us": pd.array([r[0] for r in rows], dtype="int64"),
-            "event_type": [r[1] for r in rows],
-            "event_id": pd.array([r[2] for r in rows], dtype="int64"),
-            "val": pd.array(
-                [r[3] if len(r) > 3 else 0.0 for r in rows], dtype="float64"
-            ),
-        })
-    masks = []
-    for s in steps:
-        if defines and s.name in defines:
-            masks.append(
-                defines[s.name](pdf).to_numpy(dtype=bool, na_value=False)
-            )
-        elif s.name == "*":
-            masks.append(np.ones(n, dtype=bool))
-        else:
-            masks.append(types == s.name)
-    out = []
-
-    def on_match(hit, first, last):
-        if emit is not None:
-            out.append(emit(key_id, rows, hit))
-        else:
-            out.append(
-                (key_id, rows[first][0], rows[last][0], len(hit[count_idx]))
-            )
-
-    consumed, _pending = _scan_closed_prefix(
-        steps, masks, ts_list, n, on_match,
-        within_us=within_us, open_end_wm_ms=open_end_wm_ms,
-        after_match=after_match, ctx_n=ctx_n,
-    )
-    # pending is only needed for the NEXT-frontier expiry cap, which
-    # this surface (no forward navigation) never hits: a pure-within
-    # deferral implies the pattern window is still open, so the
-    # deferred rows survive the window-expiry filter by construction
-    return out, consumed
+def resolve_key_buckets(spark, key_buckets: "int | None" = None) -> int:
+    """The keyed-state bucket count: ``key_buckets`` when given, else
+    the :data:`BUCKETS_CONF` session conf, else 4 x
+    ``spark.sql.shuffle.partitions`` (scale-adaptive: a cluster that
+    raises its parallelism raises the bucket count with it), else 64.
+    0 (or less) disables bucketing — one state row per key."""
+    if key_buckets is not None:
+        return int(key_buckets)
+    raw = spark.conf.get(BUCKETS_CONF, "")
+    if raw:
+        return int(raw)
+    try:
+        return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        return 64
 
 
 def _scan_closed_prefix(
@@ -244,15 +75,51 @@ def _scan_closed_prefix(
     pattern_desc: "str | None" = None,
     strict_budget: bool = False,
 ):
-    """The shared sequential scan over one key's sorted closed prefix —
-    the streaming twin of the batch matcher's per-key loop, with the
-    two deferral rules :func:`_run_pattern_nfa` documents (undecided
-    touched-end failures and growable greedy final variables stop the
-    scan). ``steps`` are batch :class:`operators.cep.Step` objects,
-    ``masks`` their precomputed boolean arrays over ALL ``n`` rows
-    (context included), ``on_match(hit, first, last)`` consumes each
-    completed match. Returns ``consumed`` — every row strictly before
-    it can leave the buffer.
+    """The sequential scan over one key's sorted closed prefix — the
+    streaming twin of the batch matcher's per-key loop. ``steps`` are
+    batch :class:`operators.cep.Step` objects, ``masks`` their
+    precomputed boolean arrays over ALL ``n`` rows (context included),
+    ``ts_list`` the rows' event-time micros, and ``on_match(hit,
+    first, last)`` consumes each completed match.
+
+    ``within_us`` (Flink's ``PATTERN ... WITHIN interval``) bounds an
+    attempt starting at row ``i`` to rows whose event time is below
+    ``ts_list[i] + within_us`` — the exclusive edge of Flink's NFA
+    pruning rule; matches are contiguous, so bounding the scan end
+    enforces exactly "the match completes within the interval".
+
+    ``open_end_wm_ms`` marks the rows as the CLOSED PREFIX of a live
+    stream (value = current watermark ms); None scans them as complete
+    batch data. On a closed prefix two kinds of attempt are
+    NOT-YET-DECIDED and stop the scan with everything from their start
+    kept buffered (emitting or discarding now would diverge from the
+    batch semantics once future rows arrive):
+
+    - a COMPLETED match whose greedy final variable ends on the last
+      row while still below its upper bound — future rows could
+      extend it (Flink likewise holds a greedy trailing quantifier
+      open until a non-matching row or the WITHIN window closes);
+    - a FAILED attempt that ran out of rows mid-pattern rather than
+      failing a predicate (the backtracker's ``touched_end``) — future
+      rows could complete it, and under the sequential-scan contract
+      no later start may resolve before an earlier undecided one.
+
+    Both deferrals are waived once the attempt's WITHIN window (if
+    any) is closed by the watermark — no admissible future row exists.
+
+    ``after_match`` is the resume strategy — all four of Flink's
+    AFTER MATCH SKIP modes: ``"past_last"`` (the default),
+    ``"to_next_row"`` (overlapping matches), or
+    ``("to_first", var)`` / ``("to_last", var)`` — resume AT the
+    first/last row the named pattern variable matched (that row stays
+    buffered: it may start the next match). Like the batch matcher
+    (and Flink), a skip-to that would not advance the scan, or whose
+    variable matched no row, raises.
+
+    ``ctx_n`` marks the first ``ctx_n`` rows as CONTEXT: already
+    consumed, present only so PREV-navigating masks see their true
+    predecessor — the scan starts past them and they are never
+    matched again.
 
     ``dctx`` (an :class:`operators.cep._DynCtx` over the closed
     prefix's column arrays) enables match-state-dependent ``Step.dyn``
@@ -280,7 +147,8 @@ def _scan_closed_prefix(
     NEXT frontiers compose soundly.
 
     Returns ``(consumed, pending)`` — every row strictly before
-    ``consumed`` can leave the buffer; ``pending`` is the start
+    ``consumed`` can leave the buffer (every future match starts at or
+    after it); ``pending`` is the start
     position of the attempt that deferred (None when the scan ran to
     the end), which callers must NOT expire rows at/after even when
     their WITHIN window has passed (a frontier-deferred match may be
@@ -412,431 +280,6 @@ def _scan_closed_prefix(
         consumed = i
     return consumed, None
 
-
-def _run_funnel_nfa(
-    key_id: int,
-    rows: "list[tuple[int, str, int]]",
-    within_us: "int | None" = None,
-):
-    """The ``view click+ purchase`` funnel through the generic NFA."""
-    return _run_pattern_nfa(key_id, rows, FUNNEL_PATTERN, 1, within_us)
-
-
-def stream_match_conversions(
-    sdf: DataFrame,
-    key_col: str = "user_id",
-    within_us: "int | None" = None,
-    pattern: "list[tuple[str, int, int | None]] | None" = None,
-    count_idx: int = 1,
-    after_match: "str | tuple[str, str]" = "past_last",
-    defines: "dict[str, Any] | None" = None,
-    value_col: "str | None" = None,
-    emit: "Any | None" = None,
-    output_schema: "str | None" = None,
-    ctx_rows: "int | None" = None,
-    key_buckets: "int | None" = None,
-) -> DataFrame:
-    """Watermark-gated streaming CEP for the conversion funnel (or any
-    ``pattern`` of quantified ``(event_type, lo, hi)`` variables —
-    the ``n_clicks`` measure counts variable ``count_idx``'s rows;
-    ``after_match`` picks the resume strategy, see
-    :func:`_run_pattern_nfa`).
-
-    ``sdf`` must carry ``user_id``, ``ts_us`` (bigint event micros,
-    with a watermark declared on its timestamp source) and
-    ``event_type``/``event_id``; with ``value_col`` set, that numeric
-    column is buffered alongside as ``val``.
-
-    ``within_us`` adds Flink's ``PATTERN ... WITHIN interval``
-    semantics: a match must complete within the interval of its first
-    event, and — the part that matters at scale — buffered rows whose
-    window has passed the watermark are EXPIRED from state (they can
-    never join a future match), so per-key state is bounded by the
-    within horizon instead of the full unmatched history. Without it
-    the operator keeps Flink's unbounded-pattern behavior.
-
-    ``defines`` generalizes variable predicates beyond event-type
-    equality (see :func:`_run_pattern_nfa`): backward-looking
-    callables over the buffered frame, e.g. Flink's canonical
-    ``DOWN AS price < PREV(price)`` as
-    ``lambda p: p["val"] < p["val"].shift(1)``. When a match consumes
-    rows, the last ``ctx_rows`` consumed rows (default 1 when defines
-    are present) stay buffered as CONTEXT so the next row's PREV still
-    sees its true predecessor — Flink's PREV navigates the input
-    stream, not the retained buffer. One documented divergence: when a
-    key's buffer drains COMPLETELY (every row matched, nothing open),
-    its state — context included — is dropped so idle keys don't live
-    forever; a pattern whose FIRST variable navigates PREV would then
-    see NULL at the next arrival where Flink would see the pre-drain
-    row. Patterns from the SQL front door start with an unconstrained
-    variable or an equality, where this cannot change results.
-    ``emit``/``output_schema`` override the per-match output row
-    (measures beyond the funnel's count triple)."""
-    pat = pattern or FUNNEL_PATTERN
-    if ctx_rows is None:
-        ctx_rows = 1 if defines else 0
-    out_schema = output_schema or MATCH_SCHEMA
-    out_cols = [f.strip().split()[0] for f in out_schema.split(",")]
-
-    def _make_settle(wm_ms):
-        """Build the PURE per-key settle for one micro-batch's
-        watermark: ``settle_core(key_id, rows, nctx, presorted) ->
-        (matches, keep, cands)`` with ``keep`` a tagged disposition —
-        ``("drop",)`` removes the key's buffer, ``("buf", rows, nctx,
-        sorted_flag)`` retains one — and ``cands`` the timer-candidate
-        milliseconds (callers arm ``min(c for c in cands if c > wm)``).
-        Shared verbatim by the per-key and bucketed executors.
-
-        The re-armed timer targets the next watermark horizon at
-        which a buffered DECISION can flip — the moment the oldest
-        still-open row becomes closed (more prefix to match: this
-        is what lets a key holding the stream's final event still
-        emit its earlier, decided matches), and under WITHIN the
-        earliest pattern-window close among kept rows (a deferred
-        attempt decides, and expired rows leave state, exactly when
-        their window passes the watermark). Decisions cannot flip
-        between those horizons, so firings track watermark
-        advances that matter, not buffered-row count — the same
-        per-watermark cadence Flink's CEP operator runs at. A
-        fully-closed, within-free buffer has no such horizon; it
-        simply waits for future data — correctly still open.
-
-        Context rows always sort first: they were closed when
-        consumed (ts < the then-watermark), and every later-
-        arriving row is at/above that watermark.
-
-        ``presorted`` flags a buffer read back verbatim from state
-        (always stored sorted) — its sort is skipped; and a buffer
-        with NOTHING closed yet (the availableNow first batch for
-        every key: watermark still 0) is kept as-is, skipping
-        sort and scan entirely."""
-
-        def settle_core(key_id, rows, nctx, presorted=False):
-            if not any(r[0] // 1000 < wm_ms for r in rows):
-                if rows:
-                    lo = min(r[0] for r in rows)
-                    cand = [lo // 1000 + 1]
-                    if within_us is not None:
-                        cand.append((lo + within_us) // 1000 + 1)
-                    return [], ("buf", rows, nctx, int(presorted)), cand
-                return [], ("drop",), []
-            if not presorted:
-                rows = sorted(rows, key=lambda r: (r[0], r[2]))
-            closed = [r for r in rows if r[0] // 1000 < wm_ms]
-            still_open = [r for r in rows if r[0] // 1000 >= wm_ms]
-            matches, consumed = _run_pattern_nfa(
-                key_id, closed, pat, count_idx,
-                within_us, open_end_wm_ms=wm_ms, after_match=after_match,
-                defines=defines, ctx_n=nctx, emit=emit,
-            )
-            kept = closed[consumed:] + still_open
-            if within_us is not None:
-                # expire rows whose pattern window has wholly passed
-                # the watermark: every closed start that could include
-                # them has already been evaluated, and no future match
-                # can reach back past its own within window
-                kept = [
-                    r for r in kept
-                    if (r[0] + within_us) // 1000 >= wm_ms
-                ]
-            if kept:
-                # kept is a suffix of the sorted buffer (prefix cut +
-                # monotone-in-ts expiry); re-derive the context as the
-                # rows immediately preceding the first kept row
-                j = len(rows) - len(kept)
-                ctx = rows[max(0, j - ctx_rows) : j] if ctx_rows else []
-                rest = ctx + kept
-                cand = [max(r[0] for r in kept) // 1000 + 1]
-                if still_open:
-                    cand.append(min(r[0] for r in still_open) // 1000 + 1)
-                if within_us is not None:
-                    cand.append(
-                        min((r[0] + within_us) // 1000 for r in kept) + 1
-                    )
-                return matches, ("buf", rest, len(ctx), 1), cand
-            return matches, ("drop",), []
-
-        return settle_core
-
-    def fn(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        key_id = int(key[0])
-        wm_ms = state.getCurrentWatermarkMs()
-        settle_core = _make_settle(wm_ms)
-
-        if state.hasTimedOut:
-            ts, et, eid, val, nctx, srt = state.get
-            matches, keep, cands = settle_core(
-                key_id,
-                list(zip(
-                    _unpack(ts, "<i8"), et,
-                    _unpack(eid, "<i8"), _unpack(val, "<f8"),
-                )),
-                int(nctx), bool(srt),
-            )
-        else:
-            new = pd.concat(list(batches))
-            ts = list(new["ts_us"].astype("int64"))
-            et = list(new["event_type"])
-            eid = list(new["event_id"].astype("int64"))
-            val = (
-                list(new[value_col].astype("float64"))
-                if value_col else [0.0] * len(ts)
-            )
-            nctx = 0
-            if state.exists:
-                pts, pet, peid, pval, pnctx, _srt = state.get
-                ts = _unpack(pts, "<i8") + ts
-                et = list(pet) + et
-                eid = _unpack(peid, "<i8") + eid
-                val = _unpack(pval, "<f8") + val
-                nctx = int(pnctx)
-            matches, keep, cands = settle_core(
-                key_id, list(zip(ts, et, eid, val)), nctx
-            )
-        if keep[0] == "drop":
-            if state.exists:
-                state.remove()
-        else:
-            _, rest, nctx2, srt2 = keep
-            state.update((
-                _pack_i64([r[0] for r in rest]),
-                [r[1] for r in rest],
-                _pack_i64([r[2] for r in rest]),
-                _pack_f64([r[3] if len(r) > 3 else 0.0 for r in rest]),
-                nctx2,
-                srt2,
-            ))
-            live = [t for t in cands if t > wm_ms]
-            if live:  # Spark rejects timers at/behind the watermark
-                state.setTimeoutTimestamp(min(live))
-        if matches:
-            yield pd.DataFrame(matches, columns=out_cols)
-
-    def fn_bucket(
-        _bkey: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        wm_ms = state.getCurrentWatermarkMs()
-        settle_core = _make_settle(wm_ms)
-        # ---- decode the bucket's multi-key state
-        s_keys = np.empty(0, dtype=np.int64)
-        s_ts = s_eid = s_val = None
-        s_et: list = []
-        s_offs = s_nctx = s_srt = None
-        if state.exists:
-            bts, bet, beid, bval, bkeys, boffs, bnctx, bsrt = state.get
-            s_ts = np.frombuffer(bts or b"", dtype="<i8")
-            s_et = list(bet or [])
-            s_eid = np.frombuffer(beid or b"", dtype="<i8")
-            s_val = np.frombuffer(bval or b"", dtype="<f8")
-            s_keys = np.frombuffer(bkeys or b"", dtype="<i8")
-            s_offs = np.frombuffer(boffs or b"", dtype="<i8")
-            s_nctx = np.frombuffer(bnctx or b"", dtype="<i8")
-            s_srt = np.frombuffer(bsrt or b"", dtype="<i8")
-        nskeys = len(s_keys)
-        order_keys = [int(k) for k in s_keys]
-        key_index = {k: i for i, k in enumerate(order_keys)}
-        # ---- group this batch's rows per key (stable)
-        new = None
-        new_codes = np.empty(0, dtype=np.int64)
-        if not state.hasTimedOut:
-            new = pd.concat(list(batches))
-            if len(new):
-                codes, uniq = pd.factorize(new[key_col])
-                remap = np.empty(len(uniq), dtype=np.int64)
-                for j, u in enumerate(uniq):
-                    k = int(u)
-                    i = key_index.get(k)
-                    if i is None:
-                        i = len(order_keys)
-                        key_index[k] = i
-                        order_keys.append(k)
-                    remap[j] = i
-                new_codes = remap[codes]
-            else:
-                new = None
-        nuni = len(order_keys)
-        # ---- combined (state rows first, then new rows) columns +
-        # per-row key codes; one stable sort; per-key SLICES
-        parts_codes = []
-        if nskeys:
-            parts_codes.append(np.repeat(
-                np.arange(nskeys, dtype=np.int64), np.diff(s_offs)
-            ))
-        if new is not None:
-            parts_codes.append(new_codes)
-        comb_codes = (
-            np.concatenate(parts_codes) if parts_codes
-            else np.empty(0, dtype=np.int64)
-        )
-        if new is not None:
-            n_ts = new["ts_us"].to_numpy("int64")
-            n_eid = new["event_id"].to_numpy("int64")
-            n_val = (
-                new[value_col].to_numpy("float64")
-                if value_col else np.zeros(len(new))
-            )
-            n_et = new["event_type"].to_numpy()
-        if s_ts is not None and new is not None:
-            c_ts = np.concatenate([s_ts, n_ts])
-            c_eid = np.concatenate([s_eid, n_eid])
-            c_val = np.concatenate([s_val, n_val])
-            c_et = np.concatenate([np.asarray(s_et, dtype=object),
-                                   n_et.astype(object)])
-        elif new is not None:
-            c_ts, c_eid, c_val = n_ts, n_eid, n_val
-            c_et = n_et.astype(object)
-        else:
-            c_ts = s_ts if s_ts is not None else np.empty(0, dtype=np.int64)
-            c_eid = s_eid if s_eid is not None else np.empty(0, dtype=np.int64)
-            c_val = s_val if s_val is not None else np.empty(0)
-            c_et = np.asarray(s_et, dtype=object)
-        order = np.argsort(comb_codes, kind="stable")
-        comb_sorted = comb_codes[order]
-        c_ts, c_eid, c_val = c_ts[order], c_eid[order], c_val[order]
-        c_et = c_et[order] if len(order) else c_et
-        bnds = np.searchsorted(comb_sorted, np.arange(nuni + 1))
-        new_counts = (
-            np.bincount(new_codes, minlength=nuni) if len(new_codes)
-            else np.zeros(nuni, dtype=np.int64)
-        )
-        # ---- BUCKET-WIDE "nothing closed" fast path (r15): every key
-        # would take settle_core's store-as-is branch — skip the
-        # per-key row tuples and packs; one pack per column, vectorized
-        # metadata and timer candidates (byte-equivalent, see the
-        # generic harness's twin)
-        lens_all = np.diff(bnds)
-        if (
-            nuni
-            and not bool((lens_all == 0).any())
-            and not int((c_ts // 1000 < wm_ms).sum())
-        ):
-            nctx_out = np.zeros(nuni, dtype="<i8")
-            srt_out = np.zeros(nuni, dtype="<i8")
-            if nskeys:
-                nctx_out[:nskeys] = s_nctx
-                srt_out[:nskeys] = s_srt * (new_counts[:nskeys] == 0)
-            state.update((
-                c_ts.astype("<i8", copy=False).tobytes(),
-                list(c_et),
-                c_eid.astype("<i8", copy=False).tobytes(),
-                c_val.astype("<f8", copy=False).tobytes(),
-                _pack_i64(order_keys),
-                bnds.astype("<i8").tobytes(),
-                nctx_out.tobytes(),
-                srt_out.tobytes(),
-            ))
-            starts = bnds[:-1]
-            lo_k = np.minimum.reduceat(c_ts, starts)
-            cand = [lo_k // 1000 + 1]
-            if within_us is not None:
-                cand.append((lo_k + within_us) // 1000 + 1)
-            live = np.concatenate(cand)
-            live = live[live > wm_ms]
-            if len(live):
-                state.setTimeoutTimestamp(int(live.min()))
-            return
-        # ---- settle every key in the bucket (idempotent for keys
-        # whose decision horizon has not moved)
-        out_all: list = []
-        kept: list = []  # (key, rows, nctx, srt)
-        all_cands: list = []
-        for ki in range(nuni):
-            a, b = int(bnds[ki]), int(bnds[ki + 1])
-            rows = list(zip(
-                c_ts[a:b].tolist(), c_et[a:b],
-                c_eid[a:b].tolist(), c_val[a:b].tolist(),
-            ))
-            if ki < nskeys:
-                nctx_k = int(s_nctx[ki])
-                srt_k = bool(s_srt[ki]) and not int(new_counts[ki])
-            else:
-                nctx_k, srt_k = 0, False
-            matches, keep, cands = settle_core(
-                order_keys[ki], rows, nctx_k, srt_k
-            )
-            out_all.extend(matches)
-            if keep[0] == "buf":
-                kept.append((order_keys[ki], keep[1], keep[2], keep[3]))
-                all_cands.extend(cands)
-        # ---- re-pack the bucket
-        if kept:
-            flat = [r for e in kept for r in e[1]]
-            lens = [len(e[1]) for e in kept]
-            offs = np.zeros(len(kept) + 1, dtype="<i8")
-            offs[1:] = np.cumsum(lens)
-            state.update((
-                _pack_i64([r[0] for r in flat]),
-                [r[1] for r in flat],
-                _pack_i64([r[2] for r in flat]),
-                _pack_f64([r[3] if len(r) > 3 else 0.0 for r in flat]),
-                _pack_i64([e[0] for e in kept]),
-                offs.tobytes(),
-                _pack_i64([e[2] for e in kept]),
-                _pack_i64([e[3] for e in kept]),
-            ))
-            live = [t for t in all_cands if t > wm_ms]
-            if live:  # Spark rejects timers at/behind the watermark
-                state.setTimeoutTimestamp(min(live))
-        elif state.exists:
-            state.remove()
-        if out_all:
-            yield pd.DataFrame(out_all, columns=out_cols)
-
-    # ---- bucketed-state resolution — same knob and same rationale as
-    # :func:`stream_match_pattern` (see its docstring); the funnel's
-    # key must be integer-typed either way (``key_id = int(key[0])``)
-    spark = sdf.sparkSession
-    if key_buckets is None:
-        raw = spark.conf.get("spark.flinkcommons.stream.match.buckets", "")
-        if raw:
-            key_buckets = int(raw)
-        else:
-            try:
-                key_buckets = 4 * int(
-                    spark.conf.get("spark.sql.shuffle.partitions")
-                )
-            except Exception:
-                key_buckets = 64
-    key_type = {
-        f.name: f.dataType.simpleString() for f in sdf.schema.fields
-    }.get(key_col)
-    if key_buckets and int(key_buckets) > 0 and key_type in (
-        "tinyint", "smallint", "int", "bigint"
-    ):
-        from pyspark.sql import functions as F
-
-        bucket = F.pmod(F.xxhash64(key_col), F.lit(int(key_buckets)))
-        return (
-            sdf.withColumn("__mr_bucket", bucket)
-            .groupBy("__mr_bucket")
-            .applyInPandasWithState(
-                fn_bucket,
-                out_schema,
-                BUCKET_BUFFER_STATE_SCHEMA,
-                "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        fn,
-        out_schema,
-        BUFFER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 #: Spark SQL column type → (state field type, numpy dtype or None)
 #: Numeric buffers live in state as a single PACKED ``binary`` blob
 #: (``ndarray.tobytes()`` on store, zero-copy ``np.frombuffer`` on
@@ -954,15 +397,15 @@ def stream_match_pattern(
     ``applyInPandasWithState`` transport pays a per-KEY-GROUP Arrow
     framing + state-store row cost of ~0.9-1.3 s per 100k-row
     micro-batch at 1.5k keys regardless of Python work (r14 profile) —
-    with buckets the protocol cost tracks bucket count. Default: the
-    ``spark.flinkcommons.stream.match.buckets`` session conf, else
-    4 x ``spark.sql.shuffle.partitions`` (scale-adaptive: a real
-    cluster raising its parallelism raises the bucket count with it);
-    0 disables (one state row per key, the pre-r15 layout). Trade
-    documented for 100 TB: a bucket's state is round-tripped whenever
-    ANY of its keys sees data, so idle-key buffers ride along — they
-    are watermark-bounded, and keys-per-bucket stays
-    cardinality/buckets. NOTE: a state-SCHEMA change — checkpoints
+    with buckets the protocol cost tracks bucket count. Default:
+    :func:`resolve_key_buckets`; 0 disables (one state row per key,
+    the pre-r15 layout). Bucket state packs numeric keys as int64/
+    float64, so a NULL numeric key whose rows stay buffered raises
+    (naming the conf that disables bucketing) rather than merging into
+    another key's buffer. Trade documented for 100 TB: a bucket's
+    state is round-tripped whenever ANY of its keys sees data, so
+    idle-key buffers ride along — they are watermark-bounded, and
+    keys-per-bucket stays cardinality/buckets. NOTE: a state-SCHEMA change — checkpoints
     written by the per-key layout do not restore into the bucketed
     one (or vice versa).
 
@@ -998,12 +441,21 @@ def stream_match_pattern(
     watermark closes and WITHIN is measured on). ``buffer_cols`` is
     ``[(name, spark_type)]`` for every column the predicates/measures
     read — each key's state is exactly those arrays over its unmatched
-    buffer plus up to ``ctx_rows`` context rows (see
-    :func:`stream_match_conversions` on the PREV/context rule and the
-    drained-buffer divergence).
+    buffer plus up to ``ctx_rows`` context rows. Closed-prefix
+    semantics (deferral, WITHIN, AFTER MATCH SKIP) are those of
+    :func:`_scan_closed_prefix`.
 
-    Closed-prefix semantics are byte-identical to the funnel harness —
-    both run :func:`_scan_closed_prefix`.
+    CONTEXT rows: when a match consumes rows, the last ``ctx_rows``
+    consumed rows stay buffered so the next row's PREV still sees its
+    true predecessor — Flink's PREV navigates the input stream, not
+    the retained buffer (the SQL front door sets ``ctx_rows`` to the
+    deepest PREV offset, at least 1). One documented divergence: when
+    a key's buffer drains COMPLETELY (every row matched, nothing
+    open), its state — context included — is dropped so idle keys
+    don't live forever; a pattern whose FIRST variable navigates PREV
+    would then see NULL at the key's next arrival where Flink would
+    see the pre-drain row. A bounded replay that settles each key's
+    closed rows in one pass never re-reads a drained key.
 
     ``all_rows=True`` is the streaming ``ALL ROWS PER MATCH`` mode (a
     flagged SQL:2016 extension — Flink 1.16 rejects the row mode
@@ -1065,26 +517,11 @@ def stream_match_pattern(
     step_list = list(steps)
     nbuf = len(buffer_cols)
 
-    # ---- bucketed-state resolution (see docstring) -------------------
-    spark = sdf.sparkSession
-    if key_buckets is None:
-        raw = spark.conf.get("spark.flinkcommons.stream.match.buckets", "")
-        if raw:
-            key_buckets = int(raw)
-        else:
-            try:
-                key_buckets = 4 * int(
-                    spark.conf.get("spark.sql.shuffle.partitions")
-                )
-            except Exception:
-                key_buckets = 64
+    key_buckets = resolve_key_buckets(sdf.sparkSession, key_buckets)
     types_all = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
     key_types = [types_all.get(c) for c in key_cols]
     nkf = len(key_types)
-    bucketed = (
-        bool(key_buckets) and int(key_buckets) > 0
-        and all(t in _BUF_TYPES for t in key_types)
-    )
+    bucketed = key_buckets > 0 and all(t in _BUF_TYPES for t in key_types)
     if bucketed:
         # per-BUCKET multi-key state: the per-column buffers of every
         # key in the bucket concatenated in key order, the per-key key
@@ -1292,6 +729,27 @@ def stream_match_pattern(
             pass
         return v.item() if hasattr(v, "item") else v
 
+    def _key_blobs(keys):
+        """The bucket's per-key-field state values over ``keys`` (key
+        tuples): packed bytes for numeric fields, lists for strings. A
+        NULL numeric key raises — packing has no NULL, and any stand-in
+        value could merge it into a real key's buffer."""
+        blobs = []
+        for i, kt in enumerate(key_types):
+            np_dt = _BUF_TYPES[kt][1]
+            vals_i = [k[i] for k in keys]
+            if np_dt is None:
+                blobs.append(vals_i)
+                continue
+            if any(v is None for v in vals_i):
+                raise ValueError(
+                    "NULL numeric partition key in bucketed streaming "
+                    "MATCH_RECOGNIZE — filter NULL keys in the source "
+                    f"view or disable bucketing (SET '{BUCKETS_CONF}'='0')"
+                )
+            blobs.append(np.asarray(vals_i, dtype=np_dt).tobytes())
+        return blobs
+
     def fn_bucket(_bkey, batches, state):
         wm_ms = state.getCurrentWatermarkMs()
         settle_core = _make_settle(wm_ms)
@@ -1413,21 +871,7 @@ def stream_match_pattern(
             and not int((ts_all // 1000 < wm_ms).sum())
         ):
             blobs = [_enc_arr(arrs[c], t) for c, t in buffer_cols]
-            for i, kt in enumerate(key_types):
-                np_dt = _BUF_TYPES[kt][1]
-                vals_i = [k[i] for k in order_keys]
-                if np_dt is None:
-                    blobs.append(vals_i)
-                else:
-                    if any(v is None for v in vals_i):
-                        raise ValueError(
-                            "NULL numeric partition key in bucketed "
-                            "streaming MATCH_RECOGNIZE — filter NULL keys "
-                            "in the source view or disable bucketing (SET "
-                            "'spark.flinkcommons.stream.match.buckets'"
-                            "='0')"
-                        )
-                    blobs.append(np.asarray(vals_i, dtype=np_dt).tobytes())
+            blobs += _key_blobs(order_keys)
             nctx_out = np.zeros(nuni, dtype="<i8")
             srt_out = np.zeros(nuni, dtype="<i8")
             nm_out = np.zeros(nuni, dtype="<i8")
@@ -1495,21 +939,7 @@ def stream_match_pattern(
                     blobs.append(b"".join(
                         _enc_buf(e[1][c], t) for e in kept if e[1] is not None
                     ))
-            for i, kt in enumerate(key_types):
-                np_dt = _BUF_TYPES[kt][1]
-                vals_i = [e[0][i] for e in kept]
-                if np_dt is None:
-                    blobs.append(vals_i)
-                else:
-                    if any(v is None for v in vals_i):
-                        raise ValueError(
-                            "NULL numeric partition key in bucketed "
-                            "streaming MATCH_RECOGNIZE — filter NULL keys "
-                            "in the source view or disable bucketing (SET "
-                            "'spark.flinkcommons.stream.match.buckets'"
-                            "='0')"
-                        )
-                    blobs.append(np.asarray(vals_i, dtype=np_dt).tobytes())
+            blobs += _key_blobs([e[0] for e in kept])
             lens = [(len(e[1]) if e[1] is not None else 0) for e in kept]
             offs = np.zeros(len(kept) + 1, dtype="<i8")
             offs[1:] = np.cumsum(lens)
@@ -1535,7 +965,7 @@ def stream_match_pattern(
     if bucketed:
         from pyspark.sql import functions as F
 
-        bucket = F.pmod(F.xxhash64(*key_cols), F.lit(int(key_buckets)))
+        bucket = F.pmod(F.xxhash64(*key_cols), F.lit(key_buckets))
         return (
             sdf.withColumn("__mr_bucket", bucket)
             .groupBy("__mr_bucket")

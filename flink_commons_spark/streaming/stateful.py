@@ -22,6 +22,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_commons_spark.streaming.cep_stream import (
+    BUCKETS_CONF,
+    resolve_key_buckets,
+)
+
 #: output schema of :func:`running_user_stats`
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_epoch bigint"
 #: state tuple layout: (n_events, total_value, last_epoch)
@@ -211,7 +216,7 @@ def running_user_stats(
     src = sdf.select("user_id", "value", "epoch")
     if not idle_ttl_ms:
         # bucketed state (r15): same key-coarsening as the streaming
-        # CEP harnesses (see cep_stream.stream_match_pattern) — the
+        # CEP harness (see cep_stream.stream_match_pattern) — the
         # per-key-group Arrow framing + state-store row cost dominated
         # this operator's micro-batch (r14 profile: addBatch ~1.3 s at
         # 1.5k keys for ~0 Python work). One state row per bucket holds
@@ -219,22 +224,9 @@ def running_user_stats(
         # itself becomes one vectorized pandas groupby per bucket.
         # Arithmetic is order-identical to the per-key path (per-key
         # batch sum added to the running total). Conf knob and 0-to-
-        # disable behave as in the CEP harnesses.
-        spark = sdf.sparkSession
-        if key_buckets is None:
-            raw = spark.conf.get(
-                "spark.flinkcommons.stream.match.buckets", ""
-            )
-            if raw:
-                key_buckets = int(raw)
-            else:
-                try:
-                    key_buckets = 4 * int(
-                        spark.conf.get("spark.sql.shuffle.partitions")
-                    )
-                except Exception:
-                    key_buckets = 64
-        if key_buckets and int(key_buckets) > 0:
+        # disable behave as in the CEP harness.
+        key_buckets = resolve_key_buckets(sdf.sparkSession, key_buckets)
+        if key_buckets > 0:
             def upd_bucket(
                 _bkey: tuple[Any, ...],
                 batches: Iterator[pd.DataFrame],
@@ -245,7 +237,7 @@ def running_user_stats(
                     raise ValueError(
                         "NULL user_id in bucketed running_user_stats — "
                         "filter NULL keys or disable bucketing (SET "
-                        "'spark.flinkcommons.stream.match.buckets'='0')"
+                        f"'{BUCKETS_CONF}'='0')"
                     )
                 if state.exists:
                     bk, bn, bt, bl = state.get
@@ -304,7 +296,7 @@ def running_user_stats(
                 })
 
             bucket = F.pmod(
-                F.xxhash64("user_id"), F.lit(int(key_buckets))
+                F.xxhash64("user_id"), F.lit(key_buckets)
             )
             return (
                 src.withColumn("__us_bucket", bucket)

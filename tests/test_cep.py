@@ -127,21 +127,62 @@ def test_reluctant_star_stops_at_first_admissible_exit(spark):
     assert _run(spark, "vcpcpc", greedy) == [(0, 4, 5)]
 
 
-def test_streaming_nfa_defers_growable_trailing_quantifier():
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
+def _scan(key, rows, pattern, counts=(1,), *, defines=None, **kw):
+    """Run ``_scan_closed_prefix`` over one key's sorted ``rows``
+    (``(ts_us, event_type, event_id[, val])`` tuples). ``pattern`` is a
+    list of ``(name, lo, hi)`` variables: a name in ``defines`` masks
+    with that ``where(pdf)`` callable over the columns ``ts_us,
+    event_type, event_id, val``, ``"*"`` matches any row, and any other
+    name matches that event type. Returns ``(matches, consumed)``, one
+    ``(key, first_ts, last_ts, len(hit[i]) for i in counts)`` tuple
+    per match; ``kw`` passes through to the scan."""
+    import numpy as np
+    import pandas as pd
 
+    from flink_commons_spark.streaming.cep_stream import _scan_closed_prefix
+
+    steps = [Step(name, None, quant=(lo, hi)) for name, lo, hi in pattern]
+    pdf = pd.DataFrame({
+        "ts_us": pd.array([r[0] for r in rows], dtype="int64"),
+        "event_type": [r[1] for r in rows],
+        "event_id": pd.array([r[2] for r in rows], dtype="int64"),
+        "val": pd.array(
+            [r[3] if len(r) > 3 else 0.0 for r in rows], dtype="float64"
+        ),
+    })
+    types = pdf["event_type"].to_numpy()
+    masks = [
+        defines[s.name](pdf).to_numpy(dtype=bool, na_value=False)
+        if defines and s.name in defines
+        else np.ones(len(rows), dtype=bool) if s.name == "*"
+        else types == s.name
+        for s in steps
+    ]
+    out = []
+
+    def on_match(hit, first, last):
+        out.append((key, rows[first][0], rows[last][0],
+                    *(len(hit[i]) for i in counts)))
+
+    consumed, _pending = _scan_closed_prefix(
+        steps, masks, [r[0] for r in rows], len(rows), on_match, **kw
+    )
+    return out, consumed
+
+
+def test_streaming_nfa_defers_growable_trailing_quantifier():
     rows = [(10_000, "view", 0), (20_000, "click", 1), (30_000, "click", 2)]
     pat = [("view", 1, 1), ("click", 1, None)]
     # closed prefix ends inside the click run: the greedy trailing +
     # could grow -> defer (no match, nothing consumed)
-    out, consumed = _run_pattern_nfa(1, rows, pat, 1, open_end_wm_ms=100)
+    out, consumed = _scan(1, rows, pat, open_end_wm_ms=100)
     assert out == [] and consumed == 0
     # batch mode (no open end) emits the greedy match immediately
-    out, consumed = _run_pattern_nfa(1, rows, pat, 1)
+    out, consumed = _scan(1, rows, pat)
     assert out == [(1, 10_000, 30_000, 2)] and consumed == 3
     # a bounded trailing quantifier at its max cannot grow -> emits
     pat2 = [("view", 1, 1), ("click", 1, 2)]
-    out, consumed = _run_pattern_nfa(1, rows, pat2, 1, open_end_wm_ms=100)
+    out, consumed = _scan(1, rows, pat2, open_end_wm_ms=100)
     assert out == [(1, 10_000, 30_000, 2)] and consumed == 3
 
 
@@ -150,33 +191,29 @@ def test_streaming_nfa_defers_mid_pattern_boundary_failure():
     the trailing variable) is undecided: the scan must stop there so no
     later start resolves first — batch consistency once the missing
     rows arrive."""
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     # v c c — the funnel needs a purchase that hasn't arrived yet
     rows = [(10_000, "view", 0), (20_000, "click", 1), (30_000, "click", 2)]
     funnel = [("view", 1, 1), ("click", 1, None), ("purchase", 1, 1)]
-    out, consumed = _run_pattern_nfa(1, rows, funnel, 1, open_end_wm_ms=100)
+    out, consumed = _scan(1, rows, funnel, open_end_wm_ms=100)
     assert out == [] and consumed == 0
     # predicate failure is permanent: v s p can never match the funnel
     rows2 = [(10_000, "view", 0), (20_000, "signup", 1), (30_000, "purchase", 2)]
-    out, consumed = _run_pattern_nfa(1, rows2, funnel, 1, open_end_wm_ms=100)
+    out, consumed = _scan(1, rows2, funnel, open_end_wm_ms=100)
     assert out == [] and consumed == 0  # no match, but scan ran through
 
 
 def test_streaming_nfa_to_next_row_overlapping_matches():
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     # c c c c | (boundary): the whole run is still open -> nothing emits
     rows = [(10_000 * (i + 1), "click", i) for i in range(4)]
     pat = [("click", 2, None)]
-    out, _ = _run_pattern_nfa(
-        1, rows, pat, 0, open_end_wm_ms=100, after_match="to_next_row"
+    out, _ = _scan(
+        1, rows, pat, (0,), open_end_wm_ms=100, after_match="to_next_row"
     )
     assert out == []
     # a closing purchase seals the run: 3 overlapping suffix matches
     rows2 = rows + [(50_000, "purchase", 9)]
-    out, consumed = _run_pattern_nfa(
-        1, rows2, pat, 0, open_end_wm_ms=100, after_match="to_next_row"
+    out, consumed = _scan(
+        1, rows2, pat, (0,), open_end_wm_ms=100, after_match="to_next_row"
     )
     assert out == [
         (1, 10_000, 40_000, 4), (1, 20_000, 40_000, 3), (1, 30_000, 40_000, 2),
@@ -187,8 +224,6 @@ def test_streaming_nfa_skip_to_last_overlapping_matches():
     """SKIP TO LAST e resumes AT the match's final row — that row may
     start the next, overlapping match (``v e{2}`` with a view landing
     exactly two rows after a match start)."""
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     # v x v x x : match 1 = rows 0-2, resume AT row 2 (a view) ->
     # match 2 = rows 2-4; past-last would resume at row 3 and miss it
     rows = [
@@ -196,15 +231,13 @@ def test_streaming_nfa_skip_to_last_overlapping_matches():
         (40_000, "error", 3), (50_000, "signup", 4),
     ]
     pat = [("view", 1, 1), ("*", 2, 2)]
-    out, consumed = _run_pattern_nfa(
-        1, rows, pat, 1, after_match=("to_last", "*")
-    )
+    out, consumed = _scan(1, rows, pat, after_match=("to_last", "*"))
     assert out == [(1, 10_000, 30_000, 2), (1, 30_000, 50_000, 2)]
     assert consumed == 4  # row 4 (the resume row) stays buffered
-    out, _ = _run_pattern_nfa(1, rows, pat, 1, after_match="past_last")
+    out, _ = _scan(1, rows, pat, after_match="past_last")
     assert out == [(1, 10_000, 30_000, 2)]
     # to_first of the wildcard = resume at the row after the view
-    out, _ = _run_pattern_nfa(1, rows, pat, 1, after_match=("to_first", "*"))
+    out, _ = _scan(1, rows, pat, after_match=("to_first", "*"))
     assert out == [(1, 10_000, 30_000, 2), (1, 30_000, 50_000, 2)]
 
 
@@ -212,19 +245,17 @@ def test_streaming_nfa_skip_to_defers_short_tail():
     """On a closed prefix, a view with fewer than two closed
     successors is undecided (its e{2} tail ran out of rows) — nothing
     emits and nothing is consumed past the last decided match."""
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     rows = [(10_000, "view", 0), (20_000, "click", 1)]
     pat = [("view", 1, 1), ("*", 2, 2)]
-    out, consumed = _run_pattern_nfa(
-        1, rows, pat, 1, open_end_wm_ms=100, after_match=("to_last", "*")
+    out, consumed = _scan(
+        1, rows, pat, open_end_wm_ms=100, after_match=("to_last", "*")
     )
     assert out == [] and consumed == 0
     # a full tail completes at the data end: e{2} is at its upper
     # bound, so the match emits even on the last closed row
     rows3 = rows + [(30_000, "error", 2)]
-    out, consumed = _run_pattern_nfa(
-        1, rows3, pat, 1, open_end_wm_ms=100, after_match=("to_last", "*")
+    out, consumed = _scan(
+        1, rows3, pat, open_end_wm_ms=100, after_match=("to_last", "*")
     )
     assert out == [(1, 10_000, 30_000, 2)] and consumed == 2
 
@@ -232,16 +263,12 @@ def test_streaming_nfa_skip_to_defers_short_tail():
 def test_streaming_nfa_skip_to_no_advance_raises():
     """SKIP TO FIRST of the leading variable would never advance the
     scan — the NFA raises, mirroring Flink's runtime guard."""
-    import pytest
-
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     rows = [(10_000, "view", 0), (20_000, "click", 1), (30_000, "click", 2)]
     pat = [("view", 1, 1), ("click", 2, 2)]
     with pytest.raises(ValueError, match="would not advance"):
-        _run_pattern_nfa(1, rows, pat, 1, after_match=("to_first", "view"))
+        _scan(1, rows, pat, after_match=("to_first", "view"))
     with pytest.raises(ValueError, match="not in pattern"):
-        _run_pattern_nfa(1, rows, pat, 1, after_match=("to_last", "nope"))
+        _scan(1, rows, pat, after_match=("to_last", "nope"))
 
 
 def test_within_window_edge_is_exclusive(spark):
@@ -249,9 +276,6 @@ def test_within_window_edge_is_exclusive(spark):
     window — a row landing EXACTLY on the edge is outside. Pinned on
     both the batch matcher and the streaming NFA (round-6 advice:
     the engines previously admitted the boundary row)."""
-    from flink_commons_spark.operators.cep import Step, match_pattern
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     rows = [
         (1, 0, "view", 1_000_000),
         (2, 0, "click", 1_500_000),
@@ -279,10 +303,18 @@ def test_within_window_edge_is_exclusive(spark):
     srows = [(1_000_000, "view", 1), (1_500_000, "click", 2),
              (2_000_000, "purchase", 3)]
     pat = [("view", 1, 1), ("click", 1, None), ("purchase", 1, 1)]
-    out, _ = _run_pattern_nfa(7, srows, pat, 1, within_us=1_000_000)
+    out, _ = _scan(7, srows, pat, within_us=1_000_000)
     assert out == []
-    out, _ = _run_pattern_nfa(7, srows, pat, 1, within_us=1_000_001)
+    out, _ = _scan(7, srows, pat, within_us=1_000_001)
     assert out == [(7, 1_000_000, 2_000_000, 1)]
+
+
+#: Flink's V-shape ``STRT DOWN+ UP+`` with PREV-navigating masks
+_VSHAPE = [("*", 1, 1), ("down", 1, None), ("up", 1, None)]
+_VSHAPE_DEFINES = {
+    "down": lambda p: p["val"] < p["val"].shift(1),
+    "up": lambda p: p["val"] > p["val"].shift(1),
+}
 
 
 def test_streaming_nfa_defines_and_context():
@@ -290,20 +322,10 @@ def test_streaming_nfa_defines_and_context():
     V-shape ``STRT DOWN+ UP+`` with PREV-navigating masks, plus the
     CONTEXT-row rule — rows marked as context feed the shifts but are
     never matched again."""
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     # ts, type, id, price: 10 8 7 9 12 -> one V (strt@0, down 1-2, up 3-4)
     rows = [(1000, "e", 0, 10.0), (2000, "e", 1, 8.0), (3000, "e", 2, 7.0),
             (4000, "e", 3, 9.0), (5000, "e", 4, 12.0)]
-    pat = [("*", 1, 1), ("down", 1, None), ("up", 1, None)]
-    defs = {
-        "down": lambda p: p["val"] < p["val"].shift(1),
-        "up": lambda p: p["val"] > p["val"].shift(1),
-    }
-    emit = lambda k, r, h: (k, r[h[0][0]][0], r[h[2][-1]][0],
-                            len(h[1]), len(h[2]))
-    out, consumed = _run_pattern_nfa(
-        1, rows, pat, defines=defs, emit=emit)
+    out, consumed = _scan(1, rows, _VSHAPE, (1, 2), defines=_VSHAPE_DEFINES)
     assert out == [(1, 1000, 5000, 2, 2)]
     assert consumed == 5
 
@@ -311,8 +333,8 @@ def test_streaming_nfa_defines_and_context():
     # boundary still sees PREV(7)=8 via context, but no match may
     # START on a context row -> the only admissible start is row 2
     # (strt@7), down@3? 9>7 fails -> no match
-    out, consumed = _run_pattern_nfa(
-        1, rows, pat, defines=defs, emit=emit, ctx_n=2)
+    out, consumed = _scan(
+        1, rows, _VSHAPE, (1, 2), defines=_VSHAPE_DEFINES, ctx_n=2)
     assert out == []
     assert consumed == 2
 
@@ -320,30 +342,22 @@ def test_streaming_nfa_defines_and_context():
     # strt@1(8) down@2(7<8 needs PREV across nothing consumed) ...
     # without context row 0, down@1 (8<10) would be invisible; with
     # ctx_n=1 the start must be >= 1, so the V is strt@1 down@2 up@3,4
-    out, _ = _run_pattern_nfa(1, rows, pat, defines=defs, emit=emit,
-                              ctx_n=1)
+    out, _ = _scan(1, rows, _VSHAPE, (1, 2), defines=_VSHAPE_DEFINES,
+                   ctx_n=1)
     assert out == [(1, 2000, 5000, 1, 2)]
 
 
 def test_streaming_nfa_closed_prefix_defers_growing_up_run():
     """A completed V whose greedy trailing up+ ends on the last closed
     row must DEFER (future rows could extend it)."""
-    from flink_commons_spark.streaming.cep_stream import _run_pattern_nfa
-
     rows = [(1000, "e", 0, 10.0), (2000, "e", 1, 8.0), (3000, "e", 2, 9.0)]
-    pat = [("*", 1, 1), ("down", 1, None), ("up", 1, None)]
-    defs = {
-        "down": lambda p: p["val"] < p["val"].shift(1),
-        "up": lambda p: p["val"] > p["val"].shift(1),
-    }
-    emit = lambda k, r, h: (k, r[h[0][0]][0], r[h[2][-1]][0],
-                            len(h[1]), len(h[2]))
     # batch view (no open_end): emits
-    out, _ = _run_pattern_nfa(1, rows, pat, defines=defs, emit=emit)
+    out, _ = _scan(1, rows, _VSHAPE, (1, 2), defines=_VSHAPE_DEFINES)
     assert out == [(1, 1000, 3000, 1, 1)]
     # closed prefix of a live stream: deferred
-    out, consumed = _run_pattern_nfa(
-        1, rows, pat, defines=defs, emit=emit, open_end_wm_ms=999_999)
+    out, consumed = _scan(
+        1, rows, _VSHAPE, (1, 2), defines=_VSHAPE_DEFINES,
+        open_end_wm_ms=999_999)
     assert out == [] and consumed == 0
 
 

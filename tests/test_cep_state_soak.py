@@ -54,19 +54,9 @@ def _split(rng, rows, k):
     return [rows[i::k] for i in range(k)]
 
 
-def _replay(spark, tmp_path, within_us, key_buckets=None):
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
-    rng = random.Random(11)
-    files = (
-        _split(rng, _wave(rng, 0, A_BASE, 0), 3)
-        + _split(rng, _wave(rng, 1000, B_BASE, 100_000), 3)
-        + [[(999_999, SENTINEL_SEC, 9999, "view")]]
-    )
-    schema = "event_id long, sec long, user_id long, event_type string"
-    path = str(tmp_path / "cep_soak_events")
+def _write_files(spark, path, files, schema):
+    """Write each row list as one parquet file, mtimes in list order,
+    so ``maxFilesPerTrigger=1`` replays them one per micro-batch."""
     base = time.time()
     seen = set()
     for i, rows in enumerate(files):
@@ -77,6 +67,55 @@ def _replay(spark, tmp_path, within_us, key_buckets=None):
             if name.endswith(".parquet") and name not in seen:
                 seen.add(name)
                 os.utime(os.path.join(path, name), (base + i, base + i))
+
+
+def _funnel(sdf, within_us=None, key_buckets=None):
+    """The ``view click+ purchase`` funnel on the streaming matcher:
+    one ``(user_id, start_us, end_us, n_clicks)`` row per match."""
+    from flink_commons_spark.operators.cep import Step
+    from flink_commons_spark.streaming.cep_stream import (
+        stream_match_pattern,
+    )
+
+    steps = [
+        Step("view", lambda p: p["event_type"] == "view"),
+        Step("click", lambda p: p["event_type"] == "click", plus=True),
+        Step("purchase", lambda p: p["event_type"] == "purchase"),
+    ]
+
+    def measures(key, segs):
+        return {
+            "user_id": int(key[0]),
+            "start_us": int(segs["view"]["ts_us"].iloc[0]),
+            "end_us": int(segs["purchase"]["ts_us"].iloc[-1]),
+            "n_clicks": int(len(segs["click"])),
+        }
+
+    return stream_match_pattern(
+        sdf,
+        ["user_id"],
+        ["ts_us", "event_id"],
+        steps,
+        measures,
+        "user_id bigint, start_us bigint, end_us bigint, n_clicks bigint",
+        buffer_cols=[("ts_us", "bigint"), ("event_id", "bigint"),
+                     ("event_type", "string")],
+        within_us=within_us,
+        ctx_rows=0,  # no PREV: consumed rows leave the buffer entirely
+        key_buckets=key_buckets,
+    )
+
+
+def _replay(spark, tmp_path, within_us, key_buckets=None):
+    rng = random.Random(11)
+    files = (
+        _split(rng, _wave(rng, 0, A_BASE, 0), 3)
+        + _split(rng, _wave(rng, 1000, B_BASE, 100_000), 3)
+        + [[(999_999, SENTINEL_SEC, 9999, "view")]]
+    )
+    schema = "event_id long, sec long, user_id long, event_type string"
+    path = str(tmp_path / "cep_soak_events")
+    _write_files(spark, path, files, schema)
 
     sdf = (
         spark.readStream.schema(spark.read.parquet(path).schema)
@@ -95,9 +134,7 @@ def _replay(spark, tmp_path, within_us, key_buckets=None):
         emitted.extend(bdf.collect())
 
     q = (
-        stream_match_conversions(
-            sdf, within_us=within_us, key_buckets=key_buckets
-        )
+        _funnel(sdf, within_us=within_us, key_buckets=key_buckets)
         .writeStream.outputMode("append")
         .foreachBatch(sink)
         .trigger(availableNow=True)
@@ -193,10 +230,6 @@ def test_cep_checkpoint_resume_is_exactly_once(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from flink_commons_spark.streaming.cep_stream import (
-        stream_match_conversions,
-    )
-
     src = tmp_path / "cep_src"
     src.mkdir()
     rng = random.Random(23)
@@ -206,19 +239,10 @@ def test_cep_checkpoint_resume_is_exactly_once(spark, tmp_path):
         + [[(999_999, SENTINEL_SEC, 9999, "view")]]
     )
     schema = "event_id long, sec long, user_id long, event_type string"
-    base = time.time()
-    seen = set()
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, schema).repartition(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        for name in os.listdir(str(src)):
-            if name.endswith(".parquet") and name not in seen:
-                seen.add(name)
-                os.utime(os.path.join(str(src), name), (base + i, base + i))
+    _write_files(spark, str(src), files, schema)
 
     def build(sdf):
-        return stream_match_conversions(
+        return _funnel(
             sdf.select(
                 "event_id", "user_id", "event_type",
                 F.timestamp_micros(F.col("sec") * 1_000_000).alias("ts"),
@@ -330,16 +354,7 @@ def test_stream_match_pattern_checkpoint_resume(spark, tmp_path):
         + [[(999_999, SENTINEL_SEC, 9999, 1.0)]]
     )
     schema = "event_id long, sec long, user_id long, price double"
-    base = time.time()
-    seen = set()
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, schema).repartition(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        for name in os.listdir(str(src)):
-            if name.endswith(".parquet") and name not in seen:
-                seen.add(name)
-                os.utime(os.path.join(str(src), name), (base + i, base + i))
+    _write_files(spark, str(src), files, schema)
 
     steps = [
         Step("strt", lambda p: pd.Series(True, index=p.index)),
@@ -538,3 +553,108 @@ def test_stream_budget_exceeded_terminates_query(spark, tmp_path):
     assert "max-steps" in msg and "(A+ B+)+ C" in msg
     assert not q.isActive  # terminated, not stuck retrying
     assert got == []       # nothing was emitted before the failure
+
+
+def _bucketed_funnel_run(spark, tmp_path, files):
+    """Replay ``files`` of ``(event_id, sec, user_id, event_type)``
+    rows through the funnel with every key in ONE state bucket."""
+    path = str(tmp_path / "bucket_keys")
+    _write_files(
+        spark, path, files,
+        "event_id long, sec double, user_id long, event_type string",
+    )
+    sdf = (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+        .select(
+            "event_id", "user_id", "event_type",
+            F.timestamp_micros(
+                (F.col("sec") * 1_000_000).cast("long")
+            ).alias("ts"),
+        )
+        .withWatermark("ts", "0 seconds")
+        .withColumn("ts_us", F.unix_micros("ts"))
+    )
+    got = []
+    q = (
+        _funnel(sdf, key_buckets=1)
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda b, _e: got.extend(b.collect()))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "bucket_keys_ckpt"))
+        .start()
+    )
+    return q, got
+
+
+def test_bucketed_match_keeps_keys_beyond_2_53_apart(spark, tmp_path):
+    """Two bigint keys that collide as float64 (2**53 + 1 and 2**53 + 2
+    both round to 2**53) share one state bucket: each keeps its own
+    buffer across micro-batches and its own match."""
+    k1, k2 = 2**53 + 1, 2**53 + 2
+    files = [
+        # batch 1: both funnels open — buffered together in the bucket
+        [(1, 1.0, k1, "view"), (2, 1.5, k2, "view"),
+         (3, 2.0, k1, "click"), (4, 2.5, k2, "click"),
+         (5, 2.7, k2, "click")],
+        # batch 2: the purchases, then a sentinel closing both keys
+        [(6, 3.0, k1, "purchase"), (7, 3.5, k2, "purchase")],
+        [(8, 100.0, 7, "view")],
+    ]
+    q, got = _bucketed_funnel_run(spark, tmp_path, files)
+    assert q.awaitTermination(180)
+    S = 1_000_000
+    assert sorted(
+        (r.user_id, r.start_us, r.end_us, r.n_clicks) for r in got
+    ) == [
+        (k1, 1 * S, 3 * S, 1),
+        (k2, int(1.5 * S), int(3.5 * S), 2),
+    ]
+
+
+def test_bucketed_match_rejects_buffered_null_key(spark, tmp_path):
+    """A NULL numeric key cannot be packed into bucket state: a
+    micro-batch whose NULL-key rows stay buffered fails the query with
+    the error naming the conf that disables bucketing."""
+    import pytest
+
+    files = [[(1, 1.0, None, "view"), (2, 2.0, 5, "view")]]
+    q, got = _bucketed_funnel_run(spark, tmp_path, files)
+    with pytest.raises(Exception) as ei:
+        q.awaitTermination(180)
+    msg = str(ei.value) + "\n" + str(q.exception() or "")
+    assert "NULL numeric partition key" in msg
+    assert "spark.flinkcommons.stream.match.buckets" in msg
+    assert not q.isActive
+    assert got == []
+
+
+def test_resolve_key_buckets_precedence():
+    """The one bucket-count resolver every bucketed operator uses: an
+    explicit count wins, then the session conf, then 4 x
+    ``spark.sql.shuffle.partitions``, then 64."""
+    from types import SimpleNamespace
+
+    from flink_commons_spark.streaming.cep_stream import (
+        BUCKETS_CONF,
+        resolve_key_buckets,
+    )
+
+    class _Conf(dict):
+        def get(self, key, default=None):
+            if key in self:
+                return self[key]
+            if default is None:  # Spark raises on an unset key
+                raise KeyError(key)
+            return default
+
+    def session(conf):
+        return SimpleNamespace(conf=_Conf(conf))
+
+    parts = {"spark.sql.shuffle.partitions": "8"}
+    assert resolve_key_buckets(session(parts), 0) == 0
+    assert resolve_key_buckets(session(parts), 5) == 5
+    assert resolve_key_buckets(session(parts)) == 32
+    assert resolve_key_buckets(session({**parts, BUCKETS_CONF: "3"})) == 3
+    assert resolve_key_buckets(session({})) == 64

@@ -909,11 +909,36 @@ def test_latest_rules_resolves_version_horizon(spark):
     assert full == {"a": "r2", "b": "r1"}
 
 
-def test_stream_match_conversions_watermark_gated(spark, tmp_path):
+#: the conversion funnel through the streaming SQL front door;
+#: ``{src}`` is the streaming view, ``{within}`` an optional WITHIN
+_FUNNEL_MR_SQL = """
+    SELECT user_id, start_us, end_us, n_clicks
+    FROM {src}
+      MATCH_RECOGNIZE (
+        PARTITION BY user_id
+        ORDER BY ts, event_id
+        MEASURES
+          FIRST(v.ts_us) AS start_us,
+          LAST(p.ts_us) AS end_us,
+          COUNT(c.*) AS n_clicks
+        ONE ROW PER MATCH
+        AFTER MATCH SKIP PAST LAST ROW
+        PATTERN (v c+ p) {within}
+        DEFINE
+          v AS v.event_type = 'view',
+          c AS c.event_type = 'click',
+          p AS p.event_type = 'purchase'
+      )
+"""
+
+
+def test_stream_match_recognize_watermark_gated(spark, tmp_path):
     """Streaming CEP: matches emit only for keys the watermark closed;
     the key holding the stream's final millisecond stays open."""
     from pyspark.sql import functions as F
-    from flink_commons_spark.streaming.cep_stream import stream_match_conversions
+    from flink_commons_spark.plans.match_recognize import (
+        execute_match_recognize,
+    )
 
     rows = [
         # key 1: view click click purchase (closes - key 2 has later ts)
@@ -927,14 +952,17 @@ def test_stream_match_conversions_watermark_gated(spark, tmp_path):
     spark.createDataFrame(
         rows, ["user_id", "ts_us", "event_type", "event_id"]
     ).withColumn("ts", F.expr("timestamp_micros(ts_us)")).repartition(1).write.parquet(src)
-    sdf = (
+    (
         spark.readStream.schema("user_id long, ts_us long, event_type string, event_id long, ts timestamp")
         .parquet(src)
         .withWatermark("ts", "0 seconds")
+        .createOrReplaceTempView("cep_unit_src")
     )
     import tempfile
     q = (
-        stream_match_conversions(sdf)
+        execute_match_recognize(
+            spark, _FUNNEL_MR_SQL.format(src="cep_unit_src", within="")
+        )
         .writeStream.format("memory").queryName("cep_unit")
         .outputMode("append").trigger(availableNow=True)
         .option("checkpointLocation", tempfile.mkdtemp()).start()
@@ -953,7 +981,9 @@ def test_stream_match_within_bounds_and_expires(spark, tmp_path):
     micro-batches still matches when it fits the window (expiry must
     not eat rows a future match can reach)."""
     from pyspark.sql import functions as F
-    from flink_commons_spark.streaming.cep_stream import stream_match_conversions
+    from flink_commons_spark.plans.match_recognize import (
+        execute_match_recognize,
+    )
 
     S = 1_000_000  # 1 second in micros
     file1 = [
@@ -985,16 +1015,19 @@ def test_stream_match_within_bounds_and_expires(spark, tmp_path):
             if name.endswith(".parquet") and name not in seen:
                 seen.add(name)
                 os.utime(os.path.join(src, name), (base + i, base + i))
-    sdf = (
+    (
         spark.readStream.schema(
             "user_id long, ts_us long, event_type string, event_id long, ts timestamp"
         )
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "0 seconds")
+        .createOrReplaceTempView("cep_within_unit_src")
     )
     q = (
-        stream_match_conversions(sdf, within_us=5 * S)
+        execute_match_recognize(spark, _FUNNEL_MR_SQL.format(
+            src="cep_within_unit_src", within="WITHIN INTERVAL '5' SECOND"
+        ))
         .writeStream.format("memory").queryName("cep_within_unit")
         .outputMode("append").trigger(availableNow=True)
         .option("checkpointLocation", tempfile.mkdtemp()).start()
