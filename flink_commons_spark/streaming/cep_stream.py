@@ -24,10 +24,10 @@ MATCH_RECOGNIZE statement to:
   documents).
 
 State per key is its unmatched buffer (bounded by the watermark
-horizon at steady state — emitted/consumed prefixes are dropped);
-by default one state row holds the buffers of every key in a hash
-bucket (:func:`resolve_key_buckets`). The shuffle is the one keyed
-exchange Flink's CEP also does.
+horizon at steady state — emitted/consumed prefixes are dropped); one
+state row holds the buffers of every key in a hash bucket
+(:func:`bucket_column`, :func:`resolve_bucket_count`) — Flink's key
+groups. The shuffle is the one keyed exchange Flink's CEP also does.
 """
 
 from __future__ import annotations
@@ -40,21 +40,36 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 BUCKETS_CONF = "spark.flinkcommons.stream.match.buckets"
 
 
-def resolve_key_buckets(spark, key_buckets: "int | None" = None) -> int:
-    """The keyed-state bucket count: ``key_buckets`` when given, else
-    the :data:`BUCKETS_CONF` session conf, else 4 x
-    ``spark.sql.shuffle.partitions`` (scale-adaptive: a cluster that
-    raises its parallelism raises the bucket count with it), else 64.
-    0 (or less) disables bucketing — one state row per key."""
-    if key_buckets is not None:
-        return int(key_buckets)
+def resolve_bucket_count(spark) -> int:
+    """The keyed-state bucket count: the :data:`BUCKETS_CONF` session
+    conf, else 4 x ``spark.sql.shuffle.partitions`` (scale-adaptive: a
+    cluster that raises its parallelism raises the bucket count with
+    it), else 64. A conf value that is not a positive integer raises —
+    every key lives in some bucket; there is no per-key layout."""
     raw = spark.conf.get(BUCKETS_CONF, "")
     if raw:
-        return int(raw)
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        if n <= 0:
+            raise ValueError(
+                f"{BUCKETS_CONF}={raw!r}: the keyed-state bucket count "
+                "must be a positive integer — set a count >= 1 or unset it"
+            )
+        return n
     try:
         return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         return 64
+
+
+def bucket_column(key_cols: "list[str]", n: int):
+    """The state bucket of each row, ``pmod(xxhash64(keys), n)`` — the
+    grouping key of every bucketed streaming operator."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64(*key_cols), F.lit(n))
 
 
 def _scan_closed_prefix(
@@ -300,33 +315,13 @@ _BUF_TYPES = {
 }
 
 
-def _enc_buf(series, spark_type):
-    """One state value for a buffered column: packed bytes for numeric
-    columns, a plain list for strings. NULLs in an INTEGER buffer are
-    rejected loudly — ``to_numpy('int64')`` would silently cast NaN to
-    INT64_MIN and corrupt every later predicate/measure read (float
-    buffers round-trip NaN faithfully, so they pass through)."""
-    np_dt = _BUF_TYPES[spark_type][1]
-    if np_dt is None:
-        return series.tolist()
-    if (
-        np_dt == "<i8"
-        and series.dtype.kind not in "iu"
-        and series.isna().any()
-    ):
-        raise ValueError(
-            f"NULL in integer buffered column {series.name!r} — streaming "
-            "MATCH_RECOGNIZE buffers integer columns as packed int64 state "
-            "and cannot represent NULL; filter NULL rows out (or cast the "
-            "column to double) in the source view"
-        )
-    return series.to_numpy(np_dt).tobytes()
-
-
 def _enc_arr(arr, spark_type):
-    """Array-level twin of :func:`_enc_buf` for the bucketed fast path
-    (one conversion per COLUMN instead of one per key per column), with
-    the same loud NULL-in-integer guard."""
+    """One state value for a buffered column (a Series, array or list):
+    packed little-endian bytes for numeric columns, a plain list for
+    strings. NULLs in an INTEGER buffer are rejected loudly —
+    ``astype('<i8')`` would silently cast NaN to INT64_MIN and corrupt
+    every later predicate/measure read (float buffers round-trip NaN
+    faithfully, so they pass through)."""
     import numpy as np
     import pandas as pd
 
@@ -335,17 +330,19 @@ def _enc_arr(arr, spark_type):
         return list(arr)
     a = np.asarray(arr)
     if np_dt == "<i8" and a.dtype.kind not in "iu" and pd.isna(a).any():
+        name = getattr(arr, "name", None)
+        col = "" if name is None else f" {name!r}"
         raise ValueError(
-            "NULL in integer buffered column — streaming MATCH_RECOGNIZE "
-            "buffers integer columns as packed int64 state and cannot "
-            "represent NULL; filter NULL rows out (or cast the column to "
-            "double) in the source view"
+            f"NULL in integer buffered column{col} — streaming "
+            "MATCH_RECOGNIZE buffers integer columns as packed int64 state "
+            "and cannot represent NULL; filter NULL rows out (or cast the "
+            "column to double) in the source view"
         )
     return a.astype(np_dt, copy=False).tobytes()
 
 
 def _dec_buf(val, spark_type):
-    """Inverse of :func:`_enc_buf` — numeric blobs decode as ZERO-COPY
+    """Inverse of :func:`_enc_arr` — numeric blobs decode as ZERO-COPY
     (read-only) numpy views; every mutating consumer copies anyway
     (``take``/``concat``)."""
     import numpy as np
@@ -375,7 +372,6 @@ def stream_match_pattern(
     max_steps: "int | None" = None,
     pattern_desc: "str | None" = None,
     strict_budget: bool = False,
-    key_buckets: "int | None" = None,
 ) -> DataFrame:
     """GENERIC watermark-gated streaming MATCH_RECOGNIZE — the
     streaming twin of :func:`operators.cep.match_pattern` with the
@@ -384,30 +380,26 @@ def stream_match_pattern(
     a ``measures(key, segs)`` callable over zero-copy segment views.
     This is what the SQL front door routes streaming sources to.
 
-    ``key_buckets`` (r15) coarsens the STATE KEY the same way the
-    batch executor's ``group_buckets`` coarsens its shuffle key: the
-    stateful operator groups on ``pmod(xxhash64(key), buckets)`` and
-    each state row holds the PACKED MULTI-KEY buffers of every key in
-    the bucket (per-column concatenated blobs + per-key offsets/ctx/
+    State is BUCKETED, like the batch executor's ``group_buckets``
+    shuffle key: the stateful operator groups on
+    :func:`bucket_column` over :func:`resolve_bucket_count` buckets
+    and each state row holds the PACKED MULTI-KEY buffers of every key
+    in the bucket (per-column concatenated blobs + per-key offsets/ctx/
     sort-flag/ordinal arrays), while matching still runs strictly per
-    key inside the closure — semantics are identical (per-key timers
-    become the bucket's min; an early settle of an unaffected key is a
-    no-op by construction because verdicts only depend on the
-    watermark, which is bucket-global). Why: the
-    ``applyInPandasWithState`` transport pays a per-KEY-GROUP Arrow
-    framing + state-store row cost of ~0.9-1.3 s per 100k-row
-    micro-batch at 1.5k keys regardless of Python work (r14 profile) —
-    with buckets the protocol cost tracks bucket count. Default:
-    :func:`resolve_key_buckets`; 0 disables (one state row per key,
-    the pre-r15 layout). Bucket state packs numeric keys as int64/
-    float64, so a NULL numeric key whose rows stay buffered raises
-    (naming the conf that disables bucketing) rather than merging into
-    another key's buffer. Trade documented for 100 TB: a bucket's
-    state is round-tripped whenever ANY of its keys sees data, so
-    idle-key buffers ride along — they are watermark-bounded, and
-    keys-per-bucket stays cardinality/buckets. NOTE: a state-SCHEMA change — checkpoints
-    written by the per-key layout do not restore into the bucketed
-    one (or vice versa).
+    key inside the closure (per-key timers become the bucket's min; an
+    early settle of an unaffected key is a no-op by construction
+    because verdicts only depend on the watermark, which is
+    bucket-global). Why: the ``applyInPandasWithState`` transport pays
+    a per-KEY-GROUP Arrow framing + state-store row cost of ~0.9-1.3 s
+    per 100k-row micro-batch at 1.5k keys regardless of Python work
+    (r14 profile) — with buckets the protocol cost tracks bucket
+    count. Key columns must be of a :data:`_BUF_TYPES` type (anything
+    else raises when the query is built), and a NULL numeric key fails
+    its micro-batch — packed state has no NULL, and any stand-in value
+    could merge it into a real key's buffer. Trade documented for
+    100 TB: a bucket's state is round-tripped whenever ANY of its keys
+    sees data, so idle-key buffers ride along — they are
+    watermark-bounded, and keys-per-bucket stays cardinality/buckets.
 
     FORWARD navigation (``NEXT(expr, k)`` — ``Step.next_depth > 0``)
     is sound via PER-STEP frontiers: a forward-navigating step's last
@@ -465,17 +457,17 @@ def stream_match_pattern(
     assembles into one frame (``operators.cep._assemble_all_rows`` —
     no per-row Python loop). ``match_seq`` is the per-key scan-order
     match ordinal (``MATCH_NUMBER()``), persisted in state across
-    settles by an extra ``nmatch`` state field — appended ONLY in this
-    mode, so existing one-row checkpoints keep their layout. One
-    documented divergence: when a key's buffer fully drains its state
-    (counter included) is dropped, so on a genuinely unbounded stream
-    a key that re-appears after a complete drain restarts MATCH_NUMBER
-    at 1; a bounded replay (availableNow) settles every match before
+    settles by an extra per-key ordinal array (``__mrn``) — appended
+    ONLY in this mode, so existing one-row checkpoints keep their
+    layout. One documented divergence: when a key's buffer fully
+    drains its state (counter included) is dropped, so on a genuinely
+    unbounded stream a key that re-appears after a complete drain
+    restarts MATCH_NUMBER at 1; a bounded replay (availableNow) settles every match before
     the drain, where numbering equals the batch executor's.
     ``durable_match_no=True`` opts out of that divergence: a fully
-    drained key keeps a counter-only tombstone (empty buffers + the
-    ``nmatch`` bigint — same state layout, no timer), so ordinals
-    continue across drains. Because the tombstone sets NO timeout
+    drained key keeps a counter-only tombstone (an empty buffer + its
+    ordinal — same state layout, no timer), so ordinals continue
+    across drains. Because the tombstone sets NO timeout
     timer and ``applyInPandasWithState`` only evicts keys whose own
     timer fires, no idle period — however long — can drop it: the
     ordinal survives arbitrary idleness (pinned by
@@ -517,28 +509,29 @@ def stream_match_pattern(
     step_list = list(steps)
     nbuf = len(buffer_cols)
 
-    key_buckets = resolve_key_buckets(sdf.sparkSession, key_buckets)
+    n_buckets = resolve_bucket_count(sdf.sparkSession)
     types_all = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
     key_types = [types_all.get(c) for c in key_cols]
+    for c, t in zip(key_cols, key_types):
+        if t not in _BUF_TYPES:
+            raise ValueError(
+                f"streaming MATCH_RECOGNIZE cannot key state on column {c!r} "
+                f"of type {t!r} — supported: {sorted(_BUF_TYPES)} (cast the "
+                "key in the source view, e.g. timestamps to epoch micros "
+                "with unix_micros, dates or decimals to string)"
+            )
+    num_keys = [c for c, t in zip(key_cols, key_types) if _BUF_TYPES[t][1]]
     nkf = len(key_types)
-    bucketed = key_buckets > 0 and all(t in _BUF_TYPES for t in key_types)
-    if bucketed:
-        # per-BUCKET multi-key state: the per-column buffers of every
-        # key in the bucket concatenated in key order, the per-key key
-        # values, and the per-key offsets/nctx/sorted-flag (+ ordinal)
-        # arrays — all int64 little-endian packed binary
-        state_schema = ", ".join(
-            [f"{c} {_BUF_TYPES[t][0]}" for c, t in buffer_cols]
-            + [f"__mrk{i} {_BUF_TYPES[t][0]}" for i, t in enumerate(key_types)]
-            + ["__mro binary", "__mrc binary", "__mrs binary"]
-            + (["__mrn binary"] if track_no else [])
-        )
-    else:
-        state_schema = ", ".join(
-            [f"{c} {_BUF_TYPES[t][0]}" for c, t in buffer_cols]
-            + ["nctx int", "presorted int"]
-            + (["nmatch bigint"] if track_no else [])
-        )
+    # per-BUCKET multi-key state: the per-column buffers of every key in
+    # the bucket concatenated in key order, the per-key key values, and
+    # the per-key offsets/nctx/sorted-flag (+ ordinal) arrays — all
+    # int64 little-endian packed binary
+    state_schema = ", ".join(
+        [f"{c} {_BUF_TYPES[t][0]}" for c, t in buffer_cols]
+        + [f"__mrk{i} {_BUF_TYPES[t][0]}" for i, t in enumerate(key_types)]
+        + ["__mro binary", "__mrc binary", "__mrs binary"]
+        + (["__mrn binary"] if track_no else [])
+    )
 
     def _make_settle(wm_ms):
         """Build the PURE per-key settle for one micro-batch's
@@ -548,9 +541,8 @@ def stream_match_pattern(
         ``("tomb", n)`` keeps a durable-MATCH_NUMBER counter tombstone,
         ``("buf", rest_pdf, nctx, sorted_flag, nmatch)`` retains a
         buffer; ``cands`` are the timer-candidate milliseconds (the
-        caller arms ``min(c for c in cands if c > wm)``). Shared
-        verbatim by the per-key and bucketed executors, so their
-        closed-prefix semantics are identical by construction."""
+        caller arms ``min(c for c in cands if c > wm)``). The bucketed
+        executor runs it once per key of the bucket."""
 
         def settle_core(key, pdf_all: "pd.DataFrame", nctx: int,
                         presorted: bool, nmatch: int = 0):
@@ -660,66 +652,10 @@ def stream_match_pattern(
 
         return settle_core
 
-    def fn(key, batches, state):
-        wm_ms = state.getCurrentWatermarkMs()
-        settle_core = _make_settle(wm_ms)
-        if state.hasTimedOut:
-            vals = state.get
-            pdf_all = pd.DataFrame({
-                c: _dec_buf(vals[i], t)
-                for i, (c, t) in enumerate(buffer_cols)
-            })
-            matches, keep, cands = settle_core(
-                key, pdf_all, int(vals[nbuf]), bool(vals[nbuf + 1]),
-                int(vals[nbuf + 2]) if track_no else 0,
-            )
-        else:
-            new = pd.concat(list(batches))[[c for c, _ in buffer_cols]]
-            nctx = 0
-            nmatch = 0
-            if state.exists:
-                vals = state.get
-                prev = pd.DataFrame({
-                    c: _dec_buf(vals[i], t)
-                    for i, (c, t) in enumerate(buffer_cols)
-                })
-                new = pd.concat([prev, new], ignore_index=True)
-                nctx = int(vals[nbuf])
-                if track_no:
-                    nmatch = int(vals[nbuf + 2])
-            matches, keep, cands = settle_core(
-                key, new.reset_index(drop=True), nctx, False, nmatch
-            )
-        tag = keep[0]
-        if tag == "drop":
-            if state.exists:
-                state.remove()
-        elif tag == "tomb":
-            state.update(tuple(
-                [(b"" if _BUF_TYPES[t][1] else []) for _, t in buffer_cols]
-                + [0, 1, keep[1]]
-            ))
-        else:
-            _, rest, nctx2, srt, nm = keep
-            state.update(tuple(
-                [_enc_buf(rest[c], t) for c, t in buffer_cols]
-                + [nctx2, srt]
-                + ([nm] if track_no else [])
-            ))
-            live = [t for t in cands if t > wm_ms]
-            if live:  # Spark rejects timers at/behind the watermark
-                state.setTimeoutTimestamp(min(live))
-        if matches:
-            yield (
-                _assemble_all_rows(matches, out_cols) if all_rows
-                else pd.DataFrame(matches, columns=out_cols)
-            )
-
     def _key_scalar(v):
-        """One grouping-key value as the plain Python scalar Spark's
-        per-key grouping would have handed the closure (numpy scalars
-        unboxed, NaN/NaT folded to None so state and new-data keys
-        unify)."""
+        """One grouping-key value as a plain Python scalar (numpy
+        scalars unboxed, NaN folded to None so a NULL string key from
+        state and from new data unify)."""
         if v is None:
             return None
         try:
@@ -731,24 +667,11 @@ def stream_match_pattern(
 
     def _key_blobs(keys):
         """The bucket's per-key-field state values over ``keys`` (key
-        tuples): packed bytes for numeric fields, lists for strings. A
-        NULL numeric key raises — packing has no NULL, and any stand-in
-        value could merge it into a real key's buffer."""
-        blobs = []
-        for i, kt in enumerate(key_types):
-            np_dt = _BUF_TYPES[kt][1]
-            vals_i = [k[i] for k in keys]
-            if np_dt is None:
-                blobs.append(vals_i)
-                continue
-            if any(v is None for v in vals_i):
-                raise ValueError(
-                    "NULL numeric partition key in bucketed streaming "
-                    "MATCH_RECOGNIZE — filter NULL keys in the source "
-                    f"view or disable bucketing (SET '{BUCKETS_CONF}'='0')"
-                )
-            blobs.append(np.asarray(vals_i, dtype=np_dt).tobytes())
-        return blobs
+        tuples): packed bytes for numeric fields, lists for strings."""
+        return [
+            _enc_arr([k[i] for k in keys], kt)
+            for i, kt in enumerate(key_types)
+        ]
 
     def fn_bucket(_bkey, batches, state):
         wm_ms = state.getCurrentWatermarkMs()
@@ -787,6 +710,16 @@ def stream_match_pattern(
         new_codes = np.empty(0, dtype=np.int64)
         if not state.hasTimedOut:
             new = pd.concat(list(batches))
+            for c in num_keys:
+                # before grouping: a NULL turns an integer key column
+                # into float64, where keys >= 2**53 round together
+                if new[c].isna().any():
+                    raise ValueError(
+                        f"NULL numeric partition key {c!r} in streaming "
+                        "MATCH_RECOGNIZE — bucketed state packs numeric "
+                        "keys and has no NULL; filter NULL keys out or "
+                        "COALESCE the key in the source view"
+                    )
             if len(new):
                 if nkf == 1:
                     codes, uniq = pd.factorize(
@@ -933,11 +866,11 @@ def stream_match_pattern(
                     lst: list = []
                     for e in kept:
                         if e[1] is not None:
-                            lst.extend(_enc_buf(e[1][c], t))
+                            lst.extend(_enc_arr(e[1][c], t))
                     blobs.append(lst)
                 else:
                     blobs.append(b"".join(
-                        _enc_buf(e[1][c], t) for e in kept if e[1] is not None
+                        _enc_arr(e[1][c], t) for e in kept if e[1] is not None
                     ))
             blobs += _key_blobs([e[0] for e in kept])
             lens = [(len(e[1]) if e[1] is not None else 0) for e in kept]
@@ -962,25 +895,14 @@ def stream_match_pattern(
                 else pd.DataFrame(out_all, columns=out_cols)
             )
 
-    if bucketed:
-        from pyspark.sql import functions as F
-
-        bucket = F.pmod(F.xxhash64(*key_cols), F.lit(key_buckets))
-        return (
-            sdf.withColumn("__mr_bucket", bucket)
-            .groupBy("__mr_bucket")
-            .applyInPandasWithState(
-                fn_bucket,
-                output_schema,
-                state_schema,
-                "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
+    return (
+        sdf.withColumn("__mr_bucket", bucket_column(key_cols, n_buckets))
+        .groupBy("__mr_bucket")
+        .applyInPandasWithState(
+            fn_bucket,
+            output_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
         )
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        output_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )

@@ -23,59 +23,21 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_commons_spark.streaming.cep_stream import (
-    BUCKETS_CONF,
-    resolve_key_buckets,
+    _dec_buf,
+    _enc_arr,
+    bucket_column,
+    resolve_bucket_count,
 )
 
 #: output schema of :func:`running_user_stats`
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_epoch bigint"
-#: state tuple layout: (n_events, total_value, last_epoch)
-STATE_SCHEMA = "n bigint, total double, last_epoch bigint"
-#: bucketed twin (r15): one state row per KEY BUCKET — packed per-key
-#: (key, n, total, last) arrays, little-endian int64/float64 blobs
+#: one state row per KEY BUCKET — packed per-key (key, n, total, last)
+#: arrays, little-endian int64/float64 blobs
 STATS_BUCKET_STATE_SCHEMA = (
     "bkeys binary, n binary, total binary, last binary"
 )
-
-
-def _make_update_user_stats(idle_ttl_ms: int = 0):
-    def _update_user_stats(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if idle_ttl_ms and state.hasTimedOut:
-            # the expiry timer is armed at last_epoch + TTL and only
-            # ever fires with no accompanying data: the key has been
-            # idle in EVENT TIME for the whole TTL — reclaim it
-            state.remove()
-            return
-        (n, total, last_epoch) = state.get if state.exists else (0, 0.0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_epoch = max(last_epoch, int(pdf["epoch"].max()))
-        state.update((n, total, last_epoch))
-        if idle_ttl_ms:
-            state.setTimeoutTimestamp(
-                max(
-                    last_epoch * 1000 + idle_ttl_ms,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_epoch": [last_epoch],
-            }
-        )
-
-    return _update_user_stats
-
-
-_update_user_stats = _make_update_user_stats(0)
+#: the idle-TTL layout adds each key's expiry deadline (event-time ms)
+STATS_BUCKET_TTL_STATE_SCHEMA = STATS_BUCKET_STATE_SCHEMA + ", dl binary"
 
 
 #: output schema of :func:`continuous_topn`
@@ -192,142 +154,135 @@ def continuous_topn(
 
 
 def running_user_stats(
-    sdf: DataFrame, idle_ttl_ms: int = 0, delay: str = "0 seconds",
-    key_buckets: "int | None" = None,
+    sdf: DataFrame, idle_ttl_ms: int = 0, delay: str = "0 seconds"
 ) -> DataFrame:
     """Streaming per-user running stats over (user_id, value, epoch).
 
-    Input must have columns ``user_id`` (bigint), ``value`` (double),
-    ``epoch`` (bigint seconds). Emits the updated running aggregate for
-    every key that saw data in the micro-batch (update semantics).
-    State is one 24-byte tuple per key — O(distinct keys), partitioned
-    across the cluster by the grouping key.
+    Input must have columns ``user_id`` (bigint, never NULL), ``value``
+    (double), ``epoch`` (bigint seconds). Emits the updated running
+    aggregate for every key that saw data in the micro-batch (update
+    semantics). State is one row per key BUCKET (the same key groups
+    as the streaming CEP harness, ``cep_stream.bucket_column``) holding
+    the packed per-key (key, n, total, last) arrays — 32 bytes per
+    key, O(distinct keys), partitioned across the cluster by bucket.
+    The per-key-group Arrow framing + state-store row cost dominated
+    this operator's micro-batch when it kept one state row per key
+    (r14 profile: addBatch ~1.3 s at 1.5k keys for ~0 Python work);
+    the update is now one vectorized pandas groupby per bucket.
 
     ``idle_ttl_ms`` (default 0 = retain forever, Flink's default): when
     positive, a watermark is derived from ``epoch`` (late slack
-    ``delay``) and a key whose last event is a full TTL behind it has
-    its state REMOVED — the ``table.exec.state.ttl`` retention analog
-    on the EVENT-TIME clock, so replays reclaim identically. A key
-    reappearing after expiry restarts its running totals from zero
+    ``delay``) and a key whose last event is a full TTL behind it is
+    REMOVED from its bucket — the ``table.exec.state.ttl`` retention
+    analog on the EVENT-TIME clock, so replays reclaim identically. A
+    key reappearing after expiry restarts its running totals from zero
     (the documented Flink staleness trade). This is the retention knob
     a lifetime-distinct keyspace needs at 100 TB: live keys bound
-    state, not every key ever seen.
+    state, not every key ever seen. Each key keeps its own deadline
+    (``max(last_epoch + TTL, watermark + 1)`` when it last saw data)
+    and expires in the first later micro-batch, without data for it,
+    whose watermark is past that deadline; the bucket's one event-time
+    timer sits at its earliest live deadline.
     """
-    src = sdf.select("user_id", "value", "epoch")
-    if not idle_ttl_ms:
-        # bucketed state (r15): same key-coarsening as the streaming
-        # CEP harness (see cep_stream.stream_match_pattern) — the
-        # per-key-group Arrow framing + state-store row cost dominated
-        # this operator's micro-batch (r14 profile: addBatch ~1.3 s at
-        # 1.5k keys for ~0 Python work). One state row per bucket holds
-        # the packed per-key (key, n, total, last) arrays; the update
-        # itself becomes one vectorized pandas groupby per bucket.
-        # Arithmetic is order-identical to the per-key path (per-key
-        # batch sum added to the running total). Conf knob and 0-to-
-        # disable behave as in the CEP harness.
-        key_buckets = resolve_key_buckets(sdf.sparkSession, key_buckets)
-        if key_buckets > 0:
-            def upd_bucket(
-                _bkey: tuple[Any, ...],
-                batches: Iterator[pd.DataFrame],
-                state: GroupState,
-            ) -> Iterator[pd.DataFrame]:
-                new = pd.concat(list(batches))
-                if new["user_id"].isna().any():
-                    raise ValueError(
-                        "NULL user_id in bucketed running_user_stats — "
-                        "filter NULL keys or disable bucketing (SET "
-                        f"'{BUCKETS_CONF}'='0')"
-                    )
-                if state.exists:
-                    bk, bn, bt, bl = state.get
-                    keys = _unpack_i64(bk)
-                    n_arr = _unpack_i64(bn).copy()
-                    t_arr = np.frombuffer(
-                        bt if bt is not None else b"", dtype="<f8"
-                    ).copy()
-                    l_arr = _unpack_i64(bl).copy()
-                else:
-                    keys = np.empty(0, dtype=np.int64)
-                    n_arr = np.empty(0, dtype=np.int64)
-                    t_arr = np.empty(0, dtype=np.float64)
-                    l_arr = np.empty(0, dtype=np.int64)
-                agg = new.groupby("user_id", sort=False).agg(
-                    n=("value", "size"),
-                    total=("value", "sum"),
-                    last=("epoch", "max"),
-                )
-                uk = agg.index.to_numpy("int64")
-                idx = {int(k): i for i, k in enumerate(keys)}
-                pos = np.fromiter(
-                    (idx.get(int(k), -1) for k in uk), dtype=np.int64,
-                    count=len(uk),
-                )
-                newmask = pos < 0
-                n_new = int(newmask.sum())
-                if n_new:
-                    pos = pos.copy()
-                    pos[newmask] = len(keys) + np.arange(n_new)
-                    keys = np.concatenate([keys, uk[newmask]])
-                    n_arr = np.concatenate(
-                        [n_arr, np.zeros(n_new, dtype=np.int64)]
-                    )
-                    t_arr = np.concatenate(
-                        [t_arr, np.zeros(n_new, dtype=np.float64)]
-                    )
-                    l_arr = np.concatenate(
-                        [l_arr, np.zeros(n_new, dtype=np.int64)]
-                    )
-                n_arr[pos] += agg["n"].to_numpy("int64")
-                t_arr[pos] += agg["total"].to_numpy("float64")
-                l_arr[pos] = np.maximum(
-                    l_arr[pos], agg["last"].to_numpy("int64")
-                )
-                state.update((
-                    _pack_i64_arr(keys), _pack_i64_arr(n_arr),
-                    np.asarray(t_arr, dtype="<f8").tobytes(),
-                    _pack_i64_arr(l_arr),
-                ))
-                yield pd.DataFrame({
-                    "user_id": uk,
-                    "n_events": n_arr[pos],
-                    "total_value": t_arr[pos],
-                    "last_epoch": l_arr[pos],
-                })
+    n_buckets = resolve_bucket_count(sdf.sparkSession)
 
-            bucket = F.pmod(
-                F.xxhash64("user_id"), F.lit(key_buckets)
-            )
-            return (
-                src.withColumn("__us_bucket", bucket)
-                .groupBy("__us_bucket")
-                .applyInPandasWithState(
-                    upd_bucket,
-                    outputStructType=OUTPUT_SCHEMA,
-                    stateStructType=STATS_BUCKET_STATE_SCHEMA,
-                    outputMode="update",
-                    timeoutConf=GroupStateTimeout.NoTimeout,
+    def upd_bucket(
+        _bkey: tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        wm_ms = state.getCurrentWatermarkMs() if idle_ttl_ms else 0
+        if state.exists:
+            vals = state.get
+            keys = _dec_buf(vals[0], "bigint")
+            n_arr = _dec_buf(vals[1], "bigint").copy()
+            t_arr = _dec_buf(vals[2], "double").copy()
+            l_arr = _dec_buf(vals[3], "bigint").copy()
+            dl_arr = _dec_buf(
+                vals[4] if idle_ttl_ms else None, "bigint"
+            ).copy()
+        else:
+            keys = n_arr = l_arr = dl_arr = np.empty(0, dtype=np.int64)
+            t_arr = np.empty(0, dtype=np.float64)
+        out = None
+        if not state.hasTimedOut:
+            new = pd.concat(list(batches))
+            if new["user_id"].isna().any():
+                raise ValueError(
+                    "NULL user_id in running_user_stats — bucketed state "
+                    "packs keys as int64 and has no NULL; filter NULL keys "
+                    "out or COALESCE user_id in the source view"
                 )
+            agg = new.groupby("user_id", sort=False).agg(
+                n=("value", "size"),
+                total=("value", "sum"),
+                last=("epoch", "max"),
             )
-        return src.groupBy("user_id").applyInPandasWithState(
-            _update_user_stats,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return (
-        src.withColumn(
+            uk = agg.index.to_numpy("int64")
+            idx = {int(k): i for i, k in enumerate(keys)}
+            pos = np.fromiter(
+                (idx.get(int(k), -1) for k in uk), dtype=np.int64,
+                count=len(uk),
+            )
+            newmask = pos < 0
+            n_new = int(newmask.sum())
+            if n_new:
+                pos[newmask] = len(keys) + np.arange(n_new)
+                zeros = np.zeros(n_new, dtype=np.int64)
+                keys = np.concatenate([keys, uk[newmask]])
+                n_arr = np.concatenate([n_arr, zeros])
+                t_arr = np.concatenate([t_arr, np.zeros(n_new)])
+                l_arr = np.concatenate([l_arr, zeros])
+                dl_arr = np.concatenate([dl_arr, zeros])
+            n_arr[pos] += agg["n"].to_numpy("int64")
+            t_arr[pos] += agg["total"].to_numpy("float64")
+            l_arr[pos] = np.maximum(l_arr[pos], agg["last"].to_numpy("int64"))
+            out = pd.DataFrame({
+                "user_id": uk,
+                "n_events": n_arr[pos],
+                "total_value": t_arr[pos],
+                "last_epoch": l_arr[pos],
+            })
+            if idle_ttl_ms:
+                dl_arr[pos] = np.maximum(
+                    l_arr[pos] * 1000 + idle_ttl_ms, wm_ms + 1
+                )
+        cols = [(keys, "bigint"), (n_arr, "bigint"), (t_arr, "double"),
+                (l_arr, "bigint")]
+        if idle_ttl_ms:
+            # a key without data here whose deadline the watermark has
+            # passed expires — Spark's own rule for a per-key timer
+            # (keys with data just moved their deadline past it)
+            live = dl_arr >= wm_ms
+            cols = [(a[live], t) for a, t in cols + [(dl_arr, "bigint")]]
+        if len(cols[0][0]):
+            state.update(tuple(_enc_arr(a, t) for a, t in cols))
+            if idle_ttl_ms:
+                state.setTimeoutTimestamp(int(cols[-1][0].min()))
+        elif state.exists:
+            state.remove()
+        if out is not None:
+            yield out
+
+    src = sdf.select("user_id", "value", "epoch")
+    timeout = GroupStateTimeout.NoTimeout
+    if idle_ttl_ms:
+        src = src.withColumn(
             "_evt_ts", F.timestamp_seconds(F.col("epoch").cast("long"))
-        )
-        .withWatermark("_evt_ts", delay)
-        .groupBy("user_id")
+        ).withWatermark("_evt_ts", delay)
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return (
+        src.withColumn("__us_bucket", bucket_column(["user_id"], n_buckets))
+        .groupBy("__us_bucket")
         .applyInPandasWithState(
-            _make_update_user_stats(idle_ttl_ms),
+            upd_bucket,
             outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
+            stateStructType=(
+                STATS_BUCKET_TTL_STATE_SCHEMA if idle_ttl_ms
+                else STATS_BUCKET_STATE_SCHEMA
+            ),
             outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            timeoutConf=timeout,
         )
     )
 
@@ -352,20 +307,6 @@ OVER_STATE_SCHEMA = (
     "n bigint, cents bigint, last_ms bigint, buf_eid binary, "
     "buf_ord binary, buf_cents binary"
 )
-
-
-def _unpack_i64(val) -> np.ndarray:
-    """Zero-copy (read-only) int64 view of a packed state blob.
-
-    Explicit little-endian ('<i8') on both pack and unpack — the
-    platform-native default would silently corrupt packed buffers on a
-    different-endian resume host (ADVICE r14)."""
-    return np.frombuffer(val if val is not None else b"", dtype="<i8")
-
-
-def _pack_i64_arr(arr) -> bytes:
-    """Little-endian packed bytes of an int64 array (see _unpack_i64)."""
-    return np.asarray(arr, dtype="<i8").tobytes()
 
 
 #: output schema of :func:`running_over_range`
@@ -415,14 +356,14 @@ def running_over_range(
             # and extends it incrementally, and it is bounded by the
             # range horizon (not the batch) — the packed blobs carry
             # the bulk buffer
-            h_ord = _unpack_i64(r_ho).tolist()
-            h_cents = _unpack_i64(r_hc).tolist()
-            b_eid = _unpack_i64(r_be)
-            b_ord = _unpack_i64(r_bo)
-            b_cents = _unpack_i64(r_bc)
+            h_ord = _dec_buf(r_ho, "bigint").tolist()
+            h_cents = _dec_buf(r_hc, "bigint").tolist()
+            b_eid = _dec_buf(r_be, "bigint")
+            b_ord = _dec_buf(r_bo, "bigint")
+            b_cents = _dec_buf(r_bc, "bigint")
         else:
             h_ord, h_cents = [], []
-            b_eid = b_ord = b_cents = _unpack_i64(None)
+            b_eid = b_ord = b_cents = _dec_buf(None, "bigint")
         if not state.hasTimedOut:
             chunks = list(batches)
             if chunks:
@@ -494,10 +435,10 @@ def running_over_range(
             state.remove()
         else:
             state.update((
-                _pack_i64_arr(h_ord),
-                _pack_i64_arr(h_cents),
-                _pack_i64_arr(b_eid), _pack_i64_arr(b_ord),
-                _pack_i64_arr(b_cents),
+                _enc_arr(h_ord, "bigint"),
+                _enc_arr(h_cents, "bigint"),
+                _enc_arr(b_eid, "bigint"), _enc_arr(b_ord, "bigint"),
+                _enc_arr(b_cents, "bigint"),
             ))
             if len(b_ord):
                 state.setTimeoutTimestamp(
@@ -575,12 +516,12 @@ def running_over_rows(
         wm_ms = state.getCurrentWatermarkMs()
         if state.exists:
             n, cents, last_ms, r_eid, r_ord, r_cents = state.get
-            b_eid = _unpack_i64(r_eid)
-            b_ord = _unpack_i64(r_ord)
-            b_cents = _unpack_i64(r_cents)
+            b_eid = _dec_buf(r_eid, "bigint")
+            b_ord = _dec_buf(r_ord, "bigint")
+            b_cents = _dec_buf(r_cents, "bigint")
         else:
             n, cents, last_ms = 0, 0, -1
-            b_eid = b_ord = b_cents = _unpack_i64(None)
+            b_eid = b_ord = b_cents = _dec_buf(None, "bigint")
         # a timeout that fires with an EMPTY buffer can only be the
         # idle-TTL expiry timer (drain timers are armed only while rows
         # are buffered; draining re-arms the expiry timer in its place)
@@ -641,15 +582,15 @@ def running_over_rows(
                 return
             state.update((
                 n, cents, last_ms,
-                _pack_i64_arr(b_eid), _pack_i64_arr(b_ord),
-                _pack_i64_arr(b_cents),
+                _enc_arr(b_eid, "bigint"), _enc_arr(b_ord, "bigint"),
+                _enc_arr(b_cents, "bigint"),
             ))
             state.setTimeoutTimestamp(expiry)
             return
         state.update((
             n, cents, last_ms,
-            _pack_i64_arr(b_eid), _pack_i64_arr(b_ord),
-            _pack_i64_arr(b_cents),
+            _enc_arr(b_eid, "bigint"), _enc_arr(b_ord, "bigint"),
+            _enc_arr(b_cents, "bigint"),
         ))
         if len(b_ord):
             state.setTimeoutTimestamp(max(int(b_ord.min()) // 1000, wm_ms + 1))

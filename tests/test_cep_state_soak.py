@@ -3,7 +3,8 @@ OVER-pair soak: a slow watermark with many keys and permanently
 undecided pattern tails must leave per-key NFA buffers bounded by the
 WITHIN horizon, and keys whose windows have wholly closed must leave
 the state store entirely. Measured through the progress listener's
-``stateOperators.numRowsTotal`` (one state row per buffered key).
+``stateOperators.numRowsTotal`` (one state row per occupied key
+bucket).
 
 Scenario: two ACTIVITY WAVES of 25 keys each, hours apart in event
 time. Every key runs one complete funnel (view click click purchase);
@@ -69,7 +70,7 @@ def _write_files(spark, path, files, schema):
                 os.utime(os.path.join(path, name), (base + i, base + i))
 
 
-def _funnel(sdf, within_us=None, key_buckets=None):
+def _funnel(sdf, within_us=None):
     """The ``view click+ purchase`` funnel on the streaming matcher:
     one ``(user_id, start_us, end_us, n_clicks)`` row per match."""
     from flink_commons_spark.operators.cep import Step
@@ -85,7 +86,7 @@ def _funnel(sdf, within_us=None, key_buckets=None):
 
     def measures(key, segs):
         return {
-            "user_id": int(key[0]),
+            "user_id": None if key[0] is None else int(key[0]),
             "start_us": int(segs["view"]["ts_us"].iloc[0]),
             "end_us": int(segs["purchase"]["ts_us"].iloc[-1]),
             "n_clicks": int(len(segs["click"])),
@@ -102,11 +103,10 @@ def _funnel(sdf, within_us=None, key_buckets=None):
                      ("event_type", "string")],
         within_us=within_us,
         ctx_rows=0,  # no PREV: consumed rows leave the buffer entirely
-        key_buckets=key_buckets,
     )
 
 
-def _replay(spark, tmp_path, within_us, key_buckets=None):
+def _replay(spark, tmp_path, within_us):
     rng = random.Random(11)
     files = (
         _split(rng, _wave(rng, 0, A_BASE, 0), 3)
@@ -134,7 +134,7 @@ def _replay(spark, tmp_path, within_us, key_buckets=None):
         emitted.extend(bdf.collect())
 
     q = (
-        _funnel(sdf, within_us=within_us, key_buckets=key_buckets)
+        _funnel(sdf, within_us=within_us)
         .writeStream.outputMode("append")
         .foreachBatch(sink)
         .trigger(availableNow=True)
@@ -185,37 +185,24 @@ def test_cep_within_state_tracks_horizon_not_lifetime_keys(spark, tmp_path):
           f"final={_state_rows(progresses[-1])}, lifetime keys=51")
 
 
-def test_cep_unbounded_retains_undecided_tails(spark, tmp_path):
+def test_cep_unbounded_retains_undecided_tails(
+    spark, tmp_path, state_buckets, occupied_buckets
+):
     """Without WITHIN the dangling ``view click`` tails are forever
     undecided — a future purchase could still complete them — so their
     keys legitimately stay in state. This pins the contrast the WITHIN
-    soak relies on: 24 dangling keys + the sentinel remain terminal.
-    ``key_buckets=0`` forces the per-key state layout so the exact
-    state-row == key count identity is pinned (the default bucketed
-    layout holds several keys per state row — its retention invariant
-    is pinned by the bucketed twin below)."""
-    emitted, progresses = _replay(spark, tmp_path, None, key_buckets=0)
+    soak relies on: the 24 dangling keys + the sentinel remain, so the
+    terminal state rows are exactly the buckets those 25 keys occupy
+    (bucket count ≫ keys, so a dropped key shows)."""
+    n = 5000
+    state_buckets(n)
+    emitted, progresses = _replay(spark, tmp_path, None)
     assert len(emitted) == 2 * WAVE_KEYS
-    dangling = 2 * (WAVE_KEYS // 2)  # odd keys per wave
-    assert _state_rows(progresses[-1]) == dangling + 1
-
-
-def test_cep_unbounded_retains_undecided_tails_bucketed(spark, tmp_path):
-    """The bucketed-state twin of the exact-retention test: the SAME
-    matches must emit, and the dangling tails must still be retained —
-    terminal state rows are occupied BUCKETS, so between 1 and
-    dangling+1 rows remain (every retained key lives in some bucket;
-    nothing retained would read 0). Forcing more buckets than keys
-    recovers the per-key identity exactly."""
-    emitted, progresses = _replay(spark, tmp_path, None, key_buckets=5000)
-    assert len(emitted) == 2 * WAVE_KEYS
-    dangling = 2 * (WAVE_KEYS // 2)
-    # 5000 buckets >> 51 lifetime keys: collisions are possible but the
-    # retained-key count can only be preserved or concentrated, never
-    # grown — and with this spread the count matches per-key exactly
-    # unless two retained keys collide, so allow a small collision slack
-    rows = _state_rows(progresses[-1])
-    assert dangling + 1 - 3 <= rows <= dangling + 1
+    retained = [
+        base + k for base in (0, 1000) for k in range(WAVE_KEYS) if k % 2
+    ] + [9999]
+    assert len(retained) == 2 * (WAVE_KEYS // 2) + 1
+    assert _state_rows(progresses[-1]) == occupied_buckets(retained, n)
 
 
 def test_cep_checkpoint_resume_is_exactly_once(spark, tmp_path):
@@ -459,7 +446,7 @@ def test_stream_match_pattern_checkpoint_resume(spark, tmp_path):
     assert all(r.n_down == 2 and r.n_up == 2 for r in ref)
 
 
-def test_enc_buf_rejects_null_in_integer_buffer():
+def test_enc_arr_rejects_null_in_integer_buffer():
     """Packed int64 state cannot represent NULL: a nullable integer
     buffer column (arriving from Arrow as float64-with-NaN) must raise
     loudly instead of silently packing NaN as INT64_MIN."""
@@ -467,19 +454,21 @@ def test_enc_buf_rejects_null_in_integer_buffer():
     import pandas as pd
     import pytest
 
-    from flink_commons_spark.streaming.cep_stream import _dec_buf, _enc_buf
+    from flink_commons_spark.streaming.cep_stream import _dec_buf, _enc_arr
 
     ok = pd.Series([1, 2, 3], name="ts")
-    assert np.frombuffer(_enc_buf(ok, "bigint"), dtype=np.int64).tolist() \
+    assert np.frombuffer(_enc_arr(ok, "bigint"), dtype=np.int64).tolist() \
         == [1, 2, 3]
-    with pytest.raises(ValueError, match="NULL in integer buffered"):
-        _enc_buf(pd.Series([1.0, np.nan], name="cents"), "bigint")
+    with pytest.raises(
+        ValueError, match="NULL in integer buffered column 'cents'"
+    ):
+        _enc_arr(pd.Series([1.0, np.nan], name="cents"), "bigint")
     # float buffers round-trip NaN faithfully
-    f = _dec_buf(_enc_buf(pd.Series([1.0, np.nan], name="v"), "double"),
+    f = _dec_buf(_enc_arr(pd.Series([1.0, np.nan], name="v"), "double"),
                  "double")
     assert f[0] == 1.0 and np.isnan(f[1])
     # strings round-trip as lists, missing preserved as NA/None
-    s = _dec_buf(_enc_buf(pd.Series(["a", None], name="et"), "string"),
+    s = _dec_buf(_enc_arr(pd.Series(["a", None], name="et"), "string"),
                  "string")
     assert s[0] == "a" and pd.isna(s[1])
 
@@ -555,9 +544,10 @@ def test_stream_budget_exceeded_terminates_query(spark, tmp_path):
     assert got == []       # nothing was emitted before the failure
 
 
-def _bucketed_funnel_run(spark, tmp_path, files):
+def _bucketed_funnel_run(spark, tmp_path, files, state_buckets):
     """Replay ``files`` of ``(event_id, sec, user_id, event_type)``
     rows through the funnel with every key in ONE state bucket."""
+    state_buckets(1)
     path = str(tmp_path / "bucket_keys")
     _write_files(
         spark, path, files,
@@ -578,7 +568,7 @@ def _bucketed_funnel_run(spark, tmp_path, files):
     )
     got = []
     q = (
-        _funnel(sdf, key_buckets=1)
+        _funnel(sdf)
         .writeStream.outputMode("append")
         .foreachBatch(lambda b, _e: got.extend(b.collect()))
         .trigger(availableNow=True)
@@ -588,7 +578,9 @@ def _bucketed_funnel_run(spark, tmp_path, files):
     return q, got
 
 
-def test_bucketed_match_keeps_keys_beyond_2_53_apart(spark, tmp_path):
+def test_bucketed_match_keeps_keys_beyond_2_53_apart(
+    spark, tmp_path, state_buckets
+):
     """Two bigint keys that collide as float64 (2**53 + 1 and 2**53 + 2
     both round to 2**53) share one state bucket: each keeps its own
     buffer across micro-batches and its own match."""
@@ -602,7 +594,7 @@ def test_bucketed_match_keeps_keys_beyond_2_53_apart(spark, tmp_path):
         [(6, 3.0, k1, "purchase"), (7, 3.5, k2, "purchase")],
         [(8, 100.0, 7, "view")],
     ]
-    q, got = _bucketed_funnel_run(spark, tmp_path, files)
+    q, got = _bucketed_funnel_run(spark, tmp_path, files, state_buckets)
     assert q.awaitTermination(180)
     S = 1_000_000
     assert sorted(
@@ -613,32 +605,89 @@ def test_bucketed_match_keeps_keys_beyond_2_53_apart(spark, tmp_path):
     ]
 
 
-def test_bucketed_match_rejects_buffered_null_key(spark, tmp_path):
-    """A NULL numeric key cannot be packed into bucket state: a
-    micro-batch whose NULL-key rows stay buffered fails the query with
-    the error naming the conf that disables bucketing."""
+def _assert_null_key_failure(q, got):
     import pytest
 
-    files = [[(1, 1.0, None, "view"), (2, 2.0, 5, "view")]]
-    q, got = _bucketed_funnel_run(spark, tmp_path, files)
     with pytest.raises(Exception) as ei:
         q.awaitTermination(180)
     msg = str(ei.value) + "\n" + str(q.exception() or "")
     assert "NULL numeric partition key" in msg
-    assert "spark.flinkcommons.stream.match.buckets" in msg
+    assert "COALESCE the key in the source view" in msg
     assert not q.isActive
     assert got == []
 
 
-def test_resolve_key_buckets_precedence():
-    """The one bucket-count resolver every bucketed operator uses: an
-    explicit count wins, then the session conf, then 4 x
-    ``spark.sql.shuffle.partitions``, then 64."""
+def test_bucketed_match_rejects_buffered_null_key(
+    spark, tmp_path, state_buckets
+):
+    """A NULL numeric key cannot be packed into bucket state: a
+    micro-batch whose NULL-key rows stay buffered fails the query with
+    the error naming the fix (filter or COALESCE the key)."""
+    files = [[(1, 1.0, None, "view"), (2, 2.0, 5, "view")]]
+    q, got = _bucketed_funnel_run(spark, tmp_path, files, state_buckets)
+    _assert_null_key_failure(q, got)
+
+
+def test_bucketed_match_rejects_consumed_null_key_beside_2_53_keys(
+    spark, tmp_path, state_buckets
+):
+    """A NULL in a bigint key column turns the column float64, where
+    2**53 + 1 and 2**53 + 2 round to one value. The NULL key's rows
+    here close and match in the same settle that reads them (the
+    first batch moved the watermark past them), so nothing NULL is
+    ever buffered: the query must still fail on the NULL key, before
+    grouping, instead of settling the two big keys as one."""
+    k1, k2 = 2**53 + 1, 2**53 + 2
+    files = [
+        # batch 1: moves the watermark to 100 s
+        [(1, 100.0, 7, "view")],
+        # batch 2: three complete funnels, all behind the watermark
+        [(2, 1.0, k1, "view"), (3, 1.5, k2, "view"),
+         (4, 2.0, k1, "click"), (5, 2.5, k2, "click"),
+         (6, 3.0, k1, "purchase"), (7, 3.5, k2, "purchase"),
+         (8, 1.2, None, "view"), (9, 2.2, None, "click"),
+         (10, 3.2, None, "purchase")],
+    ]
+    q, got = _bucketed_funnel_run(spark, tmp_path, files, state_buckets)
+    _assert_null_key_failure(q, got)
+
+
+def test_stream_match_rejects_unpackable_key_type(spark, tmp_path):
+    """Every key lives in a packed bucket, so a key type the bucket
+    layout cannot pack (here a timestamp) is rejected when the query
+    is built, naming the cast — there is no per-key fallback."""
+    import pytest
+
+    from flink_commons_spark.operators.cep import Step
+    from flink_commons_spark.streaming.cep_stream import (
+        stream_match_pattern,
+    )
+
+    sdf = spark.readStream.schema("sec long").parquet(str(tmp_path)).select(
+        F.timestamp_seconds("sec").alias("ts"),
+        (F.col("sec") * 1_000_000).alias("ts_us"),
+    )
+    with pytest.raises(ValueError, match="cannot key state on column 'ts'"):
+        stream_match_pattern(
+            sdf, ["ts"], ["ts_us"],
+            [Step("a", lambda p: p["ts_us"] > 0)],
+            lambda key, segs: {}, "ts_us bigint",
+            buffer_cols=[("ts_us", "bigint")],
+        )
+
+
+def test_resolve_bucket_count_precedence():
+    """The one bucket-count resolver every bucketed operator uses: the
+    session conf wins, then 4 x ``spark.sql.shuffle.partitions``, then
+    64; a conf value that is not a positive integer raises, naming the
+    conf."""
     from types import SimpleNamespace
+
+    import pytest
 
     from flink_commons_spark.streaming.cep_stream import (
         BUCKETS_CONF,
-        resolve_key_buckets,
+        resolve_bucket_count,
     )
 
     class _Conf(dict):
@@ -653,8 +702,9 @@ def test_resolve_key_buckets_precedence():
         return SimpleNamespace(conf=_Conf(conf))
 
     parts = {"spark.sql.shuffle.partitions": "8"}
-    assert resolve_key_buckets(session(parts), 0) == 0
-    assert resolve_key_buckets(session(parts), 5) == 5
-    assert resolve_key_buckets(session(parts)) == 32
-    assert resolve_key_buckets(session({**parts, BUCKETS_CONF: "3"})) == 3
-    assert resolve_key_buckets(session({})) == 64
+    assert resolve_bucket_count(session({**parts, BUCKETS_CONF: "3"})) == 3
+    assert resolve_bucket_count(session(parts)) == 32
+    assert resolve_bucket_count(session({})) == 64
+    for bad in ("0", "-2", "many"):
+        with pytest.raises(ValueError, match=BUCKETS_CONF.replace(".", r"\.")):
+            resolve_bucket_count(session({**parts, BUCKETS_CONF: bad}))

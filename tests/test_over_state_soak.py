@@ -49,16 +49,23 @@ def _split(rng, rows, k):
     return [rows[i::k] for i in range(k)]
 
 
-def _replay(spark, tmp_path, build_stream, output_mode="append"):
-    """Replay wave A files, wave B files, sentinel — one file per
-    trigger — through ``build_stream(sdf)``; return (rows_emitted,
-    progresses)."""
+def _files():
+    """Wave A files, wave B files, sentinel — one file per trigger —
+    as ``(event_id, sec, user_id, cents)`` row lists."""
     rng = random.Random(7)
-    files = (
+    return (
         _split(rng, _wave(rng, 0, A_LO, A_HI, 0), 3)
         + _split(rng, _wave(rng, 1000, B_LO, B_HI, 100_000), 3)
         + [[(999_999, SENTINEL_SEC, 9999, 1)]]
     )
+
+
+def _replay(spark, tmp_path, build_stream, output_mode="append",
+            batches=None):
+    """Replay :func:`_files` through ``build_stream(sdf)``; return
+    (rows_emitted, progresses). A ``batches`` dict also receives each
+    non-empty micro-batch's rows under its batch id."""
+    files = _files()
     schema = "event_id long, sec long, user_id long, cents long"
     path = str(tmp_path / "soak_events")
     base = time.time()
@@ -83,8 +90,11 @@ def _replay(spark, tmp_path, build_stream, output_mode="append"):
     )
     emitted = []
 
-    def sink(bdf, _epoch):
-        emitted.extend(bdf.collect())
+    def sink(bdf, epoch):
+        rows = bdf.collect()
+        emitted.extend(rows)
+        if batches is not None and rows:
+            batches[epoch] = rows
 
     q = (
         build_stream(sdf)
@@ -271,13 +281,19 @@ def test_user_stats_idle_ttl_reclaims_idle_keys(spark, tmp_path):
     _assert_bounded(progresses, final_bound=1, midstream_bound=WAVE_KEYS + 1)
 
 
-def test_user_stats_default_retains_lifetime_keys(spark, tmp_path):
-    # key_buckets=0 forces the per-key state layout so the exact
-    # state-row == lifetime-key identity is pinned; the default
-    # bucketed layout packs several keys per state row (its retention
-    # invariant is pinned by the bucketed twin below)
+def test_user_stats_default_retains_lifetime_keys(
+    spark, tmp_path, state_buckets, occupied_buckets
+):
+    """Without a TTL running_user_stats retains every lifetime key: the
+    terminal state rows are exactly the buckets the 51 lifetime keys
+    occupy (bucket count ≫ keys, so a dropped key shows), and every
+    micro-batch emits exactly the running totals a plain replay of its
+    files gives."""
     from flink_commons_spark.streaming.stateful import running_user_stats
 
+    n = 5000
+    state_buckets(n)
+    got: dict = {}
     _, progresses = _replay(
         spark, tmp_path,
         lambda sdf: running_user_stats(
@@ -286,41 +302,22 @@ def test_user_stats_default_retains_lifetime_keys(spark, tmp_path):
                 F.col("cents").cast("double").alias("value"),
                 (F.col("ord_us") / 1_000_000).cast("long").alias("epoch"),
             ),
-            key_buckets=0,
         ),
         output_mode="update",
+        batches=got,
     )
-    assert _state_rows(progresses[-1]) == 2 * WAVE_KEYS + 1
-
-
-def test_user_stats_bucketed_retains_lifetime_keys(spark, tmp_path):
-    """Bucketed-state twin (r15): the no-TTL default still retains
-    every lifetime key — with buckets spread far wider than the key
-    count the terminal row count matches per-key up to hash-collision
-    slack, and the emitted update rows are identical either way."""
-    from flink_commons_spark.streaming.stateful import running_user_stats
-
-    def q(sdf, kb):
-        return running_user_stats(
-            sdf.select(
-                "user_id",
-                F.col("cents").cast("double").alias("value"),
-                (F.col("ord_us") / 1_000_000).cast("long").alias("epoch"),
-            ),
-            key_buckets=kb,
-        )
-
-    emitted_b, progresses = _replay(
-        spark, tmp_path, lambda sdf: q(sdf, 5000), output_mode="update"
-    )
-    rows = _state_rows(progresses[-1])
-    assert 2 * WAVE_KEYS + 1 - 3 <= rows <= 2 * WAVE_KEYS + 1
-    emitted_k, _ = _replay(
-        spark, tmp_path / "perkey", lambda sdf: q(sdf, 0),
-        output_mode="update",
-    )
-    canon = lambda rs: sorted(map(tuple, rs))  # noqa: E731
-    assert canon(emitted_b) == canon(emitted_k)
+    running: dict = {}
+    want: dict = {}
+    for batch_id, rows in enumerate(_files()):
+        touched = set()
+        for _eid, sec, uid, cents in rows:
+            cnt, total, last = running.get(uid, (0, 0.0, 0))
+            running[uid] = (cnt + 1, total + cents, max(last, sec))
+            touched.add(uid)
+        want[batch_id] = sorted((u, *running[u]) for u in touched)
+    assert {b: sorted(map(tuple, rs)) for b, rs in got.items()} == want
+    assert len(running) == 2 * WAVE_KEYS + 1
+    assert _state_rows(progresses[-1]) == occupied_buckets(running, n)
 
 
 def test_topn_idle_ttl_reclaims_idle_groups(spark, tmp_path):

@@ -672,6 +672,115 @@ def test_midstream_kill_and_resume_exactly_once(spark, tmp_path):
     assert final == {0: 24, 1: 18, 2: 18}
 
 
+def test_user_stats_idle_ttl_kill_and_resume_exactly_once(
+    spark, tmp_path, state_buckets
+):
+    """Kill/resume soak for the idle-TTL bucket layout (per-key
+    deadlines + one event-time timer per bucket): 6 keys in 3 buckets,
+    each key idle for two files in every four, so its TTL fires and it
+    restarts from zero mid-stream. A hard stop after >= 2 committed
+    batches, then a resume from the same checkpoint, must leave the
+    upsert sink equal to an uninterrupted run — changelog and final
+    state."""
+    import time
+
+    from flink_commons_spark.streaming.stateful import running_user_stats
+    from flink_commons_spark.streaming.upsert import (
+        BATCH_COL,
+        KeyedParquetUpsertSink,
+    )
+
+    state_buckets(3)
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = "user_id long, value double, epoch long"
+    n_files = 8
+    for f in range(n_files):
+        spark.createDataFrame(
+            [
+                (k, 1.0 + k + j, 100 * (f + 1) + k + j)
+                for k in range(6) if (f + k) % 4 in (0, 1)
+                for j in range(2)
+            ],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(str(src))
+
+    def start(ckpt, sink, trigger_kwargs):
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        return (
+            running_user_stats(sdf, idle_ttl_ms=60_000)
+            .writeStream.outputMode("update")
+            .foreachBatch(sink.writer())
+            .trigger(**trigger_kwargs)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    def changelog(sink):
+        rows = spark.read.parquet(sink.path).drop(BATCH_COL).collect()
+        return sorted(set(map(tuple, rows)))
+
+    def final(sink):
+        return sorted(map(tuple, sink.read_final(spark).collect()))
+
+    ref = KeyedParquetUpsertSink(str(tmp_path / "ref"), ["user_id"])
+    q = start(str(tmp_path / "ref_ckpt"), ref, {"availableNow": True})
+    assert q.awaitTermination(180)
+    # 3 keys x 2 rows per file; each key sees 8 rows over its lifetime
+    # but idles out and restarts its running count mid-stream
+    assert len(changelog(ref)) == 3 * n_files
+    assert all(r[1] < 8 for r in final(ref))
+
+    sink = KeyedParquetUpsertSink(str(tmp_path / "sink"), ["user_id"])
+    ckpt = str(tmp_path / "ckpt")
+    q = start(ckpt, sink, {"processingTime": "0 seconds"})
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        done = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        if len(done) >= 2:
+            break
+        time.sleep(0.2)
+    assert q.isActive, "query died before the kill point"
+    q.stop()  # hard stop — no drain
+    assert 0 < len(changelog(sink)) < 3 * n_files, "kill must land mid-stream"
+
+    q2 = start(ckpt, sink, {"availableNow": True})
+    assert q2.awaitTermination(180)
+    assert changelog(sink) == changelog(ref)
+    assert final(sink) == final(ref)
+
+
+def test_user_stats_rejects_null_key(spark, tmp_path):
+    """A NULL user_id cannot be packed into bucket state (and would turn
+    the key column float64, where 2**53 + 1 and 2**53 + 2 round to one
+    value): the micro-batch fails, naming the fix."""
+    from flink_commons_spark.streaming.stateful import running_user_stats
+
+    src = str(tmp_path / "src")
+    schema = "user_id long, value double, epoch long"
+    spark.createDataFrame(
+        [(2**53 + 1, 1.0, 10), (2**53 + 2, 2.0, 11), (None, 3.0, 12)],
+        schema,
+    ).coalesce(1).write.parquet(src)
+    q = (
+        running_user_stats(spark.readStream.schema(schema).parquet(src))
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda b, _e: b.collect())
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    with pytest.raises(Exception) as ei:
+        q.awaitTermination(180)
+    msg = str(ei.value) + "\n" + str(q.exception() or "")
+    assert "NULL user_id" in msg and "COALESCE user_id" in msg
+    assert not q.isActive
+
+
 def test_continuous_topn_tracks_rank_across_batches(spark, tmp_path):
     """Continuous Top-N: tallies accumulate in keyed state across
     micro-batches; each batch re-emits the current top-n per group, so
