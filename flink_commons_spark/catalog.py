@@ -70,6 +70,17 @@ def _scratch_dir(prefix: str) -> str:
     return d
 
 
+def _stream_events_dir(sf_dir: str, prefix: str) -> str:
+    """A fresh scratch dir holding a link to ``sf_dir``'s
+    ``events.parquet``: a file-stream source needs a directory, and the
+    test data itself is read-only. The link target is absolute, since a
+    relative ``sf_dir`` would resolve against the scratch dir, leave a
+    dangling link, and the stream would read nothing."""
+    stream_dir = _scratch_dir(prefix=prefix)
+    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{stream_dir}/events.parquet")
+    return stream_dir
+
+
 def _await_stream(query, timeout: int = 300) -> None:
     """Block until an ``availableNow`` query finishes; FAIL on timeout.
 
@@ -755,12 +766,9 @@ def stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per batch the bounded union-sort as-of runs distributed inside
     ``foreachBatch`` and appends to a parquet sink; the final table
     equals the batch as-of bit-for-bit (same oracle)."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-tpj-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-tpj-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -1910,12 +1918,7 @@ def stream_minute_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # FileStreamSource requires a directory; expose the single parquet
-    # file through a temp dir symlink (testdata itself is read-only).
-    import os
-
-    stream_dir = _scratch_dir(prefix="fcs-stream-src-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-src-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -1976,8 +1979,6 @@ def stream_hll_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle replays the registers AND the fold and matches
     the estimate bit-for-bit — approximate in value, exact in
     reproducibility."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     from flink_commons_spark.operators.sketch import (
         hll_columns,
@@ -1985,8 +1986,7 @@ def stream_hll_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-hll-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-hll-")
     bucket, rho = hll_columns("user_id", p=6)
     regs = (
         spark.readStream.schema(schema)
@@ -2065,13 +2065,10 @@ def stream_exact_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     — changelog append per batch, last-write-wins compaction on read; no
     driver-side state). Matches the batch exact distinct bit-for-bit.
     """
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-uv-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-uv-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -2116,13 +2113,10 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming gap sessions via native ``session_window`` (30-min
     gap), update mode + upsert sink; equivalent to the batch
     sessionization oracle (same gap semantics)."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-sess-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-sess-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -2181,13 +2175,10 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user running aggregate, final state compared against batch
     truth. The Flink ``KeyedProcessFunction`` analog — state is a
     24-byte tuple per key in the checkpointed state store."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-state-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-state-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -2240,12 +2231,9 @@ def stream_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``streaming/stateful.py:continuous_topn``), landed through the
     keyed upsert sink on (grp, rnk) so later batches overwrite earlier
     ranks. Exact integer counts, id tie-break — bit-stable ranking."""
-    import os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-topn-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-topn-")
     sdf = spark.readStream.schema(schema).parquet(stream_dir)
 
     from flink_commons_spark.streaming.stateful import continuous_topn
@@ -2416,12 +2404,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     change per key before the distributed keyed append; the final read
     ranks per key across batches and filters tombstones — a deleted
     key stays absent unless a later batch re-inserts it."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cdc-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-cdc-")
     from flink_commons_spark.streaming.cdc import (
         OP_COL,
         changelog_writer,
@@ -2485,8 +2470,6 @@ def stream_cdc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose latest event changes type MOVES between groups — retraction
     semantics no append-stream aggregate can express. Exact integer
     cents so regrouping is bit-stable."""
-    import os
-
     from flink_commons_spark.streaming.cdc import (
         OP_COL,
         changelog_writer,
@@ -2496,8 +2479,7 @@ def stream_cdc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cdcagg-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-cdcagg-")
     changes = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -2572,14 +2554,11 @@ def stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     expires before the final watermark (stream end) — the oracle
     states that timer-fire condition explicitly on the same ms grid
     Spark's timers live on."""
-    import os
-
     from flink_commons_spark.streaming.timers import inactivity_sessions
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-timer-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-timer-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -3034,13 +3013,10 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced to exactly-once rows; state is one entry per key within the
     watermark horizon. Output counts equal the clean batch input, so
     the result is deterministic regardless of which duplicate wins."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-dedup-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-dedup-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -3081,13 +3057,10 @@ def stream_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     → final state equals the batch answer. State per (window, type)
     key only — the overlap factor (window/slide) bounds the state
     blow-up, not the event count."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-hop-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-hop-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -3141,13 +3114,10 @@ def stream_cumulate_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Complete-mode ``availableNow`` run → final state equals the
     batch answer. The SQL-dialect twin of this rewrite lives in
     ``plans/dialect.py:_window_tvf_replacement``."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-cumulate-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-cumulate-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -3216,13 +3186,10 @@ def stream_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts the dim per micro-batch, the exact analog of a per-record
     dim lookup at micro-batch granularity. Windowless complete-mode
     aggregate on the enriched stream."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-lkp-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-lkp-")
     sdf = spark.readStream.schema(schema).parquet(stream_dir)
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = sdf.join(
@@ -3864,13 +3831,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases per user within 30 minutes, both sides watermarked (state
     expires past watermark + interval). Inner joins emit eagerly, so
     the availableNow run yields exactly the batch result."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-ij-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-ij-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -7531,12 +7495,9 @@ def _mr_stream_events_view(spark: SparkSession, sf_dir: str, name: str) -> None:
     events parquet exposing the raw timestamp (the SQL executor
     watermarks the first ORDER BY key itself), epoch-µs, and
     integer-cents value columns."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-mrsql-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-mrsql-")
     (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -10395,12 +10356,9 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically. The oracle states the eviction condition explicitly:
     unmatched rows appear iff ``window_end ≤ final watermark``; the
     final (open) window's unmatched views are correctly absent."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-loj-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-loj-")
     raw = spark.readStream.schema(schema).parquet(stream_dir)
     ev = raw.transform(_norm_ts).withWatermark("ts", "0 seconds")
 
@@ -10468,12 +10426,9 @@ def stream_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ``window(ts)`` equality + key — state is bounded by the
     watermark (closed windows are evicted), and the join shuffles both
     sides on (user_id, window), exactly the Flink window-join layout."""
-    import os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-wj-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-wj-")
     raw = spark.readStream.schema(schema).parquet(stream_dir)
     ev = raw.transform(_norm_ts).withWatermark(
         "ts", "0 seconds"
@@ -11524,13 +11479,10 @@ def stream_over_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-gated row buffer as packed-binary state (layout:
     ``streaming/stateful.py:OVER_STATE_SCHEMA``). Every input row is
     emitted exactly once → append mode, distributed parquet sink."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-over-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-over-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -11578,13 +11530,10 @@ def stream_over_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded over-window pair, via the watermark-buffered
     ``streaming/stateful.py:running_over_range`` (peer-inclusive SQL
     RANGE frames, late-drop, horizon-bounded state)."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-ovrange-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-ovrange-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -11772,13 +11721,10 @@ def stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the committed layout back through partition discovery — the
     partition column never stored in the data files, scan pruned per
     directory."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-part-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-part-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)
@@ -12327,13 +12273,10 @@ def stream_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays exactly that with the classic running-max interval-union
     sweep. State per open session only, keyed by user; append mode
     emits each session once its watermark closes."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _scratch_dir(prefix="fcs-stream-dynsess-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+    stream_dir = _stream_events_dir(sf_dir, "fcs-stream-dynsess-")
     sdf = (
         spark.readStream.schema(schema)
         .parquet(stream_dir)

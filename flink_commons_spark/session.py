@@ -12,6 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Static conf every session of the project is built with: Python
+#: workers start from ``worker_daemon``, which imports the installed
+#: pyspark instead of ``$SPARK_HOME``'s archives (see that module).
+PYTHON_WORKER_CONF = {"spark.python.daemon.module": "flink_commons_spark.worker_daemon"}
+
 
 def get_session(app_name: str = "flink-commons-spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
@@ -30,6 +35,7 @@ def get_session(app_name: str = "flink-commons-spark", master: str | None = None
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config(map=PYTHON_WORKER_CONF)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

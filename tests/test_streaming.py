@@ -1146,3 +1146,41 @@ def test_stream_match_within_bounds_and_expires(spark, tmp_path):
     assert sorted(got) == [2, 3]
     assert got[2]["start_us"] == 1 * S and got[2]["end_us"] == 4 * S
     assert got[3]["start_us"] == 20 * S and got[3]["end_us"] == 23 * S
+
+
+def test_stream_query_reads_a_relative_sf_dir(spark, tmp_path, monkeypatch):
+    """A catalog streaming query given a relative ``sf_dir`` reads every
+    row: its stream source links to the events file by absolute path."""
+    import pandas as pd
+
+    from flink_commons_spark.catalog import QUERIES
+
+    data = tmp_path / "sf"
+    data.mkdir()
+    n = 240
+    events = pd.DataFrame({
+        "event_id": range(n),
+        "ts": pd.to_datetime([1_000 + 7 * i for i in range(n)], unit="s"),
+        "user_id": [i % 9 for i in range(n)],
+        "event_type": [("view", "cart", "buy")[i % 3] for i in range(n)],
+        "value": [i / 4 for i in range(n)],
+        "props": ["{}"] * n,
+    })
+    events.to_parquet(data / "events.parquet", index=False)
+    # the JVM resolves relative paths against its own start directory
+    cwd = spark._jvm.System.getProperty("user.dir")
+    monkeypatch.chdir(cwd)
+    rel = os.path.relpath(data)
+    # stage the stream deeper than the working dir, so the relative path
+    # read from the staging dir names no existing file
+    scratch = tmp_path.joinpath(*["d"] * len(os.path.normpath(cwd).split(os.sep)))
+    scratch.mkdir(parents=True)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(scratch))
+
+    out = QUERIES["stream_minute_agg"](spark, rel).toPandas()
+    got = {(r.window_start, r.dim): r.pv for r in out.itertuples()}
+    want = (
+        events.assign(window_start=events["ts"].astype("int64") // 60_000_000_000)
+        .groupby(["window_start", "event_type"]).size()
+    )
+    assert got == {k: int(v) for k, v in want.items()}
