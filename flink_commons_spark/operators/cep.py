@@ -109,12 +109,14 @@ class Step:
     alternation member's / sequence-group child's predicate)
     ROW-LOCAL: its mask at a row depends only on that row's columns —
     no ``Series.shift`` (PREV/NEXT), no cross-row reads. When every
-    step of a pattern is local, the bucketed executor evaluates all
-    masks ONCE over the whole sorted bucket and slices per key
-    instead of paying a pandas mask pass per key (r14: the per-key
-    mask/frame overhead was ~40 % of matcher wall time at sf0.1 with
-    ~1.5k keys per bucket). Default False — per-key evaluation, which
-    is always sound."""
+    step of a pattern is local, both bucketed executors evaluate all
+    masks ONCE per bucket and slice per key instead of paying a pandas
+    mask pass per key: the batch ``run_bucket`` over the whole sorted
+    bucket (r14: the per-key mask/frame overhead was ~40 % of matcher
+    wall time at sf0.1 with ~1.5k keys per bucket), the streaming
+    settle (:func:`streaming.cep_stream.stream_match_pattern`) over
+    the bucket's closed rows. Default False — both then evaluate the
+    masks per key on that key's slice, which is always sound."""
 
     __slots__ = ("name", "where", "lo", "hi", "reluctant", "dyn",
                  "next_depth", "alts", "group", "perm", "local")

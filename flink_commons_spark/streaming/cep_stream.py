@@ -385,15 +385,31 @@ def stream_match_pattern(
     :func:`bucket_column` over :func:`resolve_bucket_count` buckets
     and each state row holds the PACKED MULTI-KEY buffers of every key
     in the bucket (per-column concatenated blobs + per-key offsets/ctx/
-    sort-flag/ordinal arrays), while matching still runs strictly per
-    key inside the closure (per-key timers become the bucket's min; an
+    sort-flag/ordinal arrays; every settle re-sorts, so the sort flags
+    are written but not read). Why: the ``applyInPandasWithState``
+    transport pays a per-KEY-GROUP Arrow framing + state-store row cost
+    of ~0.9-1.3 s per 100k-row micro-batch at 1.5k keys regardless of
+    Python work (r14 profile) — with buckets the protocol cost tracks
+    bucket count.
+
+    A settle works on the whole BUCKET, the shape of the batch
+    executor's ``run_bucket``: one stable lexsort of the bucket's
+    buffered and new rows by (key, ``order_cols``); each key's closed
+    prefix from one cumulative count of rows below the watermark; one
+    frame of the bucket's closed rows. When every step is
+    :attr:`Step.local <operators.cep.Step>` (row-local DEFINEs) the
+    DEFINE and alternation masks are evaluated ONCE over that frame and
+    sliced per key; otherwise (a PREV/NEXT-navigating step) they are
+    evaluated per key on the key's slice, so no shift reads a
+    neighbouring key's row. :func:`_scan_closed_prefix` then runs per
+    key on slices of the shared column arrays and masks — matching
+    stays strictly per key (per-key timers become the bucket's min; an
     early settle of an unaffected key is a no-op by construction
     because verdicts only depend on the watermark, which is
-    bucket-global). Why: the ``applyInPandasWithState`` transport pays
-    a per-KEY-GROUP Arrow framing + state-store row cost of ~0.9-1.3 s
-    per 100k-row micro-batch at 1.5k keys regardless of Python work
-    (r14 profile) — with buckets the protocol cost tracks bucket
-    count. Key columns must be of a :data:`_BUF_TYPES` type (anything
+    bucket-global) — and the kept rows are re-packed with one index
+    take and one encode per column.
+
+    Key columns must be of a :data:`_BUF_TYPES` type (anything
     else raises when the query is built), and a NULL numeric key fails
     its micro-batch — packed state has no NULL, and any stand-in value
     could merge it into a real key's buffer. Trade documented for
@@ -492,6 +508,11 @@ def stream_match_pattern(
 
     has_dyn = any(getattr(s, "dyn", None) is not None for s in steps)
     has_next = any(getattr(s, "next_depth", 0) for s in steps)
+    has_group = any(getattr(s, "group", None) is not None for s in steps)
+    # DEFINE masks once per bucket only when every step is row-local
+    # (Step.local): a PREV/NEXT shift over the bucket-wide frame would
+    # read a neighbouring key's rows
+    bucket_local = all(getattr(s, "local", False) for s in steps)
     # MATCH_NUMBER tracking: ALL ROWS always; ONE ROW when the
     # measures read the ordinal (``number_matches``) — the ``nmatch``
     # state field is appended ONLY in these modes, so numbered and
@@ -533,125 +554,6 @@ def stream_match_pattern(
         + (["__mrn binary"] if track_no else [])
     )
 
-    def _make_settle(wm_ms):
-        """Build the PURE per-key settle for one micro-batch's
-        watermark: ``settle_core(key, pdf_all, nctx, presorted,
-        nmatch) -> (matches, keep, cands)``. ``keep`` is a tagged
-        disposition — ``("drop",)`` removes the key's buffer,
-        ``("tomb", n)`` keeps a durable-MATCH_NUMBER counter tombstone,
-        ``("buf", rest_pdf, nctx, sorted_flag, nmatch)`` retains a
-        buffer; ``cands`` are the timer-candidate milliseconds (the
-        caller arms ``min(c for c in cands if c > wm)``). The bucketed
-        executor runs it once per key of the bucket."""
-
-        def settle_core(key, pdf_all: "pd.DataFrame", nctx: int,
-                        presorted: bool, nmatch: int = 0):
-            total = len(pdf_all)
-            ts_raw = pdf_all[ts_col].to_numpy("int64")
-            if not int((ts_raw // 1000 < wm_ms).sum()):
-                # NOTHING closed yet — the availableNow FIRST batch for
-                # every key (watermark still 0) and any key whose rows
-                # all sit at/after the watermark: matching cannot make
-                # progress, so keep the buffer AS-IS (order preserved;
-                # context rows, if any, stay leading — new arrivals are
-                # at/after the watermark, hence never sort before them)
-                # and skip the sort/mask/scan entirely.
-                if total:
-                    lo = int(ts_raw.min())
-                    cands = [int(ts_raw.max()) // 1000 + 1, lo // 1000 + 1]
-                    if within_us is not None:
-                        cands.append((lo + within_us) // 1000 + 1)
-                    return [], ("buf", pdf_all, nctx, int(presorted), nmatch), cands
-                if track_no and durable_match_no and nmatch:
-                    # counter-only tombstone — MATCH_NUMBER ordinals
-                    # survive a full buffer drain (opt-in; no timer)
-                    return [], ("tomb", nmatch), []
-                return [], ("drop",), []
-            if not presorted:
-                try:
-                    order = np.lexsort(tuple(
-                        pdf_all[c].to_numpy() for c in reversed(order_cols)
-                    ))
-                    pdf_all = pdf_all.take(order).reset_index(drop=True)
-                except TypeError:  # non-lexsortable dtype — pandas fallback
-                    pdf_all = pdf_all.sort_values(
-                        list(order_cols), kind="mergesort"
-                    ).reset_index(drop=True)
-                ts = pdf_all[ts_col].to_numpy("int64")
-            else:
-                # state is stored sorted (flagged) — a timer settle
-                # re-reads it verbatim, so the lexsort would be a no-op
-                ts = ts_raw
-            closed_n = int(np.searchsorted(ts // 1000, wm_ms, side="left"))
-            pdf_closed = pdf_all.iloc[:closed_n]
-            if frame_renames:
-                pdf_closed = pdf_closed.rename(columns=frame_renames)
-            masks = _group_masks(step_list, pdf_closed)
-            alt_masks = _alt_member_masks(step_list, pdf_closed)
-            gout: "dict | None" = (
-                {} if any(s.group is not None for s in step_list) else None
-            )
-            cols = {c: pdf_closed[c].to_numpy() for c in pdf_closed.columns}
-            out = []
-            seq = [nmatch]  # per-key MATCH_NUMBER cursor (track_no modes)
-
-            def on_match(hit, first, last):
-                segs = {
-                    s.name: _Seg(cols, pos)
-                    for s, pos in zip(step_list, hit)
-                }
-                if alt_masks:
-                    _add_alt_segs(step_list, hit, alt_masks, cols, segs)
-                if gout is not None:
-                    # the scan calls on_match synchronously right after
-                    # the successful attempt fills gout
-                    _add_group_segs(step_list, gout, cols, segs)
-                if all_rows or number_matches:
-                    seq[0] += 1
-                    out.append(measures(key, segs, seq[0]))
-                else:
-                    out.append(measures(key, segs))
-
-            consumed, pending = _scan_closed_prefix(
-                step_list, masks, ts[:closed_n].tolist(), closed_n, on_match,
-                within_us=within_us, open_end_wm_ms=wm_ms,
-                after_match=after_match, ctx_n=nctx,
-                dctx=_DynCtx(cols) if has_dyn else None,
-                step_bounds=(
-                    _step_bounds(step_list, closed_n) if has_next else None
-                ),
-                gout=gout,
-                max_steps=max_steps, pattern_desc=pattern_desc,
-                strict_budget=strict_budget,
-            )
-            keep_from = consumed
-            if within_us is not None:
-                # expired-window drop is a further prefix cut: monotone
-                # in ts, and open rows never satisfy the condition.
-                # Never expire at/after a deferred attempt's start — a
-                # frontier-deferred match (NEXT) may still be decided
-                # by successors alone even after its window passed
-                exp_stop = total if pending is None else min(total, pending)
-                while (
-                    keep_from < exp_stop
-                    and (int(ts[keep_from]) + within_us) // 1000 < wm_ms
-                ):
-                    keep_from += 1
-            if keep_from < total:
-                ctx_start = max(0, keep_from - ctx_rows)
-                rest = pdf_all.iloc[ctx_start:]
-                cands = [int(ts[total - 1]) // 1000 + 1]
-                if closed_n < total:
-                    cands.append(int(ts[closed_n]) // 1000 + 1)
-                if within_us is not None:
-                    cands.append((int(ts[keep_from]) + within_us) // 1000 + 1)
-                return out, ("buf", rest, keep_from - ctx_start, 1, seq[0]), cands
-            if track_no and durable_match_no and seq[0]:
-                return out, ("tomb", seq[0]), []
-            return out, ("drop",), []
-
-        return settle_core
-
     def _key_scalar(v):
         """One grouping-key value as a plain Python scalar (numpy
         scalars unboxed, NaN folded to None so a NULL string key from
@@ -675,11 +577,12 @@ def stream_match_pattern(
 
     def fn_bucket(_bkey, batches, state):
         wm_ms = state.getCurrentWatermarkMs()
-        settle_core = _make_settle(wm_ms)
-        # ---- decode the bucket's multi-key state
+        # ---- decode the bucket's multi-key state (the per-key sorted
+        # flags ``__mrs`` are written but not read: every settle sorts
+        # the whole bucket)
         skeys: "list[tuple]" = []
         s_cols = None
-        s_offs = s_nctx = s_srt = s_nmatch = None
+        s_offs = s_nctx = s_nmatch = None
         if state.exists:
             vals = state.get
             s_cols = {
@@ -692,7 +595,6 @@ def stream_match_pattern(
             ]
             s_offs = np.frombuffer(vals[nbuf + nkf] or b"", dtype="<i8")
             s_nctx = np.frombuffer(vals[nbuf + nkf + 1] or b"", dtype="<i8")
-            s_srt = np.frombuffer(vals[nbuf + nkf + 2] or b"", dtype="<i8")
             if track_no:
                 s_nmatch = np.frombuffer(
                     vals[nbuf + nkf + 3] or b"", dtype="<i8"
@@ -750,7 +652,7 @@ def stream_match_pattern(
                 new = None
         nuni = len(order_keys)
         # ---- one combined (state rows first, then new rows) column
-        # set + per-row key codes; one stable sort; per-key SLICES
+        # set + per-row key codes
         parts_codes = []
         if nskeys:
             parts_codes.append(np.repeat(
@@ -777,114 +679,162 @@ def stream_match_pattern(
             else:
                 a = np.concatenate(parts)
             arrs[c] = a
-        order = np.argsort(comb_codes, kind="stable")
-        comb_sorted = comb_codes[order]
+        # ---- ONE stable sort of the bucket by (key, order columns):
+        # key ki owns sorted rows [bnds[ki], bnds[ki + 1]), in the order
+        # the batch matcher sorts a key (state rows before new rows on
+        # ties)
+        try:
+            order = np.lexsort(
+                tuple(arrs[c] for c in reversed(order_cols)) + (comb_codes,)
+            )
+        except TypeError:  # non-lexsortable dtype — pandas fallback
+            sort_arrs = [comb_codes] + [arrs[c] for c in order_cols]
+            order = pd.DataFrame(dict(enumerate(sort_arrs))).sort_values(
+                list(range(len(sort_arrs))), kind="mergesort"
+            ).index.to_numpy()
         arrs = {c: a[order] for c, a in arrs.items()}
-        bnds = np.searchsorted(comb_sorted, np.arange(nuni + 1))
-        new_counts = (
-            np.bincount(new_codes, minlength=nuni) if len(new_codes)
-            else np.zeros(nuni, dtype=np.int64)
-        )
-        # ---- BUCKET-WIDE "nothing closed" fast path (r15): the
-        # availableNow FIRST batch (watermark 0) hits every bucket with
-        # 100 % open rows — every key would take settle_core's
-        # store-as-is branch, so skip the per-key frames and per-key
-        # encodes entirely: one encode per COLUMN over the already
-        # key-grouped arrays, vectorized per-key metadata and timer
-        # candidates. Byte-equivalent to the per-key loop by
-        # construction (same store-as-is values, same candidate set);
-        # zero-row segments (durable-MATCH_NUMBER tombstones) are the
-        # one shape the loop treats specially, so their presence falls
-        # through to it.
-        lens_all = np.diff(bnds)
-        ts_all = arrs[ts_col]
-        if (
-            nuni
-            and not bool((lens_all == 0).any())
-            and not int((ts_all // 1000 < wm_ms).sum())
-        ):
-            blobs = [_enc_arr(arrs[c], t) for c, t in buffer_cols]
-            blobs += _key_blobs(order_keys)
-            nctx_out = np.zeros(nuni, dtype="<i8")
-            srt_out = np.zeros(nuni, dtype="<i8")
-            nm_out = np.zeros(nuni, dtype="<i8")
-            if nskeys:
-                nctx_out[:nskeys] = s_nctx
-                srt_out[:nskeys] = s_srt * (new_counts[:nskeys] == 0)
-                if track_no:
-                    nm_out[:nskeys] = s_nmatch
-            state.update(tuple(
-                blobs
-                + [bnds.astype("<i8").tobytes(),
-                   nctx_out.tobytes(), srt_out.tobytes()]
-                + ([nm_out.tobytes()] if track_no else [])
-            ))
-            starts = bnds[:-1]
-            lo_k = np.minimum.reduceat(ts_all, starts)
-            hi_k = np.maximum.reduceat(ts_all, starts)
-            cand = [hi_k // 1000 + 1, lo_k // 1000 + 1]
-            if within_us is not None:
-                cand.append((lo_k + within_us) // 1000 + 1)
-            live = np.concatenate(cand)
-            live = live[live > wm_ms]
-            if len(live):
-                state.setTimeoutTimestamp(int(live.min()))
-            return
-        # ---- settle every key in the bucket (idempotent for keys
+        bnds = np.searchsorted(comb_codes[order], np.arange(nuni + 1))
+        ts = arrs[ts_col].astype(np.int64, copy=False)
+        # ---- each key's CLOSED prefix (event time below the watermark
+        # — a prefix, since the event time leads the per-key order):
+        # key ki's closed rows are closed-frame rows [cb[ki], cb[ki+1]).
+        # Cumulative-sum differences, not np.add.reduceat, which reads
+        # a zero-row segment (a MATCH_NUMBER tombstone) as its
+        # neighbour's first element
+        closed = ts // 1000 < wm_ms
+        cb = np.concatenate(([0], np.cumsum(closed)))[bnds]
+        # ---- one frame of the bucket's closed rows under the
+        # reader-visible names. Row-local DEFINE masks are evaluated
+        # once over it; a pattern with a PREV/NEXT-navigating step
+        # evaluates per key on the key's slice, so no shift crosses a
+        # key boundary
+        ccols: dict = {}
+        frame = masks_all = alt_all = None
+        if cb[-1]:
+            ren = frame_renames or {}
+            ccols = {ren.get(c, c): a[closed] for c, a in arrs.items()}
+            frame = pd.DataFrame(ccols)
+            if bucket_local:
+                masks_all = _group_masks(step_list, frame)
+                alt_all = _alt_member_masks(step_list, frame)
+        # ---- scan every key's closed prefix (idempotent for keys
         # whose decision horizon has not moved — verdicts only depend
         # on the bucket-global watermark)
         out_all: list = []
-        kept: list = []  # (key, rest_pdf | None-for-tombstone, nctx, srt, nm)
-        all_cands: list = []
+        # (key index, first kept sorted row, rows kept, nctx, ordinal)
+        kept: list = []
+        cands: list = []
         for ki in range(nuni):
-            a, b = int(bnds[ki]), int(bnds[ki + 1])
-            pdf_k = pd.DataFrame({c: arr[a:b] for c, arr in arrs.items()})
-            if ki < nskeys:
-                nctx_k = int(s_nctx[ki])
-                nm_k = int(s_nmatch[ki]) if track_no else 0
-                srt_k = bool(s_srt[ki]) and not int(new_counts[ki])
-            else:
-                nctx_k, nm_k, srt_k = 0, 0, False
-            matches, keep, cands = settle_core(
-                order_keys[ki], pdf_k, nctx_k, srt_k, nm_k
-            )
-            out_all.extend(matches)
-            tag = keep[0]
-            if tag == "buf":
-                kept.append(
-                    (order_keys[ki], keep[1], keep[2], keep[3], keep[4])
-                )
-                all_cands.extend(cands)
-            elif tag == "tomb":
-                kept.append((order_keys[ki], None, 0, 1, keep[1]))
-        # ---- re-pack the bucket: per-column concatenated blobs +
-        # per-key key values / offsets / nctx / sorted-flag (+ ordinal)
-        if kept:
-            blobs: list = []
-            for c, t in buffer_cols:
-                if _BUF_TYPES[t][1] is None:
-                    lst: list = []
-                    for e in kept:
-                        if e[1] is not None:
-                            lst.extend(_enc_arr(e[1][c], t))
-                    blobs.append(lst)
+            a, total = int(bnds[ki]), int(bnds[ki + 1] - bnds[ki])
+            ca, nc = int(cb[ki]), int(cb[ki + 1] - cb[ki])
+            nctx = int(s_nctx[ki]) if ki < nskeys else 0
+            seq = [int(s_nmatch[ki]) if track_no and ki < nskeys else 0]
+            consumed, pending = nctx, None
+            if nc > nctx:
+                key = order_keys[ki]
+                cols = {c: v[ca:ca + nc] for c, v in ccols.items()}
+                if masks_all is None:
+                    # 0-based like a standalone key frame, so a `where`
+                    # that builds a default-indexed Series still aligns
+                    sub = frame.iloc[ca:ca + nc].reset_index(drop=True)
+                    masks = _group_masks(step_list, sub)
+                    alt_masks = _alt_member_masks(step_list, sub)
                 else:
-                    blobs.append(b"".join(
-                        _enc_arr(e[1][c], t) for e in kept if e[1] is not None
-                    ))
-            blobs += _key_blobs([e[0] for e in kept])
-            lens = [(len(e[1]) if e[1] is not None else 0) for e in kept]
+                    masks = [
+                        [mm[ca:ca + nc] for mm in m] if isinstance(m, list)
+                        else m[ca:ca + nc]
+                        for m in masks_all
+                    ]
+                    alt_masks = {
+                        nm: (names, choice[ca:ca + nc])
+                        for nm, (names, choice) in alt_all.items()
+                    }
+                gout: "dict | None" = {} if has_group else None
+
+                def on_match(hit, first, last):
+                    segs = {
+                        s.name: _Seg(cols, pos)
+                        for s, pos in zip(step_list, hit)
+                    }
+                    if alt_masks:
+                        _add_alt_segs(step_list, hit, alt_masks, cols, segs)
+                    if gout is not None:
+                        # the scan calls on_match synchronously right
+                        # after the successful attempt fills gout
+                        _add_group_segs(step_list, gout, cols, segs)
+                    if track_no:
+                        seq[0] += 1
+                        out_all.append(measures(key, segs, seq[0]))
+                    else:
+                        out_all.append(measures(key, segs))
+
+                consumed, pending = _scan_closed_prefix(
+                    step_list, masks, ts[a:a + nc].tolist(), nc, on_match,
+                    within_us=within_us, open_end_wm_ms=wm_ms,
+                    after_match=after_match, ctx_n=nctx,
+                    dctx=_DynCtx(cols) if has_dyn else None,
+                    step_bounds=(
+                        _step_bounds(step_list, nc) if has_next else None
+                    ),
+                    gout=gout,
+                    max_steps=max_steps, pattern_desc=pattern_desc,
+                    strict_budget=strict_budget,
+                )
+            keep_from = consumed
+            if within_us is not None:
+                # expired-window drop is a further prefix cut: monotone
+                # in ts, and open rows never satisfy the condition.
+                # Never expire at/after a deferred attempt's start — a
+                # frontier-deferred match (NEXT) may still be decided
+                # by successors alone even after its window passed
+                exp_stop = total if pending is None else min(total, pending)
+                while (
+                    keep_from < exp_stop
+                    and (int(ts[a + keep_from]) + within_us) // 1000 < wm_ms
+                ):
+                    keep_from += 1
+            if keep_from < total:
+                ctx_start = max(0, keep_from - ctx_rows)
+                kept.append((
+                    ki, a + ctx_start, total - ctx_start,
+                    keep_from - ctx_start, seq[0],
+                ))
+                cands.append(int(ts[a + total - 1]) // 1000 + 1)
+                if nc < total:
+                    cands.append(int(ts[a + nc]) // 1000 + 1)
+                if within_us is not None:
+                    cands.append(
+                        (int(ts[a + keep_from]) + within_us) // 1000 + 1
+                    )
+            elif track_no and durable_match_no and seq[0]:
+                # counter-only tombstone — MATCH_NUMBER ordinals
+                # survive a full buffer drain (opt-in; no timer)
+                kept.append((ki, a, 0, 0, seq[0]))
+        # ---- re-pack the bucket: one take of the kept rows, one encode
+        # per column, + per-key key values / offsets / nctx /
+        # sorted-flag (+ ordinal)
+        if kept:
+            lens = np.array([e[2] for e in kept], dtype=np.int64)
             offs = np.zeros(len(kept) + 1, dtype="<i8")
             offs[1:] = np.cumsum(lens)
+            take = np.repeat(
+                np.array([e[1] for e in kept], dtype=np.int64) - offs[:-1],
+                lens,
+            ) + np.arange(offs[-1])
+            blobs = [
+                _enc_arr(pd.Series(arrs[c][take], name=c), t)
+                for c, t in buffer_cols
+            ]
+            blobs += _key_blobs([order_keys[e[0]] for e in kept])
             state.update(tuple(
                 blobs
                 + [offs.tobytes(),
-                   np.asarray([e[2] for e in kept], dtype="<i8").tobytes(),
-                   np.asarray([e[3] for e in kept], dtype="<i8").tobytes()]
-                + ([np.asarray([e[4] for e in kept], dtype="<i8").tobytes()]
+                   np.array([e[3] for e in kept], dtype="<i8").tobytes(),
+                   np.ones(len(kept), dtype="<i8").tobytes()]
+                + ([np.array([e[4] for e in kept], dtype="<i8").tobytes()]
                    if track_no else [])
             ))
-            live = [t for t in all_cands if t > wm_ms]
+            live = [t for t in cands if t > wm_ms]
             if live:  # Spark rejects timers at/behind the watermark
                 state.setTimeoutTimestamp(min(live))
         elif state.exists:
