@@ -7,8 +7,8 @@ delegate any such statement to Flink's CEP operator through its generic
 executor (``SQLSubmitAction.java:74-76``). Spark has no built-in row
 pattern matcher, so this module implements one the Spark-native way:
 
-- the corpus is hash-partitioned by the pattern's PARTITION BY key —
-  exactly how Flink's keyed CEP operator distributes, so 1000 executors
+- the corpus is hash-partitioned by the pattern's PARTITION BY key
+  into a fixed number of buckets — Flink's key groups — so executors
   each scan their own key ranges and no key's event sequence ever
   crosses a worker boundary;
 - within a key the rows are ordered and scanned once by a small
@@ -18,12 +18,19 @@ pattern matcher, so this module implements one the Spark-native way:
 - rows cross the Python boundary once, Arrow-batched via
   ``applyInPandas`` — no row-at-a-time UDF.
 
+The bucket core — key codes and one sort per bucket, DEFINE masks per
+bucket or per key, the scan (:func:`_scan_closed_prefix`) and the
+match emitter — is shared with the streaming settle
+(:mod:`flink_commons_spark.streaming.cep_stream`), which runs it over
+each key's closed prefix instead of its complete rows.
+
 Only measures (a handful of scalars per match) leave the matcher, so
 the operator's output is tiny compared to its input scan.
 """
 
 from __future__ import annotations
 
+import bisect
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -111,11 +118,12 @@ class Step:
     no ``Series.shift`` (PREV/NEXT), no cross-row reads. When every
     step of a pattern is local, both bucketed executors evaluate all
     masks ONCE per bucket and slice per key instead of paying a pandas
-    mask pass per key: the batch ``run_bucket`` over the whole sorted
-    bucket (r14: the per-key mask/frame overhead was ~40 % of matcher
-    wall time at sf0.1 with ~1.5k keys per bucket), the streaming
-    settle (:func:`streaming.cep_stream.stream_match_pattern`) over
-    the bucket's closed rows. Default False — both then evaluate the
+    mask pass per key (:func:`_bucket_masks`, :func:`_key_masks`):
+    the batch :func:`match_pattern` over the whole sorted bucket
+    (r14: the per-key mask/frame overhead was ~40 % of matcher wall
+    time at sf0.1 with ~1.5k keys per bucket), the streaming settle
+    (:func:`streaming.cep_stream.stream_match_pattern`) over the
+    bucket's closed rows. Default False — both then evaluate the
     masks per key on that key's slice, which is always sound."""
 
     __slots__ = ("name", "where", "lo", "hi", "reluctant", "dyn",
@@ -334,15 +342,16 @@ def _match_at_ex(
     sets bit 1, while ``n < undecided_n`` means the scan end is a
     DECIDED boundary (a WITHIN window edge strictly inside the closed
     prefix) and the cut is a permanent verdict (no bit). ``None``
-    (the default, and the batch behavior) treats every end cut as
-    undecided — equivalent to ``undecided_n = 0``.
+    (the default) treats every end cut as undecided — equivalent to
+    ``undecided_n = 0``.
 
     ``run_ends`` (from :func:`_run_ends`) makes each greedy-run scan
     O(1). ``failed`` is an optional cross-start memo of (pos, step)
     states already proven unmatchable — sound ONLY when every call
     shares the same masks/steps/``n`` AND the caller ignores
     ``touched_end`` (a memo hit does not replay the touched flag), so
-    the batch scan passes it and the streaming scan must not.
+    :func:`_scan_closed_prefix` passes it only over complete data
+    without frontiers, dyn steps or WITHIN.
 
     ``dctx`` enables MATCH-STATE-DEPENDENT steps (``Step.dyn``): every
     step's row assignment is tracked in ``dctx.asg`` as the recursion
@@ -783,28 +792,6 @@ def _match_at_ex(
     return rec(start, 0), touched
 
 
-def _match_at(
-    masks: list,
-    steps: Sequence[Step],
-    start: int,
-    n: int,
-    run_ends: "list | None" = None,
-    failed: "set | None" = None,
-    dctx: "_DynCtx | None" = None,
-    gout: "dict | None" = None,
-    max_steps: "int | None" = None,
-    pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
-) -> list | None:
-    """Greedy backtracking match of ``steps`` against positions
-    ``start..`` — returns per-step position ranges, or None."""
-    return _match_at_ex(
-        masks, steps, start, n, run_ends, failed, dctx, gout=gout,
-        max_steps=max_steps, pattern_desc=pattern_desc,
-        strict_budget=strict_budget,
-    )[0]
-
-
 def _step_bounds(steps: Sequence[Step], n: int) -> "list[int] | None":
     """Per-step undecided frontiers over an ``n``-row closed prefix:
     ``n - next_depth`` for forward-navigating steps, ``n`` otherwise.
@@ -814,6 +801,250 @@ def _step_bounds(steps: Sequence[Step], n: int) -> "list[int] | None":
     if not any(depths):
         return None
     return [n - d for d in depths]
+
+
+def _skip_index(steps: Sequence[Step], after_match) -> "int | None":
+    """Validate an AFTER MATCH SKIP strategy (see
+    :func:`_scan_closed_prefix`): the position of a ``("to_first",
+    var)`` / ``("to_last", var)`` target variable in ``steps``, None
+    for ``"past_last"`` / ``"to_next_row"``. Raises ValueError for an
+    unknown strategy or a variable not in the pattern."""
+    if isinstance(after_match, tuple):
+        skip_kind, skip_var = after_match
+        if skip_kind not in ("to_first", "to_last"):
+            raise ValueError(f"unknown after_match {after_match!r}")
+        skip_idx = next(
+            (k for k, s in enumerate(steps) if s.name == skip_var), None
+        )
+        if skip_idx is None:
+            raise ValueError(f"after_match variable {skip_var!r} not in pattern")
+        return skip_idx
+    if after_match not in ("past_last", "to_next_row"):
+        raise ValueError(f"unknown after_match {after_match!r}")
+    return None
+
+
+def _scan_closed_prefix(
+    steps,
+    masks,
+    ts_list,
+    n: int,
+    on_match,
+    *,
+    within_us: "int | None" = None,
+    open_end_wm_ms: "int | None" = None,
+    after_match: "str | tuple[str, str]" = "past_last",
+    ctx_n: int = 0,
+    dctx=None,
+    step_bounds=None,
+    gout=None,
+    max_steps: "int | None" = None,
+    pattern_desc: "str | None" = None,
+    strict_budget: bool = False,
+):
+    """The sequential scan over one key's sorted rows — the one scan
+    of both executors: :func:`match_pattern` runs it over a key's
+    complete rows (``open_end_wm_ms=None``), the streaming settle
+    (:func:`streaming.cep_stream.stream_match_pattern`) over a key's
+    closed prefix. ``steps`` are :class:`Step` objects, ``masks`` their
+    precomputed boolean arrays over ALL ``n`` rows (context included),
+    ``ts_list`` the rows' event-time micros (read only under
+    ``within_us``), and ``on_match(hit, first, last)`` consumes each
+    completed match (:func:`_match_emitter`).
+
+    ``within_us`` (Flink's ``PATTERN ... WITHIN interval``) bounds an
+    attempt starting at row ``i`` to rows whose event time is below
+    ``ts_list[i] + within_us`` — the exclusive edge of Flink's NFA
+    pruning rule; matches are contiguous, so bounding the scan end
+    enforces exactly "the match completes within the interval".
+
+    ``open_end_wm_ms`` marks the rows as the CLOSED PREFIX of a live
+    stream (value = current watermark ms); None scans them as complete
+    batch data. On a closed prefix two kinds of attempt are
+    NOT-YET-DECIDED and stop the scan with everything from their start
+    kept buffered (emitting or discarding now would diverge from the
+    batch semantics once future rows arrive):
+
+    - a COMPLETED match whose greedy final variable ends on the last
+      row while still below its upper bound — future rows could
+      extend it (Flink likewise holds a greedy trailing quantifier
+      open until a non-matching row or the WITHIN window closes);
+    - a FAILED attempt that ran out of rows mid-pattern rather than
+      failing a predicate (the backtracker's ``touched_end``) — future
+      rows could complete it, and under the sequential-scan contract
+      no later start may resolve before an earlier undecided one.
+
+    Both deferrals are waived once the attempt's WITHIN window (if
+    any) is closed by the watermark — no admissible future row exists.
+
+    ``after_match`` is the resume strategy — all four of Flink's
+    AFTER MATCH SKIP modes: ``"past_last"`` (the default),
+    ``"to_next_row"`` (overlapping matches), or
+    ``("to_first", var)`` / ``("to_last", var)`` — resume AT the
+    first/last row the named pattern variable matched (that row stays
+    buffered: it may start the next match). Like Flink, a skip-to that
+    would not advance the scan, or whose variable matched no row,
+    raises.
+
+    ``ctx_n`` marks the first ``ctx_n`` rows as CONTEXT: already
+    consumed, present only so PREV-navigating masks see their true
+    predecessor — the scan starts past them and they are never
+    matched again.
+
+    ``dctx`` (a :class:`_DynCtx` over the rows' column arrays) enables
+    match-state-dependent ``Step.dyn`` predicates. They are
+    watermark-sound as-is: a dyn predicate only reads rows already
+    mapped in the current attempt — all at or before the candidate
+    row, hence closed — so a dyn rejection is a permanent predicate
+    failure and the touched-end deferral rules apply unchanged.
+
+    ``step_bounds`` (from :func:`_step_bounds`) marks each
+    forward-navigating step's undecided frontier; a run cut there
+    sets ``touched_end`` bit 2 inside the backtracker. DEFERRAL RULE
+    (failure and success alike): an attempt whose exploration was cut
+    at a frontier (bit 2 — the frontier mask decides when successors
+    close, even inside a closed WITHIN window), or at the closed-data
+    end while the pattern window is still open (bit 1 + window_open),
+    stops the scan with everything from its start kept buffered. For
+    COMPLETED matches this matters because every touched branch was
+    tried BEFORE the successful one (greedy preference order): once
+    the boundary row decides, greedy could prefer that longer branch
+    and a different match, so emitting now could be permanently wrong
+    — Flink's NFA likewise holds a partial match open at the stream
+    edge. A cut at a WITHIN edge strictly inside the closed prefix is
+    a DECIDED verdict (no bit, via ``undecided_n``), so WITHIN and
+    NEXT frontiers compose soundly.
+
+    With no open end, no ``step_bounds``, no ``dctx`` and no
+    ``within_us`` the scan shares one cross-start failure memo across
+    its attempts (see :func:`_match_at_ex`): every attempt then sees
+    the same masks, steps and scan end, and no verdict reads
+    ``touched_end``.
+
+    Returns ``(consumed, pending)`` — every row strictly before
+    ``consumed`` can leave the buffer (every future match starts at or
+    after it); ``pending`` is the start
+    position of the attempt that deferred (None when the scan ran to
+    the end), which callers must NOT expire rows at/after even when
+    their WITHIN window has passed (a frontier-deferred match may be
+    decided later by successors alone)."""
+    skip_idx = _skip_index(steps, after_match)
+    failed: "set | None" = (
+        set()
+        if open_end_wm_ms is None and step_bounds is None and dctx is None
+        and within_us is None
+        else None
+    )
+    # a final SEQUENCE-GROUP step is conservatively always growable at
+    # the closed-data end: its hit entry counts ROWS while its
+    # quantifier bounds REPETITIONS, so the bounded-final shortcut
+    # below would mix units — defer instead (never wrong, a later
+    # closing row decides)
+    final_hi = (
+        None if getattr(steps[-1], "group", None) else steps[-1].hi
+    )
+    run_ends = _run_ends(masks, n)
+    # jump between admissible starts when the first variable is
+    # required: a skipped position fails its PREDICATE (permanent,
+    # decided) — never a touched-end deferral — so the closed-prefix
+    # semantics are unchanged. EXCEPT under NEXT frontiers: the first
+    # step's mask at positions at/after its frontier is False only
+    # because the successor it reads is not closed yet (NaN), NOT a
+    # verdict — those positions are UNDECIDED potential starts and
+    # must defer, never be skipped (or expired) as failed.
+    starts = None
+    if steps[0].lo > 0 and getattr(steps[0], "group", None) is None:
+        starts = (np.flatnonzero(masks[0][ctx_n:]) + ctx_n).tolist()
+    undec0 = n if step_bounds is None else step_bounds[0]
+    s_ptr = 0
+    consumed = ctx_n
+    i = ctx_n
+    while i < n:
+        if starts is not None:
+            while s_ptr < len(starts) and starts[s_ptr] < i:
+                s_ptr += 1
+            nxt_start = starts[s_ptr] if s_ptr < len(starts) else None
+            u0 = max(i, undec0)
+            if u0 < n and (nxt_start is None or u0 < nxt_start):
+                # an undecided potential start precedes the next
+                # decided one — under the sequential-scan contract it
+                # must resolve first: defer there
+                return consumed, u0
+            if nxt_start is None:
+                break
+            i = nxt_start
+        n_i = n
+        if within_us is not None:
+            # exclusive window edge, matching Flink's NFA pruning rule
+            # (timestamp >= start + window aborts the partial match)
+            n_i = bisect.bisect_left(ts_list, ts_list[i] + within_us)
+        window_open = open_end_wm_ms is not None and (
+            within_us is None
+            or (ts_list[i] + within_us) // 1000 >= open_end_wm_ms
+        )
+        hit, touched_end = _match_at_ex(
+            masks, steps, i, n_i, run_ends, failed, dctx, step_bounds,
+            undecided_n=n, gout=gout,
+            max_steps=max_steps, pattern_desc=pattern_desc,
+            strict_budget=strict_budget,
+        )
+        # bit 2 (frontier cut) always defers; bit 1 (closed-data end)
+        # only while the pattern window is still open — a closed
+        # window admits no future row, so its end cuts are decided
+        undecided = (touched_end & 2) or ((touched_end & 1) and window_open)
+        if hit is None or not any(hit):
+            if undecided:
+                # ran out of decidable rows mid-pattern (or an all-
+                # optional pattern completed EMPTY while a quantified
+                # extension was cut at an undecided boundary): this
+                # start is undecided — stop here, keep its rows
+                # buffered
+                return consumed, i
+            # no match, or a degenerate all-empty match (every
+            # variable took 0 rows) — either way advance one row
+            i += 1
+            continue
+        first = min(seg[0] for seg in hit if seg)
+        last = max(seg[-1] for seg in hit if seg)
+        if (
+            window_open
+            and last == n - 1
+            and (final_hi is None or len(hit[-1]) < final_hi)
+            and n_i == n
+        ):
+            # the greedy final variable could still grow with future
+            # rows: keep everything from here buffered
+            return consumed, i
+        if undecided:
+            # a COMPLETED match whose exploration was cut at an
+            # undecided boundary (touched_end on success): every
+            # touched branch precedes the success in greedy preference
+            # order, so once the boundary row decides, greedy could
+            # prefer that LONGER run and a different match — defer the
+            # whole attempt rather than emit a possibly-wrong one
+            return consumed, i
+        on_match(hit, first, last)
+        if after_match == "past_last":
+            i = last + 1
+        elif after_match == "to_next_row":
+            i += 1
+        else:
+            skip_kind, skip_var = after_match
+            seg = hit[skip_idx]
+            if not seg:
+                raise ValueError(
+                    f"AFTER MATCH SKIP {skip_kind} {skip_var}: variable "
+                    "matched no row (Flink raises here too)"
+                )
+            nxt = seg[0] if skip_kind == "to_first" else seg[-1]
+            if nxt <= i:
+                raise ValueError(
+                    f"AFTER MATCH SKIP {skip_kind} {skip_var} would not "
+                    "advance the scan — infinite loop (Flink raises here too)"
+                )
+            i = nxt
+        consumed = i
+    return consumed, None
 
 
 class _Seg:
@@ -1077,6 +1308,179 @@ def _assemble_all_rows(
     return pd.DataFrame(data)
 
 
+#: the batch matcher's bucket count: its one hash exchange groups rows
+#: by ``pmod(xxhash64(key), 64)``, so the number of Python group
+#: invocations (and Arrow round trips) tracks this constant, not key
+#: cardinality — 20k user keys would be 20k tiny pandas calls (~2x
+#: slower on the conversion-funnel query)
+_BATCH_BUCKETS = 64
+
+
+def _key_scalar(v):
+    """One grouping-key value as a plain Python scalar: numpy numbers
+    unboxed, NaN/NaT folded to None so a NULL key read from state and
+    from new data unify."""
+    if v is None:
+        return None
+    try:
+        if v != v:  # NaN / NaT
+            return None
+    except Exception:
+        pass
+    if isinstance(v, np.generic) and v.dtype.kind in "biuf":
+        return v.item()
+    return v
+
+
+def _key_codes(karrs, nulls=None) -> "tuple[np.ndarray, list[tuple]]":
+    """Per-row key codes of a bucket — dense, numbered in order of
+    first appearance — and each code's key as a tuple of
+    :func:`_key_scalar` values. ``karrs`` holds one array per key
+    column. ``nulls`` is an optional per-row bitmask: bit ``i`` set
+    makes key field ``i`` NULL whatever ``karrs[i]`` holds there, so an
+    integer key column can arrive coalesced (exact int64) beside its
+    NULLs instead of as pandas' float64, which rounds values beyond
+    2**53 together. Columns are factorized one at a time and the codes
+    combined pairwise, re-densified at every step, so the combined
+    code cannot overflow."""
+    if nulls is not None and not nulls.any():
+        nulls = None
+    uniqs: list = []
+    fields: list = []  # per column: its code under each combined code
+    codes = None
+    for a in list(karrs) + ([] if nulls is None else [nulls]):
+        c, u = pd.factorize(a, use_na_sentinel=False)
+        uniqs.append(u)
+        if codes is None:
+            codes, fields = c, [np.arange(len(u))]
+        else:
+            codes, comb = pd.factorize(codes * len(u) + c)
+            fields = [f[comb // len(u)] for f in fields] + [comb % len(u)]
+    nk = len(karrs)
+    bits = None if nulls is None else uniqs[nk][fields[nk]].tolist()
+    fl = [f.tolist() for f in fields[:nk]]
+    keys = [
+        tuple(
+            None if bits is not None and bits[j] >> i & 1
+            else _key_scalar(uniqs[i][fl[i][j]])
+            for i in range(nk)
+        )
+        for j in range(len(fields[0]))
+    ]
+    return codes.astype(np.int64, copy=False), keys
+
+
+def _key_sort(codes, order_arrs, nkeys: int):
+    """One stable sort of a bucket's rows by (key code, ``order_arrs``)
+    and the key bounds in it: key ``k`` owns sorted rows
+    ``[bounds[k], bounds[k + 1])``, ties in arrival order. An order
+    column numpy cannot lexsort (object with NULLs) falls back to a
+    pandas mergesort, NULLs last."""
+    try:
+        order = np.lexsort(tuple(reversed(order_arrs)) + (codes,))
+    except TypeError:  # non-lexsortable dtype — pandas fallback
+        sort_arrs = [codes] + list(order_arrs)
+        order = pd.DataFrame(dict(enumerate(sort_arrs))).sort_values(
+            list(range(len(sort_arrs))), kind="mergesort"
+        ).index.to_numpy()
+    return order, np.searchsorted(codes[order], np.arange(nkeys + 1))
+
+
+def _bucket_masks(steps: Sequence[Step], frame: pd.DataFrame):
+    """Every step's masks and alternation choices over a whole
+    key-sorted bucket ``frame`` — one pandas pass per bucket, sliced
+    per key by :func:`_key_masks` — when every step is
+    :attr:`Step.local`; None otherwise, since a PREV/NEXT shift over
+    the bucket would read a neighbouring key's row."""
+    if not all(s.local for s in steps):
+        return None
+    return _group_masks(steps, frame), _alt_member_masks(steps, frame)
+
+
+def _key_masks(steps: Sequence[Step], frame: pd.DataFrame, bucket_masks,
+               a: int, b: int):
+    """``(masks, alt_masks)`` of the key owning rows ``[a, b)`` of a
+    key-sorted bucket ``frame``: slices of ``bucket_masks`` (from
+    :func:`_bucket_masks`) when given, else evaluated on the key's
+    0-based slice, so no shift crosses a key boundary and a ``where``
+    that builds a default-indexed Series still aligns."""
+    if bucket_masks is None:
+        sub = frame.iloc[a:b]
+        sub.index = pd.RangeIndex(b - a)  # not reset_index: no copy
+        return _group_masks(steps, sub), _alt_member_masks(steps, sub)
+    masks_all, alt_all = bucket_masks
+    return (
+        [
+            [mm[a:b] for mm in m] if isinstance(m, list) else m[a:b]
+            for m in masks_all
+        ],
+        {nm: (names, ch[a:b]) for nm, (names, ch) in alt_all.items()},
+    )
+
+
+def _match_emitter(steps: Sequence[Step], measures, key: tuple, cols: dict,
+                   alt_masks: dict, gout: "dict | None", out: list,
+                   seq: "list[int] | None" = None):
+    """The ``on_match`` callback of :func:`_scan_closed_prefix` for one
+    key: each match's zero-copy segments (:class:`_Seg`, plus
+    alternation-member and sequence-group-child segments) go to
+    ``measures`` and its result is appended to ``out``. ``seq`` is a
+    one-element list holding the key's MATCH_NUMBER ordinal so far,
+    incremented per match and passed as ``measures``' third argument;
+    None calls ``measures(key, segs)``."""
+
+    def on_match(hit, first, last):
+        segs = {s.name: _Seg(cols, pos) for s, pos in zip(steps, hit)}
+        if alt_masks:
+            _add_alt_segs(steps, hit, alt_masks, cols, segs)
+        if gout is not None:
+            # the scan calls on_match synchronously right after the
+            # successful attempt fills gout
+            _add_group_segs(steps, gout, cols, segs)
+        if seq is None:
+            out.append(measures(key, segs))
+        else:
+            seq[0] += 1
+            out.append(measures(key, segs, seq[0]))
+
+    return on_match
+
+
+def _output_columns(output_schema: str) -> "tuple[list[str], set[str]]":
+    """The column names of a DDL ``output_schema`` and those of
+    integer type."""
+    from pyspark.sql.types import IntegralType, StructType
+
+    fields = StructType.fromDDL(output_schema).fields
+    return (
+        [f.name for f in fields],
+        {f.name for f in fields if isinstance(f.dataType, IntegralType)},
+    )
+
+
+def _match_frame(out: list, out_cols: "list[str]", all_rows: bool,
+                 int_cols: "set[str]") -> pd.DataFrame:
+    """One output frame from a bucket's ``measures`` results: ALL ROWS
+    chunks assembled columnar (:func:`_assemble_all_rows`), ONE ROW
+    dicts as rows. pandas infers float64 for an integer column that
+    holds a NULL, which rounds values beyond 2**53; such a column of
+    ``int_cols`` whose values are all integers or None goes to Arrow
+    as exact Python ints instead."""
+    if all_rows:
+        return _assemble_all_rows(out, out_cols)
+    pdf = pd.DataFrame(out, columns=out_cols)
+    for c in int_cols:
+        if pdf[c].dtype.kind == "f":
+            vals = [r.get(c) for r in out]
+            if all(v is None or isinstance(v, (int, np.integer))
+                   for v in vals):
+                pdf[c] = pd.Series(
+                    [None if v is None else int(v) for v in vals],
+                    dtype=object,
+                )
+    return pdf
+
+
 def match_pattern(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -1084,7 +1488,6 @@ def match_pattern(
     steps: Sequence[Step],
     measures: Callable[[tuple, dict[str, pd.DataFrame]], dict[str, Any]],
     output_schema: str,
-    group_buckets: int | None = 64,
     after_match: "str | tuple[str, str]" = "past_last",
     within_us: "int | None" = None,
     all_rows: bool = False,
@@ -1124,13 +1527,21 @@ def match_pattern(
     scan end at the window edge enforces the semantics exactly — the
     same rule the streaming matcher applies.
 
-    ``group_buckets`` bounds the number of PYTHON group invocations:
-    the shuffle keys on ``hash(key) % group_buckets`` and the per-key
-    NFA loops inside pandas, so Arrow round-trip count tracks the
-    bucket count, not key cardinality (20k user keys = 20k tiny
-    pandas calls otherwise; measured ~2x on the conversion-funnel
-    query). Semantics are identical — every key is still matched in
-    isolation. ``None`` restores one-group-per-key.
+    A NULL ``key_cols`` value is a key like any other: the rows whose
+    key is NULL form one partition of their own (SQL ``PARTITION BY``
+    semantics, as Spark's ``GROUP BY`` keeps them), and ``measures``
+    receives None in that key field. Integer key columns reach pandas
+    coalesced beside a NULL bitmask, so their keys stay exact next to
+    a NULL: the key tuple, measures and ALL ROWS output read exact
+    ints beside None, while DEFINE predicates see the column as pandas
+    carries a nullable integer (float64 with NaN).
+
+    Execution is the streaming settle's shape on complete data: one
+    hash exchange on ``pmod(xxhash64(key), 64)``; per bucket the keys
+    are factorized (:func:`_key_codes`), the rows sorted once by (key,
+    ``order_cols``) (:func:`_key_sort`), the DEFINE masks evaluated
+    once over the bucket when every step is :attr:`Step.local` and per
+    key otherwise, and :func:`_scan_closed_prefix` scans each key.
 
     ``all_rows=True`` is the ``ALL ROWS PER MATCH`` emission contract:
     ``measures`` is called as ``measures(key, segs, n_match)`` — the
@@ -1141,234 +1552,90 @@ def match_pattern(
     assemble into ONE frame (:func:`_assemble_all_rows`), no per-row
     Python loop anywhere on the path.
     """
-    step_list = list(steps)
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegralType
 
-    out_cols = [f.name for f in StructType.fromDDL(output_schema).fields]
-    if isinstance(after_match, tuple):
-        skip_kind, skip_var = after_match
-        if skip_kind not in ("to_first", "to_last"):
-            raise ValueError(f"unknown after_match {after_match!r}")
-        skip_idx = next(
-            (k for k, s in enumerate(step_list) if s.name == skip_var), None
-        )
-        if skip_idx is None:
-            raise ValueError(f"after_match variable {skip_var!r} not in pattern")
-    elif after_match not in ("past_last", "to_next_row"):
-        raise ValueError(f"unknown after_match {after_match!r}")
-
-    def _resume(i: int, hit: list) -> int:
-        if after_match == "past_last":
-            return max(seg[-1] for seg in hit if seg) + 1
-        if after_match == "to_next_row":
-            return i + 1
-        seg = hit[skip_idx]
-        if not seg:
-            raise ValueError(
-                f"AFTER MATCH SKIP {after_match[0]} {skip_var}: variable "
-                "matched no row (Flink raises here too)"
-            )
-        nxt = seg[0] if after_match[0] == "to_first" else seg[-1]
-        if nxt <= i:
-            raise ValueError(
-                f"AFTER MATCH SKIP {after_match[0]} {skip_var} would not "
-                "advance the scan — infinite loop (Flink raises here too)"
-            )
-        return nxt
-
+    step_list = list(steps)
+    _skip_index(step_list, after_match)  # fail before any Spark job
+    out_cols, int_cols = _output_columns(output_schema)
     has_group = any(s.group is not None for s in step_list)
     has_dyn = any(s.dyn is not None for s in step_list)
-    # bucket-level mask evaluation (run_bucket fast path) is sound only
-    # when every step's static mask is row-local (Step.local): a
-    # shift-based PREV/NEXT mask evaluated over a concatenated
-    # multi-key frame would leak values across key boundaries
-    bucket_local = all(s.local for s in step_list)
+    track_no = all_rows or number_matches
+    ocols = list(order_cols)
+    data_cols = list(df.columns)
+    fields = {f.name.lower(): f for f in df.schema.fields}
+    # a nullable integer key travels coalesced, its NULLs as bits of one
+    # bitmask column: pandas would carry it as float64, which rounds
+    # keys beyond 2**53 together
+    proj = {c: df[c] for c in data_cols}
+    null_keys: list = []  # (bit, column name)
+    nulls = None
+    for i, c in enumerate(key_cols):
+        f = fields.get(c.lower())
+        if f is not None and f.nullable and isinstance(
+            f.dataType, IntegralType
+        ):
+            null_keys.append((i, f.name))
+            proj[f.name] = F.coalesce(
+                df[f.name], F.lit(0).cast(f.dataType)
+            ).alias(f.name)
+            bit = F.when(df[f.name].isNull(), 1 << i).otherwise(0)
+            nulls = bit if nulls is None else nulls + bit
+    proj = list(proj.values())
+    if nulls is not None:
+        proj.append(nulls.alias("__cep_kn"))
 
-    def scan_core(
-        key: tuple,
-        n: int,
-        masks: list,
-        alt_masks: dict,
-        cols: dict,
-        ts,
-    ) -> list:
-        """Per-key NFA scan over precomputed masks/columns — the loop
-        both the per-key and the bucket-sliced paths share."""
-        run_ends = _run_ends(masks, n)
-        gout: "dict | None" = {} if has_group else None
-        dctx = _DynCtx(cols) if has_dyn else None
-        # cross-start failure memo — sound here because every start
-        # shares masks/steps and the batch scan ignores touched_end;
-        # WITHIN varies the scan bound n_i per start, and dyn steps
-        # vary by upstream assignment, so memo off for both
-        failed: "set | None" = (
-            set() if within_us is None and not has_dyn else None
+    def run_bucket(_bkey: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        kn = pdf["__cep_kn"].to_numpy() if null_keys else None
+        codes, keys = _key_codes([pdf[c].to_numpy() for c in key_cols], kn)
+        exact: dict = {}
+        if kn is not None and kn.any():
+            # DEFINEs read a NULL key as pandas carries a nullable
+            # integer (float64 with NaN); measures and ALL ROWS output
+            # read exact ints beside None
+            for i, c in null_keys:
+                null = (kn >> i & 1) == 1
+                if not null.any():
+                    continue
+                exact[c] = pdf[c].to_numpy().astype(object)
+                exact[c][null] = None
+                pdf[c] = pdf[c].astype("float64").mask(null)
+        order, bnds = _key_sort(
+            codes, [pdf[c].to_numpy() for c in ocols], len(keys)
         )
-        # jump between admissible starts: when the first variable is
-        # required (lo > 0) a match can only begin where its mask holds,
-        # so positions outside masks[0] need no NFA attempt at all
-        # (a group-first pattern skips the jump — its masks entry is
-        # the per-child list, and the group's first admissible row is
-        # rep-structure-dependent)
-        starts = (
-            np.flatnonzero(masks[0]).tolist()
-            if step_list[0].lo > 0 and step_list[0].group is None
+        frame = pdf.take(order).reset_index(drop=True)
+        cols_all = {
+            c: exact[c][order] if c in exact else frame[c].to_numpy()
+            for c in data_cols
+        }
+        bmasks = _bucket_masks(step_list, frame)
+        ts_all = (
+            frame[ocols[0]].to_numpy("int64") if within_us is not None
             else None
         )
-        s_ptr = 0
         out: list = []
-        n_match = 0
-        i = 0
-        while i < n:
-            if starts is not None:
-                while s_ptr < len(starts) and starts[s_ptr] < i:
-                    s_ptr += 1
-                if s_ptr == len(starts):
-                    break
-                i = starts[s_ptr]
-            n_i = n
-            if ts is not None:
-                # Flink's NFA prunes once timestamp >= start + window —
-                # the window edge is EXCLUSIVE (a row landing exactly on
-                # first_ts + within is outside), hence side='left'
-                n_i = int(np.searchsorted(ts, ts[i] + within_us, side="left"))
-            hit = _match_at(
-                masks, step_list, i, n_i, run_ends, failed, dctx, gout=gout,
+        for ki, key in enumerate(keys):
+            a, b = int(bnds[ki]), int(bnds[ki + 1])
+            cols = {c: v[a:b] for c, v in cols_all.items()}
+            masks, alt_masks = _key_masks(step_list, frame, bmasks, a, b)
+            gout: "dict | None" = {} if has_group else None
+            _scan_closed_prefix(
+                step_list, masks,
+                None if ts_all is None else ts_all[a:b].tolist(), b - a,
+                _match_emitter(
+                    step_list, measures, key, cols, alt_masks, gout, out,
+                    [0] if track_no else None,
+                ),
+                within_us=within_us, after_match=after_match,
+                dctx=_DynCtx(cols) if has_dyn else None, gout=gout,
                 max_steps=max_steps, pattern_desc=pattern_desc,
                 strict_budget=strict_budget,
             )
-            if hit is None or not any(hit):
-                # no match, or a degenerate all-empty match (every
-                # variable took 0 rows) — either way advance one row
-                i += 1
-                continue
-            segs = {s.name: _Seg(cols, pos) for s, pos in zip(step_list, hit)}
-            if alt_masks:
-                _add_alt_segs(step_list, hit, alt_masks, cols, segs)
-            if gout is not None:
-                _add_group_segs(step_list, gout, cols, segs)
-            # ALL ROWS PER MATCH measures return one columnar chunk
-            # per match; the default returns the match's single row
-            if all_rows or number_matches:
-                n_match += 1
-                out.append(measures(key, segs, n_match))
-            else:
-                out.append(measures(key, segs))
-            i = _resume(i, hit)
-        return out
+        return _match_frame(out, out_cols, all_rows, int_cols)
 
-    def run_one(key: tuple, pdf: pd.DataFrame) -> list[dict[str, Any]]:
-        try:
-            # stable multi-key sort straight on the numpy arrays —
-            # DataFrame.sort_values factorizes every key column per
-            # key group, a measured ~25 % of matcher wall time
-            order = np.lexsort(
-                tuple(pdf[c].to_numpy() for c in reversed(list(order_cols)))
-            )
-            pdf = pdf.take(order).reset_index(drop=True)
-        except TypeError:  # non-lexsortable dtype — pandas fallback
-            pdf = pdf.sort_values(
-                list(order_cols), kind="mergesort"
-            ).reset_index(drop=True)
-        n = len(pdf)
-        masks = _group_masks(step_list, pdf)
-        alt_masks = _alt_member_masks(step_list, pdf)
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        ts = (
-            pdf[order_cols[0]].to_numpy("int64")
-            if within_us is not None else None
-        )
-        return scan_core(key, n, masks, alt_masks, cols, ts)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = run_one(key, pdf)
-        if all_rows:
-            return _assemble_all_rows(out, out_cols)
-        if not out:
-            return pd.DataFrame(columns=out_cols)
-        return pd.DataFrame(out)
-
-    if group_buckets is None:
-        return df.groupBy(*key_cols).applyInPandas(run, schema=output_schema)
-
-    kcols = list(key_cols)
-    ocols = list(order_cols)
-
-    def run_bucket(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # One stable lexsort of the WHOLE bucket by (key, order), one
-        # take, one column→ndarray conversion — the per-key
-        # DataFrame.take / groupby sub-frame construction was the
-        # dominant constant factor with ~1.5k keys per bucket (r14
-        # profile: ~40 % of matcher wall time). With every step
-        # row-local (bucket_local) the static masks are additionally
-        # evaluated once over the sorted bucket and SLICED per key.
-        out: list = []
-        n_all = len(pdf)
-        fast = n_all > 0
-        if fast:
-            try:
-                sort_arrs = [pdf[c].to_numpy() for c in kcols + ocols]
-                order = np.lexsort(tuple(reversed(sort_arrs)))
-            except TypeError:  # non-lexsortable dtype
-                fast = False
-            else:
-                # pandas groupby drops null keys (dropna=True); the
-                # sliced path would keep them — fall back to the
-                # per-key path so semantics stay identical
-                if any(pd.isna(a).any() for a in sort_arrs[: len(kcols)]):
-                    fast = False
-        if fast:
-            pdf_s = pdf.take(order).reset_index(drop=True)
-            cols_all = {c: pdf_s[c].to_numpy() for c in pdf_s.columns}
-            karrs = [cols_all[c] for c in kcols]
-            chg = np.zeros(n_all, dtype=bool)
-            chg[0] = True
-            for a in karrs:
-                chg[1:] |= a[1:] != a[:-1]
-            bounds = np.flatnonzero(chg).tolist()
-            bounds.append(n_all)
-            masks_all = _group_masks(step_list, pdf_s) if bucket_local else None
-            alt_all = (
-                _alt_member_masks(step_list, pdf_s) if bucket_local else None
-            )
-            ts_all = (
-                pdf_s[ocols[0]].to_numpy("int64")
-                if within_us is not None else None
-            )
-            for gi in range(len(bounds) - 1):
-                a, b = bounds[gi], bounds[gi + 1]
-                key = tuple(arr[a] for arr in karrs)
-                cols = {c: v[a:b] for c, v in cols_all.items()}
-                if masks_all is not None:
-                    masks = [
-                        [mm[a:b] for mm in m] if isinstance(m, list)
-                        else m[a:b]
-                        for m in masks_all
-                    ]
-                    alt_masks = {
-                        nm: (names, choice[a:b])
-                        for nm, (names, choice) in alt_all.items()
-                    }
-                else:
-                    sub = pdf_s.iloc[a:b]
-                    masks = _group_masks(step_list, sub)
-                    alt_masks = _alt_member_masks(step_list, sub)
-                ts = ts_all[a:b] if ts_all is not None else None
-                out.extend(scan_core(key, b - a, masks, alt_masks, cols, ts))
-        else:
-            for kv, sub in pdf.groupby(kcols, sort=False):
-                kt = kv if isinstance(kv, tuple) else (kv,)
-                out.extend(run_one(kt, sub))
-        if all_rows:
-            return _assemble_all_rows(out, out_cols)
-        if not out:
-            return pd.DataFrame(columns=out_cols)
-        return pd.DataFrame(out)
-
-    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(group_buckets))
+    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(_BATCH_BUCKETS))
     return (
-        df.withColumn("__cep_bucket", bucket)
+        df.select(*proj, bucket.alias("__cep_bucket"))
         .groupBy("__cep_bucket")
         .applyInPandas(run_bucket, schema=output_schema)
     )

@@ -3,9 +3,12 @@
 Flink's CEP operator (``CEP.pattern`` / SQL ``MATCH_RECOGNIZE`` on a
 stream) buffers each key's out-of-order events, sorts them as the
 watermark closes their timestamps, runs the NFA over the closed
-prefix, and emits completed matches. The batch matcher lives in
-:mod:`flink_commons_spark.operators.cep`; this module holds its one
-streaming harness, :func:`stream_match_pattern`, on
+prefix, and emits completed matches. The batch matcher and the core
+both executors share — key codes and the one bucket sort, DEFINE
+masks per bucket or per key, the one scan
+(:func:`operators.cep._scan_closed_prefix`) and the one match emitter
+— live in :mod:`flink_commons_spark.operators.cep`; this module holds
+the streaming harness, :func:`stream_match_pattern`, on
 ``applyInPandasWithState`` — the operator the SQL front door
 (``plans/match_recognize.py``) routes every streaming
 MATCH_RECOGNIZE statement to:
@@ -14,10 +17,9 @@ MATCH_RECOGNIZE statement to:
   Flink's CEP operator does for event time — matching must not run on
   an unsorted open prefix);
 - a timer is registered just past the key's newest event; when the
-  watermark passes it, the buffer is sorted and
-  :func:`_scan_closed_prefix` runs the batch backtracker over the
-  closed prefix (all four AFTER MATCH SKIP modes), emitting completed
-  matches;
+  watermark passes it, the buffer is sorted and the shared scan runs
+  the backtracker over the closed prefix (all four AFTER MATCH SKIP
+  modes), emitting completed matches;
 - rows at or beyond the watermark stay buffered for the next firing
   (here: keys whose newest event sits ON the final watermark never
   close — the same "still open" rule the inactivity-session timer
@@ -71,229 +73,6 @@ def bucket_column(key_cols: "list[str]", n: int):
 
     return F.pmod(F.xxhash64(*key_cols), F.lit(n))
 
-
-def _scan_closed_prefix(
-    steps,
-    masks,
-    ts_list,
-    n: int,
-    on_match,
-    *,
-    within_us: "int | None" = None,
-    open_end_wm_ms: "int | None" = None,
-    after_match: "str | tuple[str, str]" = "past_last",
-    ctx_n: int = 0,
-    dctx=None,
-    step_bounds=None,
-    gout=None,
-    max_steps: "int | None" = None,
-    pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
-):
-    """The sequential scan over one key's sorted closed prefix — the
-    streaming twin of the batch matcher's per-key loop. ``steps`` are
-    batch :class:`operators.cep.Step` objects, ``masks`` their
-    precomputed boolean arrays over ALL ``n`` rows (context included),
-    ``ts_list`` the rows' event-time micros, and ``on_match(hit,
-    first, last)`` consumes each completed match.
-
-    ``within_us`` (Flink's ``PATTERN ... WITHIN interval``) bounds an
-    attempt starting at row ``i`` to rows whose event time is below
-    ``ts_list[i] + within_us`` — the exclusive edge of Flink's NFA
-    pruning rule; matches are contiguous, so bounding the scan end
-    enforces exactly "the match completes within the interval".
-
-    ``open_end_wm_ms`` marks the rows as the CLOSED PREFIX of a live
-    stream (value = current watermark ms); None scans them as complete
-    batch data. On a closed prefix two kinds of attempt are
-    NOT-YET-DECIDED and stop the scan with everything from their start
-    kept buffered (emitting or discarding now would diverge from the
-    batch semantics once future rows arrive):
-
-    - a COMPLETED match whose greedy final variable ends on the last
-      row while still below its upper bound — future rows could
-      extend it (Flink likewise holds a greedy trailing quantifier
-      open until a non-matching row or the WITHIN window closes);
-    - a FAILED attempt that ran out of rows mid-pattern rather than
-      failing a predicate (the backtracker's ``touched_end``) — future
-      rows could complete it, and under the sequential-scan contract
-      no later start may resolve before an earlier undecided one.
-
-    Both deferrals are waived once the attempt's WITHIN window (if
-    any) is closed by the watermark — no admissible future row exists.
-
-    ``after_match`` is the resume strategy — all four of Flink's
-    AFTER MATCH SKIP modes: ``"past_last"`` (the default),
-    ``"to_next_row"`` (overlapping matches), or
-    ``("to_first", var)`` / ``("to_last", var)`` — resume AT the
-    first/last row the named pattern variable matched (that row stays
-    buffered: it may start the next match). Like the batch matcher
-    (and Flink), a skip-to that would not advance the scan, or whose
-    variable matched no row, raises.
-
-    ``ctx_n`` marks the first ``ctx_n`` rows as CONTEXT: already
-    consumed, present only so PREV-navigating masks see their true
-    predecessor — the scan starts past them and they are never
-    matched again.
-
-    ``dctx`` (an :class:`operators.cep._DynCtx` over the closed
-    prefix's column arrays) enables match-state-dependent ``Step.dyn``
-    predicates. They are watermark-sound as-is: a dyn predicate only
-    reads rows already mapped in the current attempt — all at or
-    before the candidate row, hence closed — so a dyn rejection is a
-    permanent predicate failure and the touched-end deferral rules
-    apply unchanged.
-
-    ``step_bounds`` (from :func:`operators.cep._step_bounds`) marks
-    each forward-navigating step's undecided frontier; a run cut there
-    sets ``touched_end`` bit 2 inside the backtracker. DEFERRAL RULE
-    (failure and success alike): an attempt whose exploration was cut
-    at a frontier (bit 2 — the frontier mask decides when successors
-    close, even inside a closed WITHIN window), or at the closed-data
-    end while the pattern window is still open (bit 1 + window_open),
-    stops the scan with everything from its start kept buffered. For
-    COMPLETED matches this matters because every touched branch was
-    tried BEFORE the successful one (greedy preference order): once
-    the boundary row decides, greedy could prefer that longer branch
-    and a different match, so emitting now could be permanently wrong
-    — Flink's NFA likewise holds a partial match open at the stream
-    edge. A cut at a WITHIN edge strictly inside the closed prefix is
-    a DECIDED verdict (no bit, via ``undecided_n``), so WITHIN and
-    NEXT frontiers compose soundly.
-
-    Returns ``(consumed, pending)`` — every row strictly before
-    ``consumed`` can leave the buffer (every future match starts at or
-    after it); ``pending`` is the start
-    position of the attempt that deferred (None when the scan ran to
-    the end), which callers must NOT expire rows at/after even when
-    their WITHIN window has passed (a frontier-deferred match may be
-    decided later by successors alone)."""
-    import bisect
-
-    import numpy as np
-
-    from flink_commons_spark.operators.cep import _match_at_ex, _run_ends
-
-    skip_idx = None
-    if isinstance(after_match, tuple):
-        skip_kind, skip_var = after_match
-        if skip_kind not in ("to_first", "to_last"):
-            raise ValueError(f"unknown after_match {after_match!r}")
-        skip_idx = next(
-            (k for k, s in enumerate(steps) if s.name == skip_var), None
-        )
-        if skip_idx is None:
-            raise ValueError(f"after_match variable {skip_var!r} not in pattern")
-    elif after_match not in ("past_last", "to_next_row"):
-        raise ValueError(f"unknown after_match {after_match!r}")
-    # a final SEQUENCE-GROUP step is conservatively always growable at
-    # the closed-data end: its hit entry counts ROWS while its
-    # quantifier bounds REPETITIONS, so the bounded-final shortcut
-    # below would mix units — defer instead (never wrong, a later
-    # closing row decides)
-    final_hi = (
-        None if getattr(steps[-1], "group", None) else steps[-1].hi
-    )
-    run_ends = _run_ends(masks, n)
-    # jump between admissible starts when the first variable is
-    # required: a skipped position fails its PREDICATE (permanent,
-    # decided) — never a touched-end deferral — so the closed-prefix
-    # semantics are unchanged. EXCEPT under NEXT frontiers: the first
-    # step's mask at positions at/after its frontier is False only
-    # because the successor it reads is not closed yet (NaN), NOT a
-    # verdict — those positions are UNDECIDED potential starts and
-    # must defer, never be skipped (or expired) as failed.
-    starts = None
-    if steps[0].lo > 0 and getattr(steps[0], "group", None) is None:
-        starts = [p for p in np.flatnonzero(masks[0]).tolist() if p >= ctx_n]
-    undec0 = n if step_bounds is None else step_bounds[0]
-    s_ptr = 0
-    consumed = ctx_n
-    i = ctx_n
-    while i < n:
-        if starts is not None:
-            while s_ptr < len(starts) and starts[s_ptr] < i:
-                s_ptr += 1
-            nxt_start = starts[s_ptr] if s_ptr < len(starts) else None
-            u0 = max(i, undec0)
-            if u0 < n and (nxt_start is None or u0 < nxt_start):
-                # an undecided potential start precedes the next
-                # decided one — under the sequential-scan contract it
-                # must resolve first: defer there
-                return consumed, u0
-            if nxt_start is None:
-                break
-            i = nxt_start
-        n_i = n
-        if within_us is not None:
-            # exclusive window edge, matching Flink's NFA pruning rule
-            # (timestamp >= start + window aborts the partial match)
-            n_i = bisect.bisect_left(ts_list, ts_list[i] + within_us)
-        window_open = open_end_wm_ms is not None and (
-            within_us is None
-            or (ts_list[i] + within_us) // 1000 >= open_end_wm_ms
-        )
-        # no failure memo here: the streaming scan consumes touched_end
-        hit, touched_end = _match_at_ex(
-            masks, steps, i, n_i, run_ends, None, dctx, step_bounds,
-            undecided_n=n, gout=gout,
-            max_steps=max_steps, pattern_desc=pattern_desc,
-            strict_budget=strict_budget,
-        )
-        # bit 2 (frontier cut) always defers; bit 1 (closed-data end)
-        # only while the pattern window is still open — a closed
-        # window admits no future row, so its end cuts are decided
-        undecided = (touched_end & 2) or ((touched_end & 1) and window_open)
-        if hit is None or not any(hit):
-            if undecided:
-                # ran out of decidable rows mid-pattern (or an all-
-                # optional pattern completed EMPTY while a quantified
-                # extension was cut at an undecided boundary): this
-                # start is undecided — stop here, keep its rows
-                # buffered
-                return consumed, i
-            i += 1
-            continue
-        first = min(seg[0] for seg in hit if seg)
-        last = max(seg[-1] for seg in hit if seg)
-        if (
-            window_open
-            and last == n - 1
-            and (final_hi is None or len(hit[-1]) < final_hi)
-            and n_i == n
-        ):
-            # the greedy final variable could still grow with future
-            # rows: keep everything from here buffered
-            return consumed, i
-        if undecided:
-            # a COMPLETED match whose exploration was cut at an
-            # undecided boundary (touched_end on success): every
-            # touched branch precedes the success in greedy preference
-            # order, so once the boundary row decides, greedy could
-            # prefer that LONGER run and a different match — defer the
-            # whole attempt rather than emit a possibly-wrong one
-            return consumed, i
-        on_match(hit, first, last)
-        if after_match == "past_last":
-            i = last + 1
-        elif after_match == "to_next_row":
-            i += 1
-        else:
-            seg = hit[skip_idx]
-            if not seg:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {skip_kind} {skip_var}: variable "
-                    "matched no row (Flink raises here too)"
-                )
-            nxt = seg[0] if skip_kind == "to_first" else seg[-1]
-            if nxt <= i:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {skip_kind} {skip_var} would not "
-                    "advance the scan — infinite loop (Flink raises here too)"
-                )
-            i = nxt
-        consumed = i
-    return consumed, None
 
 #: Spark SQL column type → (state field type, numpy dtype or None)
 #: Numeric buffers live in state as a single PACKED ``binary`` blob
@@ -380,8 +159,8 @@ def stream_match_pattern(
     a ``measures(key, segs)`` callable over zero-copy segment views.
     This is what the SQL front door routes streaming sources to.
 
-    State is BUCKETED, like the batch executor's ``group_buckets``
-    shuffle key: the stateful operator groups on
+    State is BUCKETED, like the batch executor's shuffle key: the
+    stateful operator groups on
     :func:`bucket_column` over :func:`resolve_bucket_count` buckets
     and each state row holds the PACKED MULTI-KEY buffers of every key
     in the bucket (per-column concatenated blobs + per-key offsets/ctx/
@@ -392,22 +171,23 @@ def stream_match_pattern(
     Python work (r14 profile) — with buckets the protocol cost tracks
     bucket count.
 
-    A settle works on the whole BUCKET, the shape of the batch
-    executor's ``run_bucket``: one stable lexsort of the bucket's
-    buffered and new rows by (key, ``order_cols``); each key's closed
-    prefix from one cumulative count of rows below the watermark; one
-    frame of the bucket's closed rows. When every step is
+    A settle works on the whole BUCKET with the batch executor's code
+    (:mod:`operators.cep`): one stable sort of the bucket's buffered
+    and new rows by (key, ``order_cols``) (``_key_codes``,
+    ``_key_sort``); each key's closed prefix from one cumulative count
+    of rows below the watermark; one frame of the bucket's closed
+    rows. When every step is
     :attr:`Step.local <operators.cep.Step>` (row-local DEFINEs) the
     DEFINE and alternation masks are evaluated ONCE over that frame and
     sliced per key; otherwise (a PREV/NEXT-navigating step) they are
     evaluated per key on the key's slice, so no shift reads a
-    neighbouring key's row. :func:`_scan_closed_prefix` then runs per
-    key on slices of the shared column arrays and masks — matching
-    stays strictly per key (per-key timers become the bucket's min; an
-    early settle of an unaffected key is a no-op by construction
-    because verdicts only depend on the watermark, which is
-    bucket-global) — and the kept rows are re-packed with one index
-    take and one encode per column.
+    neighbouring key's row (``_bucket_masks``, ``_key_masks``).
+    ``_scan_closed_prefix`` then runs per key on slices of the shared
+    column arrays and masks — matching stays strictly per key
+    (per-key timers become the bucket's min; an early settle of an
+    unaffected key is a no-op by construction because verdicts only
+    depend on the watermark, which is bucket-global) — and the kept
+    rows are re-packed with one index take and one encode per column.
 
     Key columns must be of a :data:`_BUF_TYPES` type (anything
     else raises when the query is built), and a NULL numeric key fails
@@ -451,7 +231,7 @@ def stream_match_pattern(
     read — each key's state is exactly those arrays over its unmatched
     buffer plus up to ``ctx_rows`` context rows. Closed-prefix
     semantics (deferral, WITHIN, AFTER MATCH SKIP) are those of
-    :func:`_scan_closed_prefix`.
+    :func:`operators.cep._scan_closed_prefix`.
 
     CONTEXT rows: when a match consumes rows, the last ``ctx_rows``
     consumed rows stay buffered so the next row's PREV still sees its
@@ -496,23 +276,23 @@ def stream_match_pattern(
     import pandas as pd
 
     from flink_commons_spark.operators.cep import (
+        _bucket_masks,
         _DynCtx,
-        _Seg,
-        _add_alt_segs,
-        _add_group_segs,
-        _alt_member_masks,
-        _assemble_all_rows,
-        _group_masks,
+        _key_codes,
+        _key_masks,
+        _key_scalar,
+        _key_sort,
+        _match_emitter,
+        _match_frame,
+        _output_columns,
+        _scan_closed_prefix,
+        _skip_index,
         _step_bounds,
     )
 
     has_dyn = any(getattr(s, "dyn", None) is not None for s in steps)
     has_next = any(getattr(s, "next_depth", 0) for s in steps)
     has_group = any(getattr(s, "group", None) is not None for s in steps)
-    # DEFINE masks once per bucket only when every step is row-local
-    # (Step.local): a PREV/NEXT shift over the bucket-wide frame would
-    # read a neighbouring key's rows
-    bucket_local = all(getattr(s, "local", False) for s in steps)
     # MATCH_NUMBER tracking: ALL ROWS always; ONE ROW when the
     # measures read the ordinal (``number_matches``) — the ``nmatch``
     # state field is appended ONLY in these modes, so numbered and
@@ -526,8 +306,9 @@ def stream_match_pattern(
                 f"type {t!r} — supported: {sorted(_BUF_TYPES)} (cast "
                 "timestamps to epoch micros in the source view)"
             )
-    out_cols = [f.strip().split()[0] for f in output_schema.split(",")]
+    out_cols, int_cols = _output_columns(output_schema)
     step_list = list(steps)
+    _skip_index(step_list, after_match)  # fail before the query starts
     nbuf = len(buffer_cols)
 
     n_buckets = resolve_bucket_count(sdf.sparkSession)
@@ -553,19 +334,6 @@ def stream_match_pattern(
         + ["__mro binary", "__mrc binary", "__mrs binary"]
         + (["__mrn binary"] if track_no else [])
     )
-
-    def _key_scalar(v):
-        """One grouping-key value as a plain Python scalar (numpy
-        scalars unboxed, NaN folded to None so a NULL string key from
-        state and from new data unify)."""
-        if v is None:
-            return None
-        try:
-            if v != v:  # NaN
-                return None
-        except Exception:
-            pass
-        return v.item() if hasattr(v, "item") else v
 
     def _key_blobs(keys):
         """The bucket's per-key-field state values over ``keys`` (key
@@ -623,22 +391,9 @@ def stream_match_pattern(
                         "COALESCE the key in the source view"
                     )
             if len(new):
-                if nkf == 1:
-                    codes, uniq = pd.factorize(
-                        new[key_cols[0]], use_na_sentinel=False
-                    )
-                    uniq_keys = [(_key_scalar(u),) for u in uniq]
-                else:
-                    codes, uniq = pd.factorize(
-                        pd.Series(
-                            list(zip(*(new[c] for c in key_cols))),
-                            dtype=object,
-                        ),
-                        use_na_sentinel=False,
-                    )
-                    uniq_keys = [
-                        tuple(_key_scalar(x) for x in u) for u in uniq
-                    ]
+                codes, uniq_keys = _key_codes(
+                    [new[c].to_numpy() for c in key_cols]
+                )
                 remap = np.empty(len(uniq_keys), dtype=np.int64)
                 for j, k in enumerate(uniq_keys):
                     i = key_index.get(k)
@@ -683,17 +438,10 @@ def stream_match_pattern(
         # key ki owns sorted rows [bnds[ki], bnds[ki + 1]), in the order
         # the batch matcher sorts a key (state rows before new rows on
         # ties)
-        try:
-            order = np.lexsort(
-                tuple(arrs[c] for c in reversed(order_cols)) + (comb_codes,)
-            )
-        except TypeError:  # non-lexsortable dtype — pandas fallback
-            sort_arrs = [comb_codes] + [arrs[c] for c in order_cols]
-            order = pd.DataFrame(dict(enumerate(sort_arrs))).sort_values(
-                list(range(len(sort_arrs))), kind="mergesort"
-            ).index.to_numpy()
+        order, bnds = _key_sort(
+            comb_codes, [arrs[c] for c in order_cols], nuni
+        )
         arrs = {c: a[order] for c, a in arrs.items()}
-        bnds = np.searchsorted(comb_codes[order], np.arange(nuni + 1))
         ts = arrs[ts_col].astype(np.int64, copy=False)
         # ---- each key's CLOSED prefix (event time below the watermark
         # — a prefix, since the event time leads the per-key order):
@@ -709,14 +457,12 @@ def stream_match_pattern(
         # evaluates per key on the key's slice, so no shift crosses a
         # key boundary
         ccols: dict = {}
-        frame = masks_all = alt_all = None
+        frame = bmasks = None
         if cb[-1]:
             ren = frame_renames or {}
             ccols = {ren.get(c, c): a[closed] for c, a in arrs.items()}
             frame = pd.DataFrame(ccols)
-            if bucket_local:
-                masks_all = _group_masks(step_list, frame)
-                alt_all = _alt_member_masks(step_list, frame)
+            bmasks = _bucket_masks(step_list, frame)
         # ---- scan every key's closed prefix (idempotent for keys
         # whose decision horizon has not moved — verdicts only depend
         # on the bucket-global watermark)
@@ -731,45 +477,19 @@ def stream_match_pattern(
             seq = [int(s_nmatch[ki]) if track_no and ki < nskeys else 0]
             consumed, pending = nctx, None
             if nc > nctx:
-                key = order_keys[ki]
                 cols = {c: v[ca:ca + nc] for c, v in ccols.items()}
-                if masks_all is None:
-                    # 0-based like a standalone key frame, so a `where`
-                    # that builds a default-indexed Series still aligns
-                    sub = frame.iloc[ca:ca + nc].reset_index(drop=True)
-                    masks = _group_masks(step_list, sub)
-                    alt_masks = _alt_member_masks(step_list, sub)
-                else:
-                    masks = [
-                        [mm[ca:ca + nc] for mm in m] if isinstance(m, list)
-                        else m[ca:ca + nc]
-                        for m in masks_all
-                    ]
-                    alt_masks = {
-                        nm: (names, choice[ca:ca + nc])
-                        for nm, (names, choice) in alt_all.items()
-                    }
+                masks, alt_masks = _key_masks(
+                    step_list, frame, bmasks, ca, ca + nc
+                )
                 gout: "dict | None" = {} if has_group else None
-
-                def on_match(hit, first, last):
-                    segs = {
-                        s.name: _Seg(cols, pos)
-                        for s, pos in zip(step_list, hit)
-                    }
-                    if alt_masks:
-                        _add_alt_segs(step_list, hit, alt_masks, cols, segs)
-                    if gout is not None:
-                        # the scan calls on_match synchronously right
-                        # after the successful attempt fills gout
-                        _add_group_segs(step_list, gout, cols, segs)
-                    if track_no:
-                        seq[0] += 1
-                        out_all.append(measures(key, segs, seq[0]))
-                    else:
-                        out_all.append(measures(key, segs))
-
                 consumed, pending = _scan_closed_prefix(
-                    step_list, masks, ts[a:a + nc].tolist(), nc, on_match,
+                    step_list, masks,
+                    ts[a:a + nc].tolist() if within_us is not None else None,
+                    nc,
+                    _match_emitter(
+                        step_list, measures, order_keys[ki], cols,
+                        alt_masks, gout, out_all, seq if track_no else None,
+                    ),
                     within_us=within_us, open_end_wm_ms=wm_ms,
                     after_match=after_match, ctx_n=nctx,
                     dctx=_DynCtx(cols) if has_dyn else None,
@@ -840,10 +560,7 @@ def stream_match_pattern(
         elif state.exists:
             state.remove()
         if out_all:
-            yield (
-                _assemble_all_rows(out_all, out_cols) if all_rows
-                else pd.DataFrame(out_all, columns=out_cols)
-            )
+            yield _match_frame(out_all, out_cols, all_rows, int_cols)
 
     return (
         sdf.withColumn("__mr_bucket", bucket_column(key_cols, n_buckets))

@@ -55,7 +55,7 @@ def bench_case(name, steps, measures, after_match="past_last", all_rows=False):
                     if s_ptr == len(starts):
                         break
                     i = starts[s_ptr]
-                hit = cep._match_at(masks, step_list, i, n, run_ends, failed, None)
+                hit = cep._match_at_ex(masks, step_list, i, n, run_ends, failed, None)[0]
                 if hit is None or not any(hit):
                     i += 1
                     continue

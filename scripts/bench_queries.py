@@ -6,7 +6,9 @@ Usage::
 
 One warm pass then ``--runs`` timed passes per query (min reported) —
 the same protocol as bench.py, scoped to the named queries so an
-operator family can be A/B'd without the 19-minute full bench.
+operator family can be A/B'd without the 19-minute full bench. The
+session is ``session.get_session()``'s, so ``SPARK_GRAFT_CPUS`` sets
+the core count (default 32) and ``SPARK_DRIVER_MEMORY`` the heap.
 Prints one JSON line: {"sf": ..., "queries": {name: min_sec},
 "total": sec, "samples": {name: [...]}}.
 """
@@ -38,19 +40,12 @@ def main() -> None:
     ):
         os.environ["SPARK_GRAFT_SCRATCH_DIR"] = "/dev/shm"
 
-    from pyspark.sql import SparkSession
-
     from flink_commons_spark.catalog import QUERIES
+    from flink_commons_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bench-subset")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the runner's own session: $SPARK_GRAFT_CPUS cores and Python
+    # workers started through session.PYTHON_WORKER_CONF
+    spark = get_session("bench-subset")
     spark.sparkContext.setLogLevel("ERROR")
 
     mins: dict[str, float] = {}

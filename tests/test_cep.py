@@ -36,7 +36,6 @@ def _run(spark, seq, steps, after_match="past_last"):
         steps,
         measures,
         "start_id bigint, end_id bigint, n bigint",
-        group_buckets=None,
         after_match=after_match,
     )
     return sorted((r["start_id"], r["end_id"], r["n"]) for r in out.collect())
@@ -139,7 +138,7 @@ def _scan(key, rows, pattern, counts=(1,), *, defines=None, **kw):
     import numpy as np
     import pandas as pd
 
-    from flink_commons_spark.streaming.cep_stream import _scan_closed_prefix
+    from flink_commons_spark.operators.cep import _scan_closed_prefix
 
     steps = [Step(name, None, quant=(lo, hi)) for name, lo, hi in pattern]
     pdf = pd.DataFrame({
@@ -372,9 +371,10 @@ def test_scan_defers_non_final_frontier_cut_match():
     row 3 later turns True (batch would match {A:[0..3], B:[4]})."""
     import numpy as np
 
-    from flink_commons_spark.operators.cep import Step, _step_bounds
-    from flink_commons_spark.streaming.cep_stream import (
+    from flink_commons_spark.operators.cep import (
+        Step,
         _scan_closed_prefix,
+        _step_bounds,
     )
 
     n = 4

@@ -31,7 +31,7 @@ import pytest
 from flink_commons_spark.operators.cep import (
     Step,
     _group_masks,
-    _match_at,
+    _match_at_ex,
     _run_ends,
 )
 
@@ -219,7 +219,9 @@ def test_group_nfa_matches_regex(tmpl_i, seed):
     got_child_rows: dict[str, int] = {}
     i = 0
     while i < n:
-        hit = _match_at(masks, steps, i, n, run_ends, None, None, gout=gout)
+        hit = _match_at_ex(
+            masks, steps, i, n, run_ends, None, None, gout=gout
+        )[0]
         if hit is None or not any(hit):
             i += 1
             continue

@@ -1716,3 +1716,55 @@ def test_match_number_one_row(spark):
               PATTERN (A B+)
               DEFINE A AS A.v >= 10, B AS B.v < 10
             )""", strict_compat=True)
+
+
+_NULL_KEY_SQL = """
+    SELECT user_id, t FROM {v} MATCH_RECOGNIZE (
+      PARTITION BY user_id ORDER BY ts
+      MEASURES FIRST(a.ts) AS t
+      PATTERN (a b)
+      DEFINE a AS a.v = 1, b AS b.v = 2
+    )"""
+
+
+def _null_last(rows):
+    return sorted(rows, key=lambda r: (r[0] is None, r[0] or 0, r[1]))
+
+
+def test_batch_match_keeps_null_partition(spark):
+    """Rows whose PARTITION BY key is NULL form one partition of their
+    own (SQL PARTITION BY semantics, as Spark's GROUP BY keeps them):
+    its matches are emitted under a NULL key, not dropped, and never
+    merged with a real key."""
+    rows = [(1, t, v) for t, v in enumerate([1, 2, 1, 2])]
+    rows += [(None, t, v) for t, v in enumerate([1, 2, 1, 2, 1, 2])]
+    rows += [(0, 7, 1), (0, 8, 2)]
+    spark.createDataFrame(
+        rows, "user_id long, ts long, v long"
+    ).createOrReplaceTempView("mr_null_key")
+    got = execute_match_recognize(spark, _NULL_KEY_SQL.format(v="mr_null_key"))
+    assert _null_last(map(tuple, got.collect())) == [
+        (0, 7), (1, 0), (1, 2), (None, 0), (None, 2), (None, 4),
+    ]
+
+
+def test_batch_match_keys_beyond_2_53_beside_null_key(spark):
+    """Integer keys above 2**53 stay exact when a NULL key shares their
+    bucket: pandas would carry a nullable bigint as float64, which
+    rounds 2**53 + 1 onto 2**53 (mislabelling, and merging it with a
+    real 2**53 key). Every key of the range plus the NULL key is
+    present, so the NULL shares a bucket with some of them; ONE ROW
+    emits the partition key, ALL ROWS each matched row's key column."""
+    base = 2**53
+    keys = [base + j for j in range(512)] + [None]
+    rows = [(k, t, v) for k in keys for t, v in ((10, 1), (11, 2))]
+    spark.createDataFrame(
+        rows, "user_id long, ts long, v long"
+    ).createOrReplaceTempView("mr_big_key")
+    got = execute_match_recognize(spark, _NULL_KEY_SQL.format(v="mr_big_key"))
+    assert _null_last(map(tuple, got.collect())) == [(k, 10) for k in keys]
+    all_rows = _NULL_KEY_SQL.replace("PATTERN", "ALL ROWS PER MATCH PATTERN")
+    got = execute_match_recognize(spark, all_rows.format(v="mr_big_key"))
+    assert _null_last(map(tuple, got.collect())) == [
+        (k, 10) for k in keys for _ in range(2)
+    ]
