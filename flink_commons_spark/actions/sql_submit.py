@@ -33,6 +33,7 @@ from __future__ import annotations
 import logging
 import re
 import tempfile
+from contextlib import contextmanager
 
 from flink_commons_spark.actions.base import Action, ActionFactory, MultiParams, register_factory
 from flink_commons_spark.conf import RunnerConfig, apply_set, parse_set_statement
@@ -41,6 +42,7 @@ from flink_commons_spark.plans.dialect import adapt_sql
 from flink_commons_spark.plans.script import load_statements, load_statements_from_text
 from flink_commons_spark.plans.statements import StatementType
 from flink_commons_spark.sources import registry as connectors
+from flink_commons_spark.streaming import partitions
 
 log = logging.getLogger(__name__)
 
@@ -598,54 +600,55 @@ class SqlSubmitAction(Action):
         if target and target in self.tables:
             spec = self.tables[target]
             query_sql = self._adapt_streaming_sql(m.group("query"))
-            df = self._sql_df(spark, query_sql)
-            listed = (
-                [c.strip().strip("`") for c in m.group("cols").split(",")]
-                if m.group("cols")
-                else None
-            )
-            if listed:
-                # explicit column subset: rename positionally to the listed
-                # names, fill unlisted declared sink columns with typed
-                # NULLs, order per the sink DDL (Flink INSERT semantics)
-                if len(df.columns) != len(listed):
-                    raise ValueError(
-                        f"INSERT column list has {len(listed)} column(s) but "
-                        f"the query produces {len(df.columns)}"
-                    )
-                from pyspark.sql import functions as F
-
-                df = df.toDF(*listed)
-                if spec.columns:
-                    unknown = [c for c in listed if c not in {n for n, _ in spec.columns}]
-                    if unknown:
+            with self._state_partitions(spark, query_sql, target):
+                df = self._sql_df(spark, query_sql)
+                listed = (
+                    [c.strip().strip("`") for c in m.group("cols").split(",")]
+                    if m.group("cols")
+                    else None
+                )
+                if listed:
+                    # explicit column subset: rename positionally to the listed
+                    # names, fill unlisted declared sink columns with typed
+                    # NULLs, order per the sink DDL (Flink INSERT semantics)
+                    if len(df.columns) != len(listed):
                         raise ValueError(
-                            f"INSERT column list names undeclared sink column(s) {unknown}"
+                            f"INSERT column list has {len(listed)} column(s) but "
+                            f"the query produces {len(df.columns)}"
                         )
-                    df = df.select(
-                        *[
-                            F.col(name) if name in listed
-                            else F.lit(None).cast(typ).alias(name)
-                            for name, typ in spec.columns
-                        ]
+                    from pyspark.sql import functions as F
+
+                    df = df.toDF(*listed)
+                    if spec.columns:
+                        unknown = [c for c in listed if c not in {n for n, _ in spec.columns}]
+                        if unknown:
+                            raise ValueError(
+                                f"INSERT column list names undeclared sink column(s) {unknown}"
+                            )
+                        df = df.select(
+                            *[
+                                F.col(name) if name in listed
+                                else F.lit(None).cast(typ).alias(name)
+                                for name, typ in spec.columns
+                            ]
+                        )
+                elif spec.columns:
+                    df = df.toDF(*[c for c, _ in spec.columns])
+                if df.isStreaming:
+                    query = connectors.start_stream_sink(
+                        df,
+                        spec,
+                        query_name=self._query_name(target),
+                        output_mode=self._infer_output_mode(query_sql, df),
+                        trigger=self._trigger(),
+                        checkpoint=self._checkpoint_dir(target),
                     )
-            elif spec.columns:
-                df = df.toDF(*[c for c, _ in spec.columns])
-            if df.isStreaming:
-                query = connectors.start_stream_sink(
-                    df,
-                    spec,
-                    query_name=self._query_name(target),
-                    output_mode=self._infer_output_mode(query_sql, df),
-                    trigger=self._trigger(),
-                    checkpoint=self._checkpoint_dir(target),
-                )
-                self._started_queries.append(query)
-                self._sink_queries[target] = query
-            else:
-                connectors.write_batch_sink(
-                    df, spec, overwrite=m.group("mode").upper() == "OVERWRITE"
-                )
+                    self._started_queries.append(query)
+                    self._sink_queries[target] = query
+                else:
+                    connectors.write_batch_sink(
+                        df, spec, overwrite=m.group("mode").upper() == "OVERWRITE"
+                    )
             return
         spark.sql(rewritten)
 
@@ -673,6 +676,56 @@ class SqlSubmitAction(Action):
             self._run_insert(spark, inner)
 
     # ----------------------------------------------------- streaming bits
+
+    @contextmanager
+    def _state_partitions(self, spark, sql: str, target: str):
+        """Scope ``spark.sql.shuffle.partitions`` around a streaming
+        INSERT to the count :func:`~flink_commons_spark.streaming.
+        partitions.stateful_partitions` picks. It is decided before the
+        query is compiled, so the bucket count of its keyed state
+        (``4 x partitions``) and the running query read the same number;
+        a query started in the scope keeps it after the restore.
+
+        Only a script SET counts as explicit here: the runner's count has
+        always been the session's ``spark.sql.shuffle.partitions`` (which
+        such a SET writes), not ``spark.default.parallelism``. Rows per
+        trigger size only a MATCH_RECOGNIZE INSERT, whose bucketed state
+        is what the rule was measured on; any other INSERT keeps the
+        session count unless its checkpoint recorded another."""
+        if not self.config.is_streaming:
+            yield
+            return
+        from flink_commons_spark.plans.match_recognize import contains_match_recognize
+
+        relations = self._read_relations(spark, sql) if contains_match_recognize(sql) else None
+        sources = partitions.plan_sources(spark, relations) if relations else ()
+        n, reason = partitions.stateful_partitions(
+            spark, int(spark.conf.get(partitions.SHUFFLE_CONF)),
+            script=self.config.raw, session=False,
+            checkpoint=self._checkpoint_dir(target, create=False),
+            sources=sources, trigger_s=self.config.trigger_interval_s,
+        )
+        log.info("INSERT INTO %s: %d state partition(s) (%s)", target, n, reason)
+        with partitions.scoped_partitions(spark, n):
+            yield
+
+    @staticmethod
+    def _read_relations(spark, sql: str) -> list[str] | None:
+        """The tables and views a MATCH_RECOGNIZE statement names, as
+        Spark's parser reads them once the clause is cut out (qualified
+        names included), or None when that does not parse."""
+        from flink_commons_spark.plans.match_recognize import strip_match_recognize
+
+        try:
+            plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(
+                strip_match_recognize(sql))
+        except Exception:  # Spark's parser rejects it, or unbalanced parens
+            return None
+        leaves = plan.collectLeaves()
+        return [
+            leaf.tableName() for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.getClass().getSimpleName() == "UnresolvedRelation"
+        ]
 
     def _adapt_streaming_sql(self, sql: str) -> str:
         """Close known streaming-SQL gaps before handing to Catalyst.
@@ -742,21 +795,24 @@ class SqlSubmitAction(Action):
         base = self.config.pipeline_name or "sql-submit"
         return f"{base}-{suffix}"
 
-    def _checkpoint_dir(self, suffix: str) -> str:
-        root = self.config.raw.get("flinkcommons.checkpoint.dir")
+    def _checkpoint_dir(self, suffix: str, create: bool = True) -> str | None:
+        """Checkpoint location of query ``suffix``; without a stable dir
+        an ephemeral root is made on first use, or None when ``create``
+        is false and there is none yet."""
+        root = self.config.raw.get("flinkcommons.checkpoint.dir") or self._ckpt_root
+        if not root and not create:
+            return None
         if not root:
             # one stable temp root per action run (not per query start),
             # so all of a script's queries checkpoint under one tree; but
             # restart recovery still needs an explicit stable location
-            if self._ckpt_root is None:
-                self._ckpt_root = tempfile.mkdtemp(prefix="fcs-ckpt-")
-                log.warning(
-                    "flinkcommons.checkpoint.dir is not set; checkpointing "
-                    "under ephemeral %s — streaming restart recovery "
-                    "requires setting a stable checkpoint dir",
-                    self._ckpt_root,
-                )
-            root = self._ckpt_root
+            root = self._ckpt_root = tempfile.mkdtemp(prefix="fcs-ckpt-")
+            log.warning(
+                "flinkcommons.checkpoint.dir is not set; checkpointing "
+                "under ephemeral %s — streaming restart recovery "
+                "requires setting a stable checkpoint dir",
+                root,
+            )
         return f"{root}/{self._query_name(suffix)}"
 
     def _await_active_queries(self, spark) -> None:

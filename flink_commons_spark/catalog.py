@@ -182,32 +182,21 @@ def _with_stream_shuffle(n: int = 8):
     cluster-provided parallelism wins over it — either the dedicated
     ``spark.flinkcommons.stream.shuffle.partitions`` session conf, or
     ``spark.default.parallelism`` when the deployment sets it (the
-    runner's ``SET 'parallelism.default'`` maps there, ``conf.py``) —
-    so at 100 TB the stateful operators scale with executor count
+    runner's ``SET 'parallelism.default'`` maps there, ``conf.py``),
+    read through rule 2 of ``streaming.partitions.stateful_partitions``
+    — so at 100 TB the stateful operators scale with executor count
     instead of serializing on a hard-coded 8/16. Restores the session
     value afterwards — no conf leak into batch queries.
     """
     import functools
 
+    from flink_commons_spark.streaming.partitions import scoped_partitions, stateful_partitions
+
     def deco(fn):
         @functools.wraps(fn)
         def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            old = spark.conf.get("spark.sql.shuffle.partitions")
-            eff = n
-            for key in ("spark.flinkcommons.stream.shuffle.partitions",
-                        "spark.default.parallelism"):
-                try:
-                    raw = spark.conf.get(key, "")
-                except Exception:
-                    raw = ""
-                if raw:
-                    eff = int(raw)
-                    break
-            spark.conf.set("spark.sql.shuffle.partitions", str(eff))
-            try:
+            with scoped_partitions(spark, stateful_partitions(spark, n)[0]):
                 return fn(spark, sf_dir)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
 
         return wrapper
 

@@ -18,6 +18,9 @@ log = logging.getLogger(__name__)
 
 _DURATION_RE = re.compile(r"^(?P<n>\d+)\s*(?P<unit>ms|s|sec|second|seconds|min|minutes|h|hours)?$", re.I)
 
+#: the Spark keys ``SET 'parallelism.default'`` writes
+_PARALLELISM_KEYS = ("spark.sql.shuffle.partitions", "spark.default.parallelism")
+
 _UNIT_SECONDS = {
     "ms": 0.001,
     "s": 1, "sec": 1, "second": 1, "seconds": 1,
@@ -47,6 +50,9 @@ class RunnerConfig:
     parallelism: int | None = None
     #: raw store of every SET, mirroring TableConfig's accept-anything map
     raw: dict[str, str] = field(default_factory=dict)
+    #: session values of the Spark keys a translated SET overwrote, as
+    #: they were before it (None: unset), for UNSET to put back
+    replaced: dict[str, str | None] = field(default_factory=dict)
 
     @property
     def is_streaming(self) -> bool:
@@ -71,8 +77,10 @@ def apply_set(config: RunnerConfig, spark, key: str, value: str) -> None:
         config.pipeline_name = value
     elif key == "parallelism.default":
         config.parallelism = int(value)
-        conf_set("spark.sql.shuffle.partitions", value)
-        conf_set("spark.default.parallelism", value)
+        for k in _PARALLELISM_KEYS:
+            if spark is not None:
+                config.replaced.setdefault(k, spark.conf.get(k, None))
+            conf_set(k, value)
     elif key == "execution.runtime-mode":
         mode = value.lower()
         if mode not in ("batch", "streaming"):
@@ -110,14 +118,26 @@ def apply_unset(config: RunnerConfig, spark, key: str) -> None:
     """Revert one configuration key (Flink ≥1.13 ``UNSET 'key'``).
 
     The raw entry is dropped and any derived runner field returns to
-    its default; ``spark.*`` passthrough keys are unset on the session.
+    its default; ``spark.*`` passthrough keys are unset on the session,
+    and ``parallelism.default`` puts back the session values of the
+    Spark keys its SET overwrote.
     """
     key = key.strip()
-    config.raw.pop(key, None)
+    written = config.raw.pop(key, None)
     if key == "pipeline.name":
         config.pipeline_name = None
     elif key == "parallelism.default":
         config.parallelism = None
+        for k in _PARALLELISM_KEYS:
+            if spark is None or k not in config.replaced:
+                continue
+            old = config.replaced.pop(k)
+            if spark.conf.get(k, None) != written:
+                continue  # a later SET of the Spark key itself stands
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
     elif key == "execution.runtime-mode":
         config.runtime_mode = "streaming"
     elif key == "execution.checkpointing.enabled":

@@ -31,6 +31,7 @@ the operator's output is tiny compared to its input scan.
 from __future__ import annotations
 
 import bisect
+import math
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -1340,7 +1341,9 @@ def _key_codes(karrs, nulls=None) -> "tuple[np.ndarray, list[tuple]]":
     makes key field ``i`` NULL whatever ``karrs[i]`` holds there, so an
     integer key column can arrive coalesced (exact int64) beside its
     NULLs instead of as pandas' float64, which rounds values beyond
-    2**53 together. Columns are factorized one at a time and the codes
+    2**53 together; bit ``len(karrs) + i`` makes it NaN, so a float
+    key's NaN stays apart from its NULL (pandas holds both as NaN).
+    Columns are factorized one at a time and the codes
     combined pairwise, re-densified at every step, so the combined
     code cannot overflow."""
     if nulls is not None and not nulls.any():
@@ -1362,6 +1365,7 @@ def _key_codes(karrs, nulls=None) -> "tuple[np.ndarray, list[tuple]]":
     keys = [
         tuple(
             None if bits is not None and bits[j] >> i & 1
+            else math.nan if bits is not None and bits[j] >> (nk + i) & 1
             else _key_scalar(uniqs[i][fl[i][j]])
             for i in range(nk)
         )
@@ -1553,7 +1557,7 @@ def match_pattern(
     Python loop anywhere on the path.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegralType
+    from pyspark.sql.types import DoubleType, FloatType, IntegralType
 
     step_list = list(steps)
     _skip_index(step_list, after_match)  # fail before any Spark job
@@ -1566,27 +1570,37 @@ def match_pattern(
     fields = {f.name.lower(): f for f in df.schema.fields}
     # a nullable integer key travels coalesced, its NULLs as bits of one
     # bitmask column: pandas would carry it as float64, which rounds
-    # keys beyond 2**53 together
+    # keys beyond 2**53 together. A float key keeps its column and
+    # marks NULL and NaN, which pandas holds alike, with a bit each.
     proj = {c: df[c] for c in data_cols}
     null_keys: list = []  # (bit, column name)
     nulls = None
     for i, c in enumerate(key_cols):
         f = fields.get(c.lower())
-        if f is not None and f.nullable and isinstance(
-            f.dataType, IntegralType
-        ):
+        if f is None:
+            continue
+        if f.nullable and isinstance(f.dataType, IntegralType):
             null_keys.append((i, f.name))
             proj[f.name] = F.coalesce(
                 df[f.name], F.lit(0).cast(f.dataType)
             ).alias(f.name)
             bit = F.when(df[f.name].isNull(), 1 << i).otherwise(0)
-            nulls = bit if nulls is None else nulls + bit
+        elif isinstance(f.dataType, (FloatType, DoubleType)):
+            bit = (
+                F.when(df[f.name].isNull(), 1 << i)
+                .when(F.isnan(df[f.name]), 1 << (len(key_cols) + i))
+                .otherwise(0)
+            )
+        else:
+            continue
+        nulls = bit if nulls is None else nulls + bit
+    has_kn = nulls is not None
     proj = list(proj.values())
-    if nulls is not None:
+    if has_kn:
         proj.append(nulls.alias("__cep_kn"))
 
     def run_bucket(_bkey: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        kn = pdf["__cep_kn"].to_numpy() if null_keys else None
+        kn = pdf["__cep_kn"].to_numpy() if has_kn else None
         codes, keys = _key_codes([pdf[c].to_numpy() for c in key_cols], kn)
         exact: dict = {}
         if kn is not None and kn.any():

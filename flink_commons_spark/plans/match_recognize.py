@@ -182,6 +182,14 @@ def contains_match_recognize(sql: str) -> bool:
     return bool(_MR_RE.search(sql))
 
 
+def strip_match_recognize(sql: str) -> str:
+    """``sql`` with its MATCH_RECOGNIZE clause cut out and the clause's
+    source left in place: a statement Spark's own parser reads, e.g. to
+    list the relations it names."""
+    m = _MR_RE.search(sql)
+    return sql[: m.start()] + sql[_find_close(sql, m.end() - 1) + 1 :]
+
+
 # ---------------------------------------------------------------------
 # expression compiler (shared tokenizer; DEFINE and MEASURES modes)
 # ---------------------------------------------------------------------

@@ -122,9 +122,11 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {exc}")
             failures.append(name)
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"ok?  {name}: rows={len(srows)} (no oracle, rows-only)")
+            print(f"ok?  {name}: rows={len(srows)} (no oracle, rows-only; spark {spark_s:.1f}s)")
             continue
+        t0 = time.time()
         try:
             # fetch through pandas: reproduces driver-side dtype coercion
             # (hugeint -> float64) that fetchall() would mask
@@ -135,7 +137,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {exc}")
             failures.append(name)
             continue
-        dt = time.time() - t0
+        oracle_s = time.time() - t0
         if sorted(scols) != sorted(ocols):
             print(f"FAIL {name}: columns {sorted(scols)} vs {sorted(ocols)}")
             failures.append(name)
@@ -153,7 +155,7 @@ def main() -> int:
                 print(f"   spark:  {a}\n   oracle: {b}")
             failures.append(name)
             continue
-        print(f"PASS {name}: rows={len(srows)} ({dt:.1f}s)")
+        print(f"PASS {name}: rows={len(srows)} (spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -23,6 +23,7 @@ import random
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 WAVE_KEYS = 25
@@ -708,3 +709,99 @@ def test_resolve_bucket_count_precedence():
     for bad in ("0", "-2", "many"):
         with pytest.raises(ValueError, match=BUCKETS_CONF.replace(".", r"\.")):
             resolve_bucket_count(session({**parts, BUCKETS_CONF: bad}))
+
+
+_RUNNER_FUNNEL_SQL = """
+SET 'execution.runtime-mode' = 'streaming';
+SET 'flinkcommons.trigger' = 'availableNow';
+SET 'flinkcommons.checkpoint.dir' = '{ckpt}';
+SET 'spark.sql.shuffle.partitions' = '{parts}';
+CREATE TABLE funnel_out (
+    user_id BIGINT, start_us BIGINT, end_us BIGINT, n_clicks BIGINT
+) WITH ('connector' = 'filesystem', 'path' = '{out}', 'format' = 'parquet');
+INSERT INTO funnel_out
+SELECT user_id, start_us, end_us, n_clicks
+FROM {source}
+  MATCH_RECOGNIZE (
+    PARTITION BY user_id
+    ORDER BY ts, event_id
+    MEASURES FIRST(v.ts_us) AS start_us, LAST(p.ts_us) AS end_us,
+             COUNT(c.*) AS n_clicks
+    ONE ROW PER MATCH
+    AFTER MATCH SKIP PAST LAST ROW
+    PATTERN (v c+ p)
+    DEFINE v AS v.event_type = 'view', c AS c.event_type = 'click',
+           p AS p.event_type = 'purchase'
+  );
+"""
+
+
+@pytest.mark.parametrize("source", ["resume_events", "global_temp.resume_events"])
+def test_runner_resume_keeps_checkpoint_partitions(spark, tmp_path, caplog, source):
+    """A streaming MATCH_RECOGNIZE INSERT resumed with another
+    ``spark.sql.shuffle.partitions`` keeps the partition count, and so
+    the bucket count, its checkpoint was written with. 40 keys run a
+    view → click → click → purchase funnel, one event type per file,
+    one file per trigger; the first run stops after the view and the
+    first click, the resume (2 → 8 partitions) must find every buffered
+    prefix: 40 of 40 matches. Building the resumed query with the new
+    count put a key's new rows in another bucket than its buffered
+    rows, and 29 of the 40 funnels were lost without an error. A
+    qualified source name (``global_temp.``) resumes the same way."""
+    import shutil
+
+    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
+
+    keys = 40
+    files = [
+        [(et_i * keys + k, 100 + k + 3 * et_i, k, et) for k in range(keys)]
+        for et_i, et in enumerate(("view", "click", "click", "purchase"))
+    ] + [[(999_999, SENTINEL_SEC, 9999, "view")]]
+    stage, src = tmp_path / "stage", tmp_path / "src"
+    src.mkdir()
+    _write_files(spark, str(stage), files,
+                 "event_id long, sec long, user_id long, event_type string")
+    staged = sorted(stage.glob("*.parquet"), key=os.path.getmtime)
+    assert len(staged) == len(files)
+    (
+        spark.readStream.schema("event_id long, sec long, user_id long, event_type string")
+        .option("maxFilesPerTrigger", 1).parquet(str(src))
+        .select("event_id", "user_id", "event_type",
+                F.timestamp_micros(F.col("sec") * 1_000_000).alias("ts"))
+        .withWatermark("ts", DELAY)
+        .withColumn("ts_us", F.unix_micros("ts"))
+        .createOrReplaceGlobalTempView("resume_events")
+    )
+    spark.catalog.dropTempView("resume_events")
+    if source == "resume_events":
+        spark.table("global_temp.resume_events").createOrReplaceTempView(source)
+    sql = _RUNNER_FUNNEL_SQL.format(ckpt=tmp_path / "ckpt", out=tmp_path / "out",
+                                    parts="{parts}", source=source)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(parts):
+        action = SqlSubmitAction(sql_text=sql.format(parts=parts), spark=spark,
+                                 stream_timeout_s=180)
+        action.run()
+        (query,) = action._started_queries
+        assert query.exception() is None
+        return [p for p in query.recentProgress if p["stateOperators"]]
+
+    try:
+        for f in staged[:2]:
+            shutil.copy2(f, src)
+        first = run(2)
+        assert sum(p["numInputRows"] > 0 for p in first) == 2
+        for f in staged[2:]:
+            shutil.copy2(f, src)
+        with caplog.at_level("WARNING", logger="flink_commons_spark.streaming.partitions"):
+            resumed = run(8)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    got = sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / "out")).collect())
+    assert len(got) == keys
+    assert got == [
+        (k, (100 + k) * 1_000_000, (109 + k) * 1_000_000, 2) for k in range(keys)
+    ]
+    assert {op["numShufflePartitions"] for p in resumed for op in p["stateOperators"]} == {2}
+    assert any("8" in r.getMessage() and "2" in r.getMessage() for r in caplog.records)

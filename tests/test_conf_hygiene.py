@@ -85,3 +85,35 @@ def test_stream_shuffle_honors_cluster_parallelism(spark):
     finally:
         spark.conf.unset("spark.default.parallelism")
         spark.conf.unset("spark.flinkcommons.stream.shuffle.partitions")
+
+
+def test_unset_parallelism_restores_session_keys(spark):
+    """``UNSET 'parallelism.default'`` puts back the two Spark keys its
+    SET wrote, so no stale parallelism outlives the script's UNSET
+    (the streaming INSERT's partition rule reads them as explicit);
+    a later SET of a Spark key itself stands."""
+    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
+
+    keys = ("spark.sql.shuffle.partitions", "spark.default.parallelism")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.unset("spark.default.parallelism")  # as a fresh session has it
+    before = {k: spark.conf.get(k, None) for k in keys}
+
+    def run(sql):
+        SqlSubmitAction(sql_text=sql, spark=spark).run()
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    try:
+        assert run("SET 'parallelism.default' = '3';\n"
+                   "SET 'parallelism.default' = '5';\n"
+                   "UNSET 'parallelism.default';") == before
+        assert run("SET 'parallelism.default' = '3';\n"
+                   "SET 'spark.sql.shuffle.partitions' = '7';\n"
+                   "UNSET 'parallelism.default';") == {
+            "spark.sql.shuffle.partitions": "7", "spark.default.parallelism": None}
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1768,3 +1768,32 @@ def test_batch_match_keys_beyond_2_53_beside_null_key(spark):
     assert _null_last(map(tuple, got.collect())) == [
         (k, 10) for k in keys for _ in range(2)
     ]
+
+
+def test_batch_match_keeps_nan_and_null_float_keys_apart(spark):
+    """A float PARTITION BY key's NaN and NULL are two partitions, as in
+    Spark's GROUP BY, although pandas holds both as NaN: keys 1.0, NaN
+    and NULL give three partitions even where NaN and NULL share a
+    bucket, and ``measures`` sees NaN and None apart."""
+    import math
+
+    from flink_commons_spark.operators.cep import _BATCH_BUCKETS, Step, match_pattern
+
+    nan = float("nan")
+    # b = 18 puts (NaN, 18) and (NULL, 18) in one of the 64 buckets
+    rows = [(k, 18, t) for t, k in enumerate([1.0, nan, None, nan, None, 1.0])]
+    df = spark.createDataFrame(rows, "k double, b long, t long")
+    buckets = df.select(F.pmod(F.xxhash64("k", "b"), F.lit(_BATCH_BUCKETS))).collect()
+    assert buckets[1] == buckets[2]
+
+    def measures(key, segs):
+        return {"is_null": key[0] is None,
+                "is_nan": isinstance(key[0], float) and math.isnan(key[0]),
+                "n": len(segs["a"])}
+
+    got = match_pattern(
+        df, ["k", "b"], ["t"], [Step("a", lambda p: p["t"] >= 0, plus=True)],
+        measures, "is_null boolean, is_nan boolean, n bigint",
+    ).collect()
+    assert sorted(map(tuple, got)) == [(False, False, 2), (False, True, 2), (True, False, 2)]
+    assert sorted(r["count"] for r in df.groupBy("k", "b").count().collect()) == [2, 2, 2]
