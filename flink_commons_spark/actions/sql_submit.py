@@ -21,7 +21,7 @@ layers are added on top:
    starts an *async* StreamingQuery (like Flink's async ``executeSql``),
    a streaming ``SELECT`` starts a console query and *blocks* (like
    Flink's blocking ``print()``); at script end all active queries are
-   awaited.
+   awaited and the session conf the script's SETs wrote is put back.
 
 A statement naming a table (bare, backquoted, ``catalog.db.t``, or by
 its path) first awaits a streaming INSERT still writing it. A sink with
@@ -36,7 +36,7 @@ import tempfile
 from contextlib import contextmanager
 
 from flink_commons_spark.actions.base import Action, ActionFactory, MultiParams, register_factory
-from flink_commons_spark.conf import RunnerConfig, apply_set, parse_set_statement
+from flink_commons_spark.conf import RunnerConfig, apply_set, parse_set_statement, restore_session_conf
 from flink_commons_spark.plans.ddl import TableSpec, is_connector_ddl, parse_create_table
 from flink_commons_spark.plans.dialect import adapt_sql
 from flink_commons_spark.plans.script import load_statements, load_statements_from_text
@@ -120,15 +120,19 @@ class SqlSubmitAction(Action):
         from flink_commons_spark.functions.registry import ensure_registered
 
         ensure_registered(spark)  # fcs_* SQL UDFs available to every script
-        for stype, stmt in statements:
-            log.info("Executing [%s]: %s", stype.type_name, stmt)
-            try:
-                self._dispatch(spark, stype, stmt)
-            except Exception as exc:
-                # per-statement error wrapping, SQLSubmitAction.java:78-81
-                raise RuntimeError(f"Error to execute sql: {stmt}") from exc
-        if self.await_streams:
-            self._await_active_queries(spark)
+        try:
+            for stype, stmt in statements:
+                log.info("Executing [%s]: %s", stype.type_name, stmt)
+                try:
+                    self._dispatch(spark, stype, stmt)
+                except Exception as exc:
+                    # per-statement error wrapping, SQLSubmitAction.java:78-81
+                    raise RuntimeError(f"Error to execute sql: {stmt}") from exc
+            if self.await_streams:
+                self._await_active_queries(spark)
+        finally:
+            # the script's SETs last as long as the script, not the session
+            restore_session_conf(self.config, spark)
 
     def _get_spark(self):
         if self.spark is not None:

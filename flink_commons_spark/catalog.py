@@ -6776,9 +6776,9 @@ def q_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
     steps = [
-        Step("v", lambda p: p["event_type"] == "view", local=True),
-        Step("c", lambda p: p["event_type"] == "click", plus=True, local=True),
-        Step("p", lambda p: p["event_type"] == "purchase", local=True),
+        Step("v", lambda p: p["event_type"] == "view"),
+        Step("c", lambda p: p["event_type"] == "click", plus=True),
+        Step("p", lambda p: p["event_type"] == "purchase"),
     ]
 
     def measures(key, segs):
@@ -6845,9 +6845,9 @@ def q_match_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
     steps = [
-        Step("v", lambda p: p["event_type"] == "view", local=True),
-        Step("c", lambda p: p["event_type"] == "click", star=True, local=True),
-        Step("p", lambda p: p["event_type"] == "purchase", local=True),
+        Step("v", lambda p: p["event_type"] == "view"),
+        Step("c", lambda p: p["event_type"] == "click", star=True),
+        Step("p", lambda p: p["event_type"] == "purchase"),
     ]
 
     def measures(key, segs):
@@ -6921,7 +6921,7 @@ def q_match_skip_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
     steps = [
-        Step("c", lambda p: p["event_type"] == "click", quant=(2, None), local=True),
+        Step("c", lambda p: p["event_type"] == "click", quant=(2, None)),
     ]
 
     def measures(key, segs):
@@ -6987,8 +6987,8 @@ def q_match_reluctant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     steps = [
         Step("a", lambda p: p["event_type"].notna(), star=True,
-             reluctant=True, local=True),
-        Step("p", lambda p: p["event_type"] == "purchase", local=True),
+             reluctant=True),
+        Step("p", lambda p: p["event_type"] == "purchase"),
     ]
 
     def measures(key, segs):
@@ -7049,9 +7049,9 @@ def q_match_within(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
     steps = [
-        Step("v", lambda p: p["event_type"] == "view", local=True),
-        Step("c", lambda p: p["event_type"] == "click", plus=True, local=True),
-        Step("p", lambda p: p["event_type"] == "purchase", local=True),
+        Step("v", lambda p: p["event_type"] == "view"),
+        Step("c", lambda p: p["event_type"] == "click", plus=True),
+        Step("p", lambda p: p["event_type"] == "purchase"),
     ]
 
     def measures(key, segs):
@@ -7121,8 +7121,8 @@ def q_match_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
     )
     steps = [
-        Step("v", lambda p: p["event_type"] == "view", local=True),
-        Step("e", lambda p: pd.Series(True, index=p.index), quant=(2, 2), local=True),
+        Step("v", lambda p: p["event_type"] == "view"),
+        Step("e", lambda p: pd.Series(True, index=p.index), quant=(2, 2)),
     ]
 
     def measures(key, segs):
@@ -7166,9 +7166,9 @@ def q_match_skip_to_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wild = lambda p: pd.Series(True, index=p.index)  # noqa: E731
     steps = [
-        Step("e1", wild, local=True),
-        Step("e2", wild, local=True),
-        Step("v", lambda p: p["event_type"] == "view", local=True),
+        Step("e1", wild),
+        Step("e2", wild),
+        Step("v", lambda p: p["event_type"] == "view"),
     ]
 
     def measures(key, segs):
@@ -7745,8 +7745,8 @@ def q_match_vshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE with ROW-NAVIGATING DEFINE predicates — Flink's
     canonical CEP example, the price V-shape ``STRT DOWN+ UP+`` where
     ``DOWN AS price < PREV(price)`` / ``UP AS price > PREV(price)``.
-    PREV compiles to a per-partition shift inside the NFA's mask
-    builder, so the predicate surface goes beyond event-type equality
+    PREV compiles to a key-aware shift (``operators.cep.prev``) in the
+    mask builder, so the predicate surface goes beyond event-type equality
     — arbitrary comparisons over current and adjacent rows. Greedy
     quantifiers + SKIP PAST LAST ROW; with mutually-exclusive D/U
     masks the oracle replays the scan as a recursive-CTE cursor over

@@ -18,8 +18,19 @@ log = logging.getLogger(__name__)
 
 _DURATION_RE = re.compile(r"^(?P<n>\d+)\s*(?P<unit>ms|s|sec|second|seconds|min|minutes|h|hours)?$", re.I)
 
-#: the Spark keys ``SET 'parallelism.default'`` writes
-_PARALLELISM_KEYS = ("spark.sql.shuffle.partitions", "spark.default.parallelism")
+#: the Spark keys each translated Flink key's SET writes (Flink's
+#: broadcast-join size cutoff, bytes or -1, maps 1:1 onto Spark's)
+_SPARK_KEYS = {
+    "parallelism.default": ("spark.sql.shuffle.partitions", "spark.default.parallelism"),
+    "table.optimizer.join.broadcast-threshold": ("spark.sql.autoBroadcastJoinThreshold",),
+    "table.local-time-zone": ("spark.sql.session.timeZone",),
+}
+
+
+def _spark_keys(key: str) -> tuple[str, ...]:
+    """The Spark session keys a SET of ``key`` writes."""
+    return (key,) if key.startswith("spark.") else _SPARK_KEYS.get(key, ())
+
 
 _UNIT_SECONDS = {
     "ms": 0.001,
@@ -50,8 +61,9 @@ class RunnerConfig:
     parallelism: int | None = None
     #: raw store of every SET, mirroring TableConfig's accept-anything map
     raw: dict[str, str] = field(default_factory=dict)
-    #: session values of the Spark keys a translated SET overwrote, as
-    #: they were before it (None: unset), for UNSET to put back
+    #: session values of the Spark keys the script's SETs (and UNSETs)
+    #: wrote, as they were before the first of them (None: unset), for
+    #: UNSET and the end of the run to put back
     replaced: dict[str, str | None] = field(default_factory=dict)
 
     @property
@@ -68,19 +80,10 @@ def apply_set(config: RunnerConfig, spark, key: str, value: str) -> None:
     key = key.strip()
     value = value.strip()
     config.raw[key] = value
-
-    def conf_set(k: str, v: str) -> None:
-        if spark is not None:
-            spark.conf.set(k, v)
-
     if key == "pipeline.name":
         config.pipeline_name = value
     elif key == "parallelism.default":
         config.parallelism = int(value)
-        for k in _PARALLELISM_KEYS:
-            if spark is not None:
-                config.replaced.setdefault(k, spark.conf.get(k, None))
-            conf_set(k, value)
     elif key == "execution.runtime-mode":
         mode = value.lower()
         if mode not in ("batch", "streaming"):
@@ -94,33 +97,30 @@ def apply_set(config: RunnerConfig, spark, key: str, value: str) -> None:
         # Flink buffers up to this latency between state flushes; the
         # Structured-Streaming analog is the micro-batch trigger cadence.
         config.trigger_interval_s = parse_duration_seconds(value)
-    elif key == "table.optimizer.join.broadcast-threshold":
-        # Flink's broadcast-join size cutoff (bytes, -1 disables) maps
-        # 1:1 onto Spark's autoBroadcastJoinThreshold
-        conf_set("spark.sql.autoBroadcastJoinThreshold", value)
-    elif key == "table.local-time-zone":
-        conf_set("spark.sql.session.timeZone", value)
     elif key in ("table.exec.mini-batch.enabled", "table.exec.mini-batch.size",
                  "table.dynamic-table-options.enabled"):
         # Micro-batching is inherent to Structured Streaming; dynamic table
         # options are read at DDL time. Accepted for parity, nothing to do.
         log.debug("SET %s accepted (implicit in Spark)", key)
-    elif key.startswith("spark."):
-        conf_set(key, value)
-    elif key.startswith("flinkcommons."):
-        # runner extension keys, e.g. flinkcommons.trigger = availableNow
-        pass
-    else:
+    elif not _spark_keys(key) and not key.startswith("flinkcommons."):
+        # flinkcommons.* are runner extension keys, e.g.
+        # flinkcommons.trigger = availableNow
         log.warning("SET %s = %s: no Spark mapping; stored but inactive", key, value)
+    if spark is not None:
+        for k in _spark_keys(key):
+            config.replaced.setdefault(k, spark.conf.get(k, None))
+            spark.conf.set(k, value)
 
 
 def apply_unset(config: RunnerConfig, spark, key: str) -> None:
     """Revert one configuration key (Flink ≥1.13 ``UNSET 'key'``).
 
     The raw entry is dropped and any derived runner field returns to
-    its default; ``spark.*`` passthrough keys are unset on the session,
-    and ``parallelism.default`` puts back the session values of the
-    Spark keys its SET overwrote.
+    its default. The Spark keys the key's SET wrote get back their
+    values from before the script's first SET of them; a ``spark.*``
+    key the script never SET is unset on the session (and restored
+    when the run ends). A translated key leaves a Spark key alone that
+    a later SET of that Spark key itself changed.
     """
     key = key.strip()
     written = config.raw.pop(key, None)
@@ -128,16 +128,6 @@ def apply_unset(config: RunnerConfig, spark, key: str) -> None:
         config.pipeline_name = None
     elif key == "parallelism.default":
         config.parallelism = None
-        for k in _PARALLELISM_KEYS:
-            if spark is None or k not in config.replaced:
-                continue
-            old = config.replaced.pop(k)
-            if spark.conf.get(k, None) != written:
-                continue  # a later SET of the Spark key itself stands
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
     elif key == "execution.runtime-mode":
         config.runtime_mode = "streaming"
     elif key == "execution.checkpointing.enabled":
@@ -146,11 +136,38 @@ def apply_unset(config: RunnerConfig, spark, key: str) -> None:
         config.checkpoint_interval_s = None
     elif key == "table.exec.mini-batch.allow-latency":
         config.trigger_interval_s = None
-    elif key.startswith("spark.") and spark is not None:
-        try:
+    if spark is None:
+        return
+    for k in _spark_keys(key):
+        if k in config.replaced:
+            if k == key or spark.conf.get(k, None) == written:
+                _put_conf(spark, k, config.replaced[k])
+        elif k == key:
+            config.replaced[k] = spark.conf.get(k, None)
+            _put_conf(spark, k, None)
+
+
+def restore_session_conf(config: RunnerConfig, spark) -> None:
+    """Put back every Spark key the script's SETs and UNSETs wrote, as
+    the session had it before the script. A streaming query already
+    started keeps the values it started with: Spark gives each query
+    a clone of the session conf."""
+    for k, old in config.replaced.items():
+        _put_conf(spark, k, old)
+    config.replaced.clear()
+
+
+def _put_conf(spark, key: str, value: str | None) -> None:
+    """Set ``key`` on the session, or unset it for None."""
+    from pyspark.errors import PySparkException
+
+    try:
+        if value is None:
             spark.conf.unset(key)
-        except Exception:  # non-session key or already unset
-            log.debug("UNSET %s: nothing to unset on the session", key)
+        else:
+            spark.conf.set(key, value)
+    except PySparkException as exc:  # a key the session does not let a script change
+        log.warning("cannot put %s back on the session: %s", key, exc)
 
 
 def parse_unset_statement(statement: str) -> str:

@@ -18,11 +18,12 @@ pattern matcher, so this module implements one the Spark-native way:
 - rows cross the Python boundary once, Arrow-batched via
   ``applyInPandas`` — no row-at-a-time UDF.
 
-The bucket core — key codes and one sort per bucket, DEFINE masks per
-bucket or per key, the scan (:func:`_scan_closed_prefix`) and the
-match emitter — is shared with the streaming settle
-(:mod:`flink_commons_spark.streaming.cep_stream`), which runs it over
-each key's closed prefix instead of its complete rows.
+The bucket core — key codes and one sort per bucket, DEFINE masks once
+per bucket (key-aware navigation through :func:`prev`), the scan
+(:func:`_scan_closed_prefix`) and the match emitter — is shared with
+the streaming settle (:mod:`flink_commons_spark.streaming.cep_stream`),
+which runs it over each key's closed prefix instead of its complete
+rows.
 
 Only measures (a handful of scalars per match) leave the matcher, so
 the operator's output is tiny compared to its input scan.
@@ -113,22 +114,17 @@ class Step:
     consume a row per repetition; an unquantified all-optional
     PERMUTE may match empty).
 
-    ``local=True`` declares the static ``where`` (and every
-    alternation member's / sequence-group child's predicate)
-    ROW-LOCAL: its mask at a row depends only on that row's columns —
-    no ``Series.shift`` (PREV/NEXT), no cross-row reads. When every
-    step of a pattern is local, both bucketed executors evaluate all
-    masks ONCE per bucket and slice per key instead of paying a pandas
-    mask pass per key (:func:`_bucket_masks`, :func:`_key_masks`):
-    the batch :func:`match_pattern` over the whole sorted bucket
-    (r14: the per-key mask/frame overhead was ~40 % of matcher wall
-    time at sf0.1 with ~1.5k keys per bucket), the streaming settle
-    (:func:`streaming.cep_stream.stream_match_pattern`) over the
-    bucket's closed rows. Default False — both then evaluate the
-    masks per key on that key's slice, which is always sound."""
+    ``where`` (and every alternation member's / sequence-group child's
+    predicate) is evaluated ONCE over a whole key-sorted bucket — the
+    batch :func:`match_pattern` over the bucket's rows, the streaming
+    settle (:func:`streaming.cep_stream.stream_match_pattern`) over its
+    closed rows — and the masks are sliced per key. It must therefore
+    be row-local or navigate only through :func:`prev`, which reads
+    NULL across a key boundary; a raw ``Series.shift`` reads the
+    neighbouring key's row."""
 
     __slots__ = ("name", "where", "lo", "hi", "reluctant", "dyn",
-                 "next_depth", "alts", "group", "perm", "local")
+                 "next_depth", "alts", "group", "perm")
 
     def __init__(
         self,
@@ -144,7 +140,6 @@ class Step:
         alts: "list[tuple[str, Callable]] | None" = None,
         group: "list[Step] | None" = None,
         perm: bool = False,
-        local: bool = False,
     ):
         self.name = name
         self.where = where
@@ -154,7 +149,6 @@ class Step:
         self.alts = alts
         self.group = group
         self.perm = perm
-        self.local = local
         if quant is not None:
             self.lo, self.hi = quant
         elif plus:
@@ -168,9 +162,23 @@ class Step:
         if self.lo < 0 or (self.hi is not None and self.hi < self.lo):
             raise ValueError(f"invalid quantifier bounds ({self.lo},{self.hi})")
 
-    @property
-    def plus(self) -> bool:  # kept for older call sites
-        return self.lo == 1 and self.hi is None
+
+#: the per-row key-code column of a bucket's DEFINE mask frame
+_KEY_CODE = "__cep_kc"
+
+
+def prev(p: pd.DataFrame, col, k: int = 1) -> pd.Series:
+    """``PREV(col, k)`` in a DEFINE mask: ``col`` (a column name of
+    ``p`` or a Series over its rows) shifted ``k`` rows back, NULL
+    where that row belongs to another key; a negative ``k`` is
+    ``NEXT(col, -k)``. The executors' mask frames hold many keys,
+    sorted, with each row's key code in ``__cep_kc``; a frame without
+    that column is one key."""
+    s = p[col] if isinstance(col, str) else col
+    if _KEY_CODE not in p:
+        return s.shift(k)
+    kc = p[_KEY_CODE]
+    return s.shift(k).where(kc == kc.shift(k))
 
 
 class _DynCtx:
@@ -1392,26 +1400,14 @@ def _key_sort(codes, order_arrs, nkeys: int):
 
 def _bucket_masks(steps: Sequence[Step], frame: pd.DataFrame):
     """Every step's masks and alternation choices over a whole
-    key-sorted bucket ``frame`` — one pandas pass per bucket, sliced
-    per key by :func:`_key_masks` — when every step is
-    :attr:`Step.local`; None otherwise, since a PREV/NEXT shift over
-    the bucket would read a neighbouring key's row."""
-    if not all(s.local for s in steps):
-        return None
+    key-sorted bucket ``frame`` — one pandas pass per bucket, sliced per
+    key by :func:`_key_masks`."""
     return _group_masks(steps, frame), _alt_member_masks(steps, frame)
 
 
-def _key_masks(steps: Sequence[Step], frame: pd.DataFrame, bucket_masks,
-               a: int, b: int):
+def _key_masks(bucket_masks, a: int, b: int):
     """``(masks, alt_masks)`` of the key owning rows ``[a, b)`` of a
-    key-sorted bucket ``frame``: slices of ``bucket_masks`` (from
-    :func:`_bucket_masks`) when given, else evaluated on the key's
-    0-based slice, so no shift crosses a key boundary and a ``where``
-    that builds a default-indexed Series still aligns."""
-    if bucket_masks is None:
-        sub = frame.iloc[a:b]
-        sub.index = pd.RangeIndex(b - a)  # not reset_index: no copy
-        return _group_masks(steps, sub), _alt_member_masks(steps, sub)
+    bucket: slices of ``bucket_masks`` (from :func:`_bucket_masks`)."""
     masks_all, alt_all = bucket_masks
     return (
         [
@@ -1544,8 +1540,8 @@ def match_pattern(
     hash exchange on ``pmod(xxhash64(key), 64)``; per bucket the keys
     are factorized (:func:`_key_codes`), the rows sorted once by (key,
     ``order_cols``) (:func:`_key_sort`), the DEFINE masks evaluated
-    once over the bucket when every step is :attr:`Step.local` and per
-    key otherwise, and :func:`_scan_closed_prefix` scans each key.
+    once over the bucket (:func:`_bucket_masks`) and
+    :func:`_scan_closed_prefix` scans each key.
 
     ``all_rows=True`` is the ``ALL ROWS PER MATCH`` emission contract:
     ``measures`` is called as ``measures(key, segs, n_match)`` — the
@@ -1622,6 +1618,7 @@ def match_pattern(
             c: exact[c][order] if c in exact else frame[c].to_numpy()
             for c in data_cols
         }
+        frame[_KEY_CODE] = codes[order]
         bmasks = _bucket_masks(step_list, frame)
         ts_all = (
             frame[ocols[0]].to_numpy("int64") if within_us is not None
@@ -1631,7 +1628,7 @@ def match_pattern(
         for ki, key in enumerate(keys):
             a, b = int(bnds[ki]), int(bnds[ki + 1])
             cols = {c: v[a:b] for c, v in cols_all.items()}
-            masks, alt_masks = _key_masks(step_list, frame, bmasks, a, b)
+            masks, alt_masks = _key_masks(bmasks, a, b)
             gout: "dict | None" = {} if has_group else None
             _scan_closed_prefix(
                 step_list, masks,

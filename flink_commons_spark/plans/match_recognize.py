@@ -73,9 +73,10 @@ Supported surface (the reference demo's dialect of the standard):
   ``COUNT(*)`` / ``COUNT(V.*)`` — all with running semantics: the
   candidate row counts as already mapped to its own variable, so
   ``LAST(V.price, 1)`` at V's first row is NULL (Flink's canonical
-  ``(LAST(DOWN.price, 1) IS NULL AND ...) OR ...`` guard). Purely
-  row-local predicates compile to vectorized pandas masks (one
-  evaluation per partition); state-dependent ones compile to
+  ``(LAST(DOWN.price, 1) IS NULL AND ...) OR ...`` guard).
+  Predicates that read no match state (PREV/NEXT included) compile
+  to vectorized pandas masks (one evaluation per bucket of keys);
+  state-dependent ones compile to
   per-candidate scalar evaluators with SQL three-valued NULL
   semantics, re-evaluated as the NFA extends each attempt.
 
@@ -109,7 +110,7 @@ from typing import Any, Callable
 import numpy as _np
 import pandas as _pd
 
-from flink_commons_spark.operators.cep import _Seg, _VecSeg, _VecSegs
+from flink_commons_spark.operators.cep import _Seg, _VecSeg, _VecSegs, prev
 
 _MR_RE = re.compile(r"\bMATCH_RECOGNIZE\s*\(", re.IGNORECASE)
 
@@ -1310,8 +1311,7 @@ class _ExprParser:
                 return _Node(nav_s, inner.typ)
 
             def nav(pdf, f=f, shift=shift):
-                s = f(pdf)
-                return s.shift(shift)
+                return prev(pdf, f(pdf), shift)
 
             return _Node(nav, inner.typ)
         if fname == "ABS":
@@ -2302,10 +2302,6 @@ def parse_match_recognize(
     used_cols: set = set()
     max_prev = 0
     var_next: dict[str, int] = {}  # per-variable deepest NEXT offset
-    # variables whose STATIC (vectorized) mask navigates with PREV/NEXT
-    # (Series.shift) — their masks are not row-local, so the bucketed
-    # batch executor must evaluate them per key (Step.local=False)
-    var_statnav: set[str] = set()
     defines: dict[str, Callable] = {}
     dyn_defines: dict[str, Callable] = {}
     for clause in _split_top(bm.group("def")):
@@ -2328,8 +2324,6 @@ def parse_match_recognize(
                                       used_cols, expr_vars, def_var=var,
                                       subsets=subsets)
                 static_fns.append(dparser.parse().fn)
-                if dparser.max_prev or dparser.max_next:
-                    var_statnav.add(var)
             except _NeedsMatchState:
                 # reads match state (cross-variable columns, FIRST/
                 # LAST, running aggregates) — Step.dyn protocol
@@ -2426,7 +2420,6 @@ def parse_match_recognize(
                     defines.get(cname, _wild),
                     quant=(clo, chi),
                     reluctant=crel,
-                    local=cname not in var_statnav,
                 )
                 for cname, clo, chi, crel in children
             ]
@@ -2444,7 +2437,6 @@ def parse_match_recognize(
                 reluctant=rel,
                 group=child_steps,
                 perm=is_perm,
-                local=all(s.local for s in child_steps),
             ))
             continue
         if members is None:
@@ -2455,7 +2447,6 @@ def parse_match_recognize(
                 reluctant=rel,
                 dyn=dyn_defines.get(name),
                 next_depth=var_next.get(name, 0),
-                local=name not in var_statnav,
             ))
             continue
         member_fns = [(a, defines.get(a, _wild)) for a in members]
@@ -2474,7 +2465,6 @@ def parse_match_recognize(
             next_depth=max((var_next.get(a, 0) for a in members),
                            default=0),
             alts=member_fns,
-            local=all(a not in var_statnav for a in members),
         ))
 
     measures: list[tuple[str, _Node]] = []

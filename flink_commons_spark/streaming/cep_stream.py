@@ -5,7 +5,7 @@ stream) buffers each key's out-of-order events, sorts them as the
 watermark closes their timestamps, runs the NFA over the closed
 prefix, and emits completed matches. The batch matcher and the core
 both executors share — key codes and the one bucket sort, DEFINE
-masks per bucket or per key, the one scan
+masks once per bucket, the one scan
 (:func:`operators.cep._scan_closed_prefix`) and the one match emitter
 — live in :mod:`flink_commons_spark.operators.cep`; this module holds
 the streaming harness, :func:`stream_match_pattern`, on
@@ -176,12 +176,10 @@ def stream_match_pattern(
     and new rows by (key, ``order_cols``) (``_key_codes``,
     ``_key_sort``); each key's closed prefix from one cumulative count
     of rows below the watermark; one frame of the bucket's closed
-    rows. When every step is
-    :attr:`Step.local <operators.cep.Step>` (row-local DEFINEs) the
-    DEFINE and alternation masks are evaluated ONCE over that frame and
-    sliced per key; otherwise (a PREV/NEXT-navigating step) they are
-    evaluated per key on the key's slice, so no shift reads a
-    neighbouring key's row (``_bucket_masks``, ``_key_masks``).
+    rows. The DEFINE and alternation masks are evaluated ONCE over
+    that frame, whose ``__cep_kc`` column holds each row's key code so
+    that PREV/NEXT (``operators.cep.prev``) read NULL across a key
+    boundary, and sliced per key (``_bucket_masks``, ``_key_masks``).
     ``_scan_closed_prefix`` then runs per key on slices of the shared
     column arrays and masks — matching stays strictly per key
     (per-key timers become the bucket's min; an early settle of an
@@ -276,6 +274,7 @@ def stream_match_pattern(
     import pandas as pd
 
     from flink_commons_spark.operators.cep import (
+        _KEY_CODE,
         _bucket_masks,
         _DynCtx,
         _key_codes,
@@ -452,16 +451,16 @@ def stream_match_pattern(
         closed = ts // 1000 < wm_ms
         cb = np.concatenate(([0], np.cumsum(closed)))[bnds]
         # ---- one frame of the bucket's closed rows under the
-        # reader-visible names. Row-local DEFINE masks are evaluated
-        # once over it; a pattern with a PREV/NEXT-navigating step
-        # evaluates per key on the key's slice, so no shift crosses a
-        # key boundary
+        # reader-visible names, plus each row's key code for PREV/NEXT
+        # (mask frame only: not in ``ccols``, the measures or state);
+        # every DEFINE mask is evaluated once over it
         ccols: dict = {}
-        frame = bmasks = None
+        bmasks = None
         if cb[-1]:
             ren = frame_renames or {}
             ccols = {ren.get(c, c): a[closed] for c, a in arrs.items()}
             frame = pd.DataFrame(ccols)
+            frame[_KEY_CODE] = np.repeat(np.arange(nuni), np.diff(cb))
             bmasks = _bucket_masks(step_list, frame)
         # ---- scan every key's closed prefix (idempotent for keys
         # whose decision horizon has not moved — verdicts only depend
@@ -478,9 +477,7 @@ def stream_match_pattern(
             consumed, pending = nctx, None
             if nc > nctx:
                 cols = {c: v[ca:ca + nc] for c, v in ccols.items()}
-                masks, alt_masks = _key_masks(
-                    step_list, frame, bmasks, ca, ca + nc
-                )
+                masks, alt_masks = _key_masks(bmasks, ca, ca + nc)
                 gout: "dict | None" = {} if has_group else None
                 consumed, pending = _scan_closed_prefix(
                     step_list, masks,

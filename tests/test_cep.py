@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from flink_commons_spark.operators.cep import Step, match_pattern
+from flink_commons_spark.operators.cep import Step, match_pattern, prev
 
 
 def _events(spark, seq: str):
@@ -311,8 +311,8 @@ def test_within_window_edge_is_exclusive(spark):
 #: Flink's V-shape ``STRT DOWN+ UP+`` with PREV-navigating masks
 _VSHAPE = [("*", 1, 1), ("down", 1, None), ("up", 1, None)]
 _VSHAPE_DEFINES = {
-    "down": lambda p: p["val"] < p["val"].shift(1),
-    "up": lambda p: p["val"] > p["val"].shift(1),
+    "down": lambda p: p["val"] < prev(p, "val"),
+    "up": lambda p: p["val"] > prev(p, "val"),
 }
 
 

@@ -76,7 +76,7 @@ def test_prev_does_not_cross_a_key_boundary_in_one_bucket(
     ends on cents 7 and key 2 starts on cents 7: a ``PREV`` evaluated
     across the bucket would match key 2's first row. It must see NULL
     there, and the output must equal the batch matcher run per key."""
-    from flink_commons_spark.operators.cep import Step, match_pattern
+    from flink_commons_spark.operators.cep import Step, match_pattern, prev
     from flink_commons_spark.streaming.cep_stream import (
         stream_match_pattern,
     )
@@ -88,7 +88,7 @@ def test_prev_does_not_cross_a_key_boundary_in_one_bucket(
     ]
     path = str(tmp_path / "prev_src")
     _write_files(spark, path, [rows, [(7, 9, 100, "x", 0)]])
-    steps = [Step("s", lambda p: p["cents"] == p["cents"].shift(1))]
+    steps = [Step("s", lambda p: p["cents"] == prev(p, "cents"))]
 
     def measures(key, segs):
         return {
@@ -237,9 +237,9 @@ def test_bucket_count_does_not_change_matches(spark, tmp_path, state_buckets):
 
 
 def test_row_local_define_runs_once_per_settle(spark, tmp_path, state_buckets):
-    """With every step row-local and 50 keys in one bucket, each step's
-    ``where`` runs once per settle over the bucket's closed rows — at
-    most once per micro-batch — not once per key."""
+    """With 50 keys in one bucket, each step's ``where`` runs once per
+    settle over the bucket's closed rows — at most once per
+    micro-batch — not once per key."""
     from flink_commons_spark.operators.cep import Step
     from flink_commons_spark.streaming.cep_stream import (
         stream_match_pattern,
@@ -265,9 +265,9 @@ def test_row_local_define_runs_once_per_settle(spark, tmp_path, state_buckets):
         return where
 
     steps = [
-        Step("v", counting("v", "view"), local=True),
-        Step("c", counting("c", "click"), plus=True, local=True),
-        Step("p", counting("p", "purchase"), local=True),
+        Step("v", counting("v", "view")),
+        Step("c", counting("c", "click"), plus=True),
+        Step("p", counting("p", "purchase")),
     ]
     out = stream_match_pattern(
         _source(spark, path).withWatermark("ts", "0 seconds"),

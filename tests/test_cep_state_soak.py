@@ -328,7 +328,7 @@ def test_stream_match_pattern_checkpoint_resume(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from flink_commons_spark.operators.cep import Step
+    from flink_commons_spark.operators.cep import Step, prev
     from flink_commons_spark.streaming.cep_stream import (
         stream_match_pattern,
     )
@@ -346,8 +346,8 @@ def test_stream_match_pattern_checkpoint_resume(spark, tmp_path):
 
     steps = [
         Step("strt", lambda p: pd.Series(True, index=p.index)),
-        Step("down", lambda p: p["price"] < p["price"].shift(1), plus=True),
-        Step("up", lambda p: p["price"] > p["price"].shift(1), plus=True),
+        Step("down", lambda p: p["price"] < prev(p, "price"), plus=True),
+        Step("up", lambda p: p["price"] > prev(p, "price"), plus=True),
     ]
 
     def measures(key, segs):

@@ -87,33 +87,104 @@ def test_stream_shuffle_honors_cluster_parallelism(spark):
         spark.conf.unset("spark.flinkcommons.stream.shuffle.partitions")
 
 
+def _script_end_conf(spark, sql, keys):
+    """Run ``sql``; returns the session values of ``keys`` when the
+    script's statements (and streams) are done, before the run puts
+    the session back, and after it."""
+    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
+
+    class Probe(SqlSubmitAction):
+        def _await_active_queries(self, sp):
+            super()._await_active_queries(sp)
+            self.at_end = {k: sp.conf.get(k, None) for k in keys}
+
+    action = Probe(sql_text=sql, spark=spark)
+    action.run()
+    return action.at_end, {k: spark.conf.get(k, None) for k in keys}
+
+
 def test_unset_parallelism_restores_session_keys(spark):
     """``UNSET 'parallelism.default'`` puts back the two Spark keys its
     SET wrote, so no stale parallelism outlives the script's UNSET
     (the streaming INSERT's partition rule reads them as explicit);
-    a later SET of a Spark key itself stands."""
-    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
-
+    a later SET of a Spark key itself stands until the run ends."""
     keys = ("spark.sql.shuffle.partitions", "spark.default.parallelism")
     saved = {k: spark.conf.get(k, None) for k in keys}
     spark.conf.unset("spark.default.parallelism")  # as a fresh session has it
     before = {k: spark.conf.get(k, None) for k in keys}
-
-    def run(sql):
-        SqlSubmitAction(sql_text=sql, spark=spark).run()
-        return {k: spark.conf.get(k, None) for k in keys}
-
     try:
-        assert run("SET 'parallelism.default' = '3';\n"
-                   "SET 'parallelism.default' = '5';\n"
-                   "UNSET 'parallelism.default';") == before
-        assert run("SET 'parallelism.default' = '3';\n"
-                   "SET 'spark.sql.shuffle.partitions' = '7';\n"
-                   "UNSET 'parallelism.default';") == {
-            "spark.sql.shuffle.partitions": "7", "spark.default.parallelism": None}
+        assert _script_end_conf(spark, "SET 'parallelism.default' = '3';\n"
+                                "SET 'parallelism.default' = '5';\n"
+                                "UNSET 'parallelism.default';", keys) == (before, before)
+        assert _script_end_conf(spark, "SET 'parallelism.default' = '3';\n"
+                                "SET 'spark.sql.shuffle.partitions' = '7';\n"
+                                "UNSET 'parallelism.default';", keys) == (
+            {"spark.sql.shuffle.partitions": "7", "spark.default.parallelism": None}, before)
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_unset_spark_key_restores_the_session_value(spark):
+    """``UNSET`` of a ``spark.*`` key puts back the value the session
+    had before the script, not Spark's default; a key the script never
+    SET is unset for the rest of the script only."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "12345")
+    try:
+        assert _script_end_conf(spark, f"SET '{key}' = '-1';\nUNSET '{key}';",
+                                [key]) == ({key: "12345"}, {key: "12345"})
+        assert _script_end_conf(spark, f"UNSET '{key}';",
+                                [key]) == ({key: None}, {key: "12345"})
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_script_sets_last_as_long_as_its_run(spark, tmp_path):
+    """Every Spark key a script's SETs write — translated or
+    ``spark.*`` — has its session value back once ``run()`` returns,
+    also when the run does not await its streams; a streaming query
+    the script started keeps the values it started with (Spark clones
+    the session conf per query)."""
+    from pyspark.sql import functions as F
+
+    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
+
+    keys = ("spark.sql.shuffle.partitions", "spark.default.parallelism",
+            "spark.sql.session.timeZone", "spark.sql.autoBroadcastJoinThreshold")
+    src, out = tmp_path / "src", tmp_path / "out"
+    spark.createDataFrame([(h * 3600,) for h in range(24)], "sec long") \
+        .write.parquet(str(src))
+    (spark.readStream.schema("sec long").parquet(str(src))
+     .withColumn("ts", F.timestamp_seconds("sec"))
+     .createOrReplaceTempView("scoped_events"))
+    before = {k: spark.conf.get(k, None) for k in keys}
+    action = SqlSubmitAction(sql_text=f"""
+SET 'execution.runtime-mode' = 'streaming';
+SET 'flinkcommons.trigger' = 'availableNow';
+SET 'parallelism.default' = '3';
+SET 'table.local-time-zone' = 'Asia/Tokyo';
+SET 'spark.sql.autoBroadcastJoinThreshold' = '-1';
+CREATE TABLE scoped_sink (sec BIGINT, h STRING)
+WITH ('connector' = 'filesystem', 'path' = '{out}', 'format' = 'parquet');
+INSERT INTO scoped_sink SELECT sec, date_format(ts, 'HH') AS h FROM scoped_events;
+""", spark=spark, await_streams=False)
+    try:
+        action.run()
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+        (query,) = action._started_queries
+        query.awaitTermination(120)
+        assert query.exception() is None
+    finally:
+        for q in action._started_queries:
+            q.stop()
+        spark.catalog.dropTempView("scoped_events")
+    got = {r.sec: r.h for r in spark.read.parquet(str(out)).collect()}
+    assert got == {h * 3600: f"{(h + 9) % 24:02d}" for h in range(24)}
