@@ -170,7 +170,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from flink_commons_spark import catalog
-    from flink_commons_spark.session import PYTHON_WORKER_CONF
+    from flink_commons_spark.session import SESSION_CONF
 
     # catalog entries added after this list was written still get timed:
     # the ordering above stays stable for round-over-round comparison,
@@ -213,7 +213,7 @@ def main() -> None:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # q_recursive_cte is row-bounded but crosses the 1M default guard ~sf0.5
         .config("spark.sql.cteRecursionRowLimit", "500000000")
-        .config(map=PYTHON_WORKER_CONF)
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -36,13 +36,19 @@ import tempfile
 from contextlib import contextmanager
 
 from flink_commons_spark.actions.base import Action, ActionFactory, MultiParams, register_factory
-from flink_commons_spark.conf import RunnerConfig, apply_set, parse_set_statement, restore_session_conf
+from flink_commons_spark.conf import (
+    RunnerConfig,
+    apply_set,
+    parse_set_statement,
+    restore_session_conf,
+    scoped_conf,
+)
 from flink_commons_spark.plans.ddl import TableSpec, is_connector_ddl, parse_create_table
 from flink_commons_spark.plans.dialect import adapt_sql
 from flink_commons_spark.plans.script import load_statements, load_statements_from_text
 from flink_commons_spark.plans.statements import StatementType
 from flink_commons_spark.sources import registry as connectors
-from flink_commons_spark.streaming import partitions
+from flink_commons_spark.streaming import checkpoints, partitions
 
 log = logging.getLogger(__name__)
 
@@ -577,11 +583,16 @@ class SqlSubmitAction(Action):
             # (ONLY_ALLOW_SINGLE_TRIGGER) — default micro-batching needs
             # no call at all
             writer = writer.trigger(**trigger)
-        query = (
-            writer.option("checkpointLocation", self._checkpoint_dir("select"))
-            .option("truncate", "false")
-            .start()
-        )
+        checkpoint = self._checkpoint_dir("select")
+        manager, reason = checkpoints.checkpoint_manager(spark, [checkpoint],
+                                                         script=self.config.raw)
+        log.info("SELECT: checkpoint manager %s (%s)", checkpoints.manager_name(manager), reason)
+        with scoped_conf(spark, checkpoints.MANAGER_CONF, manager):
+            query = (
+                writer.option("checkpointLocation", checkpoint)
+                .option("truncate", "false")
+                .start()
+            )
         self._started_queries.append(query)
         timeout = self._timeout()
         query.awaitTermination(timeout)
@@ -604,7 +615,7 @@ class SqlSubmitAction(Action):
         if target and target in self.tables:
             spec = self.tables[target]
             query_sql = self._adapt_streaming_sql(m.group("query"))
-            with self._state_partitions(spark, query_sql, target):
+            with self._stream_start(spark, query_sql, target, spec):
                 df = self._sql_df(spark, query_sql)
                 listed = (
                     [c.strip().strip("`") for c in m.group("cols").split(",")]
@@ -682,13 +693,18 @@ class SqlSubmitAction(Action):
     # ----------------------------------------------------- streaming bits
 
     @contextmanager
-    def _state_partitions(self, spark, sql: str, target: str):
-        """Scope ``spark.sql.shuffle.partitions`` around a streaming
-        INSERT to the count :func:`~flink_commons_spark.streaming.
-        partitions.stateful_partitions` picks. It is decided before the
-        query is compiled, so the bucket count of its keyed state
-        (``4 x partitions``) and the running query read the same number;
-        a query started in the scope keeps it after the restore.
+    def _stream_start(self, spark, sql: str, target: str, spec: TableSpec):
+        """Scope two session confs around a streaming INSERT; a query
+        started in the scope keeps them after the restore.
+
+        ``spark.sql.shuffle.partitions`` gets the count :func:`~
+        flink_commons_spark.streaming.partitions.stateful_partitions`
+        picks. It is decided before the query is compiled, so the bucket
+        count of its keyed state (``4 x partitions``) and the running
+        query read the same number. The checkpoint file manager is the
+        one :func:`~flink_commons_spark.streaming.checkpoints.
+        checkpoint_manager` picks for the checkpoint and a
+        ``filesystem`` sink's path.
 
         Only a script SET counts as explicit here: the runner's count has
         always been the session's ``spark.sql.shuffle.partitions`` (which
@@ -701,16 +717,22 @@ class SqlSubmitAction(Action):
             return
         from flink_commons_spark.plans.match_recognize import contains_match_recognize
 
+        checkpoint = self._checkpoint_dir(target, create=False)
         relations = self._read_relations(spark, sql) if contains_match_recognize(sql) else None
         sources = partitions.plan_sources(spark, relations) if relations else ()
         n, reason = partitions.stateful_partitions(
             spark, int(spark.conf.get(partitions.SHUFFLE_CONF)),
             script=self.config.raw, session=False,
-            checkpoint=self._checkpoint_dir(target, create=False),
+            checkpoint=checkpoint,
             sources=sources, trigger_s=self.config.trigger_interval_s,
         )
-        log.info("INSERT INTO %s: %d state partition(s) (%s)", target, n, reason)
-        with partitions.scoped_partitions(spark, n):
+        sink = spec.options.get("path") if spec.connector == "filesystem" else None
+        manager, why = checkpoints.checkpoint_manager(spark, [checkpoint, sink],
+                                                      script=self.config.raw)
+        log.info("INSERT INTO %s: %d state partition(s) (%s), checkpoint manager %s (%s)",
+                 target, n, reason, checkpoints.manager_name(manager), why)
+        with scoped_conf(spark, partitions.SHUFFLE_CONF, str(n)), \
+                scoped_conf(spark, checkpoints.MANAGER_CONF, manager):
             yield
 
     @staticmethod

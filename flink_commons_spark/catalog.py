@@ -190,12 +190,13 @@ def _with_stream_shuffle(n: int = 8):
     """
     import functools
 
-    from flink_commons_spark.streaming.partitions import scoped_partitions, stateful_partitions
+    from flink_commons_spark.conf import scoped_conf
+    from flink_commons_spark.streaming.partitions import SHUFFLE_CONF, stateful_partitions
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            with scoped_partitions(spark, stateful_partitions(spark, n)[0]):
+            with scoped_conf(spark, SHUFFLE_CONF, str(stateful_partitions(spark, n)[0])):
                 return fn(spark, sf_dir)
 
         return wrapper

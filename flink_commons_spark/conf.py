@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import logging
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 log = logging.getLogger(__name__)
@@ -155,6 +156,19 @@ def restore_session_conf(config: RunnerConfig, spark) -> None:
     for k, old in config.replaced.items():
         _put_conf(spark, k, old)
     config.replaced.clear()
+
+
+@contextmanager
+def scoped_conf(spark, key: str, value: str | None):
+    """Set ``key`` to ``value`` (None: unset) inside the block and put
+    the session value back after it. A streaming query started in the
+    block keeps ``value``."""
+    old = spark.conf.get(key, None)
+    _put_conf(spark, key, value)
+    try:
+        yield
+    finally:
+        _put_conf(spark, key, old)
 
 
 def _put_conf(spark, key: str, value: str | None) -> None:

@@ -683,6 +683,7 @@ class _ExprParser:
         self.max_prev = 0  # deepest PREV offset (streaming ctx_rows)
         self.max_next = 0  # deepest NEXT offset
         self._nav_depth = 0  # >0 while parsing a PREV/NEXT argument
+        self._col_reads = 0  # column references parsed so far
         self.uses_match_number = False  # MATCH_NUMBER() appeared
         #: SQL:2016 SUBSET union variables (name → member tuple); the
         #: names are already in ``variables`` — this map tells the
@@ -1275,10 +1276,17 @@ class _ExprParser:
             if fname == "NEXT":
                 self.uses_next = True
             self._nav_depth += 1
+            reads = self._col_reads
             try:
                 inner = self._or()
             finally:
                 self._nav_depth -= 1
+            if self._col_reads == reads:
+                raise ValueError(
+                    f"{fname}() navigates rows, so its argument must read a "
+                    f"column, e.g. {fname}(A.x); a constant has no previous "
+                    "or next row"
+                )
             n = 1
             if self._accept_op(","):
                 k, v = self._next()
@@ -1759,6 +1767,7 @@ class _ExprParser:
         if col not in self.col_types:
             raise ValueError(f"unknown column {col!r}")
         self.used_cols.add(col)
+        self._col_reads += 1
         return self.col_types[col]
 
     def _dyn_cur(self, col: str, ctype: str) -> _Node:

@@ -12,10 +12,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Static conf every session of the project is built with: Python
-#: workers start from ``worker_daemon``, which imports the installed
-#: pyspark instead of ``$SPARK_HOME``'s archives (see that module).
-PYTHON_WORKER_CONF = {"spark.python.daemon.module": "flink_commons_spark.worker_daemon"}
+from flink_commons_spark.streaming.checkpoints import LOCAL_MANAGER, MANAGER_CONF
+
+#: Static conf every session of the project is built with:
+#:
+#: - Python workers start from ``worker_daemon``, which imports the
+#:   installed pyspark instead of ``$SPARK_HOME``'s archives (see that
+#:   module);
+#: - streaming checkpoints go through Hadoop's ``FileSystem`` instead of
+#:   ``FileContext``, whose local rename forks ``readlink`` (see
+#:   ``streaming.checkpoints``, which puts Spark's default back for a
+#:   query that writes off the local file system).
+#:
+#: A script ``SET`` of the checkpoint key, or another value set on the
+#: session before a run, is kept as it is.
+SESSION_CONF = {
+    "spark.python.daemon.module": "flink_commons_spark.worker_daemon",
+    MANAGER_CONF: LOCAL_MANAGER,
+}
 
 
 def get_session(app_name: str = "flink-commons-spark", master: str | None = None,
@@ -35,7 +49,7 @@ def get_session(app_name: str = "flink-commons-spark", master: str | None = None
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
-        .config(map=PYTHON_WORKER_CONF)
+        .config(map=SESSION_CONF)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 import logging
 import os
-from contextlib import contextmanager
 from typing import Iterable, Mapping
 from urllib.parse import urlparse
 
@@ -201,16 +200,3 @@ def stateful_partitions(spark, default: int, *, script: Mapping[str, str] | None
         n = max(1, min(default, -(-rows // ROWS_PER_PARTITION)))
         return n, f"{rows} rows per trigger"
     return default, "spark.sql.shuffle.partitions (rows per trigger unknown)"
-
-
-@contextmanager
-def scoped_partitions(spark, n: int):
-    """Set ``spark.sql.shuffle.partitions`` to ``n`` inside the block,
-    restoring the session value after it. A streaming query started in
-    the block keeps ``n``."""
-    old = spark.conf.get(SHUFFLE_CONF)
-    spark.conf.set(SHUFFLE_CONF, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(SHUFFLE_CONF, old)

@@ -12,7 +12,7 @@ drops those archives before it imports pyspark, so the workers it
 forks import from the files and hold no zipimporter. Otherwise the
 path is left as Spark built it.
 
-``session.PYTHON_WORKER_CONF`` selects this module.
+``session.SESSION_CONF`` selects this module.
 """
 
 from __future__ import annotations

@@ -44,7 +44,7 @@ def main() -> None:
     from flink_commons_spark.session import get_session
 
     # the runner's own session: $SPARK_GRAFT_CPUS cores and Python
-    # workers started through session.PYTHON_WORKER_CONF
+    # workers started through session.SESSION_CONF
     spark = get_session("bench-subset")
     spark.sparkContext.setLogLevel("ERROR")
 

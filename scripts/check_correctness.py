@@ -61,7 +61,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
-    from flink_commons_spark.session import PYTHON_WORKER_CONF
+    from flink_commons_spark.session import SESSION_CONF
 
     # defaults suit the sf0.01 gate; at sf1+ raise both
     # (SPARK_GRAFT_CPUS=32 SPARK_GRAFT_DRIVER_MEM=16g) or the JVM dies
@@ -89,7 +89,7 @@ def main() -> int:
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem))
         # q_recursive_cte is row-bounded but crosses the 1M default guard ~sf0.5
         .config("spark.sql.cteRecursionRowLimit", "500000000")
-        .config(map=PYTHON_WORKER_CONF)
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     con = duckdb.connect()

@@ -7,7 +7,7 @@ import pytest
 def spark():
     from pyspark.sql import SparkSession
 
-    from flink_commons_spark.session import PYTHON_WORKER_CONF
+    from flink_commons_spark.session import SESSION_CONF
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -16,7 +16,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config(map=PYTHON_WORKER_CONF)
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -17,6 +17,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from flink_commons_spark.operators.cep import _alt_member_masks, _group_masks
@@ -101,3 +102,30 @@ def test_bucket_masks_equal_per_key_masks(keys, offsets, codes_seed):
         want = np.where(ref["B"], 0, np.where(ref["C"], 1, -1))
         assert choice[a:b].tolist() == want.tolist()
         a = b
+
+
+@pytest.mark.parametrize("define", [
+    "PREV(1) = 1",
+    "NEXT(2, 1) > 0",
+    "A.x > PREV(1 + 2)",
+    "PREV(A.x) > PREV(-1, 2)",
+])
+def test_navigating_a_constant_is_rejected_at_parse_time(define):
+    """PREV/NEXT over an argument that reads no column has no row to
+    move to: the parser rejects it, naming the fix, instead of the
+    mask builder failing on a scalar that has no ``shift``."""
+    sql = _SQL.split("DEFINE")[0].replace("(A (B | C) (D E)+ F)", "(A B)")
+    sql += f"DEFINE A AS {define}, B AS B.x > 0\n)"
+    with pytest.raises(ValueError, match=r"must read a column, e\.g\. (PREV|NEXT)\(A\.x\)"):
+        parse_match_recognize(sql, COLS)
+
+
+def test_navigating_a_column_expression_still_parses():
+    """An argument that reads a column through arithmetic or a
+    function navigates as before."""
+    frame = pd.DataFrame({"x": [1.0, 3.0, 2.0], "s": ["a", "b", "c"],
+                          "__cep_kc": np.zeros(3, dtype=np.int64)})
+    sql = _SQL.split("DEFINE")[0].replace("(A (B | C) (D E)+ F)", "(A)")
+    sql += "DEFINE A AS A.x > PREV(A.x * 2 - 1)\n)"
+    (mask,) = _group_masks(parse_match_recognize(sql, COLS).steps, frame)
+    assert mask.tolist() == [False, True, False]
