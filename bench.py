@@ -1,6 +1,12 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark runner: contract queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE compact JSON line (summary stats + the 10 slowest queries):
+Usage::
+
+    python bench.py [name|@prefix ...]
+
+With no arguments it times the headline set (below, then every catalog
+entry it lacks), prints ONE compact JSON line (summary stats + the 10
+slowest queries):
 ``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
 and writes the full per-query timing dict — the min of
 ``$SPARK_GRAFT_TIMED_RUNS`` (default 2) timed passes, plus every raw
@@ -8,10 +14,20 @@ sample — to ``BENCH_DETAIL.json`` next to this script (the driver's
 stdout capture keeps only a ~2 KB tail, which a 106-entry dict
 overruns).
 
+Arguments select a subset instead: a query name, or ``@prefix`` for
+every catalog query whose name starts with ``prefix`` (catalog order).
+The protocol is the same; the JSON line's ``queries`` holds every
+selected query, and no detail or closing file is written, so the
+committed full-run evidence stays as it is; the tree identity (commit
+and package source digest) that a full run records in the detail file
+goes to stderr instead.
+
 The headline set covers every operator family (scan-agg, multi-join,
 window, sessionization, as-of, text, dedup, similarity, multimodal,
 streaming) — the same callables the driver's correctness gate checks,
-so benchmarked code is verified code.
+so benchmarked code is verified code. The session is the runner's own
+(``session.get_session``), and ``flink_commons_spark`` is imported from
+this script's tree, by the driver and the Python workers alike.
 """
 
 from __future__ import annotations
@@ -22,7 +38,9 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+from perfbench.tree import identity, pin
+
+ROOT = Path(__file__).resolve().parent
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -134,6 +152,55 @@ HEADLINE = [
 ]
 
 
+def _interleave(names: list[str]) -> list[str]:
+    """Spread the streaming family evenly across the run instead of
+    letting appended stream_* queries cluster at the tail: the round-11
+    driver bench hit one contention window that inflated four adjacent
+    streaming queries 2.8-9x on unchanged code (judge re-timed all four
+    at 3.2-3.7 s). Spreading them means a transient noisy window taxes
+    at most one or two streaming queries, and the min-of-3 protocol
+    can recover the rest. Deterministic: relative order within each
+    family is preserved, so per-query round-over-round comparison still
+    holds; the realized order is recorded in BENCH_DETAIL.json."""
+    streams = [n for n in names if n.startswith("stream_")]
+    batches = [n for n in names if not n.startswith("stream_")]
+    if not (streams and batches):
+        return list(names)
+    interleaved = []
+    step = len(batches) / len(streams)
+    si, acc = 0, step
+    for bi, bname in enumerate(batches):
+        interleaved.append(bname)
+        while si < len(streams) and bi + 1 >= acc:
+            interleaved.append(streams[si])
+            si += 1
+            acc += step
+    interleaved.extend(streams[si:])
+    return interleaved
+
+
+def select_queries(args: list[str], catalog_names: list[str]) -> list[str]:
+    """The queries a run times, in run order.
+
+    No arguments: ``HEADLINE``, then the catalog entries added after it
+    was written (so the ordering stays stable round over round), with
+    the streaming family interleaved. Otherwise each argument is a
+    query name or ``@prefix``; an argument that selects nothing exits
+    non-zero naming it, rather than timing nothing."""
+    if not args:
+        return _interleave(HEADLINE + [n for n in catalog_names if n not in HEADLINE])
+    names: list[str] = []
+    for arg in args:
+        if arg.startswith("@"):
+            hits = [n for n in catalog_names if n.startswith(arg[1:])]
+        else:
+            hits = [arg] if arg in catalog_names else []
+        if not hits:
+            raise SystemExit(f"bench: {arg!r} selects no catalog query")
+        names.extend(n for n in hits if n not in names)
+    return names
+
+
 def _unload_state_stores(spark) -> None:
     """Unload lingering streaming state-store providers (and their
     maintenance thread) between queries: a stopped streaming query's
@@ -149,7 +216,7 @@ def _unload_state_stores(spark) -> None:
         pass  # non-classic session or API drift — isolation is best-effort
 
 
-def main() -> None:
+def main(args: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # RAM-backed scratch for streaming checkpoints/staging when
@@ -167,55 +234,17 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
-
+    # the package next to this script, for this process and the
+    # Python workers alike, whatever the working directory
+    pin(ROOT)
     from flink_commons_spark import catalog
-    from flink_commons_spark.session import SESSION_CONF
+    from flink_commons_spark.session import get_session
 
-    # catalog entries added after this list was written still get timed:
-    # the ordering above stays stable for round-over-round comparison,
-    # new queries append at the end
-    HEADLINE.extend(n for n in catalog.QUERIES if n not in HEADLINE)
+    names = select_queries(args, list(catalog.QUERIES))
 
-    # Interleave the streaming family evenly across the run instead of
-    # letting appended stream_* queries cluster at the tail: the round-11
-    # driver bench hit one contention window that inflated four adjacent
-    # streaming queries 2.8-9x on unchanged code (judge re-timed all four
-    # at 3.2-3.7 s). Spreading them means a transient noisy window taxes
-    # at most one or two streaming queries, and the min-of-3 protocol
-    # below can recover the rest. Deterministic: relative order within
-    # each family is preserved, so per-query round-over-round comparison
-    # still holds; the realized order is recorded in BENCH_DETAIL.json.
-    streams = [n for n in HEADLINE if n.startswith("stream_")]
-    batches = [n for n in HEADLINE if not n.startswith("stream_")]
-    if streams and batches:
-        interleaved = []
-        step = len(batches) / len(streams)
-        si, acc = 0, step
-        for bi, bname in enumerate(batches):
-            interleaved.append(bname)
-            while si < len(streams) and bi + 1 >= acc:
-                interleaved.append(streams[si])
-                si += 1
-                acc += step
-        interleaved.extend(streams[si:])
-        HEADLINE[:] = interleaved
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("flink-commons-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # q_recursive_cte is row-bounded but crosses the 1M default guard ~sf0.5
-        .config("spark.sql.cteRecursionRowLimit", "500000000")
-        .config(map=SESSION_CONF)
-        .getOrCreate()
-    )
+    os.environ["SPARK_DRIVER_MEMORY"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_session(app_name="flink-commons-spark-bench", master=f"local[{cpus}]",
+                        shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     # untimed warm-up: JVM/session/codegen spin-up otherwise lands on the
@@ -347,7 +376,7 @@ def main() -> None:
     # deviates >2x from its committed closing value gets a flagged note
     # in the summary + detail, so a contended driver session is
     # self-attributing instead of needing a judge A/B re-time
-    closing_path = Path(__file__).resolve().parent / "BENCH_CLOSING.json"
+    closing_path = ROOT / "BENCH_CLOSING.json"
     closing_ref: dict[str, float] = {}
     try:
         _closing = json.loads(closing_path.read_text())
@@ -383,7 +412,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     total = 0.0
-    for name in HEADLINE:
+    for name in names:
         fn = catalog.QUERIES[name]
         n_timed = stream_timed_runs if name.startswith("stream_") else timed_runs
         try:
@@ -454,11 +483,12 @@ def main() -> None:
     # parses that line from a 2000-char stdout tail (BENCH_r02
     # recorded `parsed: null` when a 106-entry dict overran it), and a
     # 218-entry map is ~6 KB.
-    detail_cpu_path = (
-        Path(__file__).resolve().parent / f"BENCH_DETAIL_c{cpus}.json"
-    )
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
-    detail_path.write_text(json.dumps({
+    # A subset run writes neither file, so the committed full-run
+    # evidence is not overwritten.
+    full = not args
+    detail_cpu_path = ROOT / f"BENCH_DETAIL_c{cpus}.json"
+    detail_path = ROOT / "BENCH_DETAIL.json"
+    detail = {
         "metric": "headline_queries_total_runtime",
         "value": round(total, 3),
         "unit": "sec",
@@ -483,9 +513,16 @@ def main() -> None:
         "scratch_dir": os.environ.get("SPARK_GRAFT_SCRATCH_DIR", ""),
         # session position per query (1-based run order): late-session
         # drift is attributable without re-deriving dict order
-        "order": {name: i + 1 for i, name in enumerate(HEADLINE)},
-    }, indent=1))
-    detail_cpu_path.write_text(detail_path.read_text())
+        "order": {name: i + 1 for i, name in enumerate(names)},
+        # which tree this run imported (commit and source digest), so
+        # each leg of an A/B shows what it timed
+        "tree": identity(ROOT),
+    }
+    if full:
+        detail_path.write_text(json.dumps(detail, indent=1))
+        detail_cpu_path.write_text(detail_path.read_text())
+    else:
+        print(f"bench: tree {json.dumps(detail['tree'])}", file=sys.stderr)
 
     # calibration-normalized quotients: total divided by the fixed
     # microbench legs. Comparable across rounds even when the box
@@ -513,17 +550,17 @@ def main() -> None:
         "total_over_cal_pandas": round(total / cal_pd, 1) if cal_pd else -1,
         "drift_flagged_n": len(drift_flagged),
         "drift_flagged": sorted(drift_flagged)[:6],
-        "queries": slowest,
+        "queries": slowest if full else timings,
         # per-cpu detail file — survives a later scaling run at a
         # different core count (the fixed-name twin below is still
         # written for older tooling); holds the FULL per-query map
-        "detail": detail_cpu_path.name,
-        "detail_fixed": detail_path.name,
+        "detail": detail_cpu_path.name if full else None,
+        "detail_fixed": detail_path.name if full else None,
     }, separators=(",", ":")))
 
     # builder's closing run commits the per-query mins as the same-tree
     # reference the next (driver) session's drift flags compare against
-    if os.environ.get("SPARK_GRAFT_WRITE_CLOSING"):
+    if full and os.environ.get("SPARK_GRAFT_WRITE_CLOSING"):
         closing_path.write_text(json.dumps({
             "queries": {k: v for k, v in timings.items() if v > 0},
             "total": round(total, 3),
@@ -539,4 +576,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

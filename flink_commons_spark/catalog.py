@@ -2537,9 +2537,7 @@ def stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions (gap 4 h) closed by a per-key timer at ``last_event +
     gap`` that fires when the watermark passes it
     (``streaming/timers.py`` — ``applyInPandasWithState`` with
-    ``EventTimeTimeout``; the explicit-``registerTimer``
-    ``transformWithStateInPandas`` twin ships alongside, gated on
-    protobuf availability). Sessions closed by a later event emit
+    ``EventTimeTimeout``). Sessions closed by a later event emit
     in-batch; each key's trailing session emits only if its timer
     expires before the final watermark (stream end) — the oracle
     states that timer-fire condition explicitly on the same ms grid
@@ -10673,8 +10671,8 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Spark guards runaway recursion at 1M rows (spark.sql.
     # cteRecursionRowLimit), read at EXECUTION time — so it must be a
-    # session-level setting in whatever harness collects this query
-    # (bench.py / scripts/* set it): this traversal is provably bounded
+    # session-level setting (``session.get_session`` sets it, for
+    # ``sql-submit`` and every harness): this traversal is provably bounded
     # (rows = parts × digit-count) and crosses 1M at ~sf0.5.
     _t(spark, sf_dir, "part").createOrReplaceTempView("fcs_rc_part")
     return spark.sql("""

@@ -48,7 +48,11 @@ def get_session(app_name: str = "flink-commons-spark", master: str | None = None
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # row-bounded recursive CTEs (q_recursive_cte) cross the 1M
+        # default guard at ~sf0.5
+        .config("spark.sql.cteRecursionRowLimit", "500000000")
         .config(map=SESSION_CONF)
     )
     spark = builder.getOrCreate()

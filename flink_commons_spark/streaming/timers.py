@@ -5,23 +5,13 @@ per-key state AND per-key event-time timers (``ctx.timerService()
 .registerEventTimeTimer``); the canonical use is inactivity detection:
 emit a user's session when no event arrives for ``gap`` seconds.
 
-Spark exposes the same machinery two ways:
+Spark exposes the same machinery through ``applyInPandasWithState``
+with ``GroupStateTimeout.EventTimeTimeout``: per-key state in the state
+store, ``state.setTimeoutTimestamp`` is the timer registration, and the
+function is re-invoked with ``state.hasTimedOut`` once the watermark
+passes the timestamp (:func:`inactivity_sessions`).
 
-- :func:`inactivity_sessions` — ``applyInPandasWithState`` with
-  ``GroupStateTimeout.EventTimeTimeout``: per-key state in the state
-  store, ``state.setTimeoutTimestamp`` is the timer registration, and
-  the function is re-invoked with ``state.hasTimedOut`` once the
-  watermark passes the timestamp. Works on every Spark ≥3.4 deploy —
-  this is the implementation the contract query uses.
-- :class:`InactivitySessionProcessor` — the Spark 4
-  ``transformWithStateInPandas(timeMode="eventTime")`` form with
-  explicit ``registerTimer`` calls, the closest structural match to
-  Flink's API. Its Python worker protocol needs ``google.protobuf``,
-  which this environment does not ship, so it is exercised by a
-  gated test (skipped when protobuf is absent) rather than the
-  contract.
-
-Semantics (both implementations):
+Semantics:
 
 - events for a key are sessionized with gap ``gap_s``. A session
   CLOSED BY A LATER EVENT in the same batch is emitted immediately
@@ -122,68 +112,3 @@ def inactivity_sessions(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# --------------------------------------------------------------------
-# Spark 4 transformWithState form (gated: needs google.protobuf in the
-# Python environment for the state-server protocol)
-# --------------------------------------------------------------------
-
-try:  # pragma: no cover - import surface depends on pyspark version
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class InactivitySessionProcessor(StatefulProcessor):
-    """Per-key inactivity sessions via explicit event-time timers —
-    the ``transformWithStateInPandas`` twin of
-    :func:`inactivity_sessions` (identical output)."""
-
-    def __init__(self, gap_s: int) -> None:
-        self.gap_us = int(gap_s) * 1_000_000
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self.handle = handle
-        self.state = handle.getValueState("open_session", SESSION_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator["pd.DataFrame"], timerValues: "TimerValues"
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        ts = pd.concat([pdf["ts_us"] for pdf in rows]).sort_values().to_numpy()
-        prior = self.state.get()
-        if prior is not None:
-            # the old timer is superseded by this batch's events
-            self.handle.deleteTimer(_timer_ms(prior[1], self.gap_us))
-        closed, open_sess = _advance(int(key[0]), ts, prior, self.gap_us)
-        self.state.update(open_sess)
-        self.handle.registerTimer(_timer_ms(open_sess[1], self.gap_us))
-        if closed:
-            yield pd.DataFrame(closed, columns=_COLS)
-
-    def handleExpiredTimer(
-        self,
-        key: Any,
-        timerValues: "TimerValues",
-        expiredTimerInfo: "ExpiredTimerInfo",
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        prior = self.state.get()
-        if prior is None:  # stale timer for an already-cleared key
-            return
-        start_us, last_us, n = prior
-        if expiredTimerInfo.getExpiryTimeInMs() < _timer_ms(last_us, self.gap_us):
-            return  # superseded timer that still fired — newer one pending
-        self.state.clear()
-        yield pd.DataFrame([(int(key[0]), start_us, last_us, n)], columns=_COLS)
-
-    def close(self) -> None:
-        pass

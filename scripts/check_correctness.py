@@ -22,7 +22,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -58,10 +59,12 @@ def main() -> int:
     only = set(argv[1:])
 
     import duckdb
-    import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from perfbench.tree import pin
 
-    from flink_commons_spark.session import SESSION_CONF
+    # the Python workers import the package too, from any working directory
+    pin(ROOT)
+    import __spark_entry__ as entrymod
+    from flink_commons_spark.session import get_session
 
     # defaults suit the sf0.01 gate; at sf1+ raise both
     # (SPARK_GRAFT_CPUS=32 SPARK_GRAFT_DRIVER_MEM=16g) or the JVM dies
@@ -78,20 +81,9 @@ def main() -> int:
         f.stat().st_size for f in Path(sf_dir).glob("*.parquet")
     ) // 2**20
     auto_mem = f"{min(32, max(4, 4 * (1 + data_mb // 50)))}g"
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("check-correctness")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem))
-        # q_recursive_cte is row-bounded but crosses the 1M default guard ~sf0.5
-        .config("spark.sql.cteRecursionRowLimit", "500000000")
-        .config(map=SESSION_CONF)
-        .getOrCreate()
-    )
+    os.environ["SPARK_DRIVER_MEMORY"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem)
+    spark = get_session(app_name="check-correctness", master=f"local[{cpus}]",
+                        shuffle_partitions=int(cpus))
     con = duckdb.connect()
     # bound the ORACLE side too: an oracle whose intermediate is
     # quadratic in duplicate density (e.g. a shingle self-join over a

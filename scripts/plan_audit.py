@@ -12,29 +12,27 @@ PERFORMANCE.md §1 — rerun after operator changes::
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    from pyspark.sql import SparkSession
+    from perfbench.tree import pin
 
+    # the Python workers import the package too, from any working directory
+    pin(ROOT)
     from flink_commons_spark import catalog
+    from flink_commons_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("fcs-plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    spark = get_session(app_name="fcs-plan-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
@@ -64,7 +62,7 @@ def main() -> None:
         rows.append((name, scans, pushed, bhj, smj, exch, nlj, codegen))
         spark.catalog.clearCache()
 
-    out = Path(__file__).resolve().parent.parent / "PLAN_AUDIT.md"
+    out = ROOT / "PLAN_AUDIT.md"
     with out.open("w") as f:
         f.write(
             "# PLAN AUDIT — per-query physical-plan features\n\n"

@@ -1,24 +1,18 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    """The runner's own session (``get_session``), on two cores with
+    Spark's default 1g heap unless ``SPARK_DRIVER_MEMORY`` says otherwise."""
+    from flink_commons_spark.session import get_session
 
-    from flink_commons_spark.session import SESSION_CONF
-
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .appName("fcs-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(map=SESSION_CONF)
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    spark = get_session(app_name="fcs-tests", master="local[2]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

@@ -310,6 +310,29 @@ def test_streaming_select_without_trigger_conf(spark, tmp_path):
     assert action._started_queries and not action._started_queries[0].isActive
 
 
+def test_recursive_cte_past_the_default_row_guard(spark, capsys):
+    """A ``WITH RECURSIVE`` script whose recursion yields more than
+    Spark's default 1,000,000-row guard runs through ``sql-submit``:
+    the session sets ``spark.sql.cteRecursionRowLimit``, as the
+    correctness gate and the bench had already set it for
+    ``q_recursive_cte``."""
+    from flink_commons_spark.actions.sql_submit import SqlSubmitAction
+
+    script = """
+    SET 'execution.runtime-mode' = 'batch';
+    SELECT count(*) AS n FROM (
+      WITH RECURSIVE t(lvl, x) AS (
+        SELECT 0, 0L
+        UNION ALL
+        SELECT lvl + 1, explode(array(2 * x, 2 * x + 1)) FROM t WHERE lvl < 20
+      )
+      SELECT x FROM t
+    );
+    """
+    SqlSubmitAction(sql_text=script, spark=spark).run()
+    assert str(2**21 - 1) in capsys.readouterr().out
+
+
 def _action_with_tables(*ddls):
     """A runner whose registry holds ``ddls`` — no Spark session needed."""
     from flink_commons_spark.plans.ddl import parse_create_table

@@ -34,3 +34,32 @@ def test_no_duplicate_top_level_defs():
         if dupes:
             offenders[str(path.relative_to(PKG.parent))] = dupes
     assert not offenders, f"shadowed top-level definitions: {offenders}"
+
+
+ROOT = PKG.parent
+#: the one session builder, and the sf1/sf3 generator, whose bytes no
+#: session conf may change
+BUILDER_FILES = {"flink_commons_spark/session.py", "scripts/gen_sf1.py"}
+BUILDER = "SparkSession" + ".builder"  # split, so this file is no match
+
+
+def _repo_py_files():
+    skip = {".git", "spark-warehouse", ".work", ".runs", "__pycache__"}
+    for path in sorted(ROOT.rglob("*.py")):
+        if not skip.intersection(path.relative_to(ROOT).parts):
+            yield path
+
+
+def test_spark_sessions_come_from_get_session():
+    """Every tool, test and harness builds its session with
+    ``session.get_session``, so each measures and checks the session
+    ``sql-submit`` runs on."""
+    builders = {
+        str(path.relative_to(ROOT)) for path in _repo_py_files()
+        if BUILDER in path.read_text()}
+    assert builders == BUILDER_FILES
+
+
+def test_no_scripts_under_plans():
+    """``plans/`` keeps results; ``bench.py`` is the one timing loop."""
+    assert not sorted((ROOT / "plans").rglob("*.py"))

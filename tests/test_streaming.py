@@ -889,62 +889,6 @@ def test_timer_sessions_inbatch_and_timeout(spark, tmp_path):
     assert got == {(1, 100, 110, 2), (1, 1000, 1010, 2)}
 
 
-def test_transform_with_state_processor_gated(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin — runs only when the
-    python environment ships google.protobuf (the TWS state-server
-    protocol needs it)."""
-    pytest.importorskip("google.protobuf")
-    from flink_commons_spark.streaming.timers import (
-        SESSION_SCHEMA,
-        InactivitySessionProcessor,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        rows = [(1, 100), (1, 110), (1, 1000), (1, 1010), (2, 2000)]
-        df = spark.createDataFrame(rows, "user_id long, sec long").select(
-            "user_id", F.timestamp_seconds("sec").alias("ts")
-        )
-        src = str(tmp_path / "ev")
-        df.repartition(1).write.parquet(src)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .parquet(src)
-            .withWatermark("ts", "0 seconds")
-            .select("user_id", "ts", F.expr("unix_micros(ts)").alias("ts_us"))
-        )
-        out = sdf.groupBy("user_id").transformWithStateInPandas(
-            InactivitySessionProcessor(gap_s=60),
-            SESSION_SCHEMA,
-            "append",
-            "eventTime",
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_tws_sessions")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r.user_id, r.start_us // 1_000_000, r.end_us // 1_000_000, r.n_events)
-            for r in spark.table("t_tws_sessions").collect()
-        }
-        assert got == {(1, 100, 110, 2), (1, 1000, 1010, 2)}
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-
 def test_timer_sessions_multi_batch(spark, tmp_path):
     """Sessions spanning micro-batch boundaries: state carries across
     batches, superseded timers are replaced, and the trailing-session
