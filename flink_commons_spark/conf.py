@@ -33,6 +33,32 @@ def _spark_keys(key: str) -> tuple[str, ...]:
     return (key,) if key.startswith("spark.") else _SPARK_KEYS.get(key, ())
 
 
+#: session keys that earlier versions read, each with what decides the
+#: same thing now. Ignoring one would lose state or change output for a
+#: session that still sets it, so :func:`reject_removed` fails instead.
+REMOVED_KEYS = {
+    "spark.flinkcommons.stream.match.buckets":
+        "the keyed-state bucket count is 4 x spark.sql.shuffle.partitions, "
+        "and a resumed runner INSERT takes the partition count from its checkpoint",
+    "spark.flinkcommons.mr.strict-steps":
+        "spark.flinkcommons.mr.max-steps bounds each match attempt's sub-NFA "
+        "steps, and its plain steps at max(max-steps, 64 x (rows + 1) x steps)",
+    "spark.flinkcommons.mr.durable-match-number":
+        "a key whose buffer drains fully restarts MATCH_NUMBER at 1",
+    "spark.flinkcommons.stream.shuffle.partitions":
+        "spark.default.parallelism (what SET 'parallelism.default' writes) "
+        "sets the state-partition count",
+}
+
+
+def reject_removed(spark, key: str) -> None:
+    """Raise :class:`ValueError` when ``key``, one of
+    :data:`REMOVED_KEYS`, is set on the session, naming what replaces
+    it."""
+    if spark.conf.get(key, None) is not None:
+        raise ValueError(f"{key} is no longer supported: {REMOVED_KEYS[key]}; unset it")
+
+
 _UNIT_SECONDS = {
     "ms": 0.001,
     "s": 1, "sec": 1, "second": 1, "seconds": 1,

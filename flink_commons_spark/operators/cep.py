@@ -329,7 +329,6 @@ def _match_at_ex(
     gout: "dict | None" = None,
     max_steps: "int | None" = None,
     pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
 ) -> "tuple[list | None, int]":
     """Greedy backtracking match of ``steps`` against positions
     ``start..`` — returns (per-step position ranges or None,
@@ -402,13 +401,7 @@ def _match_at_ex(
     separately at ``max(max_steps, 64·(n+1)·nsteps)`` — proportional
     to the scan, so a linear pattern over an arbitrarily long skewed
     key never trips it, while a polynomial plain-step blowup
-    (O(n²)+ takes per attempt) still dies. ``strict_budget=True``
-    removes that scan-proportional floor and bounds BOTH axes at
-    ``max_steps`` verbatim — the hard per-attempt latency bound a
-    caller gets by opting in via ``SET
-    'spark.flinkcommons.mr.strict-steps' = 'true'`` (ADVICE r13: with
-    the floor, the conf knob alone cannot tighten plain recursion
-    below ~64·n ticks on a long key). Exceeding either raises
+    (O(n²)+ takes per attempt) still dies. Exceeding either raises
     :class:`MatchStepBudgetExceeded` naming the axis and
     ``pattern_desc`` (the PATTERN text when the SQL front door is the
     caller)."""
@@ -431,10 +424,7 @@ def _match_at_ex(
     # polynomial plain-step blowup (O(n²)+ per attempt — a genuine
     # scale-killer on big keys) still dies with the diagnostic.
     group_left = budget
-    plain_bound = (
-        budget if strict_budget
-        else max(budget, 64 * (n + 1) * max(1, nsteps))
-    )
+    plain_bound = max(budget, 64 * (n + 1) * max(1, nsteps))
     plain_left = plain_bound
 
     def _raise_budget(axis: str, bound: int) -> None:
@@ -474,8 +464,6 @@ def _match_at_ex(
         nonlocal plain_left
         plain_left -= 1
         if plain_left < 0:
-            # report the bound actually enforced — under strict-steps
-            # that is the conf value verbatim, not the scan floor
             _raise_budget("plain-step", plain_bound)
     end_kind = 1 if undecided_n is None or n >= undecided_n else 0
     if dctx is not None:
@@ -849,7 +837,6 @@ def _scan_closed_prefix(
     gout=None,
     max_steps: "int | None" = None,
     pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
 ):
     """The sequential scan over one key's sorted rows — the one scan
     of both executors: :func:`match_pattern` runs it over a key's
@@ -995,7 +982,6 @@ def _scan_closed_prefix(
             masks, steps, i, n_i, run_ends, failed, dctx, step_bounds,
             undecided_n=n, gout=gout,
             max_steps=max_steps, pattern_desc=pattern_desc,
-            strict_budget=strict_budget,
         )
         # bit 2 (frontier cut) always defers; bit 1 (closed-data end)
         # only while the pattern window is still open — a closed
@@ -1494,7 +1480,6 @@ def match_pattern(
     number_matches: bool = False,
     max_steps: "int | None" = None,
     pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
 ) -> DataFrame:
     """MATCH_RECOGNIZE-style pattern matching over a keyed, ordered
     event table.
@@ -1543,6 +1528,12 @@ def match_pattern(
     once over the bucket (:func:`_bucket_masks`) and
     :func:`_scan_closed_prefix` scans each key.
 
+    A NaN float key comes out NaN, as Spark's ``GROUP BY`` labels it:
+    pyspark's Arrow conversion reads a pandas NaN as NULL, so when a
+    float key column is also a float output column, each output row's
+    NaN key fields travel as bits of one int column that is read and
+    dropped after the exchange.
+
     ``all_rows=True`` is the ``ALL ROWS PER MATCH`` emission contract:
     ``measures`` is called as ``measures(key, segs, n_match)`` — the
     per-key scan-order match ordinal, counted afresh for every group
@@ -1553,7 +1544,7 @@ def match_pattern(
     Python loop anywhere on the path.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType, FloatType, IntegralType
+    from pyspark.sql.types import DoubleType, FloatType, IntegralType, StructType
 
     step_list = list(steps)
     _skip_index(step_list, after_match)  # fail before any Spark job
@@ -1591,6 +1582,16 @@ def match_pattern(
             continue
         nulls = bit if nulls is None else nulls + bit
     has_kn = nulls is not None
+
+    def is_float(f):
+        return f is not None and isinstance(f.dataType, (FloatType, DoubleType))
+
+    out_fields = {f.name.lower(): f for f in StructType.fromDDL(output_schema).fields}
+    # (key index, output field) of each float key emitted as a float column
+    nan_keys = [
+        (i, out_fields[c.lower()]) for i, c in enumerate(key_cols)
+        if is_float(fields.get(c.lower())) and is_float(out_fields.get(c.lower()))
+    ]
     proj = list(proj.values())
     if has_kn:
         proj.append(nulls.alias("__cep_kn"))
@@ -1625,7 +1626,9 @@ def match_pattern(
             else None
         )
         out: list = []
+        key_rows: list = []  # output rows per key, for the NaN bits
         for ki, key in enumerate(keys):
+            emitted = len(out)
             a, b = int(bnds[ki]), int(bnds[ki + 1])
             cols = {c: v[a:b] for c, v in cols_all.items()}
             masks, alt_masks = _key_masks(bmasks, a, b)
@@ -1640,13 +1643,37 @@ def match_pattern(
                 within_us=within_us, after_match=after_match,
                 dctx=_DynCtx(cols) if has_dyn else None, gout=gout,
                 max_steps=max_steps, pattern_desc=pattern_desc,
-                strict_budget=strict_budget,
             )
-        return _match_frame(out, out_cols, all_rows, int_cols)
+            if nan_keys:
+                key_rows.append(
+                    sum(c[0] for c in out[emitted:]) if all_rows
+                    else len(out) - emitted
+                )
+        pdf = _match_frame(out, out_cols, all_rows, int_cols)
+        if nan_keys:
+            # a NaN key field is the one key value unequal to itself
+            bits = [
+                sum(1 << j for j, (i, _) in enumerate(nan_keys) if key[i] != key[i])
+                for key in keys
+            ]
+            pdf["__cep_nan"] = np.repeat(np.array(bits, dtype=np.int32), key_rows)
+        return pdf
 
     bucket = F.pmod(F.xxhash64(*key_cols), F.lit(_BATCH_BUCKETS))
-    return (
+    res = (
         df.select(*proj, bucket.alias("__cep_bucket"))
         .groupBy("__cep_bucket")
-        .applyInPandas(run_bucket, schema=output_schema)
+        .applyInPandas(
+            run_bucket,
+            schema=output_schema + (", __cep_nan int" if nan_keys else ""),
+        )
     )
+    if not nan_keys:
+        return res
+    nan_bits = F.col("__cep_nan")
+    return res.withColumns({
+        f.name: F.when(
+            nan_bits.bitwiseAND(1 << j) != 0, F.lit(float("nan")).cast(f.dataType)
+        ).otherwise(F.col(f.name))
+        for j, (_, f) in enumerate(nan_keys)
+    }).drop("__cep_nan")

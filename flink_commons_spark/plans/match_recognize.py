@@ -110,6 +110,7 @@ from typing import Any, Callable
 import numpy as _np
 import pandas as _pd
 
+from flink_commons_spark.conf import reject_removed
 from flink_commons_spark.operators.cep import _Seg, _VecSeg, _VecSegs, prev
 
 _MR_RE = re.compile(r"\bMATCH_RECOGNIZE\s*\(", re.IGNORECASE)
@@ -2664,9 +2665,11 @@ def _conf_max_steps(spark) -> int:
     regex-backtracking exponential worst case: an adversarial pattern
     (e.g. ``(A+ B+)+ C`` with overlapping predicates) raises a clear
     :class:`operators.cep.MatchStepBudgetExceeded` naming the pattern
-    instead of pinning an executor core."""
+    instead of pinning an executor core. Plain steps get a bound
+    proportional to the scan on top of it (``operators.cep._match_at_ex``)."""
     from flink_commons_spark.operators.cep import DEFAULT_MAX_STEPS
 
+    reject_removed(spark, "spark.flinkcommons.mr.strict-steps")
     raw = spark.conf.get(
         "spark.flinkcommons.mr.max-steps", str(DEFAULT_MAX_STEPS)
     )
@@ -2681,32 +2684,6 @@ def _conf_max_steps(spark) -> int:
             f"spark.flinkcommons.mr.max-steps must be positive, got {v}"
         )
     return v
-
-
-def _conf_strict_steps(spark) -> bool:
-    """``SET 'spark.flinkcommons.mr.strict-steps' = 'true'`` makes
-    ``mr.max-steps`` a HARD per-attempt bound on BOTH budget axes.
-
-    By default the conf value bounds only the group/PERMUTE sub-NFA
-    axis (the exponential one); top-level plain-step recursion gets a
-    scan-proportional floor ``max(budget, 64·(n+1)·nsteps)`` so a
-    legitimate linear pattern over a long skewed key never falsely
-    raises. The floor means the knob alone cannot tighten plain
-    recursion below ~64·n ticks (ADVICE r13) — a caller that wants a
-    deliberate hard latency bound (e.g. an SLA on adversarial input)
-    opts into strict mode, accepting that linear patterns over keys
-    longer than the budget will then raise
-    :class:`operators.cep.MatchStepBudgetExceeded` too."""
-    raw = str(
-        spark.conf.get("spark.flinkcommons.mr.strict-steps", "false")
-    ).strip().lower()
-    if raw in ("true", "1", "yes"):
-        return True
-    if raw in ("false", "0", "no"):
-        return False
-    raise ValueError(
-        f"spark.flinkcommons.mr.strict-steps must be a boolean, got {raw!r}"
-    )
 
 
 def _has_watermark(df) -> bool:
@@ -3100,16 +3077,7 @@ def _execute_mr_resolved(spark, sql: str, strict_compat: bool = False):
             (c, types_now[c]) for c in df.columns
             if c in needed and c not in frame_renames.values()
         ] + [(src, "bigint") for src in frame_renames]
-        # opt-in durable MATCH_NUMBER: keep a counter-only tombstone
-        # when a key's buffer fully drains, so ordinals stay stable on
-        # unbounded streams (SET 'spark.flinkcommons.mr.durable-match-
-        # number'='true'; default off — a drained key restarts at 1,
-        # the documented divergence)
-        durable_no = (spec.all_rows or spec.uses_match_number) and (
-            spark.conf.get(
-                "spark.flinkcommons.mr.durable-match-number", "false"
-            ).lower() == "true"
-        )
+        reject_removed(spark, "spark.flinkcommons.mr.durable-match-number")
         res = stream_match_pattern(
             df,
             key_cols,
@@ -3122,7 +3090,6 @@ def _execute_mr_resolved(spark, sql: str, strict_compat: bool = False):
             within_us=spec.within_us,
             all_rows=spec.all_rows,
             number_matches=spec.uses_match_number and not spec.all_rows,
-            durable_match_no=durable_no,
             # retain as many consumed context rows as the deepest PREV
             # offset needs — PREV(col, n≥2) must see its true n-th
             # predecessor after a match consumes the prefix; NEXT
@@ -3131,7 +3098,6 @@ def _execute_mr_resolved(spark, sql: str, strict_compat: bool = False):
             frame_renames=frame_renames or None,
             max_steps=_conf_max_steps(spark),
             pattern_desc=f"({spec.pattern_text})",
-            strict_budget=_conf_strict_steps(spark),
         )
         for c in dec_out:
             res = res.withColumn(c, F.timestamp_micros(F.col(c)))
@@ -3149,7 +3115,6 @@ def _execute_mr_resolved(spark, sql: str, strict_compat: bool = False):
             number_matches=spec.uses_match_number and not spec.all_rows,
             max_steps=_conf_max_steps(spark),
             pattern_desc=f"({spec.pattern_text})",
-            strict_budget=_conf_strict_steps(spark),
         )
     view = f"__mr_out_{next(_view_ids)}"
     res.createOrReplaceTempView(view)

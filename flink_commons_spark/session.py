@@ -9,6 +9,8 @@ pandas interchange for the vectorized operator paths.
 from __future__ import annotations
 
 import os
+import re
+import shlex
 
 from pyspark.sql import SparkSession
 
@@ -32,29 +34,75 @@ SESSION_CONF = {
 }
 
 
+def cluster_conf() -> dict[str, str]:
+    """The Spark conf the deployment gives a new session: a running
+    gateway's ``SparkConf``, else the ``--conf`` (and ``--master``,
+    ``--driver-memory``) values of ``PYSPARK_SUBMIT_ARGS`` over
+    ``spark-defaults.conf`` in ``$SPARK_CONF_DIR`` (default
+    ``$SPARK_HOME/conf``). Without a gateway the files are read
+    directly: launching one here would fix the driver heap before the
+    builder's ``spark.driver.memory`` reached the JVM."""
+    from pyspark import SparkConf, SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()  # attaches to spark-submit's JVM
+    if SparkContext._gateway is not None:
+        return dict(SparkConf().getAll())
+    conf: dict[str, str] = {}
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    defaults = os.path.join(conf_dir, "spark-defaults.conf")
+    if os.path.isfile(defaults):
+        with open(defaults) as f:
+            for line in f:
+                if (m := re.match(r"\s*([^#\s=:]+)[\s=:]+(.*?)\s*$", line)):
+                    conf[m[1]] = m[2]
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    flags = {"--master": "spark.master", "--driver-memory": "spark.driver.memory"}
+    for flag, value in zip(args, args[1:]):
+        if flag in ("--conf", "-c"):
+            key, _, value = value.partition("=")
+            conf[key] = value
+        elif flag in flags:
+            conf[flags[flag]] = value
+    return conf
+
+
 def get_session(app_name: str = "flink-commons-spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
+    """The project's Spark session. ``app_name``, and ``master`` and
+    ``shuffle_partitions`` when given, are set as passed; every other
+    default below (``master`` ``local[$SPARK_GRAFT_CPUS]``, that many
+    shuffle partitions, the driver heap from ``SPARK_DRIVER_MEMORY``,
+    :data:`SESSION_CONF`, ...) applies only where :func:`cluster_conf`
+    has no value for the key. The keyed-state bucket count derives
+    from ``spark.sql.shuffle.partitions``, so a cluster's value must
+    survive here."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.shuffle.spill.compress", "true")
+    defaults = {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.sql.shuffle.spill.compress": "true",
         # row-bounded recursive CTEs (q_recursive_cte) cross the 1M
         # default guard at ~sf0.5
-        .config("spark.sql.cteRecursionRowLimit", "500000000")
-        .config(map=SESSION_CONF)
-    )
-    spark = builder.getOrCreate()
+        "spark.sql.cteRecursionRowLimit": "500000000",
+        **SESSION_CONF,
+    }
+    cluster = cluster_conf()
+    conf = {k: v for k, v in defaults.items() if k not in cluster}
+    conf["spark.app.name"] = app_name
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -37,33 +37,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-#: session conf holding the keyed-state bucket count shared by the
-#: bucketed streaming operators (this module and ``stateful.py``)
-BUCKETS_CONF = "spark.flinkcommons.stream.match.buckets"
+from flink_commons_spark.conf import reject_removed
 
 
 def resolve_bucket_count(spark) -> int:
-    """The keyed-state bucket count: the :data:`BUCKETS_CONF` session
-    conf, else 4 x ``spark.sql.shuffle.partitions`` (scale-adaptive: a
-    cluster that raises its parallelism raises the bucket count with
-    it), else 64. A conf value that is not a positive integer raises —
-    every key lives in some bucket; there is no per-key layout."""
-    raw = spark.conf.get(BUCKETS_CONF, "")
-    if raw:
-        try:
-            n = int(raw)
-        except ValueError:
-            n = 0
-        if n <= 0:
-            raise ValueError(
-                f"{BUCKETS_CONF}={raw!r}: the keyed-state bucket count "
-                "must be a positive integer — set a count >= 1 or unset it"
-            )
-        return n
-    try:
-        return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return 64
+    """The keyed-state bucket count of the bucketed streaming operators
+    (this module and ``stateful.py``): 4 x ``spark.sql.shuffle.partitions``.
+    Nothing else sets it, so a query resumed with the partition count
+    its checkpoint recorded (rule 1 of
+    ``streaming.partitions.stateful_partitions``) hashes every key to
+    the bucket that holds its state."""
+    reject_removed(spark, "spark.flinkcommons.stream.match.buckets")
+    return 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def bucket_column(key_cols: "list[str]", n: int):
@@ -147,10 +132,8 @@ def stream_match_pattern(
     frame_renames: "dict[str, str] | None" = None,
     all_rows: bool = False,
     number_matches: bool = False,
-    durable_match_no: bool = False,
     max_steps: "int | None" = None,
     pattern_desc: "str | None" = None,
-    strict_budget: bool = False,
 ) -> DataFrame:
     """GENERIC watermark-gated streaming MATCH_RECOGNIZE — the
     streaming twin of :func:`operators.cep.match_pattern` with the
@@ -160,12 +143,12 @@ def stream_match_pattern(
     This is what the SQL front door routes streaming sources to.
 
     State is BUCKETED, like the batch executor's shuffle key: the
-    stateful operator groups on
-    :func:`bucket_column` over :func:`resolve_bucket_count` buckets
-    and each state row holds the PACKED MULTI-KEY buffers of every key
-    in the bucket (per-column concatenated blobs + per-key offsets/ctx/
-    sort-flag/ordinal arrays; every settle re-sorts, so the sort flags
-    are written but not read). Why: the ``applyInPandasWithState``
+    stateful operator groups on :func:`bucket_column` over
+    :func:`resolve_bucket_count` (4 x ``spark.sql.shuffle.partitions``)
+    buckets and each state row holds the PACKED MULTI-KEY buffers of
+    every key in the bucket (per-column concatenated blobs + per-key
+    offsets/ctx/sort-flag/ordinal arrays; every settle re-sorts, so the
+    sort flags are written but not read). Why: the ``applyInPandasWithState``
     transport pays a per-KEY-GROUP Arrow framing + state-store row cost
     of ~0.9-1.3 s per 100k-row micro-batch at 1.5k keys regardless of
     Python work (r14 profile) — with buckets the protocol cost tracks
@@ -253,23 +236,14 @@ def stream_match_pattern(
     match ordinal (``MATCH_NUMBER()``), persisted in state across
     settles by an extra per-key ordinal array (``__mrn``) — appended
     ONLY in this mode, so existing one-row checkpoints keep their
-    layout. One documented divergence: when a key's buffer fully
-    drains its state (counter included) is dropped, so on a genuinely
-    unbounded stream a key that re-appears after a complete drain
-    restarts MATCH_NUMBER at 1; a bounded replay (availableNow) settles every match before
-    the drain, where numbering equals the batch executor's.
-    ``durable_match_no=True`` opts out of that divergence: a fully
-    drained key keeps a counter-only tombstone (an empty buffer + its
-    ordinal — same state layout, no timer), so ordinals continue
-    across drains. Because the tombstone sets NO timeout
-    timer and ``applyInPandasWithState`` only evicts keys whose own
-    timer fires, no idle period — however long — can drop it: the
-    ordinal survives arbitrary idleness (pinned by
-    ``test_streaming_durable_match_number_survives_long_idle``) and
-    restarts only when the state itself is externally cleared (a new
-    checkpoint). One bigint per ever-seen key for the checkpoint's
-    lifetime is the documented cost of stable ordinals on an
-    unbounded keyspace."""
+    layout. One documented divergence, the drain rule PREV context
+    follows too: when a key's buffer fully drains its state (counter
+    included) is dropped, so on a genuinely unbounded stream a key
+    that re-appears after a complete drain restarts MATCH_NUMBER at 1;
+    a bounded replay (availableNow) settles every match before the
+    drain, where numbering equals the batch executor's. A zero-row key
+    in a checkpoint written by an earlier version (a MATCH_NUMBER
+    tombstone) is dropped at its bucket's next settle."""
     import numpy as np
     import pandas as pd
 
@@ -446,8 +420,8 @@ def stream_match_pattern(
         # — a prefix, since the event time leads the per-key order):
         # key ki's closed rows are closed-frame rows [cb[ki], cb[ki+1]).
         # Cumulative-sum differences, not np.add.reduceat, which reads
-        # a zero-row segment (a MATCH_NUMBER tombstone) as its
-        # neighbour's first element
+        # a zero-row segment (a key of an older checkpoint's MATCH_NUMBER
+        # tombstone) as its neighbour's first element
         closed = ts // 1000 < wm_ms
         cb = np.concatenate(([0], np.cumsum(closed)))[bnds]
         # ---- one frame of the bucket's closed rows under the
@@ -495,7 +469,6 @@ def stream_match_pattern(
                     ),
                     gout=gout,
                     max_steps=max_steps, pattern_desc=pattern_desc,
-                    strict_budget=strict_budget,
                 )
             keep_from = consumed
             if within_us is not None:
@@ -523,10 +496,6 @@ def stream_match_pattern(
                     cands.append(
                         (int(ts[a + keep_from]) + within_us) // 1000 + 1
                     )
-            elif track_no and durable_match_no and seq[0]:
-                # counter-only tombstone — MATCH_NUMBER ordinals
-                # survive a full buffer drain (opt-in; no timer)
-                kept.append((ki, a, 0, 0, seq[0]))
         # ---- re-pack the bucket: one take of the kept rows, one encode
         # per column, + per-key key values / offsets / nctx /
         # sorted-flag (+ ordinal)

@@ -13,9 +13,8 @@ picks the count; the first of its four cases that applies wins:
    ``4 x partitions``, must match the state it wrote);
 2. explicit parallelism: a script ``SET`` of ``parallelism.default``
    or ``spark.sql.shuffle.partitions``, then (unless the caller leaves
-   them out) the session confs
-   ``spark.flinkcommons.stream.shuffle.partitions`` and
-   ``spark.default.parallelism``;
+   it out) the session's ``spark.default.parallelism``, which a
+   ``SET 'parallelism.default'`` also writes;
 3. rows per trigger bounded and known from the sources: one partition
    per :data:`ROWS_PER_PARTITION` rows, at least 1, at most the
    default;
@@ -34,6 +33,8 @@ import os
 from typing import Iterable, Mapping
 from urllib.parse import urlparse
 
+from flink_commons_spark.conf import reject_removed
+
 log = logging.getLogger(__name__)
 
 SHUFFLE_CONF = "spark.sql.shuffle.partitions"
@@ -44,7 +45,7 @@ SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 ROWS_PER_PARTITION = 10_000
 
 _SCRIPT_KEYS = ("parallelism.default", SHUFFLE_CONF)
-_SESSION_KEYS = ("spark.flinkcommons.stream.shuffle.partitions", "spark.default.parallelism")
+_SESSION_KEY = "spark.default.parallelism"
 
 
 def _explicit_partitions(spark, script: Mapping[str, str] | None = None,
@@ -53,13 +54,11 @@ def _explicit_partitions(spark, script: Mapping[str, str] | None = None,
     for key in _SCRIPT_KEYS:
         if raw := (script or {}).get(key):
             return int(raw), f"SET '{key}'"
-    for key in _SESSION_KEYS if session else ():
-        try:
-            raw = spark.conf.get(key, "")
-        except Exception:
-            raw = ""
-        if raw:
-            return int(raw), key
+    if not session:
+        return None
+    reject_removed(spark, "spark.flinkcommons.stream.shuffle.partitions")
+    if raw := spark.conf.get(_SESSION_KEY, None):
+        return int(raw), _SESSION_KEY
     return None
 
 
@@ -180,8 +179,8 @@ def stateful_partitions(spark, default: int, *, script: Mapping[str, str] | None
                         trigger_s: float | None = None) -> tuple[int, str]:
     """The state-partition count of a streaming query and why (the
     module docstring lists the rules). ``default`` is today's count,
-    ``script`` the script's SETs, ``session`` whether the session confs
-    of rule 2 count, ``checkpoint`` the query's checkpoint location,
+    ``script`` the script's SETs, ``session`` whether the session conf
+    of rule 2 counts, ``checkpoint`` the query's checkpoint location,
     ``sources`` what :func:`plan_sources` returns for the relations it
     reads (none: rule 3 does not apply). Never more than ``default``
     unless a checkpoint or an explicit setting says so."""

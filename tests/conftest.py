@@ -19,14 +19,18 @@ def spark():
 
 
 @pytest.fixture()
-def state_buckets(spark):
-    """``state_buckets(n)`` sets the keyed-state bucket count of the
-    bucketed streaming operators built afterwards in the test; the
-    conf is unset again when the test ends."""
-    from flink_commons_spark.streaming.cep_stream import BUCKETS_CONF
+def state_buckets(monkeypatch):
+    """``state_buckets(n)`` makes the bucketed streaming operators
+    built afterwards in the test use ``n`` keyed-state buckets instead
+    of 4 x ``spark.sql.shuffle.partitions``, by substituting the one
+    resolver both of them call."""
+    from flink_commons_spark.streaming import cep_stream, stateful
 
-    yield lambda n: spark.conf.set(BUCKETS_CONF, str(n))
-    spark.conf.unset(BUCKETS_CONF)
+    def use(n):
+        for mod in (cep_stream, stateful):
+            monkeypatch.setattr(mod, "resolve_bucket_count", lambda _spark: n)
+
+    return use
 
 
 @pytest.fixture()

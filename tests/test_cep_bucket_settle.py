@@ -158,8 +158,8 @@ _NUMBERED_SQL = """
       )"""
 
 #: key whose buffer fully drains (its one funnel matches) and which
-#: re-appears files later — a durable MATCH_NUMBER tombstone in between
-_TOMB_KEY = 500
+#: re-appears files later, so the stream restarts its MATCH_NUMBER
+_DRAIN_KEY = 500
 
 
 def _seeded_files(seed: int, n_keys: int = 12):
@@ -180,7 +180,7 @@ def _seeded_files(seed: int, n_keys: int = 12):
     for f, start in ((0, 2), (3, 65)):
         for j, kind in enumerate(("view", "click", "purchase")):
             eid += 1
-            files[f].append((eid, _TOMB_KEY, start + j, kind, 1))
+            files[f].append((eid, _DRAIN_KEY, start + j, kind, 1))
     for rows in files:
         rng.shuffle(rows)
     return files + [[(eid + 1, 9999, 10_000, "x", 0)]]
@@ -190,10 +190,10 @@ def test_bucket_count_does_not_change_matches(spark, tmp_path, state_buckets):
     """One bucket for every key, 3 buckets, and more buckets than keys
     (about one key per bucket, so each settle sees one key) must emit
     the same rows: for the row-local funnel, for ALL ROWS + WITHIN + SKIP
-    TO LAST with a PREV DEFINE, and for durable MATCH_NUMBER, whose
-    drained key keeps a zero-row tombstone beside live keys. The batch
+    TO LAST with a PREV DEFINE, and for ONE ROW MATCH_NUMBER. The batch
     matcher over the same rows as one table emits them too, up to the
-    ALL ROWS run's documented MATCH_NUMBER restart of a drained key."""
+    stream's documented MATCH_NUMBER restart of a key whose buffer
+    drained fully."""
     src = str(tmp_path / "diff_src")
     _write_files(spark, src, _seeded_files(29))
     variants = {
@@ -206,15 +206,7 @@ def test_bucket_count_does_not_change_matches(spark, tmp_path, state_buckets):
             state_buckets(n)
             view = f"bs_{name}_{n}"
             _source(spark, src).createOrReplaceTempView(view)
-            durable = name == "numbered"
-            if durable:
-                spark.conf.set(
-                    "spark.flinkcommons.mr.durable-match-number", "true"
-                )
-            try:
-                out = execute_match_recognize(spark, sql.format(v=view))
-            finally:
-                spark.conf.unset("spark.flinkcommons.mr.durable-match-number")
+            out = execute_match_recognize(spark, sql.format(v=view))
             got, _ = _drain(out, str(tmp_path / f"{view}_ckpt"))
             results[(name, n)] = sorted(map(tuple, got))
         assert results[(name, 1)], f"{name}: no matches"
@@ -224,16 +216,16 @@ def test_bucket_count_does_not_change_matches(spark, tmp_path, state_buckets):
         want = sorted(map(tuple, execute_match_recognize(
             spark, sql.format(v=view)
         ).collect()))
-        if name == "allrows":
-            # not durable: the drained key's second match restarts
-            # MATCH_NUMBER at 1 in the stream (documented divergence)
+        if name != "funnel":
+            # the drained key's second match restarts MATCH_NUMBER at 1
+            # in the stream (documented divergence)
             want = sorted(
-                r[:-1] + (1,) if r[0] == _TOMB_KEY and r[-1] == 2 else r
+                r[:-1] + (1,) if r[0] == _DRAIN_KEY and r[-1] == 2 else r
                 for r in want
             )
         assert want == results[(name, 1)]
-    tomb = [r for r in results[("numbered", 1)] if r[0] == _TOMB_KEY]
-    assert [r[2] for r in tomb] == [1, 2]
+    drained = [r for r in results[("numbered", 1)] if r[0] == _DRAIN_KEY]
+    assert [r[2] for r in drained] == [1, 1]
 
 
 def test_row_local_define_runs_once_per_settle(spark, tmp_path, state_buckets):

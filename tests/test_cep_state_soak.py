@@ -678,37 +678,25 @@ def test_stream_match_rejects_unpackable_key_type(spark, tmp_path):
 
 
 def test_resolve_bucket_count_precedence():
-    """The one bucket-count resolver every bucketed operator uses: the
-    session conf wins, then 4 x ``spark.sql.shuffle.partitions``, then
-    64; a conf value that is not a positive integer raises, naming the
-    conf."""
+    """The one bucket-count resolver every bucketed operator uses:
+    4 x ``spark.sql.shuffle.partitions``, nothing else. A session that
+    still sets the removed bucket-count key raises, naming the key and
+    what replaced it."""
     from types import SimpleNamespace
 
     import pytest
 
-    from flink_commons_spark.streaming.cep_stream import (
-        BUCKETS_CONF,
-        resolve_bucket_count,
-    )
-
-    class _Conf(dict):
-        def get(self, key, default=None):
-            if key in self:
-                return self[key]
-            if default is None:  # Spark raises on an unset key
-                raise KeyError(key)
-            return default
+    from flink_commons_spark.streaming.cep_stream import resolve_bucket_count
 
     def session(conf):
-        return SimpleNamespace(conf=_Conf(conf))
+        return SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
 
-    parts = {"spark.sql.shuffle.partitions": "8"}
-    assert resolve_bucket_count(session({**parts, BUCKETS_CONF: "3"})) == 3
-    assert resolve_bucket_count(session(parts)) == 32
-    assert resolve_bucket_count(session({})) == 64
-    for bad in ("0", "-2", "many"):
-        with pytest.raises(ValueError, match=BUCKETS_CONF.replace(".", r"\.")):
-            resolve_bucket_count(session({**parts, BUCKETS_CONF: bad}))
+    for parts in (1, 3, 8):
+        conf = {"spark.sql.shuffle.partitions": str(parts)}
+        assert resolve_bucket_count(session(conf)) == 4 * parts
+    removed = "spark.flinkcommons.stream.match.buckets"
+    with pytest.raises(ValueError, match=removed.replace(".", r"\.") + ".*4 x spark"):
+        resolve_bucket_count(session({"spark.sql.shuffle.partitions": "8", removed: "3"}))
 
 
 _RUNNER_FUNNEL_SQL = """

@@ -54,10 +54,10 @@ def test_stream_shuffle_honors_cluster_parallelism(spark):
     """r15 (verdict item 4): the per-family 8/16 stream shuffle
     constants are LOCAL defaults only — a cluster-provided parallelism
     (``spark.default.parallelism``, where the runner's ``SET
-    'parallelism.default'`` lands, or the dedicated
-    ``spark.flinkcommons.stream.shuffle.partitions`` override) must win
-    inside the scoped region, and the session value must be restored
-    afterwards either way."""
+    'parallelism.default'`` lands) must win inside the scoped region,
+    and the session value must be restored afterwards either way. The
+    removed ``spark.flinkcommons.stream.shuffle.partitions`` override
+    raises instead of winning."""
     from flink_commons_spark.catalog import _with_stream_shuffle
 
     seen = {}
@@ -79,8 +79,10 @@ def test_stream_shuffle_honors_cluster_parallelism(spark):
         spark.conf.set(
             "spark.flinkcommons.stream.shuffle.partitions", "12"
         )
-        probe(spark, SF_DIR)
-        assert seen["n"] == "12"  # dedicated override wins over both
+        seen.clear()
+        with pytest.raises(ValueError, match=r"stream\.shuffle\.partitions .*spark\.default\.parallelism"):
+            probe(spark, SF_DIR)
+        assert not seen  # rejected before the query is built
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
     finally:
         spark.conf.unset("spark.default.parallelism")
@@ -188,3 +190,84 @@ INSERT INTO scoped_sink SELECT sec, date_format(ts, 'HH') AS h FROM scoped_event
         spark.catalog.dropTempView("scoped_events")
     got = {r.sec: r.h for r in spark.read.parquet(str(out)).collect()}
     assert got == {h * 3600: f"{(h + 9) % 24:02d}" for h in range(24)}
+
+
+_SESSION_PROBE = """
+import json
+import sys
+
+from flink_commons_spark.session import get_session
+spark = get_session(app_name="probe")
+jvm = spark.sparkContext._jvm
+print("PROBE " + json.dumps({
+    "conf": {k: spark.conf.get(k, None) for k in json.loads(sys.argv[1])},
+    "heap": jvm.java.lang.Runtime.getRuntime().maxMemory(),
+}))
+spark.stop()
+"""
+
+#: every default ``get_session`` sets, at SPARK_GRAFT_CPUS=1
+_SESSION_DEFAULTS = {
+    "spark.master": "local[1]",
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.driver.memory": "768m",
+    "spark.ui.enabled": "false",
+    "spark.ui.showConsoleProgress": "false",
+    "spark.sql.shuffle.spill.compress": "true",
+    "spark.sql.cteRecursionRowLimit": "500000000",
+    "spark.python.daemon.module": "flink_commons_spark.worker_daemon",
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+}
+
+
+def _probe_session(tmp_path, submit_args: str, defaults_file: str | None):
+    """The session conf and driver heap a fresh process gets from
+    ``get_session()`` under ``PYSPARK_SUBMIT_ARGS`` and a
+    ``spark-defaults.conf`` holding ``defaults_file`` (None: none)."""
+    import json
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    conf_dir = tmp_path / "spark-conf"
+    conf_dir.mkdir()
+    if defaults_file is not None:
+        (conf_dir / "spark-defaults.conf").write_text(defaults_file)
+    env = {k: v for k, v in os.environ.items() if not k.startswith("PYSPARK_GATEWAY")}
+    env.update(SPARK_CONF_DIR=str(conf_dir), PYSPARK_SUBMIT_ARGS=submit_args,
+               SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="768m")
+    root = pathlib.Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _SESSION_PROBE, json.dumps(sorted(_SESSION_DEFAULTS))],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300)
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert line, out.stderr[-3000:]
+    return json.loads(line[0][len("PROBE "):])
+
+
+def test_get_session_keeps_cluster_values(tmp_path):
+    """A ``--conf`` in ``PYSPARK_SUBMIT_ARGS`` and a key of
+    ``spark-defaults.conf`` keep the cluster's value; every other
+    default still applies, and the driver heap reaches the JVM."""
+    got = _probe_session(
+        tmp_path, "--conf spark.sql.shuffle.partitions=7 pyspark-shell",
+        "# the cluster's own zone\nspark.sql.session.timeZone  America/New_York\n")
+    want = {**_SESSION_DEFAULTS, "spark.sql.shuffle.partitions": "7",
+            "spark.sql.session.timeZone": "America/New_York"}
+    assert got["conf"] == want
+    assert 512 << 20 < got["heap"] <= 768 << 20
+
+
+def test_get_session_defaults_without_cluster_values(tmp_path):
+    """With neither submit args nor ``spark-defaults.conf``, every
+    default applies unchanged."""
+    got = _probe_session(tmp_path, "pyspark-shell", None)
+    assert got["conf"] == _SESSION_DEFAULTS
+    assert 512 << 20 < got["heap"] <= 768 << 20

@@ -190,64 +190,3 @@ def test_budget_conf_rejects_garbage(spark):  # noqa: F811
     finally:
         spark.conf.unset("spark.flinkcommons.mr.max-steps")
     assert _conf_max_steps(spark) == DEFAULT_MAX_STEPS
-
-
-def test_strict_budget_bounds_plain_axis_verbatim():
-    """ADVICE r13: ``strict_budget=True`` removes the scan-proportional
-    plain-axis floor — the SAME linear ``A+ B`` scan that completes
-    under the default floor raises at the verbatim conf value, giving
-    the knob back its hard per-attempt latency-bound role."""
-    n = 5_000
-    pdf = pd.DataFrame({"x": range(n)})
-    steps = [Step("A", _true, plus=True), Step("B", _false)]
-    masks = _group_masks(steps, pdf)
-    runs = _run_ends(masks, n)
-    # default: completes (scan-proportional floor)
-    hit, _ = _match_at_ex(masks, steps, 0, n, runs, max_steps=1_000)
-    assert hit is None
-    # strict: the 1,000 budget is a hard bound on BOTH axes, and the
-    # diagnostic names the ENFORCED bound (the conf value verbatim),
-    # not the scan-proportional floor it replaced
-    with pytest.raises(
-        MatchStepBudgetExceeded, match=r"exceeded 1,000 plain-step"
-    ):
-        _match_at_ex(masks, steps, 0, n, runs, max_steps=1_000,
-                     strict_budget=True)
-
-
-def test_strict_steps_conf_threads_through_sql(spark):  # noqa: F811
-    """'spark.flinkcommons.mr.strict-steps' reaches the NFA through the
-    SQL front door: a linear pattern over a long key completes by
-    default and raises under strict mode at a deliberately tiny
-    budget; garbage values are rejected."""
-    from flink_commons_spark.plans.match_recognize import (
-        _conf_strict_steps,
-        execute_match_recognize,
-    )
-
-    n = 4_000
-    pdf = pd.DataFrame(
-        {"k": ["u"] * n, "ts": range(1, n + 1), "x": [1] * n}
-    )
-    spark.createDataFrame(pdf).createOrReplaceTempView("strict_ev")
-    q = """
-        SELECT * FROM strict_ev MATCH_RECOGNIZE (
-          PARTITION BY k ORDER BY ts
-          MEASURES COUNT(*) AS n
-          PATTERN (A+ B)
-          DEFINE A AS A.x > 0, B AS B.x < 0
-        )"""
-    spark.conf.set("spark.flinkcommons.mr.max-steps", "1000")
-    try:
-        # default (floor active): linear pattern completes, no match
-        assert execute_match_recognize(spark, q).count() == 0
-        spark.conf.set("spark.flinkcommons.mr.strict-steps", "true")
-        with pytest.raises(Exception, match="plain-step"):
-            execute_match_recognize(spark, q).collect()
-        spark.conf.set("spark.flinkcommons.mr.strict-steps", "maybe")
-        with pytest.raises(ValueError, match="must be a boolean"):
-            _conf_strict_steps(spark)
-    finally:
-        spark.conf.unset("spark.flinkcommons.mr.max-steps")
-        spark.conf.unset("spark.flinkcommons.mr.strict-steps")
-    assert _conf_strict_steps(spark) is False

@@ -849,7 +849,7 @@ def test_streaming_all_rows_kill_and_resume(spark, tmp_path):
     assert {r.match_no for r in ref} == {1, 2}
 
 
-_DURABLE_MR_SQL = """
+_DRAIN_MR_SQL = """
     SELECT user_id, ts_us, match_no FROM {v}
       MATCH_RECOGNIZE (
         PARTITION BY user_id ORDER BY ts
@@ -862,9 +862,9 @@ _DURABLE_MR_SQL = """
       )"""
 
 # key 1's first funnel settles (and its buffer FULLY drains) batches
-# before the second funnel arrives — the drain-reappear sequence the
-# durable counter exists for; the key-2 rows only move the watermark
-_DURABLE_MR_FILES = [
+# before the second funnel arrives; the key-2 rows only move the
+# watermark
+_DRAIN_MR_FILES = [
     [(1, 1, "view", 0), (1, 2, "click", 0), (1, 3, "purchase", 0)],
     [(2, 100, "x", 0)],
     [(2, 200, "x", 0)],  # key 1 fully drained here, then idle a batch
@@ -873,37 +873,13 @@ _DURABLE_MR_FILES = [
 ]
 
 
-def test_streaming_durable_match_number(spark, tmp_path):
-    """Opt-in durable MATCH_NUMBER (SET 'spark.flinkcommons.mr.
-    durable-match-number'='true'): a key whose buffer fully drains
-    keeps a counter-only tombstone, so when the key re-appears batches
-    later its next match numbers AFTER the drained ones instead of
-    restarting at 1 (the documented default divergence —
-    ``streaming/cep_stream.py:stream_match_pattern``)."""
-    _file_stream_view(spark, tmp_path, _DURABLE_MR_FILES, "mds_durmn")
-    spark.conf.set("spark.flinkcommons.mr.durable-match-number", "true")
-    try:
-        out = execute_match_recognize(
-            spark, _DURABLE_MR_SQL.format(v="mds_durmn")
-        )
-    finally:
-        spark.conf.unset("spark.flinkcommons.mr.durable-match-number")
-    got = _drain(spark, out, "mds_durmn_out", tmp_path)
-    rows = sorted((r.user_id, r.ts_us, r.match_no) for r in got.collect())
-    sec = 1_000_000
-    assert rows == [
-        (1, 1 * sec, 1), (1, 2 * sec, 1), (1, 3 * sec, 1),
-        (1, 300 * sec, 2), (1, 301 * sec, 2), (1, 302 * sec, 2),
-    ]
-
-
 def test_streaming_match_number_drain_restart_default(spark, tmp_path):
-    """DEFAULT (flag off): a full drain drops the counter with the
-    rest of the key's state, so the re-appearing key restarts at 1 —
-    pinning the documented divergence the durable flag opts out of."""
-    _file_stream_view(spark, tmp_path, _DURABLE_MR_FILES, "mds_drainmn")
+    """A full drain drops the counter with the rest of the key's
+    state, so the re-appearing key restarts MATCH_NUMBER at 1 — the
+    documented divergence, the same drain rule PREV context follows."""
+    _file_stream_view(spark, tmp_path, _DRAIN_MR_FILES, "mds_drainmn")
     out = execute_match_recognize(
-        spark, _DURABLE_MR_SQL.format(v="mds_drainmn")
+        spark, _DRAIN_MR_SQL.format(v="mds_drainmn")
     )
     got = _drain(spark, out, "mds_drainmn_out", tmp_path)
     rows = sorted((r.user_id, r.ts_us, r.match_no) for r in got.collect())
@@ -911,44 +887,4 @@ def test_streaming_match_number_drain_restart_default(spark, tmp_path):
     assert rows == [
         (1, 1 * sec, 1), (1, 2 * sec, 1), (1, 3 * sec, 1),
         (1, 300 * sec, 1), (1, 301 * sec, 1), (1, 302 * sec, 1),
-    ]
-
-
-def test_streaming_durable_match_number_survives_long_idle(spark, tmp_path):
-    """Round-12 verdict item #6 — the tombstone × idle-eviction
-    interaction, pinned: the counter-only tombstone sets NO timeout
-    timer (``streaming/cep_stream.py`` settle tail), and
-    ``applyInPandasWithState`` only evicts keys whose own timer fires,
-    so there is NO idle-TTL path that can drop a tombstoned key — the
-    ordinal survives an arbitrarily long idle gap (here the watermark
-    advances ~11 days past the key's last event across several
-    batches) and the re-appearing key numbers AFTER the drained
-    matches. The documented cost is exactly one bigint per ever-seen
-    key for the lifetime of the checkpoint; ordinal restart happens
-    only on a NEW checkpoint (external state clearing), never from
-    idleness."""
-    files = [
-        [(1, 1, "view", 0), (1, 2, "click", 0), (1, 3, "purchase", 0)],
-        [(2, 100, "x", 0)],          # key 1 settles via its timer here
-        [(2, 10_000, "x", 0)],       # tombstoned and idle...
-        [(2, 1_000_000, "x", 0)],    # ...watermark now ~11 days past
-        [(1, 2_000_000, "view", 0), (1, 2_000_001, "click", 0),
-         (1, 2_000_002, "purchase", 0)],
-        [(9999, 4_000_000, "x", 0)],
-    ]
-    _file_stream_view(spark, tmp_path, files, "mds_durmn_idle")
-    spark.conf.set("spark.flinkcommons.mr.durable-match-number", "true")
-    try:
-        out = execute_match_recognize(
-            spark, _DURABLE_MR_SQL.format(v="mds_durmn_idle")
-        )
-    finally:
-        spark.conf.unset("spark.flinkcommons.mr.durable-match-number")
-    got = _drain(spark, out, "mds_durmn_idle_out", tmp_path)
-    rows = sorted((r.user_id, r.ts_us, r.match_no) for r in got.collect())
-    sec = 1_000_000
-    assert rows == [
-        (1, 1 * sec, 1), (1, 2 * sec, 1), (1, 3 * sec, 1),
-        (1, 2_000_000 * sec, 2), (1, 2_000_001 * sec, 2),
-        (1, 2_000_002 * sec, 2),
     ]

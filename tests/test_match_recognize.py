@@ -1797,3 +1797,30 @@ def test_batch_match_keeps_nan_and_null_float_keys_apart(spark):
     ).collect()
     assert sorted(map(tuple, got)) == [(False, False, 2), (False, True, 2), (True, False, 2)]
     assert sorted(r["count"] for r in df.groupBy("k", "b").count().collect()) == [2, 2, 2]
+
+
+def test_batch_match_labels_nan_key_nan(spark):
+    """A double PARTITION BY key holding NaN, NULL and 2.0, each with
+    one funnel, gives three rows whose keys read as Spark's GROUP BY
+    labels them: NaN, NULL and 2.0, in ONE ROW and ALL ROWS mode."""
+    import math
+
+    nan = float("nan")
+    rows = [(k, t, v) for k in (nan, None, 2.0) for t, v in ((1, 1), (2, 2))]
+    spark.createDataFrame(rows, "user_id double, ts long, v long") \
+        .createOrReplaceTempView("mr_nan_key")
+
+    def labels(rows, per_match=1):
+        return sorted(
+            "NULL" if r[0] is None else "NaN" if math.isnan(r[0]) else str(r[0])
+            for r in rows for _ in range(per_match)
+        )
+
+    group_by = spark.sql("SELECT user_id FROM mr_nan_key GROUP BY user_id").collect()
+    assert labels(group_by) == ["2.0", "NULL", "NaN"]
+    got = execute_match_recognize(spark, _NULL_KEY_SQL.format(v="mr_nan_key")).collect()
+    assert labels(got) == labels(group_by)
+    assert {r[1] for r in got} == {1}
+    all_rows = _NULL_KEY_SQL.replace("PATTERN", "ALL ROWS PER MATCH PATTERN")
+    got = execute_match_recognize(spark, all_rows.format(v="mr_nan_key")).collect()
+    assert labels(got) == labels(group_by, per_match=2)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "flink_commons_spark"
 
@@ -63,3 +64,47 @@ def test_spark_sessions_come_from_get_session():
 def test_no_scripts_under_plans():
     """``plans/`` keeps results; ``bench.py`` is the one timing loop."""
     assert not sorted((ROOT / "plans").rglob("*.py"))
+
+
+#: a ``flinkcommons`` setting key, with or without the ``spark.`` prefix
+_SETTING = re.compile(r"(?:spark\.)?flinkcommons\.[a-z0-9-]+(?:\.[a-z0-9-]+)*")
+
+
+def _setting_literals() -> tuple[set[str], set[str]]:
+    """``(read, rejected)``: the setting keys in the package's string
+    literals, docstrings included, outside the removed-key table
+    (``conf.REMOVED_KEYS``) and the ``reject_removed`` calls; and the
+    keys those calls reject."""
+    read, rejected = set(), set()
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        skip: set[int] = set()
+        for node in ast.walk(tree):
+            table = isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "REMOVED_KEYS" for t in node.targets)
+            check = isinstance(node, ast.Call) and getattr(node.func, "id", None) == "reject_removed"
+            if table or check:
+                skip |= {id(n) for n in ast.walk(node)}
+            if check:
+                rejected |= {a.value for a in node.args if isinstance(a, ast.Constant)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str) and id(node) not in skip:
+                read |= set(_SETTING.findall(node.value))
+    return read, rejected
+
+
+def test_settings_are_the_documented_ones():
+    """Every ``flinkcommons`` key the package names is one of the
+    README's Settings list, and every listed key is named: a new
+    session knob has to be documented there, so it is a deliberate
+    choice and not a test-only switch. Each removed key is rejected
+    somewhere, and nothing else is."""
+    from flink_commons_spark.conf import REMOVED_KEYS
+
+    readme = (ROOT / "README.md").read_text()
+    section = readme.split("\n## Settings\n", 1)[1].split("\n## ", 1)[0]
+    listed = set(re.findall(r"^- `([^`]+)`", section, flags=re.M))
+    read, rejected = _setting_literals()
+    assert read == listed
+    assert rejected == set(REMOVED_KEYS)
+    assert not listed & set(REMOVED_KEYS)

@@ -11,6 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from flink_commons_spark.conf import scoped_conf
 from flink_commons_spark.streaming import partitions
 from flink_commons_spark.streaming.partitions import (
     ROWS_PER_PARTITION,
@@ -19,23 +20,13 @@ from flink_commons_spark.streaming.partitions import (
 )
 
 
-_EXPLICIT_CONFS = ("spark.default.parallelism", "spark.flinkcommons.stream.shuffle.partitions")
-
-
 @pytest.fixture(autouse=True)
 def no_explicit_parallelism(spark):
-    """Each test starts without the session confs of rule 2 (a script
+    """Each test starts without the session conf of rule 2 (a script
     run earlier in the session may have SET ``parallelism.default``)
-    and gets the session's values back after it."""
-    saved = {k: spark.conf.get(k, None) for k in _EXPLICIT_CONFS}
-    for k in _EXPLICIT_CONFS:
-        spark.conf.unset(k)
-    yield
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+    and gets the session's value back after it."""
+    with scoped_conf(spark, "spark.default.parallelism", None):
+        yield
 
 
 def _parquet_dir(path, sizes):
@@ -94,13 +85,13 @@ def test_stateful_partitions_rule_order(spark, tmp_path):
                                script={"parallelism.default": "3"}) == (3, "SET 'parallelism.default'")
     assert stateful_partitions(spark, 4, sources=one_file,
                                script={"spark.sql.shuffle.partitions": "6"})[0] == 6
-    for key in _EXPLICIT_CONFS:
-        spark.conf.set(key, "5")
-        assert stateful_partitions(spark, 4, sources=one_file) == (5, key)
-        # left out, the session confs neither raise the count nor beat rows
-        assert stateful_partitions(spark, 4, sources=one_file, session=False)[0] == 2
-        assert stateful_partitions(spark, 4, session=False)[0] == 4
-        spark.conf.unset(key)
+    key = "spark.default.parallelism"
+    spark.conf.set(key, "5")
+    assert stateful_partitions(spark, 4, sources=one_file) == (5, key)
+    # left out, the session conf neither raises the count nor beats rows
+    assert stateful_partitions(spark, 4, sources=one_file, session=False)[0] == 2
+    assert stateful_partitions(spark, 4, session=False)[0] == 4
+    spark.conf.unset(key)
     # rule 1: a checkpoint without offsets does not count
     assert stateful_partitions(spark, 4, sources=one_file,
                                checkpoint=str(tmp_path / "fresh"))[0] == 2
